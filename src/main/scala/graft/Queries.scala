@@ -284,14 +284,14 @@ object Queries {
     * bounded-k-means saved IVF ([[graft.vector.Ivf
     * .ensureSavedBoundedIndex]], `partitionBy("cell")`, 8 cells) and
     * the bucket-partitioned saved BM25 postings ([[graft.text.Bm25
-    * .ensureSavedIndex]], md5(term) % 64) — then every serve is:
-    * cell-pruned dense candidates (nProbe 2 of 8 — ~1/4 of the store
-    * files read, [[graft.vector.Ivf.topKIndexed]]) + term-bucket-
-    * pruned BM25 candidates ([[graft.text.Bm25.topKIndexed]]), both
-    * at depth 2k, RRF-fused (1/(60+rank), round 6), top-5, and a
-    * citation join-back with the ≤ |queries|·k hit ids pushed as a
-    * scan filter. ZERO build jobs above the two serves on a warm
-    * index ([[graft.io.SavedIndex]] epoch hit — even the store
+    * .ensureSavedIndex]], md5(term) % 64) — then every serve runs on
+    * the driver over the pair's resident copy
+    * ([[graft.pipeline.RagPipeline.hybridIndexedServe]]): cell-pruned
+    * dense candidates (nProbe 2 of 8 — ~1/4 of the store scored) +
+    * BM25 candidates, both at depth 2k, RRF-fused (1/(60+rank),
+    * round 6), top-5, and the citation lookup. ZERO Spark jobs below
+    * the context aggregate on a warm index
+    * ([[graft.io.SavedIndex]] epoch hit — even the store
     * DataFrame's construction is skipped); the dense list is the
     * honest IVF approximation (a candidate outside the probed cells
     * is missed — [[q_ann_recall]]'s attribution), which the oracle
@@ -352,8 +352,8 @@ object Queries {
       textCol = "query_text", out = "q_embedding")
     val qe = queries.select(col("query_id"), col("q_embedding"))
     val qt = queries.select(col("query_id"), col("query_text").as("qtext"))
-    // the lexical leg is SHARED verbatim by both fusions —
-    // term-bucket-pruned reads of the saved postings
+    // the lexical leg is SHARED verbatim by both fusions — served
+    // from the saved postings' resident copy
     val lex = graft.text.Bm25.topKIndexed(bm, qt, depth)
       .select(col("query_id"), col("rank"), col("doc_id"))
       .persistTracked("ragfusion.lex")
@@ -729,8 +729,8 @@ object Queries {
     * the identical two rounds and replays probe + fine search bit for
     * bit. Since r8 the row SERVES from the memoized saved index
     * ([[vector.Ivf.ensureSavedBoundedIndex]]): the rounds+1-scan fit
-    * runs once per JVM, every later call is a cell-pruned read of the
-    * `partitionBy("cell")` layout — the build-once/serve-many split
+    * runs once per JVM, every later call scores the resident copy of
+    * the `partitionBy("cell")` layout — the build-once/serve-many split
     * of a persistent vector store, now proven for the distributed fit
     * too (scores bit-identical to the in-memory path, so the oracle
     * is unchanged). The driver-sample Lloyd's fit
@@ -922,12 +922,11 @@ object Queries {
     * `PersistentClient`, `chromadb_rag.py:103-110`), mirrored on the
     * crafted fixture so the serve is hash-checked: [[vector.Ivf
     * .ensureSavedIndex]] fits + persists `partitionBy("cell")` once
-    * per JVM, then [[vector.Ivf.topKIndexed]] resolves the probed
-    * cells driver-side and reads ONLY those cell directories (static
-    * `PartitionFilters: [cell IN (…)]` on the scan — the IVF twin of
-    * q_bm25_indexed's term-bucket pruning). Scores are bit-identical
-    * to [[q_topk_ivf_crafted]] (shared probe/scoring Column trees),
-    * so both rows share one oracle SQL. */
+    * per JVM, then [[vector.Ivf.topKIndexed]] probes and scores only
+    * the probed cells of the index's resident copy, with no Spark job.
+    * Scores are bit-identical to [[q_topk_ivf_crafted]] (the resident
+    * scorer mirrors its probe/scoring Column trees), so both rows
+    * share one oracle SQL. */
   def q_topk_ivf_indexed(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val corpus = ivfCraftedCorpus.toDF("vec_id", "embedding")
@@ -3239,7 +3238,8 @@ object Queries {
     * ([[q_ann_recall]]'s attribution) surfacing cross-modally, and
     * the oracle replays the same miss exactly. At 100 TB: decode and
     * parse are map-only; the index is built offline once; each serve
-    * reads only probed cell files — the FAISS build/serve split
+    * scores only the probed cells of its resident copy — the FAISS
+    * build/serve split
     * applied cross-modally. Oracle: the shared bounded-fit replay
     * chain at dim = 8 with the caption formula as the query CTE. */
   /** Build-or-reuse the saved IVF index over the crafted clip image

@@ -119,11 +119,10 @@ object Clusters {
 
   /** Best-effort release of an entry's physical backing: unpersist
     * localCheckpoint blocks, delete the retained reliable-checkpoint
-    * run dir (r20 advice: eviction dropped the reference but never
-    * the backing, orphaning checkpoint data until JVM exit). After
-    * release the frame is UNUSABLE (lineage was truncated), which is
-    * why release only runs on eviction / clearAll — batch boundaries
-    * where no consumer may hold the frame. */
+    * run dir. After release the frame is UNUSABLE (lineage was
+    * truncated), which is why release only runs in [[clearMemo]] /
+    * clearAll — batch boundaries where no consumer may hold the frame
+    * — and for an entry that failed validation (already dead). */
   private def releaseEntry(e: CompEntry): Unit = {
     try backingRdds(e.df).foreach(_.unpersist(blocking = false))
     catch { case _: Throwable => () }
@@ -166,7 +165,10 @@ object Clusters {
     * split, corpus filter) from it. `pairs` is BY-NAME: a memo hit
     * never constructs the candidate frame at all. Keyed on (session
     * uuid — the returned frame is session-bound —, cacheKey, epoch),
-    * bounded LRU with backing release on eviction. `epoch = None`
+    * bounded LRU. An entry that leaves the memo — evicted past 16
+    * keys, or overwritten by a concurrent build of the same key — is
+    * RETIRED, not released: a caller may still hold its frame, so its
+    * backing is released at the next [[clearMemo]]. `epoch = None`
     * resolves unconditionally ([[graft.io.SavedIndex]]'s vouching
     * contract).
     *
@@ -185,18 +187,30 @@ object Clusters {
       override def removeEldestEntry(
           e: java.util.Map.Entry[(String, String, String), CompEntry]): Boolean = {
         val evict = size() > 16
-        if (evict) releaseEntry(e.getValue)
+        if (evict) retired += e.getValue
         evict
       }
     })
 
+  /** Entries dropped from the memo whose backing awaits [[clearMemo]];
+    * guarded by the memo's lock. */
+  private val retired = scala.collection.mutable.ArrayBuffer.empty[CompEntry]
+
   graft.io.Caches.registerOnClear(() => clearMemo())
 
-  /** Release every memoized map's backing and empty the memo — the
-    * [[graft.io.Caches.clearAll]] hook (also what specs call). */
+  /** Release the backing of every memoized and retired map and empty
+    * both — the [[graft.io.Caches.clearAll]] hook (also what specs
+    * call). */
   private[graft] def clearMemo(): Unit = componentMemo.synchronized {
     componentMemo.values().forEach(e => releaseEntry(e))
     componentMemo.clear()
+    retired.foreach(releaseEntry)
+    retired.clear()
+  }
+
+  /** Retired entries awaiting release — for specs. */
+  private[graft] def retiredCount: Int = componentMemo.synchronized {
+    retired.size
   }
 
   /** Live memo entries — the bound/lifecycle assertion for specs. */
@@ -233,7 +247,13 @@ object Clusters {
             }
             val v = componentsEntry(pairs,
               smallGraphThreshold = smallGraphThreshold)
-            componentMemo.put(key, v)
+            componentMemo.synchronized {
+              // a concurrent build of the same key (its gate was
+              // removed while this one ran) may have installed its
+              // own entry; its caller may hold that frame
+              val prev = componentMemo.put(key, v)
+              if (prev != null) retired += prev
+            }
             v.df
           }
         } finally building.remove(key)

@@ -1,0 +1,95 @@
+package graft.io
+
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.types.{DataType, IntegerType, LongType, StructType}
+
+/** Scalar twins of the Column-tree pieces the resident serve tier
+  * ([[graft.vector.Ivf.topKIndexed]], [[graft.text.Bm25.topKIndexed]],
+  * [[graft.pipeline.RagPipeline.hybridIndexedServe]]) evaluates on the
+  * driver instead of planning a Spark job. Each one mirrors what Spark
+  * does for the expression it replaces, so a resident serve returns the
+  * values the in-memory builders' trees return. A `null`
+  * `java.lang.Double` is SQL NULL throughout. */
+object Resident {
+
+  /** Spark's `Divide` on doubles, in `DivModLike.eval`'s order: a NULL
+    * divisor, or a zero one outside ANSI mode, gives NULL; then a NULL
+    * dividend gives NULL; under ANSI a zero divisor raises
+    * DIVIDE_BY_ZERO. */
+  def divide(a: java.lang.Double, b: java.lang.Double,
+      ansi: Boolean): java.lang.Double =
+    if (b == null || (!ansi && b == 0.0)) null
+    else if (a == null) null
+    else if (b == 0.0)
+      throw org.apache.spark.sql.graftshim.ColumnShim.divideByZero()
+    else a / b
+
+  /** `round(x, 6)` on a double: HALF_UP on the double's decimal string
+    * (`BigDecimal.valueOf`), NaN and infinities passed through. */
+  def round6(x: java.lang.Double): java.lang.Double =
+    if (x == null || x.isNaN || x.isInfinite) x
+    else java.math.BigDecimal.valueOf(x)
+      .setScale(6, java.math.RoundingMode.HALF_UP).doubleValue
+
+  /** Spark's ordering of doubles: -0.0 equals 0.0, NaN sorts above
+    * every other value. */
+  private def compareDoubles(x: Double, y: Double): Int =
+    if (x == y) 0 else java.lang.Double.compare(x, y)
+
+  /** The first `k` of `cands` in `ORDER BY score DESC, id` order —
+    * DESC puts NULL scores last. */
+  def topBy[T](cands: Iterable[T], k: Int)(score: T => java.lang.Double,
+      id: T => Long): Seq[T] = {
+    val order: Ordering[T] = (a, b) => {
+      val s = (score(a), score(b)) match {
+        case (null, null) => 0
+        case (null, _) => 1
+        case (_, null) => -1
+        case (x, y) => compareDoubles(y, x)
+      }
+      if (s != 0) s else java.lang.Long.compare(id(a), id(b))
+    }
+    cands.toSeq.sorted(order).take(k)
+  }
+
+  /** One row of a ranked list. */
+  final case class Hit(queryId: Any, rank: Int, id: Long,
+      score: java.lang.Double)
+
+  /** `row_number() OVER (ORDER BY score DESC, id) <= k` over one
+    * query's (id, score) candidates. */
+  def rankTopK(queryId: Any, cands: Iterable[(Long, java.lang.Double)],
+      k: Int): Seq[Hit] =
+    topBy(cands, k)(_._2, _._1).zipWithIndex
+      .map { case ((id, s), i) => Hit(queryId, i + 1, id, s) }
+
+  /** Rows grouped by query id in first-appearance order: a window
+    * partitioned by `query_id` pools every row that shares one. */
+  def byQuery[T](rows: Seq[(Any, T)]): Seq[(Any, Seq[T])] = {
+    val groups = scala.collection.mutable.LinkedHashMap
+      .empty[Any, scala.collection.mutable.ArrayBuffer[T]]
+    rows.foreach { case (q, v) =>
+      groups.getOrElseUpdate(q, scala.collection.mutable.ArrayBuffer.empty[T]) += v
+    }
+    groups.iterator.map { case (q, vs) => (q, vs.toSeq) }.toSeq
+  }
+
+  /** A segment id (held as Long) back in its column's type: `int` or
+    * `bigint`. */
+  def idValue(id: Long, t: DataType): Any = t match {
+    case IntegerType => id.toInt
+    case LongType => id
+    case other => throw new IllegalArgumentException(
+      s"resident index ids must be int or bigint, got ${other.catalogString}")
+  }
+
+  /** Whether the session's division raises on zero (Spark 4 default). */
+  def ansi(spark: SparkSession): Boolean =
+    spark.conf.get("spark.sql.ansi.enabled").toBoolean
+
+  /** A LocalRelation frame: collecting it, or a projection or filter
+    * over it, runs no Spark job. */
+  def localFrame(spark: SparkSession, schema: StructType,
+      rows: Seq[Row]): DataFrame =
+    spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
+}

@@ -1,9 +1,11 @@
 package graft.text
 
 import graft.io.Caches.TrackedPersistOps
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DoubleType, IntegerType, StructField, StructType}
+import scala.jdk.CollectionConverters._
 
 /** BM25 lexical retrieval — the classic sparse complement to the
   * dense cosine path ([[graft.vector.Ann]]): Okapi BM25 with
@@ -24,6 +26,10 @@ import org.apache.spark.sql.functions._
   *    TopKPerKey operator — no per-query sort of the whole score
   *    list.
   *
+  * Spark is the build tier only: a SAVED index is served from a
+  * driver-resident copy ([[topKIndexed]]), with no Spark job per
+  * request.
+  *
   * Scores are rounded to 6 decimals BEFORE ranking so the ordering
   * (and the DuckDB oracle's) cannot depend on float summation order.
   */
@@ -33,16 +39,30 @@ object Bm25 {
   case class Bm25Index(postings: DataFrame, docLen: DataFrame,
       dfreq: DataFrame, stats: DataFrame)
 
-  /** Query-term explode shared by both serve paths. */
+  /** A query's distinct lowercase tokens, first occurrence first —
+    * the one term expression both serve paths evaluate. */
+  private def queryTermArray(qtext: Column): Column =
+    array_distinct(Tok.tokens(lower(qtext)))
+
   private def queryTerms(queries: DataFrame): DataFrame = queries
-    .select(col("query_id"),
-      explode(array_distinct(Tok.tokens(lower(col("qtext"))))).as("term"))
+    .select(col("query_id"), explode(queryTermArray(col("qtext"))).as("term"))
+
+  /** Each query row's terms: (query_id, terms) on the driver. The
+    * [[queryTermArray]] Column is evaluated by Spark itself, so
+    * `lower()` cannot drift from the in-memory path's (Spark 4 lowers
+    * through ICU case mappings, not `String.toLowerCase`); over a frame
+    * built from a local `Seq` the projection folds into the
+    * LocalRelation and the collect runs no Spark job. */
+  private[graft] def collectQueryTerms(queries: DataFrame,
+      textCol: String = "qtext"): Seq[(Any, Seq[String])] =
+    queries.select(col("query_id"), queryTermArray(col(textCol))).collect()
+      .map(r => (r.get(0), if (r.isNullAt(1)) Nil else r.getSeq[String](1)))
+      .toSeq
 
   /** Shared scoring + ranking tail: `matched` must carry (query_id,
-    * doc_id, tf, df, dl, n_docs, avgdl). One Column tree for BOTH the
-    * build-and-serve and the saved-index paths, so their scores are
-    * bit-identical (and identical to the DuckDB oracle's arithmetic,
-    * which mirrors this exact association). */
+    * doc_id, tf, df, dl, n_docs, avgdl). The resident
+    * [[Segments.topK]] and the DuckDB oracle both mirror this exact
+    * association, so all three agree bit for bit. */
   private def rankMatched(matched: DataFrame, k: Int,
       k1: Double, b: Double): DataFrame = {
     val idf: Column =
@@ -127,11 +147,11 @@ object Bm25 {
 
   /** Persist an index: postings and term frequencies land
     * `partitionBy("bucket")` (md5 of the term), doc lengths and the
-    * single-row corpus stats as plain parquet. Serving a query then
-    * reads ONLY the buckets its terms hash to — storage-level
-    * partition pruning, the build-once-serve-many layout that matters
-    * at 100 TB where the index build dwarfs any single query batch.
-    * Mirrors [[graft.vector.Ivf.saveIndex]]. */
+    * single-row corpus stats as plain parquet — the build-once layout
+    * that matters at 100 TB, where the index build dwarfs any query
+    * batch; a term's postings are one bucket directory, so a serve of
+    * an index too large to hold resident can read only its terms'
+    * buckets. Mirrors [[graft.vector.Ivf.saveIndex]]. */
   def saveIndex(docs: DataFrame, path: String): Unit = {
     val idx = buildIndex(docs)
     idx.postings.withColumn("bucket", bucketOf(col("term")))
@@ -142,53 +162,138 @@ object Bm25 {
     idx.stats.coalesce(1).write.mode("overwrite").parquet(s"$path/stats")
   }
 
+  /** One term's resident postings: doc ids (ascending) with their tf
+    * and doc length, and the term's df. */
+  private final class TermRows(val df: Double, val docs: Array[Long],
+      val tf: Array[Double], val dl: Array[Double])
+
+  /** Driver-resident, column-packed copy of one loaded BM25 index: per
+    * term the postings (doc ids, tf) with each doc's length and the
+    * term's df, plus the corpus `n_docs`/`avgdl`. Immutable once
+    * built, so concurrent serves share it without locking. Memory is
+    * about 24 bytes per posting plus the vocabulary — the index must
+    * fit the driver heap (serving larger ones from the executors is
+    * out of scope here). */
+  private[graft] final class Segments(val docField: StructField,
+      terms: Map[String, TermRows], nDocs: Double, avgdl: Double) {
+
+    /** [[serveFrom]] on one batch: per query id, every posting of its
+      * terms scored `idf · tfNorm` in the Column tree's association,
+      * summed per doc in term order, `round(·, 6)`, cut at `k` by
+      * (desc score, doc_id). A query with no indexed term yields no
+      * rows. */
+    def topK(queries: Seq[(Any, Seq[String])], k: Int, k1: Double = 1.2,
+        b: Double = 0.75): Seq[graft.io.Resident.Hit] =
+      graft.io.Resident.byQuery(queries).flatMap { case (qid, termLists) =>
+        val acc = scala.collection.mutable.HashMap.empty[Long, Double]
+        for (ts <- termLists; t <- ts; p <- terms.get(t)) {
+          val idf = StrictMath.log(1.0 + ((nDocs - p.df) + 0.5) / (p.df + 0.5))
+          var i = 0
+          while (i < p.docs.length) {
+            val tfNorm = (p.tf(i) * (k1 + 1.0)) /
+              (p.tf(i) + k1 * ((1.0 - b) + (b * p.dl(i)) / avgdl))
+            acc(p.docs(i)) = acc.getOrElse(p.docs(i), 0.0) + idf * tfNorm
+            i += 1
+          }
+        }
+        graft.io.Resident.rankTopK(qid,
+          acc.map { case (d, sc) => (d, graft.io.Resident.round6(sc)) }, k)
+      }
+  }
+
+  /** Collect an index's four frames into [[Segments]]; postings whose
+    * term has no df or whose doc has no length are dropped, as the
+    * serve joins drop them. */
+  private def loadSegments(idx: Bm25Index): Segments = {
+    import idx.postings.sparkSession.implicits._
+    val doc = col("doc_id").cast("long")
+    val stats = idx.stats.select(col("n_docs"), col("avgdl")).collect()
+    val dfs = idx.dfreq.select(col("term"), col("df")).as[(String, Double)]
+      .collect().toMap
+    val dls = idx.docLen.select(doc, col("dl")).as[(Long, Double)]
+      .collect().toMap
+    val terms =
+      if (stats.isEmpty) Map.empty[String, TermRows]
+      else idx.postings.select(col("term"), doc, col("tf"))
+        .as[(String, Long, Double)].collect()
+        .groupBy(_._1).flatMap { case (t, rs) =>
+          dfs.get(t).map { df =>
+            val ps = rs.filter(p => dls.contains(p._2)).sortBy(_._2)
+            t -> new TermRows(df, ps.map(_._2), ps.map(_._3), ps.map(p => dls(p._2)))
+          }
+        }
+    val (nDocs, avgdl) = stats.headOption.fold((0.0, Double.NaN))(r =>
+      (r.getDouble(0), if (r.isNullAt(1)) Double.NaN else r.getDouble(1)))
+    new Segments(idx.postings.schema("doc_id"), terms, nDocs, avgdl)
+  }
+
+  /** A memoized load: the frames [[loadIndex]] hands out, and their
+    * resident [[Segments]], built once on the first serve. */
+  private final class Loaded(val index: Bm25Index) {
+    lazy val segments: Segments = loadSegments(index)
+  }
+
   /** Memoized per (session UUID, path) — bounded LRU, the
     * [[graft.vector.Pq.loadIndex]] pattern: the four parquet reads
     * cost footer I/O per call, and paths are content-addressed
     * (fresh TempDirs per rebuild) so a cached entry can never go
-    * stale (r19 review). */
+    * stale. Each entry also holds its resident [[Segments]] once
+    * served, so the 16-entry bound also bounds the resident copies. */
   private val loadedIndexes = java.util.Collections.synchronizedMap(
-    new java.util.LinkedHashMap[(String, String), Bm25Index](32, 0.75f, true) {
+    new java.util.LinkedHashMap[(String, String), Loaded](32, 0.75f, true) {
       override def removeEldestEntry(
-          e: java.util.Map.Entry[(String, String), Bm25Index]): Boolean =
+          e: java.util.Map.Entry[(String, String), Loaded]): Boolean =
         size() > 16
     })
 
   def loadIndex(spark: org.apache.spark.sql.SparkSession,
       path: String): Bm25Index = {
     // Sessions.uuid, not identityHashCode — unique per session and
-    // never reused after GC (r19 advice; see graft.io.Sessions)
+    // never reused after GC (see graft.io.Sessions)
     val key = (graft.io.Sessions.uuid(spark), path)
     val hit = loadedIndexes.get(key)
-    if (hit != null) hit
+    if (hit != null) hit.index
     else {
-      val v = Bm25Index(
+      val v = new Loaded(Bm25Index(
         spark.read.parquet(s"$path/postings"),
         spark.read.parquet(s"$path/doclen"),
         spark.read.parquet(s"$path/dfreq"),
-        spark.read.parquet(s"$path/stats"))
+        spark.read.parquet(s"$path/stats")))
       loadedIndexes.put(key, v)
-      v
+      v.index
     }
   }
 
-  /** Serve top-k from a loaded index with TERM-PRUNED reads: the
-    * query terms' buckets become a static partition filter on the
-    * postings/dfreq scans, so only |query terms| of the 64 bucket
-    * directories are touched. The driver-side term collect is bounded
-    * by the query batch (queries are small by definition — the corpus
-    * never moves). Scores are bit-identical to [[topK]]'s: same
-    * values read back, same shared Column tree. */
+  /** The resident [[Segments]] of an index: its memo entry's (built
+    * on first use, outside the memo lock), or a fresh uncached copy
+    * for an index that did not come from [[loadIndex]]. */
+  private[graft] def resident(idx: Bm25Index): Segments = {
+    val entry = loadedIndexes.synchronized {
+      loadedIndexes.values.iterator.asScala.find(_.index eq idx)
+    }
+    entry.fold(loadSegments(idx))(_.segments)
+  }
+
+  /** Serve top-k from a loaded index by the resident scorer, with no
+    * Spark job: the first serve of a loaded index builds its
+    * [[Segments]] (one collect of each frame), and every serve after
+    * that scores them on the driver. Only the query frame is collected
+    * ([[collectQueryTerms]]). Rows, values, types and (desc score,
+    * doc_id) ties are those of [[topK]]'s Column tree over the same
+    * corpus (the equality Bm25Spec pins), returned as a LocalRelation
+    * frame. An index that did not come from [[loadIndex]], or whose
+    * entry left its LRU, is collected again on every call. */
   def topKIndexed(idx: Bm25Index, queries: DataFrame, k: Int,
       k1: Double = 1.2, b: Double = 0.75): DataFrame = {
-    val buckets = queryTerms(queries).select(col("term")).distinct()
-      .collect().map(r => graft.vector.HashingEmbedder.bucket(r.getString(0), IndexBuckets))
-      .distinct.toSeq
-    serveFrom(
-      idx.postings.filter(col("bucket").isin(buckets: _*)).drop("bucket"),
-      idx.docLen,
-      idx.dfreq.filter(col("bucket").isin(buckets: _*)).drop("bucket"),
-      idx.stats, queries, k, k1, b)
+    val spark = queries.sparkSession
+    val seg = resident(idx)
+    val schema = StructType(Seq(queries.schema("query_id"),
+      StructField("rank", IntegerType, nullable = false), seg.docField,
+      StructField("score", DoubleType)))
+    graft.io.Resident.localFrame(spark, schema,
+      seg.topK(collectQueryTerms(queries), k, k1, b).map(h =>
+        Row(h.queryId, h.rank,
+          graft.io.Resident.idValue(h.id, seg.docField.dataType), h.score)))
   }
 
   /** One saved index per cache key per JVM: build-once-serve-many,
@@ -264,6 +369,20 @@ object Bm25 {
     * final ranking for cross-engine determinism. */
   def rrfFuse(a: DataFrame, b: DataFrame, k: Int, c: Double = 60.0): DataFrame =
     rrfFuseKeyed(a, b, k, c, Nil)
+
+  /** [[rrfFuse]] over driver lists (the resident serve's fusion):
+    * per (query, doc) the `1/(c + rank)` contributions of both lists
+    * summed, `round(·, 6)`, cut at `k` by (desc score, doc_id). */
+  private[graft] def rrfFuseResident(a: Seq[graft.io.Resident.Hit],
+      b: Seq[graft.io.Resident.Hit], k: Int,
+      c: Double = 60.0): Seq[graft.io.Resident.Hit] =
+    graft.io.Resident.byQuery((a ++ b).map(h => (h.queryId, h))).flatMap {
+      case (qid, hits) =>
+        val acc = scala.collection.mutable.HashMap.empty[Long, Double]
+        hits.foreach(h => acc(h.id) = acc.getOrElse(h.id, 0.0) + 1.0 / (c + h.rank))
+        graft.io.Resident.rankTopK(qid,
+          acc.map { case (d, sc) => (d, graft.io.Resident.round6(sc)) }, k)
+    }
 
   /** [[rrfFuse]] with extra grouping keys carried through every stage
     * (union → groupBy → per-key window) — what the probe-ladder

@@ -122,24 +122,21 @@ object ExplainAudit {
     // is in the r14 entries above)
     "q_ivfpq_probe_recall", "q_crossmodal_topk",
     // r18: the cross-modal SAVED serves (both tiers must show the
-    // partitioned index scan with a static `cell IN (…)` filter —
-    // the raw-vector IVF read and the compressed codes read) and the
+    // saved index — a LocalTableScan over the raw-vector IVF's resident
+    // copy, a static `cell IN (…)` filter on the codes read) and the
     // composed multimodal materialization (pair gate → TopKPerKey
     // quota on the saved cell → one `shard` exchange, nothing global)
     "q_crossmodal_indexed", "q_crossmodal_pq", "q_crossmodal_mix",
     // r19: the flagship composed onto the saved serve tier — the
-    // WARM-epoch plan must show only the two serves (cell-filtered
-    // partitioned IVF corpus scan for the dense leg, bucket-filtered
-    // postings scans for the lexical leg), the RRF aggregate, and
-    // the citation join-back with the collected hit ids pushed as a
-    // vec_id IN (…) scan filter; NO store build (no chunk Generate,
-    // no prefix-sum machinery) may appear anywhere in the plan
+    // WARM-epoch plan is the context aggregate over a LocalTableScan
+    // (the resident serve's answer); NO store build (no chunk
+    // Generate, no prefix-sum machinery) and no index scan may
+    // appear anywhere in the plan
     "q_rag_e2e_indexed",
     // r19b/r20: the fusion-robustness eval, since r20 on the SAVED
     // serve pair (r19 verdict #2) — the warm plan must show the
-    // cell-partitioned IVF corpus scan feeding BOTH dense legs
-    // (brute truth + the cell-filtered probed read), the
-    // bucket-filtered postings scans for the shared BM25 list, two
+    // cell-partitioned IVF corpus scan feeding the brute truth leg,
+    // LocalTableScans for the resident IVF and BM25 lists, two
     // RRF fusions, and NO store build or k-means fit machinery
     // (no chunk Generate, no prefix-sum, no qv aggregate)
     "q_rag_fusion_overlap",

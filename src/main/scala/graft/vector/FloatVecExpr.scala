@@ -221,6 +221,17 @@ object FloatVecExpr {
   def normF(a: Column): Column =
     org.apache.spark.sql.functions.sqrt(dotF(a, a))
 
+  /** [[FloatVecDot]] on driver arrays: double accumulation in index
+    * order over the shorter prefix — the same value the expression
+    * returns for the same two vectors. */
+  def dot(x: Array[Float], y: Array[Float]): Double = {
+    val n = math.min(x.length, y.length)
+    var s = 0.0
+    var i = 0
+    while (i < n) { s += x(i).toDouble * y(i).toDouble; i += 1 }
+    s
+  }
+
   /** Column wrapper: exact integer dot for int-array columns. */
   def dotI(a: Column, b: Column): Column =
     ColumnShim.column(IntVecDotL(ColumnShim.expression(a), ColumnShim.expression(b)))

@@ -1,8 +1,10 @@
 package graft.vector
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DoubleType, IntegerType, StructField, StructType}
+import scala.jdk.CollectionConverters._
 
 /** IVF (inverted-file) approximate nearest neighbor — the second
   * scale path next to LSH ([[Ann.lshTopK]]): a k-means coarse
@@ -23,7 +25,9 @@ import org.apache.spark.sql.functions._
   *
   * Cell assignment is one narrow pass (broadcast centroids), and the
   * per-query fine search is an equi-join on `cell` — shuffle keyed on
-  * short ints, corpus embeddings never move more than once.
+  * short ints, corpus embeddings never move more than once. Spark is
+  * the build tier only: a SAVED index is served from a driver-resident
+  * copy ([[topKIndexed]]), with no Spark job per request.
   */
 object Ivf {
 
@@ -232,8 +236,8 @@ object Ivf {
   }
 
   /** Fine search: equi-join corpus ⋈ probed on cell — only probed
-    * slices are scanned — then exact cosine, rank, top-k. ONE Column
-    * tree for the in-memory and saved-index serves, so their scores
+    * slices are scanned — then exact cosine, rank, top-k. The
+    * reference the resident [[Segments.topK]] mirrors, so their scores
     * are bit-identical. */
   private def fineSearch(assignedCorpus: DataFrame, probed: DataFrame,
       k: Int): DataFrame =
@@ -268,20 +272,29 @@ object Ivf {
       queries: DataFrame, k: Int, nProbe: Int = 4): DataFrame =
     fineSearch(assignedCorpus, probe(queries, centroids, nProbe), k)
 
-  /** Top-k served from a LOADED index ([[loadIndex]]) with
-    * STORAGE-level pruning: the probed cells are resolved driver-side
-    * first (bounded by |queries| × nProbe — queries are small by
-    * definition, mirroring [[graft.text.Bm25.topKIndexed]]'s term
-    * collect), then pushed as a static `cell IN (…)` filter, which on
-    * a `partitionBy("cell")` layout becomes a PartitionFilter — only
-    * the probed nProbe/nCells of the index FILES are read at all.
-    * Same probe + scoring trees as [[topK]] → identical scores. */
+  /** Top-k served from a LOADED index ([[loadIndex]]) by the resident
+    * scorer, with no Spark job: the first serve of a loaded pair builds
+    * its [[Segments]] (one collect of the cell files), and every serve
+    * after that probes and scores them on the driver. Only the query
+    * frame is collected — a frame built from a local `Seq` folds into
+    * a LocalRelation, so that collect runs no job either. Rows, values,
+    * types and `(desc cos_sim, vec_id)` ties are those of [[topK]]'s
+    * Column trees over the same index (the equality AnnIvfSpec pins),
+    * returned as a LocalRelation frame. A corpus frame that did not
+    * come from [[loadIndex]], or whose entry left its LRU, is
+    * collected again on every call. */
   def topKIndexed(corpusFromDisk: DataFrame, centroids: Array[Array[Double]],
       queries: DataFrame, k: Int, nProbe: Int = 4): DataFrame = {
-    val probed = probe(queries, centroids, nProbe)
-    val cells = probed.select(col("cell")).distinct()
-      .collect().map(_.getInt(0)).toSeq
-    fineSearch(corpusFromDisk.filter(col("cell").isin(cells: _*)), probed, k)
+    val spark = queries.sparkSession
+    val seg = resident(corpusFromDisk, centroids)
+    val qs = collectQueryVecs(queries)
+    val schema = StructType(Seq(queries.schema("query_id"),
+      StructField("rank", IntegerType, nullable = false), seg.idField,
+      StructField("cos_sim", DoubleType)))
+    graft.io.Resident.localFrame(spark, schema,
+      seg.topK(qs, k, nProbe, graft.io.Resident.ansi(spark)).map(h =>
+        Row(h.queryId, h.rank,
+          graft.io.Resident.idValue(h.id, seg.idField.dataType), h.score)))
   }
 
   /** Persist an index: the assigned corpus lands `partitionBy("cell")`
@@ -302,19 +315,122 @@ object Ivf {
       .coalesce(1).write.mode("overwrite").parquet(s"$path/centroids")
   }
 
+  /** One probed cell of a resident index, rows in vec_id order. */
+  private final class CellRows(val ids: Array[Long],
+      val vecs: Array[Array[Float]], val norms: Array[java.lang.Double])
+
+  /** Driver-resident, column-packed copy of one loaded IVF index: per
+    * cell the vec_ids, float embeddings and their precomputed norms;
+    * the float-cast centroids and their norms; and, when the corpus
+    * carries `source`/`text`, the citation of every vec_id. Immutable
+    * once built, so concurrent serves share it without locking.
+    * Memory is about the corpus's embedding and text bytes — the
+    * store must fit the driver heap (serving larger stores from the
+    * executors is out of scope here). */
+  private[graft] final class Segments(val idField: StructField,
+      cells: Map[Int, CellRows], cents: Array[Array[Float]],
+      centNorms: Array[java.lang.Double],
+      citations: Map[Long, (String, String)]) {
+
+    /** [[topK]]'s probe and fine search on one batch: per query id,
+      * the `nProbe` nearest cells by `dotF / (normF · normF)` against
+      * the float centroids (ties → lowest cell), then every row of
+      * those cells scored `round(dotF / (normF · normF), 6)` and cut
+      * at `k` by (desc cos_sim, vec_id). Division and NULLs follow
+      * Spark's, so a zero-vector query raises DIVIDE_BY_ZERO under
+      * ANSI and scores NULL without it, as the Column trees do. */
+    def topK(queries: Seq[(Any, Array[Float])], k: Int, nProbe: Int,
+        ansi: Boolean): Seq[graft.io.Resident.Hit] = {
+      import graft.io.Resident.{divide, round6}
+      graft.io.Resident.byQuery(queries).flatMap { case (qid, vecs) =>
+        val qs = vecs.map(v => (v, norm(v)))
+        val probes = for ((q, qn) <- qs; c <- cents.indices)
+          yield ((q, qn), c, divide(dotN(q, cents(c)), mul(qn, centNorms(c)), ansi))
+        val probed = graft.io.Resident.topBy(probes, nProbe)(_._3, _._2.toLong)
+        val scored = probed.flatMap { case ((q, qn), c, _) =>
+          cells.get(c).toSeq.flatMap { cell =>
+            cell.ids.indices.map(i => (cell.ids(i),
+              round6(divide(dotN(cell.vecs(i), q), mul(cell.norms(i), qn), ansi))))
+          }
+        }
+        graft.io.Resident.rankTopK(qid, scored, k)
+      }
+    }
+
+    /** (source, text) of a vec_id — the citation join-back. */
+    def citation(id: Long): Option[(String, String)] = citations.get(id)
+  }
+
+  private def dotN(a: Array[Float], b: Array[Float]): java.lang.Double =
+    if (a == null || b == null) null else FloatVecExpr.dot(a, b)
+
+  private def norm(v: Array[Float]): java.lang.Double =
+    if (v == null) null else math.sqrt(FloatVecExpr.dot(v, v))
+
+  private def mul(a: java.lang.Double, b: java.lang.Double): java.lang.Double =
+    if (a == null || b == null) null else a * b
+
+  /** Each query row's (query_id, q_embedding) on the driver — over a
+    * frame built from a local `Seq` the projection folds into the
+    * LocalRelation and the collect runs no Spark job. */
+  private[graft] def collectQueryVecs(queries: DataFrame): Seq[(Any, Array[Float])] =
+    queries.select(col("query_id"), col("q_embedding")).collect()
+      .map(r => (r.get(0), floatsAt(r, 1))).toSeq
+
+  /** An `array<float>` cell as a driver array (NULL stays null; NULL
+    * elements, which no embedder emits, load as 0). */
+  private def floatsAt(r: Row, i: Int): Array[Float] =
+    if (r.isNullAt(i)) null
+    else r.getSeq[Any](i).iterator.map {
+      case null => 0f
+      case f: Float => f
+    }.toArray
+
+  /** Collect a loaded corpus into [[Segments]] — embeddings decode
+    * straight into primitive float arrays (NULL elements, which no
+    * embedder emits, read as 0). */
+  private def loadSegments(corpus: DataFrame,
+      centroids: Array[Array[Double]]): Segments = {
+    import corpus.sparkSession.implicits._
+    val id = col("vec_id").cast("long")
+    val cells = corpus.select(id, col("cell"), col("embedding"))
+      .as[(Long, Int, Array[Float])].collect()
+      .groupBy(_._2).map { case (c, rs) =>
+        val sorted = rs.sortBy(_._1)
+        c -> new CellRows(sorted.map(_._1), sorted.map(_._3), sorted.map(r => norm(r._3)))
+      }
+    val citations =
+      if (!Seq("source", "text").forall(corpus.columns.contains))
+        Map.empty[Long, (String, String)]
+      else corpus.select(id, col("source"), col("text"))
+        .as[(Long, String, String)].collect()
+        .iterator.map { case (v, src, text) => v -> ((src, text)) }.toMap
+    val cents = centroids.map(_.map(_.toFloat))
+    new Segments(corpus.schema("vec_id"), cells, cents, cents.map(norm), citations)
+  }
+
+  /** A memoized load: the pair [[loadIndex]] hands out, and its
+    * resident [[Segments]], built once on the first serve (a lazy val:
+    * concurrent first serves wait for one build, and every serve sees
+    * the fully built segments). */
+  private final class Loaded(val pair: (DataFrame, Array[Array[Double]])) {
+    lazy val segments: Segments = loadSegments(pair._1, pair._2)
+  }
+
   /** Memoized per (session UUID, path) like [[graft.vector.Pq
     * .loadIndex]] (bounded LRU — epoch-moving consumers mint a fresh
     * path per rebuild, so an unbounded memo would retain every
     * superseded version): the centroid collect is a driver-side
     * Spark job, and without the memo every serve on the documented
-    * O(1) epoch-hit path paid it again (r19 review). Paths are
-    * content-addressed (fresh TempDirs per rebuild), so a cached
-    * entry can never go stale. */
+    * O(1) epoch-hit path paid it again. Paths are content-addressed
+    * (fresh TempDirs per rebuild), so a cached entry can never go
+    * stale. Each entry also holds its resident [[Segments]] once
+    * served, so the 16-entry bound also bounds the resident copies:
+    * at most 16 loaded stores' embeddings and texts on the driver. */
   private val loadedIndexes = java.util.Collections.synchronizedMap(
-    new java.util.LinkedHashMap[
-        (String, String), (DataFrame, Array[Array[Double]])](32, 0.75f, true) {
-      override def removeEldestEntry(e: java.util.Map.Entry[
-          (String, String), (DataFrame, Array[Array[Double]])]): Boolean =
+    new java.util.LinkedHashMap[(String, String), Loaded](32, 0.75f, true) {
+      override def removeEldestEntry(
+          e: java.util.Map.Entry[(String, String), Loaded]): Boolean =
         size() > 16
     })
 
@@ -323,19 +439,31 @@ object Ivf {
     // Sessions.uuid, not identityHashCode: identity hashes are not
     // unique across live sessions and can be REUSED after a stopped
     // session is GC'd, which would serve frames bound to a dead
-    // session for the same path (r19 advice)
+    // session for the same path
     val key = (graft.io.Sessions.uuid(spark), path)
     val hit = loadedIndexes.get(key)
-    if (hit != null) hit
+    if (hit != null) hit.pair
     else {
       val corpus = spark.read.parquet(s"$path/corpus")
       val cents = spark.read.parquet(s"$path/centroids")
         .orderBy("cell").collect()
         .map(_.getAs[scala.collection.Seq[Double]]("centroid").toArray)
-      val v = (corpus, cents)
+      val v = new Loaded((corpus, cents))
       loadedIndexes.put(key, v)
-      v
+      v.pair
     }
+  }
+
+  /** The resident [[Segments]] of a loaded pair: its memo entry's
+    * (built on first use, outside the memo lock), or a fresh uncached
+    * copy for a pair that did not come from [[loadIndex]]. */
+  private[graft] def resident(corpus: DataFrame,
+      centroids: Array[Array[Double]]): Segments = {
+    val entry = loadedIndexes.synchronized {
+      loadedIndexes.values.iterator.asScala
+        .find(e => (e.pair._1 eq corpus) && (e.pair._2 eq centroids))
+    }
+    entry.fold(loadSegments(corpus, centroids))(_.segments)
   }
 
   /** One saved index per cache key per JVM (build-once-serve-many,
@@ -371,13 +499,13 @@ object Ivf {
 
   /** [[ensureSavedIndex]] for the DISTRIBUTED [[boundedIndex]] fit:
     * the `rounds + 1` corpus scans of the k-means run ONCE per cache
-    * key per JVM, then every serve is a cell-pruned read of the
+    * key per JVM, then every serve scores the resident copy of the
     * persisted `partitionBy("cell")` layout ([[topKIndexed]]) — the
     * build/serve split a persistent vector store actually runs
     * (fit offline, probe online), applied to the oracle-replayable
     * fit. Floats and the double centroids round-trip parquet
-    * losslessly, and serve shares [[fineSearch]]'s Column trees with
-    * the in-memory path, so served scores are bit-identical. */
+    * losslessly, and the resident scorer mirrors [[fineSearch]]'s
+    * Column trees, so served scores are bit-identical. */
   def ensureSavedBoundedIndex(corpus: => DataFrame, nCells: Int,
       rounds: Int, cacheKey: String, epoch: Option[String] = None): String = {
     lazy val c = corpus

@@ -38,4 +38,10 @@ object ColumnShim {
   def logicalPlan(df: org.apache.spark.sql.DataFrame)
       : org.apache.spark.sql.catalyst.plans.logical.LogicalPlan =
     df.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]].logicalPlan
+
+  /** The DIVIDE_BY_ZERO error an ANSI-mode `Divide` raises
+    * (`QueryExecutionErrors` is private[sql]) — for driver-side
+    * scorers that mirror a Column tree's division. */
+  def divideByZero(): ArithmeticException =
+    org.apache.spark.sql.errors.QueryExecutionErrors.divideByZeroError(null)
 }

@@ -157,6 +157,40 @@ class ClustersSpec extends AnyFunSuite with SparkTestBase {
     }
   }
 
+  test("ensureComponents: a held frame survives eviction past 16 keys; clearMemo reclaims it") {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("graft-cce").toString
+    spark.conf.set(Clusters.CheckpointDirConf, dir)
+    val tag = java.util.UUID.randomUUID()
+    def pairs = Seq((1L, 2L), (2L, 3L)).toDF("doc_a", "doc_b")
+    // threshold 0 forces the checkpoint-backed distributed path
+    def ensure(i: Int) = Clusters.ensureComponents(spark, s"spec-cce-$tag-$i",
+      Some("e1"), smallGraphThreshold = 0)(pairs)
+    def runDirs = Option(new java.io.File(dir).listFiles())
+      .getOrElse(Array.empty).filter(_.getName.startsWith("cc-"))
+    def rm(f: java.io.File): Unit = {
+      Option(f.listFiles()).getOrElse(Array.empty).foreach(rm)
+      f.delete()
+    }
+    try {
+      Clusters.clearMemo()
+      val held = ensure(0)
+      (1 to 16).foreach(ensure(_))
+      assert(Clusters.memoSize == 16 && Clusters.retiredCount == 1,
+        "the 17th key evicts the first entry into the retired list")
+      assert(held.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap ==
+        Map(1L -> 1L, 2L -> 1L, 3L -> 1L),
+        "an evicted frame a caller still holds must keep collecting")
+      assert(runDirs.length == 17, "eviction must not delete backing")
+      Clusters.clearMemo()
+      assert(runDirs.isEmpty && Clusters.retiredCount == 0,
+        s"clearMemo must reclaim retired backing; found ${runDirs.toSeq}")
+    } finally {
+      spark.conf.unset(Clusters.CheckpointDirConf)
+      rm(new java.io.File(dir))
+    }
+  }
+
   test("reliable-checkpoint toggle: distributed path converges and writes durably") {
     import spark.implicits._
     val dir = java.nio.file.Files.createTempDirectory("graft-ccp").toString

@@ -163,6 +163,74 @@ class RagPipelineSpec extends AnyFunSuite with SparkTestBase {
     assert(served.map(_.toSeq).toSeq == inline.map(_.toSeq).toSeq)
   }
 
+  test("hybridIndexedServe: a warm serve runs no Spark job, persists nothing, and equals the Column trees") {
+    import spark.implicits._
+    val corpus = docs.limit(50)
+    val emb = HashingEmbedder(64)
+    val epoch = Some("spec-resident-v1")
+    val base = RagPipeline.indexedCacheKeyBase("ragpipeline-spec-resident",
+      "simple", emb, RagPipeline.IndexedCells)
+    val queries = emb.embed(
+      Seq(("table scan filter", 0), ("window merge join", 1), ("zzz", 2))
+        .toDF("query_text", "query_id"),
+      textCol = "query_text", out = "q_embedding")
+    def serve() = RagPipeline.hybridIndexedServe(spark,
+      RagPipeline.buildStore(corpus, "simple", emb), queries, base, epoch)
+    val cold = serve().collect() // builds the pair and its resident copy
+    val sc = spark.sparkContext
+    val phase = "graft.spec.phase"
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        seen.add(String.valueOf(Option(e.properties).map(_.getProperty(phase)).orNull))
+    }
+    sc.addSparkListener(listener)
+    val cachedBefore = sc.getRDDStorageInfo.map(_.id).toSet
+    val warm = try {
+      sc.setLocalProperty(phase, "serve")
+      val rows = serve().collect()
+      // a marker job: once the listener has seen it, every job the
+      // serve submitted has been delivered too (the bus is ordered)
+      sc.setLocalProperty(phase, "marker")
+      spark.range(1).count()
+      val deadline = System.nanoTime() + 30L * 1000000000L
+      while (!seen.contains("marker") && System.nanoTime() < deadline)
+        Thread.sleep(20)
+      rows
+    } finally {
+      sc.setLocalProperty(phase, null)
+      sc.removeSparkListener(listener)
+    }
+    assert(seen.contains("marker"), "listener never saw the marker job")
+    assert(!seen.contains("serve"),
+      s"a warm resident serve must submit no Spark job: ${seen.toArray.toSeq}")
+    assert(sc.getRDDStorageInfo.map(_.id).toSet == cachedBefore,
+      "a warm serve must persist nothing")
+    assert(warm.map(_.toSeq).toSeq == cold.map(_.toSeq).toSeq)
+    // the same answer as the Column trees over the same saved pair:
+    // in-memory IVF top-2k, inline BM25 top-2k, rrfFuse, join-back
+    val (disk, cents, _) = RagPipeline.ensureIndexedServe(spark,
+      RagPipeline.buildStore(corpus, "simple", emb), base, epoch)
+    val k2 = RagPipeline.TopK * 2
+    val dense = graft.vector.Ivf.topK(disk, cents,
+        queries.select(col("query_id"), col("q_embedding")), k2,
+        nProbe = RagPipeline.IndexedProbe)
+      .select(col("query_id"), col("rank"), col("vec_id").as("doc_id"))
+    val lex = graft.text.Bm25.topK(
+        disk.select(col("vec_id").as("doc_id"), col("text")),
+        queries.select(col("query_id"), col("query_text").as("qtext")), k2)
+      .select(col("query_id"), col("rank"), col("doc_id"))
+    val reference = graft.text.Bm25.rrfFuse(dense, lex, RagPipeline.TopK)
+      .withColumnRenamed("doc_id", "vec_id")
+      .join(disk.select(col("vec_id"), col("source"), col("text")), "vec_id")
+      .select(col("query_id"), col("rank"), col("source"), col("text"))
+    def ordered(rows: Array[org.apache.spark.sql.Row]) =
+      rows.map(_.toSeq).toSeq.sortBy(r => (r(0).asInstanceOf[Int], r(1).asInstanceOf[Int]))
+    assert(ordered(warm) == ordered(reference.collect()))
+    // query 2 has no indexed term: RRF runs on its dense list alone
+    assert(warm.exists(_.getInt(0) == 2))
+  }
+
   test("run: signlsh retrieval agrees with brute on an exact-chunk query") {
     val corpus = docs.limit(50)
     // query = an exact chunk text: its embedding equals the stored

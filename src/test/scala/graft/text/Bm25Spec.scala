@@ -30,24 +30,61 @@ class Bm25Spec extends AnyFunSuite with SparkTestBase {
     assert(out.head.getDouble(3) - out(1).getDouble(3) < 0.1)
   }
 
-  test("saved index round-trips and topKIndexed matches topK with bucket pruning") {
+  /** A result's rows in (query_id, rank) order. */
+  private def ranked(df: org.apache.spark.sql.DataFrame): Seq[Seq[Any]] =
+    df.orderBy("query_id", "rank").collect().map(_.toSeq).toSeq
+
+  private def typesOf(df: org.apache.spark.sql.DataFrame) =
+    df.schema.map(f => (f.name, f.dataType))
+
+  test("saved index round-trips and topKIndexed matches topK from resident segments") {
     import spark.implicits._
     val q = Seq((0L, "join spark"), (1L, "window merge")).toDF("query_id", "qtext")
-    val inline = Bm25.topK(docsDf, q, 5).collect().map(_.toSeq).toSet
+    val inline = Bm25.topK(docsDf, q, 5)
     val dir = java.nio.file.Files.createTempDirectory("graft-bm25-spec").toString
     Bm25.saveIndex(docsDf, dir)
     val served = Bm25.topKIndexed(Bm25.loadIndex(spark, dir), q, 5)
-    assert(served.collect().map(_.toSeq).toSet == inline)
-    // the query terms' md5 buckets must reach the postings scan as a
-    // static partition filter — only those bucket dirs are read
+    assert(ranked(served) == ranked(inline))
+    assert(typesOf(served) == typesOf(inline))
+    // the serve is a LocalRelation over the resident copy: the index
+    // files are not scanned per request
     val plan = served.queryExecution.executedPlan.toString
-    val pf = "PartitionFilters: \\[[^\\]]*bucket".r
-    assert(pf.findFirstIn(plan).isDefined,
-      s"no bucket partition pruning on the index scan:\n${plan.take(2000)}")
-    // and the pruned read really narrows: scanned bucket set < all 64
-    val terms = Seq("join", "spark", "window", "merge")
-    val buckets = terms.map(graft.vector.HashingEmbedder.bucket(_, Bm25.IndexBuckets)).distinct
-    assert(buckets.size < Bm25.IndexBuckets)
+    assert(plan.contains("LocalTableScan") && !plan.contains("FileScan"),
+      s"resident serve must not scan the index files:\n${plan.take(2000)}")
+  }
+
+  test("topKIndexed equals topK row for row: ties, non-ASCII case, term-free queries, Int/Long ids") {
+    import spark.implicits._
+    // 1/2 and 3/4 score identically for every query (2 equals 1 once
+    // lowered); 'Ü', 'É' and 'İ' only match if lower() is Spark's
+    val docs = Seq(
+      (1L, "Über straße join"), (2L, "über straße join"),
+      (3L, "spark spark shuffle"), (4L, "spark spark shuffle"),
+      (5L, "İstanbul ÉTÉ window"), (6L, "window merge join merge"))
+      .toDF("doc_id", "text")
+    val dir = java.nio.file.Files.createTempDirectory("graft-bm25-ties").toString
+    Bm25.saveIndex(docs, dir)
+    val idx = Bm25.loadIndex(spark, dir)
+    // 3: no indexed term; 4: no token at all; 5: NULL text
+    val qLong = Seq[(Long, String)]((0L, "ÜBER join"), (1L, "SPARK shuffle"),
+      (2L, "İSTANBUL été"), (3L, "zzz qqq"), (4L, "  "), (5L, null))
+      .toDF("query_id", "qtext")
+    val qInt = qLong.withColumn("query_id", col("query_id").cast("int"))
+    for (q <- Seq(qLong, qInt)) {
+      val served = Bm25.topKIndexed(idx, q, 4)
+      val inline = Bm25.topK(docs, q, 4)
+      assert(ranked(served) == ranked(inline))
+      assert(typesOf(served) == typesOf(inline))
+    }
+    val rows = Bm25.topKIndexed(idx, qInt, 4).collect()
+      .groupBy(_.getInt(0)).map { case (q, rs) =>
+        q -> rs.sortBy(_.getInt(1)).map(r => (r.getLong(2), r.getDouble(3))).toSeq }
+    assert(rows(0).take(2).map(_._1) == Seq(1L, 2L) && rows(0)(0)._2 == rows(0)(1)._2,
+      s"lowered duplicates must tie, broken by doc_id: ${rows(0)}")
+    assert(rows(1).take(2).map(_._1) == Seq(3L, 4L) && rows(1)(0)._2 == rows(1)(1)._2)
+    assert(rows(2).headOption.map(_._1).contains(5L), s"non-ASCII terms: ${rows(2)}")
+    assert(Seq(3, 4, 5).forall(q => !rows.contains(q)),
+      "a query with no indexed term yields no rows")
   }
 
   test("ensureSavedIndex registers its temp dir for shutdown cleanup and memoizes") {
@@ -147,6 +184,25 @@ class Bm25Spec extends AnyFunSuite with SparkTestBase {
     // 102 appears rank-2 in BOTH lists: 2/(60+2) > 1/(60+1)
     assert(fused.head.getLong(2) == 102L)
     assert(fused.map(_.getLong(2)).toSet == Set(101L, 102L, 103L, 104L))
+  }
+
+  test("rrfFuseResident equals rrfFuse, also with an empty lexical list") {
+    import spark.implicits._
+    import graft.io.Resident.Hit
+    // query 1: 104 and 107 both rank 1 in one list — a score tie
+    val dense = Seq((0L, 1, 101L), (0L, 2, 102L), (0L, 3, 103L),
+      (1L, 1, 104L), (1L, 2, 105L)).toDF("query_id", "rank", "doc_id")
+    val lex = Seq((0L, 1, 102L), (0L, 2, 106L), (1L, 1, 107L))
+      .toDF("query_id", "rank", "doc_id")
+    def hits(df: org.apache.spark.sql.DataFrame) = df.collect()
+      .map(r => Hit(r.get(0), r.getInt(1), r.getLong(2), null)).toSeq
+    for (l <- Seq(lex, lex.filter(lit(false)))) {
+      val reference = Bm25.rrfFuse(dense, l, 4).collect()
+        .map(r => (r.get(0), r.getInt(1), r.getLong(2), r.getDouble(3))).toSet
+      val got = Bm25.rrfFuseResident(hits(dense), hits(l), 4)
+        .map(h => (h.queryId, h.rank, h.id, h.score.doubleValue)).toSet
+      assert(got == reference)
+    }
   }
 
   test("token jaccard: exact vocabulary match outranks supersets") {

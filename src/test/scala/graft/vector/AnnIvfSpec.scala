@@ -143,7 +143,11 @@ class AnnIvfSpec extends AnyFunSuite with SparkTestBase {
       .eq(bi.asInstanceOf[AnyRef]), "BM25 repeat load must hit the memo")
   }
 
-  test("topKIndexed: STATIC cell pruning on the loaded scan, scores identical to topK") {
+  /** A result's rows in (query_id, rank) order. */
+  private def ranked(df: org.apache.spark.sql.DataFrame): Seq[Seq[Any]] =
+    df.orderBy("query_id", "rank").collect().map(_.toSeq).toSeq
+
+  test("topKIndexed: resident serve equals topK on the loaded index, no file scan") {
     val df = corpus(50, 0).toDF("vec_id", "embedding")
     val (assigned, cents) = Ivf.index(df, nCells = 4)
     val q = df.filter(col("vec_id") < 3)
@@ -159,13 +163,68 @@ class AnnIvfSpec extends AnyFunSuite with SparkTestBase {
     val served = Ivf.topKIndexed(loaded, loadedCents, q, 3, nProbe = 2)
     assert(served.collect().map(_.toSeq).toSet == inMem,
       "saved-index serve must score bit-identically to the in-memory serve")
-    // the driver-resolved probe cells must land as a STATIC partition
-    // filter (cell IN (...)) — storage-level pruning, not just a
-    // runtime join filter
+    // row for row against the Column trees over the SAME loaded frame
+    val reference = Ivf.topK(loaded, loadedCents, q, 3, nProbe = 2)
+    assert(served.schema == reference.schema)
+    assert(ranked(served) == ranked(reference))
+    // the serve is a LocalRelation over the resident copy: the index
+    // files are not scanned per request
     val plan = served.queryExecution.executedPlan.toString
-    val pf = "PartitionFilters: \\[[^\\]]*cell[^\\]]*IN".r
-    assert(pf.findFirstIn(plan).isDefined || plan.contains("cell#") && plan.contains(" IN ("),
-      s"no static cell IN (...) partition filter on the loaded index scan:\n${plan.take(2500)}")
+    assert(plan.contains("LocalTableScan") && !plan.contains("FileScan"),
+      s"resident serve must not scan the index files:\n${plan.take(2000)}")
+  }
+
+  test("topKIndexed equals topK row for row: planted ties, Int and Long query ids") {
+    // per base vector 0..5: an exact copy and a copy scaled by 2 — the
+    // same direction, so all three score bit-identical cosines that
+    // only the vec_id tiebreak orders
+    val base = corpus(24, 0)
+    val tied = base ++ base.take(6).flatMap { case (id, v) =>
+      Seq((100L + id, v), (200L + id, v.map(_ * 2f))) }
+    val df = tied.toDF("vec_id", "embedding")
+    val path = Ivf.ensureSavedIndex(df, nCells = 4, cacheKey = "annivf-spec-ties")
+    val (loaded, cents) = Ivf.loadIndex(spark, path)
+    val qLong = df.filter(col("vec_id") < 6)
+      .select(col("vec_id").as("query_id"), col("embedding").as("q_embedding"))
+    val qInt = qLong.withColumn("query_id", col("query_id").cast("int"))
+    for (q <- Seq(qLong, qInt)) {
+      val served = Ivf.topKIndexed(loaded, cents, q, 5, nProbe = 2)
+      val reference = Ivf.topK(loaded, cents, q, 5, nProbe = 2)
+      assert(served.schema == reference.schema)
+      assert(ranked(served) == ranked(reference))
+    }
+    // the ties are real: each query's top three share one cosine
+    val top3 = Ivf.topKIndexed(loaded, cents, qInt, 3, nProbe = 2).collect()
+      .groupBy(_.getInt(0)).map { case (q, rs) =>
+        q -> rs.sortBy(_.getInt(1)).map(r => (r.getLong(2), r.getDouble(3))).toSeq }
+    (0 until 6).foreach { i =>
+      assert(top3(i).map(_._1) == Seq(i.toLong, 100L + i, 200L + i))
+      assert(top3(i).map(_._2).distinct.size == 1, s"query $i: ${top3(i)}")
+    }
+  }
+
+  test("topKIndexed: a zero-vector query behaves as topK does") {
+    val df = corpus(30, 0).toDF("vec_id", "embedding")
+    val path = Ivf.ensureSavedIndex(df, nCells = 3, cacheKey = "annivf-spec-zero")
+    val (loaded, cents) = Ivf.loadIndex(spark, path)
+    val q = Seq((7L, Seq.fill(16)(0f))).toDF("query_id", "q_embedding")
+    def divideByZero(f: => Any): Unit = {
+      val e = intercept[Exception](f)
+      assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .exists(t => String.valueOf(t.getMessage).contains("DIVIDE_BY_ZERO")), e)
+    }
+    // ANSI (the Spark 4 default): the probe's 0 / 0 raises
+    divideByZero(Ivf.topK(loaded, cents, q, 3, nProbe = 2).collect())
+    divideByZero(Ivf.topKIndexed(loaded, cents, q, 3, nProbe = 2).collect())
+    // without ANSI every cosine is NULL: cells 0 and 1 are probed and
+    // their rows rank by vec_id
+    val ansi = spark.conf.get("spark.sql.ansi.enabled")
+    spark.conf.set("spark.sql.ansi.enabled", "false")
+    try {
+      val served = Ivf.topKIndexed(loaded, cents, q, 3, nProbe = 2)
+      assert(ranked(served) == ranked(Ivf.topK(loaded, cents, q, 3, nProbe = 2)))
+      assert(served.collect().forall(_.isNullAt(3)) && served.count() == 3)
+    } finally spark.conf.set("spark.sql.ansi.enabled", ansi)
   }
 
   test("staleness: an upserted corpus rebuilds the saved IVF index (new dir, new fingerprint, parity)") {

@@ -289,8 +289,9 @@ object Queries {
     * ([[graft.pipeline.RagPipeline.hybridIndexedServe]]): cell-pruned
     * dense candidates (nProbe 2 of 8 — ~1/4 of the store scored) +
     * BM25 candidates, both at depth 2k, RRF-fused (1/(60+rank),
-    * round 6), top-5, and the citation lookup. ZERO Spark jobs below
-    * the context aggregate on a warm index
+    * round 6), top-5, the citation lookup and the cited context
+    * ([[graft.vector.VectorOps.assembleContext]] over the resident
+    * answer). ZERO Spark jobs below the final `orderBy` on a warm index
     * ([[graft.io.SavedIndex]] epoch hit — even the store
     * DataFrame's construction is skipped); the dense list is the
     * honest IVF approximation (a candidate outside the probed cells

@@ -2,11 +2,13 @@ package graft.io
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.types.{DataType, IntegerType, LongType, StructType}
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Scalar twins of the Column-tree pieces the resident serve tier
   * ([[graft.vector.Ivf.topKIndexed]], [[graft.text.Bm25.topKIndexed]],
-  * [[graft.pipeline.RagPipeline.hybridIndexedServe]]) evaluates on the
-  * driver instead of planning a Spark job. Each one mirrors what Spark
+  * [[graft.pipeline.RagPipeline.hybridIndexedServe]], and
+  * [[graft.vector.VectorOps.assembleContext]] over their answers)
+  * evaluates on the driver instead of planning a Spark job. Each one mirrors what Spark
   * does for the expression it replaces, so a resident serve returns the
   * values the in-memory builders' trees return. A `null`
   * `java.lang.Double` is SQL NULL throughout. */
@@ -73,6 +75,25 @@ object Resident {
     }
     groups.iterator.map { case (q, vs) => (q, vs.toSeq) }.toSeq
   }
+
+  /** One query's context as [[graft.vector.VectorOps.assembleContext]]'s
+    * aggregate builds it from its (rank, source, text) rows: each row is
+    * cited as `concat("Source [", rank, "] (", source, "): ", text)`,
+    * which is NULL when any part is NULL; `sort_array(struct(rank,
+    * cited))` orders them by rank, then by the citation in UTF-8 byte
+    * order (`UTF8String.compareTo`, which differs from
+    * `String.compareTo` above the BMP); `concat_ws("\n\n", ...)` joins
+    * them and skips the NULL citations. */
+  def context(hits: Iterable[(java.lang.Long, String, String)]): String =
+    hits.iterator
+      .collect { case (rank, src, text) if rank != null && src != null && text != null =>
+        (rank.longValue, UTF8String.fromString(s"Source [$rank] ($src): $text"))
+      }
+      .toSeq
+      .sorted(Ordering.fromLessThan[(Long, UTF8String)] { case ((r1, c1), (r2, c2)) =>
+        r1 < r2 || (r1 == r2 && c1.compareTo(c2) < 0)
+      })
+      .map(_._2.toString).mkString("\n\n")
 
   /** A segment id (held as Long) back in its column's type: `int` or
     * `bigint`. */

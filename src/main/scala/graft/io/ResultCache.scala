@@ -23,9 +23,46 @@ object ResultCache {
   private val entries = TrieMap.empty[String, Entry]
 
   /** Redis-key normalization (`app.py:118`): collapse whitespace,
-    * lowercase, trim. */
-  def normalize(query: String): String =
-    query.trim.replaceAll("\\s+", " ").toLowerCase
+    * lowercase, trim — outside quotes only. A quoted literal or
+    * identifier (`'…'`, `"…"`, `` `…` ``) is kept verbatim, because its
+    * case and spacing change the answer (`= 'R'` vs `= 'r'`). Inside
+    * `'…'` and `"…"` a backslash escapes the next character; a doubled
+    * quote closes and reopens the literal, which keeps it verbatim too.
+    * Comments are folded whole, so a quote in one opens no literal. */
+  def normalize(query: String): String = {
+    val out = new StringBuilder
+    val plain = new StringBuilder
+    def flush(): Unit = {
+      out ++= plain.toString.replaceAll("\\s+", " ").toLowerCase
+      plain.clear()
+    }
+    val q = query.trim
+    var i = 0
+    while (i < q.length) {
+      val c = q.charAt(i)
+      if (c == '\'' || c == '"' || c == '`') {
+        flush()
+        var j = i + 1
+        while (j < q.length && q.charAt(j) != c) {
+          if (c != '`' && q.charAt(j) == '\\') j += 1
+          j += 1
+        }
+        out ++= q.substring(i, math.min(j + 1, q.length))
+        i = j + 1
+      } else if (q.startsWith("--", i) || q.startsWith("/*", i)) {
+        // a comment is folded like plain text, quotes in it included
+        val end = if (c == '-') q.indexOf('\n', i) else q.indexOf("*/", i + 2)
+        val stop = if (end < 0) q.length else if (c == '-') end else end + 2
+        plain ++= q.substring(i, stop)
+        i = stop
+      } else {
+        plain += c
+        i += 1
+      }
+    }
+    flush()
+    out.toString
+  }
 
   /** SELECT-only guard (`app.py:279-281`). */
   def isAllowed(query: String): Boolean = normalize(query).startsWith("select")

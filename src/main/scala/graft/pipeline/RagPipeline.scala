@@ -215,10 +215,17 @@ object RagPipeline {
     * in plain Scala over those segments: probe → cell-pruned cosine
     * top-2k, BM25 top-2k, RRF top-5 (1/(60 + rank), round 6) and the
     * citation lookup, each mirroring the Column tree it replaces, so
-    * the answer is the one the Spark plan gave. The result is a
-    * LocalRelation frame (query_id, rank, source, text): on a warm
-    * epoch with queries built from a local `Seq`, the serve and a
-    * collect of its result run ZERO Spark jobs and persist nothing.
+    * the answer is the one the Spark plan gave. The query frame is
+    * collected once — ids, vectors and the Spark-lowered terms from
+    * one optimized plan — and feeds both scorers. The result is a
+    * LocalRelation frame (query_id, rank, source, text), so
+    * [[graft.vector.VectorOps.assembleContext]] over it assembles the
+    * cited context on the driver too: on a warm epoch with queries
+    * built from a local `Seq`, serve → context → collect runs ZERO
+    * Spark jobs and persists nothing. What a warm request still pays is
+    * driver planning: the caller's query frame (`toDF` plus the
+    * embedder UDF folded into it) is optimized once, and each
+    * LocalRelation hand-off is analyzed again.
     *
     * Memory: the resident copy holds the store's embeddings, texts
     * and postings on the driver — roughly the saved pair's
@@ -236,12 +243,15 @@ object RagPipeline {
       indexedCells: Int = IndexedCells): DataFrame = {
     val (disk, cents, bm) =
       ensureIndexedServe(spark, store, cacheKeyBase, epoch, indexedCells)
+    // one collect of the query frame feeds both scorers: its ids,
+    // vectors and Spark-lowered terms come from one optimized plan
+    val qs = queries.select(col("query_id"), col("q_embedding"),
+      graft.text.Bm25.queryTermArray(col("query_text"))).collect().toSeq
     val ivf = graft.vector.Ivf.resident(disk, cents)
-    val dense = ivf.topK(graft.vector.Ivf.collectQueryVecs(queries),
+    val dense = ivf.topK(qs.map(r => (r.get(0), graft.vector.Ivf.floatsAt(r, 1))),
       TopK * 2, IndexedProbe, graft.io.Resident.ansi(spark))
     val lex = graft.text.Bm25.resident(bm).topK(
-      graft.text.Bm25.collectQueryTerms(queries, textCol = "query_text"),
-      TopK * 2)
+      qs.map(r => (r.get(0), graft.text.Bm25.termsAt(r, 2))), TopK * 2)
     val cited = graft.text.Bm25.rrfFuseResident(dense, lex, TopK).flatMap(h =>
       ivf.citation(h.id).map { case (src, text) =>
         Row(h.queryId, h.rank, src, text) })

@@ -41,7 +41,7 @@ object Bm25 {
 
   /** A query's distinct lowercase tokens, first occurrence first —
     * the one term expression both serve paths evaluate. */
-  private def queryTermArray(qtext: Column): Column =
+  private[graft] def queryTermArray(qtext: Column): Column =
     array_distinct(Tok.tokens(lower(qtext)))
 
   private def queryTerms(queries: DataFrame): DataFrame = queries
@@ -56,8 +56,11 @@ object Bm25 {
   private[graft] def collectQueryTerms(queries: DataFrame,
       textCol: String = "qtext"): Seq[(Any, Seq[String])] =
     queries.select(col("query_id"), queryTermArray(col(textCol))).collect()
-      .map(r => (r.get(0), if (r.isNullAt(1)) Nil else r.getSeq[String](1)))
-      .toSeq
+      .map(r => (r.get(0), termsAt(r, 1))).toSeq
+
+  /** A collected [[queryTermArray]] cell (NULL text → no terms). */
+  private[graft] def termsAt(r: Row, i: Int): Seq[String] =
+    if (r.isNullAt(i)) Nil else r.getSeq[String](i)
 
   /** Shared scoring + ranking tail: `matched` must carry (query_id,
     * doc_id, tf, df, dl, n_docs, avgdl). The resident

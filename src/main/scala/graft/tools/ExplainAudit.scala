@@ -128,8 +128,9 @@ object ExplainAudit {
     // quota on the saved cell → one `shard` exchange, nothing global)
     "q_crossmodal_indexed", "q_crossmodal_pq", "q_crossmodal_mix",
     // r19: the flagship composed onto the saved serve tier — the
-    // WARM-epoch plan is the context aggregate over a LocalTableScan
-    // (the resident serve's answer); NO store build (no chunk
+    // WARM-epoch plan is the output sort over a LocalTableScan (the
+    // context, assembled on the driver from the resident serve's
+    // answer); NO context aggregate, NO store build (no chunk
     // Generate, no prefix-sum machinery) and no index scan may
     // appear anywhere in the plan
     "q_rag_e2e_indexed",

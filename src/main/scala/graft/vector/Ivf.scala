@@ -379,7 +379,7 @@ object Ivf {
 
   /** An `array<float>` cell as a driver array (NULL stays null; NULL
     * elements, which no embedder emits, load as 0). */
-  private def floatsAt(r: Row, i: Int): Array[Float] =
+  private[graft] def floatsAt(r: Row, i: Int): Array[Float] =
     if (r.isNullAt(i)) null
     else r.getSeq[Any](i).iterator.map {
       case null => 0f

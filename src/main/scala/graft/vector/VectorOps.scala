@@ -1,8 +1,11 @@
 package graft.vector
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{IntegerType, LongType, StringType, StructField,
+  StructType}
 
 /** Vector math over `array<float|double>` columns, expressed with
   * higher-order functions so everything stays codegen'd SQL — no UDF
@@ -56,8 +59,25 @@ object VectorOps {
   /** V4 — context assembly with citations: the reference builds
     * `Source [{i+1}] ({source}): {chunk}` joined by "\n\n"
     * (`chromadb_rag.py:148-152`). Input = topK output carrying
-    * `(query_id, rank, source, text)`. */
-  def assembleContext(topk: DataFrame): DataFrame = {
+    * `(query_id, rank, source, text)`; one `(query_id, context)` row per
+    * query.
+    *
+    * Cost follows the input. When `topk` optimizes to a LocalRelation —
+    * a resident serve's answer ([[graft.pipeline.RagPipeline
+    * .hybridIndexedServe]]), or a projection or filter of driver rows,
+    * which `ConvertToLocalRelation` folds — the context is assembled on
+    * the driver from one collect of that plan ([[graft.io.Resident
+    * .context]]) and returned as a LocalRelation frame: no Spark job,
+    * and collecting the result runs none either. Any other input
+    * (distributed retrieval, a query id or rank that is not int/bigint,
+    * source or text that are not plain strings) plans
+    * [[contextAggregate]]. Both give the same rows and schema
+    * (VectorOpsSpec pins it). */
+  def assembleContext(topk: DataFrame): DataFrame =
+    contextOnDriver(topk).getOrElse(contextAggregate(topk))
+
+  /** The Column-tree context assembly: a groupBy over the cited rows. */
+  private[graft] def contextAggregate(topk: DataFrame): DataFrame = {
     val cited = topk.withColumn(
       "cited",
       concat(lit("Source ["), col("rank"), lit("] ("), col("source"),
@@ -67,6 +87,38 @@ object VectorOps {
         transform(
           sort_array(collect_list(struct(col("rank"), col("cited")))),
           s => s.getField("cited"))).as("context"))
+  }
+
+  /** [[contextAggregate]] evaluated on the driver, when `topk` is driver
+    * rows whose column types the scalar mirror covers: int/bigint query
+    * ids and ranks, plain (UTF8_BINARY) source and text. None
+    * otherwise. */
+  private def contextOnDriver(topk: DataFrame): Option[DataFrame] = {
+    val fields = topk.schema.fields
+    def at(name: String): Option[Int] =
+      if (fields.count(_.name == name) == 1) Some(fields.indexWhere(_.name == name))
+      else None
+    def isString(i: Int) = fields(i).dataType == StringType
+    def isIntegral(i: Int) = Seq(IntegerType, LongType).contains(fields(i).dataType)
+    for {
+      q <- at("query_id") if isIntegral(q)
+      r <- at("rank") if isIntegral(r)
+      s <- at("source") if isString(s)
+      t <- at("text") if isString(t)
+      if !topk.isStreaming &&
+        topk.queryExecution.optimizedPlan.isInstanceOf[LocalRelation]
+    } yield {
+      val rows = topk.collect().toSeq.map { row =>
+        val rank = if (row.isNullAt(r)) null
+          else java.lang.Long.valueOf(row.get(r).asInstanceOf[Number].longValue)
+        (row.get(q), (rank, row.getString(s), row.getString(t)))
+      }
+      graft.io.Resident.localFrame(topk.sparkSession,
+        StructType(Seq(fields(q), StructField("context", StringType, nullable = false))),
+        graft.io.Resident.byQuery(rows).map { case (id, hits) =>
+          Row(id, graft.io.Resident.context(hits))
+        })
+    }
   }
 
   /** Sum-pooling of chunk embeddings into one vector per key — the

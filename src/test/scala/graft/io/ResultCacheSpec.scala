@@ -29,6 +29,24 @@ class ResultCacheSpec extends AnyFunSuite with SparkTestBase {
     ResultCache.evictAll()
   }
 
+  test("queries that differ only inside a quoted literal are different entries") {
+    ResultCache.evictAll()
+    val li = s"parquet.`$sf/lineitem.parquet`"
+    def count(q: String) =
+      ResultCache.sqlCached(spark, q, 3600 * 1000L).head().getLong(0)
+    val upper = count(s"SELECT count(*) FROM $li WHERE l_returnflag = 'R'")
+    assert(upper > 0)
+    assert(count(s"select  COUNT(*) from $li where l_returnflag = 'r'") == 0,
+      "a lower-case literal must not be served the upper-case query's rows")
+    assert(ResultCache.sqlCached(spark, "SELECT 'a  b' AS v", 1000L).head().getString(0) == "a  b")
+    assert(ResultCache.sqlCached(spark, "SELECT 'a b' AS v", 1000L).head().getString(0) == "a b")
+    // outside the literals case and whitespace still fold
+    assert(ResultCache.normalize("SELECT  X FROM t WHERE c = 'A  B' -- it's\n AND `Col` = \"Q\"") ==
+      "select x from t where c = 'A  B' -- it's and `Col` = \"Q\"")
+    assert(ResultCache.normalize("SELECT 'it\\'S' , 'x''Y'") == "select 'it\\'S' , 'x''Y'")
+    ResultCache.evictAll()
+  }
+
   test("expired entry is evicted: unpersisted and a fresh run re-caches") {
     var t = 1000L
     val clock = () => t

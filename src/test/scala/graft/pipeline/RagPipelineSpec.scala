@@ -4,6 +4,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.SparkTestBase
 import graft.vector.{HashingEmbedder, VectorOps}
+import scala.jdk.CollectionConverters._
 
 class RagPipelineSpec extends AnyFunSuite with SparkTestBase {
 
@@ -163,6 +164,36 @@ class RagPipelineSpec extends AnyFunSuite with SparkTestBase {
     assert(served.map(_.toSeq).toSeq == inline.map(_.toSeq).toSeq)
   }
 
+  /** Runs `body` with a listener attached; returns its value and one
+    * entry per Spark job it submitted. */
+  private def jobsDuring[T](body: => T): (T, Seq[String]) = {
+    val sc = spark.sparkContext
+    val phase = "graft.spec.phase"
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        seen.add(String.valueOf(Option(e.properties).map(_.getProperty(phase)).orNull))
+    }
+    sc.addSparkListener(listener)
+    val out = try {
+      sc.setLocalProperty(phase, "body")
+      val v = body
+      // a marker job: once the listener has seen it, every job the
+      // body submitted has been delivered too (the bus is ordered)
+      sc.setLocalProperty(phase, "marker")
+      spark.range(1).count()
+      val deadline = System.nanoTime() + 30L * 1000000000L
+      while (!seen.contains("marker") && System.nanoTime() < deadline)
+        Thread.sleep(20)
+      v
+    } finally {
+      sc.setLocalProperty(phase, null)
+      sc.removeSparkListener(listener)
+    }
+    assert(seen.contains("marker"), "listener never saw the marker job")
+    (out, seen.asScala.toSeq.filter(_ == "body"))
+  }
+
   test("hybridIndexedServe: a warm serve runs no Spark job, persists nothing, and equals the Column trees") {
     import spark.implicits._
     val corpus = docs.limit(50)
@@ -178,32 +209,12 @@ class RagPipelineSpec extends AnyFunSuite with SparkTestBase {
       RagPipeline.buildStore(corpus, "simple", emb), queries, base, epoch)
     val cold = serve().collect() // builds the pair and its resident copy
     val sc = spark.sparkContext
-    val phase = "graft.spec.phase"
-    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        seen.add(String.valueOf(Option(e.properties).map(_.getProperty(phase)).orNull))
-    }
-    sc.addSparkListener(listener)
     val cachedBefore = sc.getRDDStorageInfo.map(_.id).toSet
-    val warm = try {
-      sc.setLocalProperty(phase, "serve")
-      val rows = serve().collect()
-      // a marker job: once the listener has seen it, every job the
-      // serve submitted has been delivered too (the bus is ordered)
-      sc.setLocalProperty(phase, "marker")
-      spark.range(1).count()
-      val deadline = System.nanoTime() + 30L * 1000000000L
-      while (!seen.contains("marker") && System.nanoTime() < deadline)
-        Thread.sleep(20)
-      rows
-    } finally {
-      sc.setLocalProperty(phase, null)
-      sc.removeSparkListener(listener)
+    val ((warm, context), jobs) = jobsDuring {
+      (serve().collect(), VectorOps.assembleContext(serve()).collect())
     }
-    assert(seen.contains("marker"), "listener never saw the marker job")
-    assert(!seen.contains("serve"),
-      s"a warm resident serve must submit no Spark job: ${seen.toArray.toSeq}")
+    assert(jobs.isEmpty,
+      s"a warm resident serve and its context must submit no Spark job: $jobs")
     assert(sc.getRDDStorageInfo.map(_.id).toSet == cachedBefore,
       "a warm serve must persist nothing")
     assert(warm.map(_.toSeq).toSeq == cold.map(_.toSeq).toSeq)
@@ -227,8 +238,29 @@ class RagPipelineSpec extends AnyFunSuite with SparkTestBase {
     def ordered(rows: Array[org.apache.spark.sql.Row]) =
       rows.map(_.toSeq).toSeq.sortBy(r => (r(0).asInstanceOf[Int], r(1).asInstanceOf[Int]))
     assert(ordered(warm) == ordered(reference.collect()))
+    // the driver-assembled context equals the context aggregate over
+    // the Column-tree reference (a distributed frame: it plans the
+    // aggregate)
+    def byQuery(rows: Array[org.apache.spark.sql.Row]) =
+      rows.map(_.toSeq).toSeq.sortBy(_.head.asInstanceOf[Int])
+    assert(byQuery(context) ==
+      byQuery(VectorOps.assembleContext(reference).collect()))
+    assert(context.length == 3)
     // query 2 has no indexed term: RRF runs on its dense list alone
     assert(warm.exists(_.getInt(0) == 2))
+  }
+
+  test("run: a warm hybrid_indexed run and collect submit no Spark job") {
+    val corpus = docs.limit(50)
+    def run() = RagPipeline.run(spark, corpus,
+      Seq("table scan filter", "window merge join"), "simple",
+      retrieval = "hybrid_indexed", indexKey = "ragpipeline-spec-run-resident",
+      epoch = Some("spec-run-resident-v1")).collect()
+    val cold = run() // builds the pair and its resident copy
+    val (warm, jobs) = jobsDuring(run())
+    assert(jobs.isEmpty, s"a warm hybrid_indexed run must submit no Spark job: $jobs")
+    assert(warm.map(_.toSeq).toSeq == cold.map(_.toSeq).toSeq)
+    assert(warm.length == 2)
   }
 
   test("run: signlsh retrieval agrees with brute on an exact-chunk query") {

@@ -1,6 +1,9 @@
 package graft.vector
 
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, LocalRelation}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.SparkTestBase
 
@@ -54,6 +57,84 @@ class VectorOpsSpec extends AnyFunSuite with SparkTestBase {
       .head().getString(1)
     assert(ctx.startsWith("Source [1] (srcA): alpha"))
     assert(ctx.contains("\n\n" + "Source [2] (srcA): beta"))
+  }
+
+  /** assembleContext over driver rows takes the driver path and equals
+    * the Column-tree aggregate row for row, schema included. */
+  private def contextMatchesAggregate(topk: DataFrame): Array[Row] = {
+    val driver = VectorOps.assembleContext(topk)
+    assert(driver.queryExecution.optimizedPlan.isInstanceOf[LocalRelation],
+      "driver rows must be assembled on the driver")
+    val reference = VectorOps.contextAggregate(topk)
+    assert(driver.schema == reference.schema)
+    def rows(df: DataFrame) =
+      df.collect().sortBy(r => Option(r.get(0)).map(_.toString))
+    val got = rows(driver)
+    assert(got.map(_.toSeq).toSeq == rows(reference).map(_.toSeq).toSeq)
+    got
+  }
+
+  test("assembleContext on driver rows: rank ties sort in UTF-8 byte order, as the aggregate does") {
+    // U+FF61 is below U+1F600 in UTF-8 (EF… < F0…) but above its
+    // UTF-16 surrogates (FF61 > D83D): String.compareTo would flip them
+    val topk = Seq(
+      (0L, 2L, "s", "second"),
+      (0L, 1L, "\uD83D\uDE00", "tie"),
+      (0L, 1L, "\uFF61", "tie"),
+      (1L, 1L, "only", "one"))
+      .toDF("query_id", "rank", "source", "text")
+    val got = contextMatchesAggregate(topk)
+    assert(got(0).getString(1) == Seq("Source [1] (\uFF61): tie",
+      "Source [1] (\uD83D\uDE00): tie", "Source [2] (s): second").mkString("\n\n"))
+  }
+
+  test("assembleContext on driver rows: NULL rank, source, text and query_id") {
+    val topk = Seq[(Option[Int], Option[Int], String, String)](
+      (Some(0), None, "a", "no rank"),
+      (Some(0), Some(1), null, "no source"),
+      (Some(0), Some(2), "c", null),
+      (Some(0), Some(3), "d", "kept"),
+      (Some(1), None, "e", "all cited entries NULL"),
+      (None, Some(2), "f", "null id, rank 2"),
+      (None, Some(1), "g", "null id, rank 1"))
+      .toDF("query_id", "rank", "source", "text")
+    val got = contextMatchesAggregate(topk)
+    assert(got.map(r => Option(r.get(0)) -> r.getString(1)).toSeq == Seq(
+      None -> "Source [1] (g): null id, rank 1\n\nSource [2] (f): null id, rank 2",
+      Some(0) -> "Source [3] (d): kept",
+      Some(1) -> ""))
+  }
+
+  test("assembleContext on driver rows: Int and Long ids, empty frame, projection and filter") {
+    val rows = Seq((7, 2, "b", "y"), (7, 1, "a", "x"), (3, 1, "c", "z"))
+    contextMatchesAggregate(rows.toDF("query_id", "rank", "source", "text"))
+    contextMatchesAggregate(rows.map { case (q, r, s, t) => (q.toLong, r, s, t) }
+      .toDF("query_id", "rank", "source", "text"))
+    val empty = graft.io.Resident.localFrame(spark, StructType(Seq(
+      StructField("query_id", LongType), StructField("rank", IntegerType),
+      StructField("source", StringType), StructField("text", StringType))), Nil)
+    assert(contextMatchesAggregate(empty).isEmpty)
+    // ConvertToLocalRelation folds both into the local rows
+    val wide = rows.map { case (q, r, s, t) => (q, r, s, t, r * 10) }
+      .toDF("query_id", "rank", "source", "text", "score")
+    val folded = wide.filter(col("score") < 20)
+      .select(col("query_id"), col("rank"), upper(col("source")).as("source"), col("text"))
+    assert(contextMatchesAggregate(folded).map(_.getString(1)).toSeq ==
+      Seq("Source [1] (C): z", "Source [1] (A): x"))
+  }
+
+  test("assembleContext plans the aggregate over a parquet-backed frame or an unmirrored rank type") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-context").toString
+    Seq((0, 1, "a", "x"), (0, 2, "b", "y"))
+      .toDF("query_id", "rank", "source", "text")
+      .write.mode("overwrite").parquet(dir)
+    val doubleRank = Seq((0, 1.0, "a", "x")).toDF("query_id", "rank", "source", "text")
+    for (topk <- Seq(spark.read.parquet(dir), doubleRank)) {
+      val ctx = VectorOps.assembleContext(topk)
+      assert(ctx.queryExecution.optimizedPlan.collectFirst { case a: Aggregate => a }.isDefined)
+    }
+    assert(VectorOps.assembleContext(spark.read.parquet(dir)).collect().map(_.toSeq).toSeq ==
+      Seq(Seq(0, "Source [1] (a): x\n\nSource [2] (b): y")))
   }
 
   test("brute, LSH, and IVF ANN agree on the top hit for fixture embeddings") {

@@ -57,17 +57,24 @@ object Clusters {
     private val runDir =
       if (root.isEmpty) "" else s"$root/cc-${java.util.UUID.randomUUID()}"
     private var round = 0
+    private var lastPath = ""
 
     /** The run dir a returned frame keeps reading after the call
-      * (reliable mode only) — recorded in the memo entry so eviction
-      * can reclaim it and a hit can validate it still exists. */
+      * (reliable mode only) — recorded in the memo entry so release
+      * can reclaim it. */
     def retainedDir: Option[String] =
       if (root.isEmpty) None else Some(runDir)
+
+    /** The round path the last returned frame reads (reliable mode
+      * only) — recorded in the memo entry so a hit can validate it. */
+    def readPath: Option[String] =
+      if (root.isEmpty) None else Some(lastPath)
 
     def apply(df: DataFrame): DataFrame =
       if (root.isEmpty) df.localCheckpoint()
       else {
         val path = s"$runDir/labels-$round"
+        lastPath = path
         if (round == 0)
           // surface the retained path: the final round's parquet backs
           // the returned frame, so this dir outlives the call — the
@@ -102,13 +109,14 @@ object Clusters {
     * Above the threshold the distributed propagation loop runs; both
     * paths converge to the same min-label fixpoint, so the choice is
     * invisible in the output (and the oracle hash). */
-  /** One resolved component map plus what backs it: `retainedDir`
-    * for the reliable-checkpoint path (frame reads that parquet),
-    * nothing extra for the small path (LocalRelation — driver rows)
-    * or the localCheckpoint path (backing RDDs are discoverable in
-    * the frame's own plan). */
+  /** One resolved component map plus what backs it: for the
+    * reliable-checkpoint path, `retainedDir` (the run dir, reclaimed on
+    * release) and `readPath` (the round parquet under it that the frame
+    * reads); nothing extra for the small path (LocalRelation — driver
+    * rows) or the localCheckpoint path (backing RDDs are discoverable
+    * in the frame's own plan). */
   private final case class CompEntry(df: DataFrame,
-      retainedDir: Option[String])
+      retainedDir: Option[String], readPath: Option[String])
 
   /** Checkpoint-backed RDDs inside a returned frame's plan (empty
     * for the LocalRelation small path). */
@@ -140,16 +148,21 @@ object Clusters {
     * retained checkpoint dir (its own log message invites exactly
     * that), and localCheckpoint blocks can be unpersisted or lost.
     * A hit over dead backing would fail the query instead of
-    * recomputing, so verify cheaply (no Spark job: one FS existence
-    * probe / storage-level reads) and rebuild on failure. */
+    * recomputing, so verify cheaply (no Spark job: FS existence
+    * probes of the round path the frame reads and of the files its
+    * plan lists, or storage-level reads) and rebuild on failure. The
+    * run dir alone is not enough: a deleted round subdir or part file
+    * under a live run dir still fails the read. */
   private def entryValid(e: CompEntry): Boolean = {
     val sc = e.df.sparkSession.sparkContext
     if (sc.isStopped) false
-    else e.retainedDir match {
-      case Some(dir) =>
+    else e.readPath match {
+      case Some(path) =>
         try {
-          val p = new org.apache.hadoop.fs.Path(dir)
-          p.getFileSystem(sc.hadoopConfiguration).exists(p)
+          val fs = new org.apache.hadoop.fs.Path(path)
+            .getFileSystem(sc.hadoopConfiguration)
+          (path +: e.df.inputFiles.toSeq)
+            .forall(f => fs.exists(new org.apache.hadoop.fs.Path(f)))
         } catch { case _: Throwable => false }
       case None =>
         backingRdds(e.df).forall(
@@ -272,7 +285,7 @@ object Clusters {
     // bounded by near-dup cluster sizes, and it spills, not OOMs.
     val p = pairs.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     if (p.count() <= smallGraphThreshold)
-      return CompEntry(driverUnionFind(p), None)
+      return CompEntry(driverUnionFind(p), None, None)
     val edges = p.select(col("doc_a").as("a"), col("doc_b").as("b"))
       .unionByName(p.select(col("doc_b").as("a"), col("doc_a").as("b")))
       .distinct()
@@ -311,7 +324,7 @@ object Clusters {
     if (!converged)
       throw new IllegalStateException(
         s"connectedComponents did not converge in $maxIter rounds")
-    CompEntry(labels, truncate.retainedDir)
+    CompEntry(labels, truncate.retainedDir, truncate.readPath)
   }
 
   /** Union-find with path compression over a collected pair list,

@@ -1,6 +1,9 @@
 package graft.io
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.Attribute
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.types.{DataType, IntegerType, LongType, StructType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -11,7 +14,11 @@ import org.apache.spark.unsafe.types.UTF8String
   * evaluates on the driver instead of planning a Spark job. Each one mirrors what Spark
   * does for the expression it replaces, so a resident serve returns the
   * values the in-memory builders' trees return. A `null`
-  * `java.lang.Double` is SQL NULL throughout. */
+  * `java.lang.Double` is SQL NULL throughout. Also the one dispatch test
+  * for "is this frame driver rows" ([[driverRows]]) that every driver
+  * twin ([[graft.vector.VectorOps.assembleContext]],
+  * [[graft.rel.Rel.valueCounts]]) makes, and the LocalRelation frames
+  * they and [[ResultCache]] return. */
 object Resident {
 
   /** Spark's `Divide` on doubles, in `DivModLike.eval`'s order: a NULL
@@ -108,9 +115,29 @@ object Resident {
   def ansi(spark: SparkSession): Boolean =
     spark.conf.get("spark.sql.ansi.enabled").toBoolean
 
+  /** The rows behind `df` when it is driver rows: its optimized plan is
+    * a LocalRelation — a [[localFrame]], a [[ResultCache]] row entry, or
+    * a projection or filter of one, which `ConvertToLocalRelation`
+    * folds. Collecting such a frame runs no Spark job, so a caller that
+    * mirrors a Column tree on the driver dispatches on this. The
+    * optimized plan is cached on `df`, so a later `df.collect()` does
+    * not optimize again. */
+  def driverRows(df: DataFrame): Option[LocalRelation] =
+    if (df.isStreaming) None
+    else df.queryExecution.optimizedPlan match {
+      case l: LocalRelation => Some(l)
+      case _ => None
+    }
+
   /** A LocalRelation frame: collecting it, or a projection or filter
     * over it, runs no Spark job. */
   def localFrame(spark: SparkSession, schema: StructType,
       rows: Seq[Row]): DataFrame =
     spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
+
+  /** A LocalRelation frame over Catalyst rows that already hold
+    * `output`'s internal values — no conversion from external rows. */
+  def internalFrame(spark: SparkSession, output: Seq[Attribute],
+      rows: Seq[InternalRow]): DataFrame =
+    org.apache.spark.sql.graftshim.ColumnShim.ofRows(spark, LocalRelation(output, rows))
 }

@@ -1,6 +1,9 @@
 package graft.io
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.{UnsafeProjection, UnsafeRow}
+import org.apache.spark.sql.execution.SQLExecution
+import org.apache.spark.sql.graftshim.ColumnShim
 import scala.collection.concurrent.TrieMap
 
 /** S9 — the reference's Redis result cache and guarded SQL surface
@@ -8,19 +11,50 @@ import scala.collection.concurrent.TrieMap
   * whitespace-normalized lowercase query key with a TTL (`ex=3600`),
   * and only SELECT statements may reach the engine.
   *
-  * Spark mapping: a value is the persisted DataFrame itself (columnar
-  * InMemoryRelation) instead of pickled bytes — a hit is served from
-  * executor memory as an InMemoryTableScan, partition-parallel rather
-  * than a single driver blob, and survives result sizes Redis never
-  * could. TTL is enforced at access time (lazy expiry — the same
-  * observable contract as Redis `ex`), plus explicit `evictAll` for
-  * shutdown. The clock is injectable so expiry is deterministic under
-  * test.
+  * Spark mapping: a value is a DataFrame instead of pickled bytes, in
+  * one of two forms, chosen by what the optimized plan proves about
+  * the result's size:
+  *
+  *  - Bounded (`optimizedPlan.maxRows` at most [[MaxRowEntryRows]]: a
+  *    `LIMIT` page, a global aggregate). The result is collected once
+  *    and kept as driver rows in a LocalRelation frame — the
+  *    reference's driver-side blob. Collecting it on a hit, or a
+  *    filter, projection or [[graft.rel.Rel.valueCounts]] over it, runs
+  *    no Spark job. All row entries share one byte budget
+  *    ([[RowBudgetBytes]]), charged with each entry's measured row
+  *    bytes: a miss that overflows it evicts the oldest row entries,
+  *    and a result larger than the whole budget is returned uncached.
+  *    Both are logged.
+  *  - Unbounded (a `GROUP BY` with no `LIMIT`, a scan). The persisted
+  *    DataFrame (columnar InMemoryRelation): a hit is served from
+  *    executor memory as an InMemoryTableScan, partition-parallel, and
+  *    survives result sizes no driver blob could.
+  *
+  * TTL is enforced at access time (lazy expiry — the same observable
+  * contract as Redis `ex`), plus explicit `evictAll` for shutdown. The
+  * clock is injectable so expiry is deterministic under test.
   */
 object ResultCache {
 
-  private final case class Entry(df: DataFrame, deadlineMillis: Long)
+  /** The most rows a result may be proven to have and still be kept as
+    * driver rows. */
+  private val MaxRowEntryRows = 10000L
+
+  /** Driver bytes all row entries together may hold. */
+  private[graft] val RowBudgetBytes: Long = 32L << 20
+
+  /** `rowBytes` is None for a persisted frame, and the bytes a row
+    * entry is charged otherwise. */
+  private final case class Entry(df: DataFrame, deadlineMillis: Long,
+      rowBytes: Option[Long])
   private val entries = TrieMap.empty[String, Entry]
+
+  /** Row entries, oldest first, and the bytes they are charged in
+    * total; both guarded by `rowEntries`' lock. */
+  private val rowEntries = new java.util.LinkedHashMap[String, Entry]()
+  private var rowBytes = 0L
+
+  private val log = org.apache.log4j.Logger.getLogger("graft.ResultCache")
 
   /** Redis-key normalization (`app.py:118`): collapse whitespace,
     * lowercase, trim — outside quotes only. A quoted literal or
@@ -80,25 +114,84 @@ object ResultCache {
         .map("%02x".format(_)).mkString
 
   /** Run `query` through the guard + cache: a live entry is served
-    * from the columnar cache; a miss (or expired entry) re-executes
-    * and re-caches with a fresh TTL. */
+    * from the cache; a miss (or expired entry) re-executes and
+    * re-caches with a fresh TTL. */
   def sqlCached(spark: SparkSession, query: String, ttlMillis: Long,
       now: () => Long = () => System.currentTimeMillis()): DataFrame = {
     require(isAllowed(query), "Only SELECT queries are allowed")
     lookup(spark, query, now).getOrElse {
-      val df = spark.sql(query).persist()
-      // putIfAbsent: if a concurrent miss won the race, keep ITS entry
-      // and unpersist ours — an unconditional put would orphan the
-      // loser's persisted frame in executor memory
-      entries.putIfAbsent(key(spark, query), Entry(df, now() + ttlMillis)) match {
-        case Some(winner) => df.unpersist(blocking = false); winner.df
-        case None => df
+      val df = spark.sql(query)
+      val deadline = now() + ttlMillis
+      df.queryExecution.optimizedPlan.maxRows match {
+        case Some(n) if n <= MaxRowEntryRows =>
+          putRows(key(spark, query), df, deadline)
+        case _ =>
+          // a fresh frame: `df` has optimized without the cache, so its
+          // own plan would never read the persisted relation
+          putPersisted(key(spark, query),
+            ColumnShim.ofRows(spark, ColumnShim.logicalPlan(df)).persist(), deadline)
+      }
+    }
+  }
+
+  private def putPersisted(k: String, df: DataFrame, deadline: Long): DataFrame =
+    // putIfAbsent: if a concurrent miss won the race, keep ITS entry
+    // and unpersist ours — an unconditional put would orphan the
+    // loser's persisted frame in executor memory
+    entries.putIfAbsent(k, Entry(df, deadline, None)) match {
+      case Some(winner) => df.unpersist(blocking = false); winner.df
+      case None => df
+    }
+
+  /** Collect `df` once and cache its rows as a LocalRelation frame,
+    * within the byte budget. */
+  private def putRows(k: String, df: DataFrame, deadline: Long): DataFrame = {
+    val qe = df.queryExecution
+    val collected = SQLExecution.withNewExecutionId(qe, Some("collect")) {
+      qe.executedPlan.executeCollect()
+    }
+    lazy val toUnsafe = UnsafeProjection.create(df.schema)
+    val rows = collected.toSeq.map {
+      case u: UnsafeRow => u
+      case r => toUnsafe(r).copy()
+    }
+    val frame = Resident.internalFrame(df.sparkSession,
+      qe.analyzed.output.map(_.newInstance()), rows)
+    // charged twice: the frame's first collect plans a LocalTableScan,
+    // which keeps its own copy of the rows
+    val bytes = 2 * rows.iterator.map(_.getSizeInBytes.toLong).sum
+    if (bytes > RowBudgetBytes) {
+      log.warn(s"result of ${rows.length} rows ($bytes bytes) is over the " +
+        s"$RowBudgetBytes-byte row budget; returned uncached")
+      frame
+    } else {
+      val e = Entry(frame, deadline, Some(bytes))
+      rowEntries.synchronized {
+        entries.putIfAbsent(k, e) match {
+          case Some(winner) => winner.df
+          case None =>
+            // an entry under this key that left `entries` but whose
+            // evict has not reached `rowEntries` yet
+            Option(rowEntries.remove(k)).foreach(old => rowBytes -= old.rowBytes.get)
+            rowEntries.put(k, e)
+            rowBytes += bytes
+            val oldest = rowEntries.entrySet.iterator
+            while (rowBytes > RowBudgetBytes) {
+              val o = oldest.next()
+              oldest.remove()
+              rowBytes -= o.getValue.rowBytes.get
+              entries.remove(o.getKey, o.getValue)
+              log.info(s"row entry of ${o.getValue.rowBytes.get} bytes evicted " +
+                s"to keep row entries within $RowBudgetBytes bytes")
+            }
+            frame
+        }
       }
     }
   }
 
   /** Live entry for `query`, or None — an expired entry is
-    * unpersisted and removed on the way out (lazy TTL eviction). */
+    * evicted on the way out (lazy TTL eviction). */
   def lookup(spark: SparkSession, query: String,
       now: () => Long = () => System.currentTimeMillis()): Option[DataFrame] = {
     val k = key(spark, query)
@@ -111,11 +204,17 @@ object ResultCache {
 
   def evictAll(): Unit = entries.foreach { case (k, e) => evict(k, e) }
 
-  private def evict(k: String, e: Entry): Unit = {
+  /** Bytes the row entries are charged in total — for specs. */
+  private[graft] def rowBytesHeld: Long = rowEntries.synchronized(rowBytes)
+
+  private def evict(k: String, e: Entry): Unit =
     // conditional remove: only drop the exact entry we decided to
     // evict — a fresh entry raced in under the same key must survive
-    // (and keep its persisted frame)
-    if (entries.remove(k, e)) e.df.unpersist(blocking = false)
-    ()
-  }
+    // (and keep its persisted frame or its rows)
+    if (entries.remove(k, e)) e.rowBytes match {
+      case None => e.df.unpersist(blocking = false)
+      case Some(bytes) => rowEntries.synchronized {
+        if (rowEntries.remove(k, e)) rowBytes -= bytes
+      }
+    }
 }

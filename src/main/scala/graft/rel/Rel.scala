@@ -1,7 +1,12 @@
 package graft.rel
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
+import org.apache.spark.sql.catalyst.expressions.{Ascending, AttributeReference,
+  BoundReference, Descending, InterpretedOrdering, SortOrder}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
 /** The reference's tabular query surface (SURVEY §2.2/§2.4/§2.6;
   * `/root/reference/Frontend/app.py:83-309, 473-578` and
@@ -46,10 +51,76 @@ object Rel {
   def isCategorical(df: DataFrame, c: String, maxDistinct: Int = 15): Boolean =
     df.select(approx_count_distinct(col(c))).head().getLong(0) < maxDistinct
 
-  /** A7 — value_counts for the pie chart (`Frontend/app.py:567`). */
+  /** A7 — value_counts for the pie chart (`Frontend/app.py:567`): one
+    * `(c, count)` row per distinct value, the most frequent first, ties
+    * by value ascending (NULL first).
+    *
+    * Cost follows the input. When `df` is driver rows
+    * ([[graft.io.Resident.driverRows]]: a [[graft.io.ResultCache]] page,
+    * or a filter or projection of one) and `c` is a top-level column
+    * whose values group by equality of their Catalyst values —
+    * UTF8_BINARY strings, booleans, integers, dates, timestamps — the
+    * counts are taken on the driver and returned as a LocalRelation
+    * frame: no Spark job, and collecting the result runs none either.
+    * Any other input, such as a table scan or a float, double, decimal,
+    * collated or complex column, plans [[valueCountsAggregate]]. Both
+    * give the same rows and schema (RelSpec pins it). */
   def valueCounts(df: DataFrame, c: String): DataFrame =
+    valueCountsOnDriver(df, c).getOrElse(valueCountsAggregate(df, c))
+
+  /** The Column-tree value counts: a groupBy and a sort. */
+  private[graft] def valueCountsAggregate(df: DataFrame, c: String): DataFrame =
     df.groupBy(col(c)).agg(count(lit(1)).as("count"))
       .orderBy(desc("count"), col(c))
+
+  /** [[valueCountsAggregate]] evaluated on the driver: the values are
+    * counted in a hash map and sorted with Catalyst's own interpreted
+    * ordering for `desc(count), col(c)`. None unless `df` is driver rows
+    * and `c` names exactly one column of a type listed in
+    * [[valueCounts]]. */
+  private def valueCountsOnDriver(df: DataFrame, c: String): Option[DataFrame] = {
+    val caseSensitive = df.sparkSession.conf.get("spark.sql.caseSensitive").toBoolean
+    val fields = df.schema.fields
+    for {
+      name <- Some(UnresolvedAttribute.quotedString(c).nameParts).collect {
+        case Seq(n) if n != "*" => n
+      }
+      named = (f: StructField) =>
+        if (caseSensitive) f.name == name else f.name.equalsIgnoreCase(name)
+      i = fields.indexWhere(named)
+      if i >= 0 && fields.count(named) == 1
+      field = fields(i)
+      if groupsByValue(field.dataType)
+      local <- graft.io.Resident.driverRows(df)
+    } yield {
+      val counts = new java.util.HashMap[Any, java.lang.Long]()
+      local.data.foreach { r =>
+        counts.merge(if (r.isNullAt(i)) null else r.get(i, field.dataType), 1L,
+          (a, b) => a + b)
+      }
+      val byCount = new InterpretedOrdering(Seq(
+        SortOrder(BoundReference(1, LongType, nullable = false), Descending),
+        SortOrder(BoundReference(0, field.dataType, field.nullable), Ascending)))
+      val rows = Seq.newBuilder[InternalRow]
+      counts.forEach((v, n) => rows += InternalRow(v, n.longValue))
+      graft.io.Resident.internalFrame(df.sparkSession,
+        // the grouping column takes the name as `c` spells it, as in
+        // the aggregate's output
+        Seq(AttributeReference(name, field.dataType, field.nullable, field.metadata)(),
+          AttributeReference("count", LongType, nullable = false)()),
+        rows.result().sorted(byCount))
+    }
+  }
+
+  /** Types whose Catalyst values are equal exactly when Spark groups
+    * them together. `StringType` equals only the UTF8_BINARY string
+    * type. Floats and doubles are not (-0.0 and 0.0, NaNs), nor are
+    * other collations, decimals or complex values. */
+  private def groupsByValue(t: DataType): Boolean = t match {
+    case StringType | BooleanType | ByteType | ShortType | IntegerType | LongType |
+        DateType | TimestampType | TimestampNTZType => true
+    case _ => false
+  }
 
   /** A3 — 10-bin histogram, numpy semantics (`chunk_visualizer.py:
     * 413-418`): equal-width bins over [min, max], last bin closed.

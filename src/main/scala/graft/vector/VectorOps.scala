@@ -1,7 +1,6 @@
 package graft.vector
 
 import org.apache.spark.sql.{Column, DataFrame, Row}
-import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{IntegerType, LongType, StringType, StructField,
@@ -105,8 +104,7 @@ object VectorOps {
       r <- at("rank") if isIntegral(r)
       s <- at("source") if isString(s)
       t <- at("text") if isString(t)
-      if !topk.isStreaming &&
-        topk.queryExecution.optimizedPlan.isInstanceOf[LocalRelation]
+      if graft.io.Resident.driverRows(topk).isDefined
     } yield {
       val rows = topk.collect().toSeq.map { row =>
         val rank = if (row.isNullAt(r)) null

@@ -157,6 +157,46 @@ class ClustersSpec extends AnyFunSuite with SparkTestBase {
     }
   }
 
+  test("ensureComponents: a deleted round subdir under a live run dir is detected, rebuilt") {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("graft-ccr").toString
+    spark.conf.set(Clusters.CheckpointDirConf, dir)
+    val key = s"spec-ccr-${java.util.UUID.randomUUID()}"
+    var built = 0
+    def pairs = {
+      built += 1
+      (1L to 20L).sliding(2).map(s => (s.head, s.last)).toSeq
+        .toDF("doc_a", "doc_b")
+    }
+    def rm(f: java.io.File): Unit = {
+      Option(f.listFiles()).getOrElse(Array.empty).foreach(rm)
+      f.delete()
+    }
+    try {
+      // threshold 0 forces the distributed path -> checkpoint-backed
+      val a = Clusters.ensureComponents(spark, key, Some("e1"),
+        smallGraphThreshold = 0)(pairs)
+      assert(a.collect().forall(_.getLong(1) == 1L) && built == 1)
+      // delete only the round parquet the frame reads; the run dir
+      // stays, so probing the run dir alone would call the entry valid
+      val runDirs = Option(new java.io.File(dir).listFiles()).getOrElse(Array.empty)
+        .filter(_.getName.startsWith("cc-"))
+      val rounds = runDirs.flatMap(d => Option(d.listFiles()).getOrElse(Array.empty))
+        .filter(_.getName.startsWith("labels-"))
+      assert(rounds.nonEmpty, s"no round subdir under ${runDirs.toSeq}")
+      rounds.foreach(rm)
+      assert(runDirs.forall(_.exists))
+      val b = Clusters.ensureComponents(spark, key, Some("e1"),
+        smallGraphThreshold = 0)(pairs)
+      assert(built == 2, "a missing round path must trigger a rebuild")
+      assert(b.collect().forall(_.getLong(1) == 1L))
+      Clusters.clearMemo()
+    } finally {
+      spark.conf.unset(Clusters.CheckpointDirConf)
+      rm(new java.io.File(dir))
+    }
+  }
+
   test("ensureComponents: a held frame survives eviction past 16 keys; clearMemo reclaims it") {
     import spark.implicits._
     val dir = java.nio.file.Files.createTempDirectory("graft-cce").toString

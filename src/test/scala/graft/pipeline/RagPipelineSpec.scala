@@ -4,7 +4,6 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.SparkTestBase
 import graft.vector.{HashingEmbedder, VectorOps}
-import scala.jdk.CollectionConverters._
 
 class RagPipelineSpec extends AnyFunSuite with SparkTestBase {
 
@@ -162,36 +161,6 @@ class RagPipelineSpec extends AnyFunSuite with SparkTestBase {
       disk.select(org.apache.spark.sql.functions.col("vec_id").as("doc_id"),
         org.apache.spark.sql.functions.col("text")), qt, 3).collect()
     assert(served.map(_.toSeq).toSeq == inline.map(_.toSeq).toSeq)
-  }
-
-  /** Runs `body` with a listener attached; returns its value and one
-    * entry per Spark job it submitted. */
-  private def jobsDuring[T](body: => T): (T, Seq[String]) = {
-    val sc = spark.sparkContext
-    val phase = "graft.spec.phase"
-    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        seen.add(String.valueOf(Option(e.properties).map(_.getProperty(phase)).orNull))
-    }
-    sc.addSparkListener(listener)
-    val out = try {
-      sc.setLocalProperty(phase, "body")
-      val v = body
-      // a marker job: once the listener has seen it, every job the
-      // body submitted has been delivered too (the bus is ordered)
-      sc.setLocalProperty(phase, "marker")
-      spark.range(1).count()
-      val deadline = System.nanoTime() + 30L * 1000000000L
-      while (!seen.contains("marker") && System.nanoTime() < deadline)
-        Thread.sleep(20)
-      v
-    } finally {
-      sc.setLocalProperty(phase, null)
-      sc.removeSparkListener(listener)
-    }
-    assert(seen.contains("marker"), "listener never saw the marker job")
-    (out, seen.asScala.toSeq.filter(_ == "body"))
   }
 
   test("hybridIndexedServe: a warm serve runs no Spark job, persists nothing, and equals the Column trees") {

@@ -1,8 +1,13 @@
 package graft.rel
 
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.catalyst.plans.logical.Aggregate
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
+import org.scalacheck.{Gen, Prop, Test => SCTest}
 import org.scalatest.funsuite.AnyFunSuite
 import graft.SparkTestBase
+import graft.io.Resident
 
 class RelSpec extends AnyFunSuite with SparkTestBase {
   import spark.implicits._
@@ -64,5 +69,69 @@ class RelSpec extends AnyFunSuite with SparkTestBase {
     val out = Rel.page(df, Seq(col("id")), limit = 10, offset = 20)
       .as[Int].collect().toSeq
     assert(out == (21 to 30))
+  }
+
+  test("property: valueCounts over driver rows equals the Column tree, row for row and in schema") {
+    // small pools: count ties everywhere; "｡" (U+FF61) sorts above "😀"
+    // in UTF-16 but below it in UTF-8; dotted and dotless I
+    val strings = Gen.oneOf[Any]("a", "b", "", "｡", "😀", "i", "I", "ı", "İ")
+    val columns: Seq[(DataType, Gen[Any])] = Seq(
+      StringType -> strings,
+      IntegerType -> Gen.chooseNum(-3, 3).map(Int.box),
+      LongType -> Gen.oneOf[Any](Long.MinValue, -1L, 0L, 1L, Long.MaxValue),
+      DateType -> Gen.chooseNum(0, 4).map[Any](d =>
+        java.sql.Date.valueOf(java.time.LocalDate.of(2024, 2, 28).plusDays(d.toLong))),
+      BooleanType -> Gen.oneOf[Any](true, false))
+    val cases = for {
+      (t, value) <- Gen.oneOf(columns)
+      vs <- Gen.listOf(Gen.frequency(1 -> Gen.const(null), 5 -> value))
+      filtered <- Gen.oneOf(false, true)
+    } yield (t, vs, filtered)
+    val prop = Prop.forAll(cases) { case (t, vs, filtered) =>
+      val base = Resident.localFrame(spark,
+        StructType(Seq(StructField("v", t), StructField("x", IntegerType))),
+        vs.zipWithIndex.map { case (v, i) => Row(v, i) })
+      // a filter and projection of driver rows still folds to them; the
+      // filter also makes `v` non-nullable; the upper-case name resolves
+      // case-insensitively
+      val (df, name) =
+        if (filtered) (base.filter(col("v").isNotNull && col("x") % 3 =!= 0)
+          .select(col("x"), col("v")), "v")
+        else (base, "V")
+      val got = Rel.valueCounts(df, name)
+      val ref = Rel.valueCountsAggregate(df, name)
+      Resident.driverRows(got).isDefined && got.schema == ref.schema &&
+        got.collect().toSeq == ref.collect().toSeq
+    }
+    val res = SCTest.check(SCTest.Parameters.default.withMinSuccessfulTests(50), prop)
+    assert(res.passed, res.status.toString)
+    val empty = Resident.localFrame(spark, StructType(Seq(StructField("v", StringType))), Nil)
+    val got = Rel.valueCounts(empty, "v")
+    assert(Resident.driverRows(got).isDefined && got.collect().isEmpty &&
+      got.schema == Rel.valueCountsAggregate(empty, "v").schema)
+  }
+
+  test("valueCounts plans the Aggregate for double and collated columns and parquet-backed frames") {
+    def aggregates(df: DataFrame) = Resident.driverRows(df).isEmpty &&
+      df.queryExecution.optimizedPlan.collectFirst { case a: Aggregate => a }.isDefined
+    // Spark groups -0.0 with 0.0 and every NaN together: InternalRow
+    // equality does not, so doubles keep the Column tree
+    val d = Resident.localFrame(spark, StructType(Seq(StructField("v", DoubleType))),
+      Seq(0.0, -0.0, Double.NaN, Double.NaN, 1.5, null).map(Row(_)))
+    val dc = Rel.valueCounts(d, "v")
+    assert(aggregates(dc))
+    assert(dc.collect().map(r => (Option(r.get(0)).map(_.toString), r.getLong(1))).toSeq ==
+      Seq((Some("0.0"), 2L), (Some("NaN"), 2L), (None, 1L), (Some("1.5"), 1L)))
+    // a case-insensitive collation groups 'a' with 'A'
+    val lcase = spark.sql(
+      "SELECT collate(v, 'UTF8_LCASE') AS v FROM VALUES ('a'), ('A'), ('b') AS t(v)")
+    assert(Resident.driverRows(lcase).isDefined)
+    val lc = Rel.valueCounts(lcase, "v")
+    assert(aggregates(lc) && lc.collect().map(_.getLong(1)).toSeq == Seq(2L, 1L))
+    val orders = spark.read.parquet(s"$sf/orders.parquet")
+    val oc = Rel.valueCounts(orders, "o_orderpriority")
+    assert(aggregates(oc))
+    assert(oc.collect().toSeq ==
+      Rel.valueCountsAggregate(orders, "o_orderpriority").collect().toSeq)
   }
 }

@@ -2,8 +2,15 @@ package graft.io
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.analysis.{EliminateSubqueryAliases, Resolver,
+  UnresolvedAttribute}
 import org.apache.spark.sql.catalyst.expressions.Attribute
-import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+import org.apache.spark.sql.catalyst.optimizer.{ConvertToLocalRelation, ReplaceExpressions}
+import org.apache.spark.sql.catalyst.plans.logical.{LocalRelation, LogicalPlan}
+import org.apache.spark.sql.execution.SQLExecution
+import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.graftshim.ColumnShim
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types.{DataType, IntegerType, LongType, StructType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -16,9 +23,11 @@ import org.apache.spark.unsafe.types.UTF8String
   * values the in-memory builders' trees return. A `null`
   * `java.lang.Double` is SQL NULL throughout. Also the one dispatch test
   * for "is this frame driver rows" ([[driverRows]]) that every driver
-  * twin ([[graft.vector.VectorOps.assembleContext]],
-  * [[graft.rel.Rel.valueCounts]]) makes, and the LocalRelation frames
-  * they and [[ResultCache]] return. */
+  * twin ([[graft.vector.Embedder.embed]], the resident serves,
+  * [[graft.vector.VectorOps.assembleContext]], [[graft.rel.Rel
+  * .valueCounts]]) makes, the reading of their input rows
+  * ([[columns]]), and the LocalRelation frames they and [[ResultCache]]
+  * return ([[internalFrame]]). */
 object Resident {
 
   /** Spark's `Divide` on doubles, in `DivModLike.eval`'s order: a NULL
@@ -112,31 +121,117 @@ object Resident {
   }
 
   /** Whether the session's division raises on zero (Spark 4 default). */
-  def ansi(spark: SparkSession): Boolean =
-    spark.conf.get("spark.sql.ansi.enabled").toBoolean
+  def ansi(spark: SparkSession): Boolean = ColumnShim.sqlConf(spark).ansiEnabled
 
-  /** The rows behind `df` when it is driver rows: its optimized plan is
-    * a LocalRelation — a [[localFrame]], a [[ResultCache]] row entry, or
-    * a projection or filter of one, which `ConvertToLocalRelation`
-    * folds. Collecting such a frame runs no Spark job, so a caller that
-    * mirrors a Column tree on the driver dispatches on this. The
-    * optimized plan is cached on `df`, so a later `df.collect()` does
-    * not optimize again. */
+  /** The rows behind `df` when it is driver rows: a [[localFrame]] or
+    * [[internalFrame]], a [[ResultCache]] row entry, or a projection,
+    * filter or limit of one. Read from the ANALYZED plan, which every
+    * Dataset already holds: subquery aliases and runtime-replaceable
+    * expressions are removed as the optimizer's first batch removes
+    * them, and Catalyst's own `ConvertToLocalRelation` then folds each
+    * Project, Filter and Limit over a LocalRelation into its rows, to
+    * a fixpoint, under the frame's session conf (ANSI mode, time zone,
+    * case mappings). No optimizer batch runs, so the test costs a
+    * fraction of a millisecond on a small frame. A caller that mirrors
+    * a Column tree on the driver dispatches on this and reads the
+    * folded rows directly; any plan the rule cannot fold (an
+    * aggregate, a sort, a scan, an unevaluable expression) is None. */
   def driverRows(df: DataFrame): Option[LocalRelation] =
     if (df.isStreaming) None
-    else df.queryExecution.optimizedPlan match {
+    else withSessionConf(df.sparkSession) {
+      fold(ReplaceExpressions(EliminateSubqueryAliases(df.queryExecution.analyzed)))
+    } match {
       case l: LocalRelation => Some(l)
       case _ => None
     }
 
-  /** A LocalRelation frame: collecting it, or a projection or filter
-    * over it, runs no Spark job. */
+  @scala.annotation.tailrec
+  private def fold(plan: LogicalPlan): LogicalPlan = {
+    val next = ConvertToLocalRelation(plan)
+    if (next eq plan) plan else fold(next)
+  }
+
+  /** `body` evaluated under the session's own SQL conf. */
+  def withSessionConf[T](spark: SparkSession)(body: => T): T =
+    SQLConf.withExistingConf(ColumnShim.sqlConf(spark))(body)
+
+  /** Whether two column names match as the session's analyzer matches
+    * them (`spark.sql.caseSensitive`). */
+  def resolver(spark: SparkSession): Resolver = ColumnShim.sqlConf(spark).resolver
+
+  /** The position in `output` of the one top-level column `name` names,
+    * matched by [[resolver]]; None when it names none, several, or a
+    * nested field. */
+  def fieldIndex(spark: SparkSession, output: Seq[Attribute],
+      name: String): Option[Int] = {
+    val matches = resolver(spark)
+    UnresolvedAttribute.quotedString(name).nameParts match {
+      case Seq(n) if n != "*" =>
+        output.indices.filter(i => matches(output(i).name, n)) match {
+          case Seq(i) => Some(i)
+          case _ => None
+        }
+      case _ => None
+    }
+  }
+
+  /** The columns `names` of `df` as Catalyst rows, with the attributes
+    * they were read from (the caller's spelling of each name resolves
+    * as the analyzer resolves it). Driver rows are read from the folded
+    * plan with no Spark job and no planning; any other frame is
+    * projected to those columns and collected by one job, and a name
+    * that resolves to no column or to several raises Spark's own
+    * error. */
+  def columns(df: DataFrame, names: String*): (Seq[Attribute], Seq[InternalRow]) = {
+    val spark = df.sparkSession
+    val local = for {
+      l <- driverRows(df)
+      at = names.map(fieldIndex(spark, l.output, _))
+      if at.forall(_.isDefined)
+    } yield {
+      val attrs = at.map(i => l.output(i.get))
+      (attrs, l.data.map(r => InternalRow.fromSeq(at.zip(attrs).map {
+        case (i, a) => r.get(i.get, a.dataType)
+      })))
+    }
+    local.getOrElse {
+      val picked = df.select(names.map(col): _*)
+      (picked.queryExecution.analyzed.output, collectRows(picked))
+    }
+  }
+
+  /** Collect `df` as Catalyst rows, by one Spark job tracked as a SQL
+    * execution, as `Dataset.collect` runs it but without converting
+    * the rows to external ones. */
+  def collectRows(df: DataFrame): Seq[InternalRow] = {
+    val qe = df.queryExecution
+    SQLExecution.withNewExecutionId(qe, Some("collect")) {
+      qe.executedPlan.executeCollect()
+    }.toSeq
+  }
+
+  /** An `array<float>` value as a driver array: NULL stays null; NULL
+    * elements, which no embedder emits, read as 0. */
+  def floats(r: InternalRow, i: Int): Array[Float] =
+    if (r.isNullAt(i)) null
+    else {
+      val a = r.getArray(i)
+      Array.tabulate(a.numElements)(j => if (a.isNullAt(j)) 0f else a.getFloat(j))
+    }
+
+  /** A string value as a driver string (NULL stays null). */
+  def string(r: InternalRow, i: Int): String =
+    if (r.isNullAt(i)) null else r.getUTF8String(i).toString
+
+  /** A LocalRelation frame over external rows: collecting it, or a
+    * projection or filter over it, runs no Spark job. */
   def localFrame(spark: SparkSession, schema: StructType,
       rows: Seq[Row]): DataFrame =
     spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
 
   /** A LocalRelation frame over Catalyst rows that already hold
-    * `output`'s internal values — no conversion from external rows. */
+    * `output`'s internal values — no conversion from external rows, and
+    * building it only analyzes the bare relation. */
   def internalFrame(spark: SparkSession, output: Seq[Attribute],
       rows: Seq[InternalRow]): DataFrame =
     org.apache.spark.sql.graftshim.ColumnShim.ofRows(spark, LocalRelation(output, rows))

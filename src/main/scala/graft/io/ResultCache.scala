@@ -2,7 +2,6 @@ package graft.io
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.{UnsafeProjection, UnsafeRow}
-import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.graftshim.ColumnShim
 import scala.collection.concurrent.TrieMap
 
@@ -146,17 +145,13 @@ object ResultCache {
   /** Collect `df` once and cache its rows as a LocalRelation frame,
     * within the byte budget. */
   private def putRows(k: String, df: DataFrame, deadline: Long): DataFrame = {
-    val qe = df.queryExecution
-    val collected = SQLExecution.withNewExecutionId(qe, Some("collect")) {
-      qe.executedPlan.executeCollect()
-    }
     lazy val toUnsafe = UnsafeProjection.create(df.schema)
-    val rows = collected.toSeq.map {
+    val rows = Resident.collectRows(df).map {
       case u: UnsafeRow => u
       case r => toUnsafe(r).copy()
     }
     val frame = Resident.internalFrame(df.sparkSession,
-      qe.analyzed.output.map(_.newInstance()), rows)
+      df.queryExecution.analyzed.output.map(_.newInstance()), rows)
     // charged twice: the frame's first collect plans a LocalTableScan,
     // which keeps its own copy of the rows
     val bytes = 2 * rows.iterator.map(_.getSizeInBytes.toLong).sum

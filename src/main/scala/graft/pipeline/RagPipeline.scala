@@ -1,9 +1,14 @@
 package graft.pipeline
 
 import graft.io.Caches.TrackedPersistOps
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import graft.io.Resident
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.AttributeReference
+import org.apache.spark.sql.catalyst.types.DataTypeUtils
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{IntegerType, StructField, StructType}
+import org.apache.spark.sql.types.IntegerType
+import org.apache.spark.unsafe.types.UTF8String
 import graft.text.chunk.Chunker
 import graft.vector.{Embedder, HashingEmbedder, VectorOps}
 
@@ -212,20 +217,22 @@ object RagPipeline {
     * indexes once into their resident segments
     * ([[graft.vector.Ivf.Segments]], [[graft.text.Bm25.Segments]]),
     * hung off the memoized `loadIndex` entries. Every serve then runs
-    * in plain Scala over those segments: probe → cell-pruned cosine
-    * top-2k, BM25 top-2k, RRF top-5 (1/(60 + rank), round 6) and the
-    * citation lookup, each mirroring the Column tree it replaces, so
-    * the answer is the one the Spark plan gave. The query frame is
-    * collected once — ids, vectors and the Spark-lowered terms from
-    * one optimized plan — and feeds both scorers. The result is a
+    * [[serveRows]] over those segments. This wrapper reads the
+    * queries' `query_id`, `query_text` and `q_embedding` with
+    * [[graft.io.Resident.columns]] (the id under the caller's spelling,
+    * resolved as the analyzer resolves it) and returns the answer as a
     * LocalRelation frame (query_id, rank, source, text), so
     * [[graft.vector.VectorOps.assembleContext]] over it assembles the
-    * cited context on the driver too: on a warm epoch with queries
-    * built from a local `Seq`, serve → context → collect runs ZERO
-    * Spark jobs and persists nothing. What a warm request still pays is
-    * driver planning: the caller's query frame (`toDF` plus the
-    * embedder UDF folded into it) is optimized once, and each
-    * LocalRelation hand-off is analyzed again.
+    * cited context on the driver too.
+    *
+    * Cost: on a warm epoch with queries built from a local `Seq` (and
+    * embedded by [[graft.vector.Embedder.embed]]'s driver path), serve →
+    * context runs no Spark job, persists nothing and runs no optimizer
+    * batch: the query frame is driver rows read from its analyzed plan,
+    * the scoring is plain Scala, and each answer is handed on as a
+    * LocalRelation that is only analyzed. What a warm request still pays
+    * is the caller's own frame construction (`toDF`) and the planning of
+    * its final `collect`.
     *
     * Memory: the resident copy holds the store's embeddings, texts
     * and postings on the driver — roughly the saved pair's
@@ -241,25 +248,43 @@ object RagPipeline {
   def hybridIndexedServe(spark: SparkSession, store: => DataFrame,
       queries: DataFrame, cacheKeyBase: String, epoch: Option[String],
       indexedCells: Int = IndexedCells): DataFrame = {
-    val (disk, cents, bm) =
+    val pair @ (disk, _, _) =
       ensureIndexedServe(spark, store, cacheKeyBase, epoch, indexedCells)
-    // one collect of the query frame feeds both scorers: its ids,
-    // vectors and Spark-lowered terms come from one optimized plan
-    val qs = queries.select(col("query_id"), col("q_embedding"),
-      graft.text.Bm25.queryTermArray(col("query_text"))).collect().toSeq
+    val (Seq(qid, _, _), rows) =
+      Resident.columns(queries, "query_id", "query_text", "q_embedding")
+    val served = serveRows(pair, rows.map(r =>
+      (r.get(0, qid.dataType), Resident.string(r, 1), Resident.floats(r, 2))))
+    Resident.internalFrame(spark,
+      Seq(qid.newInstance(), AttributeReference("rank", IntegerType, nullable = false)(),
+        DataTypeUtils.toAttribute(disk.schema("source")),
+        DataTypeUtils.toAttribute(disk.schema("text"))),
+      served.map { case (q, rank, src, text) =>
+        InternalRow(q, rank, UTF8String.fromString(src), UTF8String.fromString(text))
+      })
+  }
+
+  /** The rows-level serve core behind [[hybridIndexedServe]]: each
+    * query's (query_id, query_text, q_embedding) in, its cited top-k
+    * (query_id, rank, source, text) out, over the resident segments of
+    * a pair from [[ensureIndexedServe]]. No DataFrame is built: probe →
+    * cell-pruned cosine top-2k, BM25 top-2k over the terms
+    * [[graft.text.Bm25.queryTerms]] evaluates, RRF top-k (1/(60 +
+    * rank), round 6) and the citation lookup, each mirroring the Column
+    * tree it replaces (`Ivf.topK`, `Bm25.topK`, `rrfFuse`, the join
+    * back to the corpus), so the answer is the one the Spark plan gives.
+    * Query ids are compared by value: rows sharing one are pooled, as a
+    * window partitioned by `query_id` pools them. */
+  def serveRows(pair: (DataFrame, Array[Array[Double]], graft.text.Bm25.Bm25Index),
+      queries: Seq[(Any, String, Array[Float])]): Seq[(Any, Int, String, String)] = {
+    val (disk, cents, bm) = pair
+    val spark = disk.sparkSession
     val ivf = graft.vector.Ivf.resident(disk, cents)
-    val dense = ivf.topK(qs.map(r => (r.get(0), graft.vector.Ivf.floatsAt(r, 1))),
-      TopK * 2, IndexedProbe, graft.io.Resident.ansi(spark))
+    val dense = ivf.topK(queries.map(q => (q._1, q._3)), TopK * 2, IndexedProbe,
+      Resident.ansi(spark))
     val lex = graft.text.Bm25.resident(bm).topK(
-      qs.map(r => (r.get(0), graft.text.Bm25.termsAt(r, 2))), TopK * 2)
-    val cited = graft.text.Bm25.rrfFuseResident(dense, lex, TopK).flatMap(h =>
-      ivf.citation(h.id).map { case (src, text) =>
-        Row(h.queryId, h.rank, src, text) })
-    graft.io.Resident.localFrame(spark,
-      StructType(Seq(queries.schema("query_id"),
-        StructField("rank", IntegerType, nullable = false),
-        disk.schema("source"), disk.schema("text"))),
-      cited)
+      queries.map(_._1).zip(graft.text.Bm25.queryTerms(spark, queries.map(_._2))), TopK * 2)
+    graft.text.Bm25.rrfFuseResident(dense, lex, TopK).flatMap(h =>
+      ivf.citation(h.id).map { case (src, text) => (h.queryId, h.rank, src, text) })
   }
 
   /** The stable cache-key base every consumer of one saved serve

@@ -78,20 +78,12 @@ object Rel {
     * ordering for `desc(count), col(c)`. None unless `df` is driver rows
     * and `c` names exactly one column of a type listed in
     * [[valueCounts]]. */
-  private def valueCountsOnDriver(df: DataFrame, c: String): Option[DataFrame] = {
-    val caseSensitive = df.sparkSession.conf.get("spark.sql.caseSensitive").toBoolean
-    val fields = df.schema.fields
+  private def valueCountsOnDriver(df: DataFrame, c: String): Option[DataFrame] =
     for {
-      name <- Some(UnresolvedAttribute.quotedString(c).nameParts).collect {
-        case Seq(n) if n != "*" => n
-      }
-      named = (f: StructField) =>
-        if (caseSensitive) f.name == name else f.name.equalsIgnoreCase(name)
-      i = fields.indexWhere(named)
-      if i >= 0 && fields.count(named) == 1
-      field = fields(i)
-      if groupsByValue(field.dataType)
       local <- graft.io.Resident.driverRows(df)
+      i <- graft.io.Resident.fieldIndex(df.sparkSession, local.output, c)
+      field = local.output(i)
+      if groupsByValue(field.dataType)
     } yield {
       val counts = new java.util.HashMap[Any, java.lang.Long]()
       local.data.foreach { r =>
@@ -106,11 +98,11 @@ object Rel {
       graft.io.Resident.internalFrame(df.sparkSession,
         // the grouping column takes the name as `c` spells it, as in
         // the aggregate's output
-        Seq(AttributeReference(name, field.dataType, field.nullable, field.metadata)(),
+        Seq(AttributeReference(UnresolvedAttribute.quotedString(c).nameParts.head, field.dataType,
+            field.nullable, field.metadata)(),
           AttributeReference("count", LongType, nullable = false)()),
         rows.result().sorted(byCount))
     }
-  }
 
   /** Types whose Catalyst values are equal exactly when Spark groups
     * them together. `StringType` equals only the UTF8_BINARY string

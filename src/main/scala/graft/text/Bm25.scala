@@ -1,10 +1,17 @@
 package graft.text
 
 import graft.io.Caches.TrackedPersistOps
-import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeReference,
+  BindReferences, Expression}
+import org.apache.spark.sql.catalyst.plans.logical.Project
+import org.apache.spark.sql.catalyst.types.DataTypeUtils
+import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DoubleType, IntegerType, StructField, StructType}
+import org.apache.spark.sql.types.{DoubleType, IntegerType, StringType, StructField}
+import org.apache.spark.unsafe.types.UTF8String
 import scala.jdk.CollectionConverters._
 
 /** BM25 lexical retrieval — the classic sparse complement to the
@@ -47,20 +54,36 @@ object Bm25 {
   private def queryTerms(queries: DataFrame): DataFrame = queries
     .select(col("query_id"), explode(queryTermArray(col("qtext"))).as("term"))
 
-  /** Each query row's terms: (query_id, terms) on the driver. The
-    * [[queryTermArray]] Column is evaluated by Spark itself, so
-    * `lower()` cannot drift from the in-memory path's (Spark 4 lowers
-    * through ICU case mappings, not `String.toLowerCase`); over a frame
-    * built from a local `Seq` the projection folds into the
-    * LocalRelation and the collect runs no Spark job. */
-  private[graft] def collectQueryTerms(queries: DataFrame,
-      textCol: String = "qtext"): Seq[(Any, Seq[String])] =
-    queries.select(col("query_id"), queryTermArray(col(textCol))).collect()
-      .map(r => (r.get(0), termsAt(r, 1))).toSeq
+  /** [[queryTermArray]] as each session analyzes it over one string
+    * column: the expression and the attribute it reads. Held weakly per
+    * session, like [[graft.io.Sessions]]. */
+  private val termExpressions = java.util.Collections.synchronizedMap(
+    new java.util.WeakHashMap[SparkSession, (Expression, Attribute)]())
 
-  /** A collected [[queryTermArray]] cell (NULL text → no terms). */
-  private[graft] def termsAt(r: Row, i: Int): Seq[String] =
-    if (r.isNullAt(i)) Nil else r.getSeq[String](i)
+  /** Each text's distinct lowercase terms (a NULL text has none), from
+    * Spark's own [[queryTermArray]] expression evaluated on the driver:
+    * an interpreted projection over one `InternalRow`, not a query, so
+    * `lower()` is exactly the in-memory path's (Spark 4 lowers through
+    * ICU case mappings, not `String.toLowerCase`). The expression is
+    * analyzed once per session and bound on every call: binding copies
+    * every node above the input, so each call evaluates its own nodes
+    * (a regex and a case-mapping flag are cached per node, which makes
+    * shared nodes unsafe across threads), under the session's conf. */
+  private[graft] def queryTerms(spark: SparkSession,
+      texts: Seq[String]): Seq[Seq[String]] = {
+    val (expr, input) = termExpressions.computeIfAbsent(spark, s =>
+      graft.io.Resident.internalFrame(s, Seq(AttributeReference("qtext", StringType)()), Nil)
+        .select(queryTermArray(col("qtext"))).queryExecution.analyzed match {
+        case Project(Seq(e), child) => (e, child.output.head)
+      })
+    val bound = BindReferences.bindReference(expr, Seq(input))
+    graft.io.Resident.withSessionConf(spark) {
+      texts.map(t => bound.eval(InternalRow(UTF8String.fromString(t))) match {
+        case null => Nil
+        case a: ArrayData => Seq.tabulate(a.numElements)(a.getUTF8String(_).toString)
+      })
+    }
+  }
 
   /** Shared scoring + ranking tail: `matched` must carry (query_id,
     * doc_id, tf, df, dl, n_docs, avgdl). The resident
@@ -280,22 +303,27 @@ object Bm25 {
   /** Serve top-k from a loaded index by the resident scorer, with no
     * Spark job: the first serve of a loaded index builds its
     * [[Segments]] (one collect of each frame), and every serve after
-    * that scores them on the driver. Only the query frame is collected
-    * ([[collectQueryTerms]]). Rows, values, types and (desc score,
-    * doc_id) ties are those of [[topK]]'s Column tree over the same
-    * corpus (the equality Bm25Spec pins), returned as a LocalRelation
-    * frame. An index that did not come from [[loadIndex]], or whose
-    * entry left its LRU, is collected again on every call. */
+    * that scores them on the driver. The queries' `query_id` and
+    * `qtext` are read with [[graft.io.Resident.columns]] — from the
+    * folded plan when the frame is driver rows — and their terms with
+    * [[queryTerms]]. Rows, values, types and (desc score, doc_id) ties
+    * are those of [[topK]]'s Column tree over the same corpus (the
+    * equality Bm25Spec pins), returned as a LocalRelation frame with the
+    * caller's spelling of `query_id`. An index that did not come from
+    * [[loadIndex]], or whose entry left its LRU, is collected again on
+    * every call. */
   def topKIndexed(idx: Bm25Index, queries: DataFrame, k: Int,
       k1: Double = 1.2, b: Double = 0.75): DataFrame = {
     val spark = queries.sparkSession
     val seg = resident(idx)
-    val schema = StructType(Seq(queries.schema("query_id"),
-      StructField("rank", IntegerType, nullable = false), seg.docField,
-      StructField("score", DoubleType)))
-    graft.io.Resident.localFrame(spark, schema,
-      seg.topK(collectQueryTerms(queries), k, k1, b).map(h =>
-        Row(h.queryId, h.rank,
+    val (Seq(qid, _), rows) = graft.io.Resident.columns(queries, "query_id", "qtext")
+    val terms = queryTerms(spark, rows.map(graft.io.Resident.string(_, 1)))
+    graft.io.Resident.internalFrame(spark,
+      Seq(qid.newInstance(), AttributeReference("rank", IntegerType, nullable = false)(),
+        DataTypeUtils.toAttribute(seg.docField),
+        AttributeReference("score", DoubleType)()),
+      seg.topK(rows.map(_.get(0, qid.dataType)).zip(terms), k, k1, b).map(h =>
+        InternalRow(h.queryId, h.rank,
           graft.io.Resident.idValue(h.id, seg.docField.dataType), h.score)))
   }
 

@@ -1,7 +1,11 @@
 package graft.vector
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{AttributeReference, UnsafeArrayData}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, FloatType, StringType}
+import graft.io.Resident
 import graft.text.Tok
 
 /** E1 — pluggable embedder (reference: SentenceTransformer
@@ -27,11 +31,50 @@ trait Embedder extends Serializable {
   /** Adds an `embedding: array<float>` column derived from `textCol`:
     * one default UDF wrapper over [[embedOne]] (null text → zero
     * vector) shared by every implementation, so null handling can
-    * never diverge between embedders. */
+    * never diverge between embedders.
+    *
+    * Cost follows the input. When `df` is driver rows
+    * ([[graft.io.Resident.driverRows]]: a frame built from a local
+    * `Seq`, such as a request's queries) with one plain-string column
+    * `textCol` and no column named `out`, the vectors are computed with
+    * [[embedOne]] on the driver and returned as a LocalRelation frame,
+    * with the schema and nullability of the UDF path: the frame needs
+    * no analysis of a new projection, and collecting it or serving from
+    * it runs no Spark job. Any other input plans [[embedUdf]]. Both give
+    * the same rows and schema (ServeRowsSpec pins it). */
   def embed(df: DataFrame, textCol: String = "text",
-            out: String = "embedding"): DataFrame = {
+            out: String = "embedding"): DataFrame =
+    embedOnDriver(df, textCol, out).getOrElse(embedUdf(df, textCol, out))
+
+  /** The UDF projection [[embed]] plans for any input. */
+  private[graft] def embedUdf(df: DataFrame, textCol: String,
+      out: String): DataFrame = {
     val f = udf((s: String) => if (s == null) new Array[Float](dim) else embedOne(s))
     df.withColumn(out, f(col(textCol)))
+  }
+
+  /** [[embedUdf]] evaluated on the driver; None unless `df` is driver
+    * rows, `textCol` names exactly one UTF8_BINARY string column and no
+    * column is named `out` (`withColumn` would replace it in place). */
+  private def embedOnDriver(df: DataFrame, textCol: String,
+      out: String): Option[DataFrame] = {
+    val spark = df.sparkSession
+    val named = Resident.resolver(spark)
+    for {
+      local <- Resident.driverRows(df)
+      t <- Resident.fieldIndex(spark, local.output, textCol)
+      if local.output(t).dataType == StringType &&
+        !local.output.exists(a => named(a.name, out))
+    } yield {
+      val types = local.output.map(_.dataType)
+      Resident.internalFrame(spark,
+        local.output :+ AttributeReference(out, ArrayType(FloatType, containsNull = false))(),
+        local.data.map { r =>
+          val v = if (r.isNullAt(t)) new Array[Float](dim)
+            else embedOne(r.getUTF8String(t).toString)
+          InternalRow.fromSeq(r.toSeq(types) :+ UnsafeArrayData.fromPrimitiveArray(v))
+        })
+    }
   }
 }
 

@@ -1,9 +1,13 @@
 package graft.vector
 
-import org.apache.spark.sql.{DataFrame, Row}
+import graft.io.Resident
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.AttributeReference
+import org.apache.spark.sql.catalyst.types.DataTypeUtils
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DoubleType, IntegerType, StructField, StructType}
+import org.apache.spark.sql.types.{DoubleType, IntegerType, StructField}
 import scala.jdk.CollectionConverters._
 
 /** IVF (inverted-file) approximate nearest neighbor — the second
@@ -275,26 +279,27 @@ object Ivf {
   /** Top-k served from a LOADED index ([[loadIndex]]) by the resident
     * scorer, with no Spark job: the first serve of a loaded pair builds
     * its [[Segments]] (one collect of the cell files), and every serve
-    * after that probes and scores them on the driver. Only the query
-    * frame is collected — a frame built from a local `Seq` folds into
-    * a LocalRelation, so that collect runs no job either. Rows, values,
-    * types and `(desc cos_sim, vec_id)` ties are those of [[topK]]'s
-    * Column trees over the same index (the equality AnnIvfSpec pins),
-    * returned as a LocalRelation frame. A corpus frame that did not
-    * come from [[loadIndex]], or whose entry left its LRU, is
-    * collected again on every call. */
+    * after that probes and scores them on the driver. The queries'
+    * `query_id` and `q_embedding` are read with [[graft.io.Resident
+    * .columns]]: from the folded plan when the frame is driver rows (a
+    * frame built from a local `Seq`), with no job and no planning.
+    * Rows, values, types and `(desc cos_sim, vec_id)` ties are those of
+    * [[topK]]'s Column trees over the same index (the equality
+    * AnnIvfSpec pins), returned as a LocalRelation frame with the
+    * caller's spelling of `query_id`. A corpus frame that did not come
+    * from [[loadIndex]], or whose entry left its LRU, is collected
+    * again on every call. */
   def topKIndexed(corpusFromDisk: DataFrame, centroids: Array[Array[Double]],
       queries: DataFrame, k: Int, nProbe: Int = 4): DataFrame = {
     val spark = queries.sparkSession
     val seg = resident(corpusFromDisk, centroids)
-    val qs = collectQueryVecs(queries)
-    val schema = StructType(Seq(queries.schema("query_id"),
-      StructField("rank", IntegerType, nullable = false), seg.idField,
-      StructField("cos_sim", DoubleType)))
-    graft.io.Resident.localFrame(spark, schema,
-      seg.topK(qs, k, nProbe, graft.io.Resident.ansi(spark)).map(h =>
-        Row(h.queryId, h.rank,
-          graft.io.Resident.idValue(h.id, seg.idField.dataType), h.score)))
+    val (Seq(qid, _), rows) = Resident.columns(queries, "query_id", "q_embedding")
+    Resident.internalFrame(spark,
+      Seq(qid.newInstance(), AttributeReference("rank", IntegerType, nullable = false)(),
+        DataTypeUtils.toAttribute(seg.idField), AttributeReference("cos_sim", DoubleType)()),
+      seg.topK(rows.map(r => (r.get(0, qid.dataType), Resident.floats(r, 1))), k, nProbe,
+        Resident.ansi(spark)).map(h =>
+        InternalRow(h.queryId, h.rank, Resident.idValue(h.id, seg.idField.dataType), h.score)))
   }
 
   /** Persist an index: the assigned corpus lands `partitionBy("cell")`
@@ -369,22 +374,6 @@ object Ivf {
 
   private def mul(a: java.lang.Double, b: java.lang.Double): java.lang.Double =
     if (a == null || b == null) null else a * b
-
-  /** Each query row's (query_id, q_embedding) on the driver — over a
-    * frame built from a local `Seq` the projection folds into the
-    * LocalRelation and the collect runs no Spark job. */
-  private[graft] def collectQueryVecs(queries: DataFrame): Seq[(Any, Array[Float])] =
-    queries.select(col("query_id"), col("q_embedding")).collect()
-      .map(r => (r.get(0), floatsAt(r, 1))).toSeq
-
-  /** An `array<float>` cell as a driver array (NULL stays null; NULL
-    * elements, which no embedder emits, load as 0). */
-  private[graft] def floatsAt(r: Row, i: Int): Array[Float] =
-    if (r.isNullAt(i)) null
-    else r.getSeq[Any](i).iterator.map {
-      case null => 0f
-      case f: Float => f
-    }.toArray
 
   /** Collect a loaded corpus into [[Segments]] — embeddings decode
     * straight into primitive float arrays (NULL elements, which no

@@ -1,10 +1,13 @@
 package graft.vector
 
-import org.apache.spark.sql.{Column, DataFrame, Row}
+import graft.io.Resident
+import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeReference}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{IntegerType, LongType, StringType, StructField,
-  StructType}
+import org.apache.spark.sql.types.{IntegerType, LongType, StringType}
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Vector math over `array<float|double>` columns, expressed with
   * higher-order functions so everything stays codegen'd SQL — no UDF
@@ -61,17 +64,17 @@ object VectorOps {
     * `(query_id, rank, source, text)`; one `(query_id, context)` row per
     * query.
     *
-    * Cost follows the input. When `topk` optimizes to a LocalRelation —
-    * a resident serve's answer ([[graft.pipeline.RagPipeline
-    * .hybridIndexedServe]]), or a projection or filter of driver rows,
-    * which `ConvertToLocalRelation` folds — the context is assembled on
-    * the driver from one collect of that plan ([[graft.io.Resident
-    * .context]]) and returned as a LocalRelation frame: no Spark job,
-    * and collecting the result runs none either. Any other input
-    * (distributed retrieval, a query id or rank that is not int/bigint,
-    * source or text that are not plain strings) plans
-    * [[contextAggregate]]. Both give the same rows and schema
-    * (VectorOpsSpec pins it). */
+    * Cost follows the input. When `topk` is driver rows
+    * ([[graft.io.Resident.driverRows]]: a resident serve's answer
+    * ([[graft.pipeline.RagPipeline.hybridIndexedServe]]), or a
+    * projection or filter of driver rows) with int/bigint query ids and
+    * ranks and plain (UTF8_BINARY) string source and text, the context
+    * is assembled on the driver ([[graft.io.Resident.context]]) straight
+    * from the folded rows and returned as a LocalRelation frame: no
+    * Spark job and no optimizer batch, and collecting the result runs no
+    * job either. Any other input (distributed retrieval, an unmirrored
+    * column type) plans [[contextAggregate]]. Both give the same rows
+    * and schema (VectorOpsSpec and ServeRowsSpec pin it). */
   def assembleContext(topk: DataFrame): DataFrame =
     contextOnDriver(topk).getOrElse(contextAggregate(topk))
 
@@ -90,31 +93,35 @@ object VectorOps {
 
   /** [[contextAggregate]] evaluated on the driver, when `topk` is driver
     * rows whose column types the scalar mirror covers: int/bigint query
-    * ids and ranks, plain (UTF8_BINARY) source and text. None
-    * otherwise. */
+    * ids and ranks, plain (UTF8_BINARY) source and text, each named by
+    * exactly one column. None otherwise. */
   private def contextOnDriver(topk: DataFrame): Option[DataFrame] = {
-    val fields = topk.schema.fields
-    def at(name: String): Option[Int] =
-      if (fields.count(_.name == name) == 1) Some(fields.indexWhere(_.name == name))
-      else None
-    def isString(i: Int) = fields(i).dataType == StringType
-    def isIntegral(i: Int) = Seq(IntegerType, LongType).contains(fields(i).dataType)
+    val spark = topk.sparkSession
+    def isIntegral(a: Attribute) = Seq(IntegerType, LongType).contains(a.dataType)
+    def isString(a: Attribute) = a.dataType == StringType
     for {
-      q <- at("query_id") if isIntegral(q)
-      r <- at("rank") if isIntegral(r)
-      s <- at("source") if isString(s)
-      t <- at("text") if isString(t)
-      if graft.io.Resident.driverRows(topk).isDefined
+      local <- Resident.driverRows(topk)
+      out = local.output
+      at = (name: String, ok: Attribute => Boolean) =>
+        Resident.fieldIndex(spark, out, name).filter(i => ok(out(i)))
+      q <- at("query_id", isIntegral)
+      r <- at("rank", isIntegral)
+      s <- at("source", isString)
+      t <- at("text", isString)
     } yield {
-      val rows = topk.collect().toSeq.map { row =>
+      val rows = local.data.map { row =>
         val rank = if (row.isNullAt(r)) null
-          else java.lang.Long.valueOf(row.get(r).asInstanceOf[Number].longValue)
-        (row.get(q), (rank, row.getString(s), row.getString(t)))
+          else java.lang.Long.valueOf(row.get(r, out(r).dataType).asInstanceOf[Number].longValue)
+        (row.get(q, out(q).dataType),
+          (rank, Resident.string(row, s), Resident.string(row, t)))
       }
-      graft.io.Resident.localFrame(topk.sparkSession,
-        StructType(Seq(fields(q), StructField("context", StringType, nullable = false))),
-        graft.io.Resident.byQuery(rows).map { case (id, hits) =>
-          Row(id, graft.io.Resident.context(hits))
+      Resident.internalFrame(spark,
+        // named as the aggregate's `groupBy(col("query_id"))` names it,
+        // whatever the input's spelling
+        Seq(AttributeReference("query_id", out(q).dataType, out(q).nullable, out(q).metadata)(),
+          AttributeReference("context", StringType, nullable = false)()),
+        Resident.byQuery(rows).map { case (id, hits) =>
+          InternalRow(id, UTF8String.fromString(Resident.context(hits)))
         })
     }
   }

@@ -39,6 +39,10 @@ object ColumnShim {
       : org.apache.spark.sql.catalyst.plans.logical.LogicalPlan =
     df.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]].logicalPlan
 
+  /** The session's own SQL conf (`sessionState` is private[sql]). */
+  def sqlConf(spark: org.apache.spark.sql.SparkSession): org.apache.spark.sql.internal.SQLConf =
+    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].sessionState.conf
+
   /** The DIVIDE_BY_ZERO error an ANSI-mode `Divide` raises
     * (`QueryExecutionErrors` is private[sql]) — for driver-side
     * scorers that mirror a Column tree's division. */

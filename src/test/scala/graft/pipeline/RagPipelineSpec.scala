@@ -184,6 +184,15 @@ class RagPipelineSpec extends AnyFunSuite with SparkTestBase {
     }
     assert(jobs.isEmpty,
       s"a warm resident serve and its context must submit no Spark job: $jobs")
+    // nor does it optimize a frame of its own before the caller's
+    // collect: the query frame is read from its analyzed plan, and each
+    // answer is a LocalRelation that is only analyzed
+    org.apache.spark.sql.catalyst.rules.RuleExecutor.resetMetrics()
+    VectorOps.assembleContext(serve())
+    val ruleRuns = org.apache.spark.sql.catalyst.rules.RuleExecutor.dumpTimeSpent()
+    assert(Seq("ColumnPruning", "CollapseProject", "ConvertToLocalRelation",
+      "PushDownPredicates").forall(r => !ruleRuns.contains(r)),
+      s"a warm serve and its context must run no optimizer batch:\n$ruleRuns")
     assert(sc.getRDDStorageInfo.map(_.id).toSet == cachedBefore,
       "a warm serve must persist nothing")
     assert(warm.map(_.toSeq).toSeq == cold.map(_.toSeq).toSeq)

@@ -111,6 +111,22 @@ class RelSpec extends AnyFunSuite with SparkTestBase {
       got.schema == Rel.valueCountsAggregate(empty, "v").schema)
   }
 
+  test("valueCounts over a date-filtered page of driver rows still counts on the driver") {
+    // to_date is runtime-replaceable: the filter folds only once it is
+    // replaced, as the optimizer's first batch replaces it
+    val page = Resident.localFrame(spark,
+      StructType(Seq(StructField("d", StringType), StructField("v", StringType))),
+      Seq(Row("2024-01-05", "a"), Row("2024-02-01", "b"), Row("2023-12-31", "a"),
+        Row("2024-03-01", "a")))
+    val df = Rel.applyFilters(page.withColumn("d", to_date(col("d"))),
+      Seq(Rel.DateBetween("d", "2024-01-01", "2024-12-31")))
+    val got = Rel.valueCounts(df, "v")
+    assert(Resident.driverRows(got).isDefined)
+    assert(got.collect().toSeq == Rel.valueCountsAggregate(df, "v").collect().toSeq)
+    assert(got.collect().map(r => (r.getString(0), r.getLong(1))).toSeq ==
+      Seq(("a", 2L), ("b", 1L)))
+  }
+
   test("valueCounts plans the Aggregate for double and collated columns and parquet-backed frames") {
     def aggregates(df: DataFrame) = Resident.driverRows(df).isEmpty &&
       df.queryExecution.optimizedPlan.collectFirst { case a: Aggregate => a }.isDefined

@@ -62,6 +62,7 @@ class VectorOpsSpec extends AnyFunSuite with SparkTestBase {
   /** assembleContext over driver rows takes the driver path and equals
     * the Column-tree aggregate row for row, schema included. */
   private def contextMatchesAggregate(topk: DataFrame): Array[Row] = {
+    assert(graft.io.Resident.driverRows(topk).isDefined)
     val driver = VectorOps.assembleContext(topk)
     assert(driver.queryExecution.optimizedPlan.isInstanceOf[LocalRelation],
       "driver rows must be assembled on the driver")

@@ -1905,7 +1905,7 @@ object Queries {
     * map, exact integers out. The r10 form exploded 3 gram sizes
     * into a corpus ×3 stream and hash-aggregated per (doc, n, gram);
     * that per-partition hash map grows with the corpus and was the
-    * engine's worst 10× ScaleStress ratio (4.41×). An intermediate
+    * engine's worst ratio in the r10 10× scale probe (4.41×). An intermediate
     * r11 form (sorted gram arrays + `aggregate` run-length HOF
     * folds) fixed the state problem but paid interpreted-lambda
     * dispatch per gram — slower per row than the aggregate it
@@ -3245,7 +3245,7 @@ object Queries {
     * chain at dim = 8 with the caption formula as the query CTE. */
   /** Build-or-reuse the saved IVF index over the crafted clip image
     * corpus at size `n` / geometry `nCells` — the catalog rows share
-    * one key; the ScaleStress crossmodal probe mints per-size keys. */
+    * one key. */
   private[graft] def ensureClipIndex(s: SparkSession, n: Int,
       nCells: Int, key: String): String =
     vector.Ivf.ensureSavedBoundedIndex(
@@ -3254,9 +3254,7 @@ object Queries {
       epoch = Some(s"clip-fixture-v1-n$n-c$nCells"))
 
   /** The caption→saved-index serve funnel of [[q_crossmodal_indexed]]
-    * parameterized over the index path and caption-query count —
-    * shared verbatim with the ScaleStress crossmodal factor probe so
-    * the measured serve IS the catalog row's serve. */
+    * parameterized over the index path and caption-query count. */
   private[graft] def crossmodalServeAt(s: SparkSession, path: String,
       nQueries: Int): DataFrame = {
     val (disk, cents) = vector.Ivf.loadIndex(s, path)
@@ -3312,7 +3310,7 @@ object Queries {
   /** Build-or-reuse the saved IVF+PQ index over the clip image corpus
     * at size `n` / coarse geometry `nCells` (codebooks stay at the
     * [[XmPqM]]×[[XmPqK]] serve geometry) — the catalog row shares one
-    * key; the ScaleStress crossmodal probe mints per-size keys. */
+    * key. */
   private[graft] def ensureClipPqIndex(s: SparkSession, n: Int,
       nCells: Int, key: String): String =
     vector.Pq.ensureSavedIndex(
@@ -3321,8 +3319,7 @@ object Queries {
       epoch = Some(s"clip-fixture-v1-n$n-c$nCells-pq$XmPqM-$XmPqK"))
 
   /** The caption→compressed-serve funnel of [[q_crossmodal_pq]]
-    * parameterized over index path and caption count — shared
-    * verbatim with the ScaleStress crossmodal probe. Note the refine
+    * parameterized over index path and caption count. Note the refine
     * side re-decodes the image corpus (map-only): at scale the full-
     * vector table is the corpus store the shortlist joins back to. */
   private[graft] def crossmodalPqServeAt(s: SparkSession, path: String,

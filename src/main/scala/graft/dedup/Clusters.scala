@@ -129,8 +129,7 @@ object Clusters {
     * localCheckpoint blocks, delete the retained reliable-checkpoint
     * run dir. After release the frame is UNUSABLE (lineage was
     * truncated), which is why release only runs in [[clearMemo]] /
-    * clearAll — batch boundaries where no consumer may hold the frame
-    * — and for an entry that failed validation (already dead). */
+    * clearAll — batch boundaries where no consumer may hold the frame. */
   private def releaseEntry(e: CompEntry): Unit = {
     try backingRdds(e.df).foreach(_.unpersist(blocking = false))
     catch { case _: Throwable => () }
@@ -170,20 +169,18 @@ object Clusters {
     }
   }
 
-  /** Epoch-keyed memo over [[connectedComponents]] — the saved-index
-    * / `BpeLite.ensureTrainedMerges` discipline applied to the
-    * CLUSTER-RESOLUTION artifact: a production dedup pipeline
-    * materializes the component map once per corpus version and
-    * serves every downstream decision (canonical keeper, leak-proof
-    * split, corpus filter) from it. `pairs` is BY-NAME: a memo hit
-    * never constructs the candidate frame at all. Keyed on (session
-    * uuid — the returned frame is session-bound —, cacheKey, epoch),
-    * bounded LRU. An entry that leaves the memo — evicted past 16
-    * keys, or overwritten by a concurrent build of the same key — is
-    * RETIRED, not released: a caller may still hold its frame, so its
-    * backing is released at the next [[clearMemo]]. `epoch = None`
-    * resolves unconditionally ([[graft.io.SavedIndex]]'s vouching
-    * contract).
+  /** Epoch-keyed memo over [[connectedComponents]], in the engine's
+    * one [[graft.io.Memo]] (16 entries, single-flight, hits checked by
+    * [[entryValid]]): a production dedup pipeline materializes the
+    * component map once per corpus version and serves every downstream
+    * decision (canonical keeper, leak-proof split, corpus filter) from
+    * it. `pairs` is BY-NAME: a memo hit never constructs the candidate
+    * frame at all. Keyed on (session uuid — the returned frame is
+    * session-bound —, cacheKey, epoch). An entry that leaves the memo —
+    * evicted, invalid or overwritten — is RETIRED, not released: a
+    * caller may still hold its frame, so its backing is released at
+    * the next [[clearMemo]]. `epoch = None` resolves unconditionally
+    * ([[graft.io.SavedIndex]]'s vouching contract).
     *
     * Registered with [[graft.io.Caches.clearAll]] (r20 verdict #1):
     * the bench clears all caches between its min-of-3 runs so every
@@ -194,49 +191,21 @@ object Clusters {
     * now shares the clearAll lifecycle: it dedupes resolution WITHIN
     * a run (and between batch boundaries for long-lived consumers),
     * never across bench runs. */
-  private val componentMemo = java.util.Collections.synchronizedMap(
-    new java.util.LinkedHashMap[(String, String, String), CompEntry](
-        32, 0.75f, true) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[(String, String, String), CompEntry]): Boolean = {
-        val evict = size() > 16
-        if (evict) retired += e.getValue
-        evict
-      }
-    })
-
-  /** Entries dropped from the memo whose backing awaits [[clearMemo]];
-    * guarded by the memo's lock. */
-  private val retired = scala.collection.mutable.ArrayBuffer.empty[CompEntry]
+  private val componentMemo = new graft.io.Memo[(String, String, String), CompEntry](
+    "Clusters.ensureComponents", 16, valid = entryValid, release = Some(releaseEntry))
 
   graft.io.Caches.registerOnClear(() => clearMemo())
 
   /** Release the backing of every memoized and retired map and empty
-    * both — the [[graft.io.Caches.clearAll]] hook (also what specs
+    * the memo — the [[graft.io.Caches.clearAll]] hook (also what specs
     * call). */
-  private[graft] def clearMemo(): Unit = componentMemo.synchronized {
-    componentMemo.values().forEach(e => releaseEntry(e))
-    componentMemo.clear()
-    retired.foreach(releaseEntry)
-    retired.clear()
-  }
+  private[graft] def clearMemo(): Unit = componentMemo.clear()
 
   /** Retired entries awaiting release — for specs. */
-  private[graft] def retiredCount: Int = componentMemo.synchronized {
-    retired.size
-  }
+  private[graft] def retiredCount: Int = componentMemo.stats.retired
 
   /** Live memo entries — the bound/lifecycle assertion for specs. */
-  private[graft] def memoSize: Int = componentMemo.synchronized {
-    componentMemo.size()
-  }
-
-  /** Per-key build gates ([[graft.io.SavedIndex]] single-flight,
-    * r20 advice: two concurrent first callers both paid the
-    * candidate self-join + union-find). Distinct keys never
-    * serialize behind each other's resolution. */
-  private val building = new java.util.concurrent.ConcurrentHashMap[
-    (String, String, String), AnyRef]()
+  private[graft] def memoSize: Int = componentMemo.stats.size
 
   def ensureComponents(spark: org.apache.spark.sql.SparkSession,
       cacheKey: String, epoch: Option[String],
@@ -245,32 +214,8 @@ object Clusters {
     case None =>
       connectedComponents(pairs, smallGraphThreshold = smallGraphThreshold)
     case Some(e) =>
-      val key = (graft.io.Sessions.uuid(spark), cacheKey, e)
-      val hit = componentMemo.get(key)
-      if (hit != null && entryValid(hit)) hit.df
-      else {
-        val gate = building.computeIfAbsent(key, _ => new AnyRef)
-        try gate.synchronized {
-          val again = componentMemo.get(key)
-          if (again != null && entryValid(again)) again.df
-          else {
-            if (again != null) {
-              componentMemo.remove(key)
-              releaseEntry(again) // invalid: release is best-effort
-            }
-            val v = componentsEntry(pairs,
-              smallGraphThreshold = smallGraphThreshold)
-            componentMemo.synchronized {
-              // a concurrent build of the same key (its gate was
-              // removed while this one ran) may have installed its
-              // own entry; its caller may hold that frame
-              val prev = componentMemo.put(key, v)
-              if (prev != null) retired += prev
-            }
-            v.df
-          }
-        } finally building.remove(key)
-      }
+      componentMemo.getOrBuild((graft.io.Sessions.uuid(spark), cacheKey, e))(
+        componentsEntry(pairs, smallGraphThreshold = smallGraphThreshold)).df
   }
 
   def connectedComponents(pairs: DataFrame, maxIter: Int = 40,

@@ -479,7 +479,7 @@ object Dedup {
     * (32,768 buckets) instead of 8 (256). A fixed 256-bucket band
     * means bucket occupancy grows linearly with the corpus and the
     * banded self-join's pair comparisons grow as O(N²/256) — invisible
-    * at sf0.1, fatal at the 100 TB target (the 10x ScaleStress run
+    * at sf0.1, fatal at the 100 TB target (the r10 10x scale probe
     * flagged q_simhash_candidates as its worst ratio). 4 bands are
     * kept for the pigeonhole recall guarantee AT THE DEFAULT
     * maxHamming = 3: three flipped bits can touch at most 3 of 4

@@ -51,7 +51,7 @@ import org.apache.spark.sql.functions._
   * another member passes). The r15 factor-100 probe manufactured
   * exactly this: ±1%-noised tile replicas sat at cosine ≈ 0.9999,
   * creating 100-member true cliques and a 726× wall — fixed in the
-  * TILER (per-replica dimension rotation, ScaleStress.tile), because
+  * TILER (per-replica dimension rotation in the probe's tiler), because
   * the fixture was measuring the data's clique structure, not the
   * plan. On a real corpus the production mitigations are upstream
   * and orthogonal: exact-dedup first (collapses the worst cliques —

@@ -29,7 +29,7 @@ import org.apache.spark.storage.StorageLevel
   * one, so the registry refreshes the entry's position instead.
   *
   * [[clearAll]] remains the batch-boundary big hammer the engine's
-  * own drivers (Bench / Verify / ScaleStress) call between queries.
+  * own drivers (Bench / Verify) call between queries.
   */
 object Caches {
 

@@ -3,7 +3,6 @@ package graft.io
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.{UnsafeProjection, UnsafeRow}
 import org.apache.spark.sql.graftshim.ColumnShim
-import scala.collection.concurrent.TrieMap
 
 /** S9 — the reference's Redis result cache and guarded SQL surface
   * (`Frontend/app.py:98-133, 279-281`): results are cached under a
@@ -19,15 +18,19 @@ import scala.collection.concurrent.TrieMap
   *    and kept as driver rows in a LocalRelation frame — the
   *    reference's driver-side blob. Collecting it on a hit, or a
   *    filter, projection or [[graft.rel.Rel.valueCounts]] over it, runs
-  *    no Spark job. All row entries share one byte budget
-  *    ([[RowBudgetBytes]]), charged with each entry's measured row
-  *    bytes: a miss that overflows it evicts the oldest row entries,
-  *    and a result larger than the whole budget is returned uncached.
-  *    Both are logged.
+  *    no Spark job.
   *  - Unbounded (a `GROUP BY` with no `LIMIT`, a scan). The persisted
   *    DataFrame (columnar InMemoryRelation): a hit is served from
   *    executor memory as an InMemoryTableScan, partition-parallel, and
   *    survives result sizes no driver blob could.
+  *
+  * Both forms live in one [[Memo]] (single-flight: concurrent misses of
+  * one query run it once). A row entry weighs its measured row bytes
+  * against [[RowBudgetBytes]]; a persisted entry weighs 0. The policy
+  * is LRU over row entries: a miss that overflows the budget evicts the
+  * least recently used row entries (a hit refreshes its entry), and a
+  * result larger than the whole budget is returned uncached; both are
+  * logged. Persisted entries are never evicted by the budget.
   *
   * TTL is enforced at access time (lazy expiry — the same observable
   * contract as Redis `ex`), plus explicit `evictAll` for shutdown. The
@@ -46,14 +49,8 @@ object ResultCache {
     * entry is charged otherwise. */
   private final case class Entry(df: DataFrame, deadlineMillis: Long,
       rowBytes: Option[Long])
-  private val entries = TrieMap.empty[String, Entry]
-
-  /** Row entries, oldest first, and the bytes they are charged in
-    * total; both guarded by `rowEntries`' lock. */
-  private val rowEntries = new java.util.LinkedHashMap[String, Entry]()
-  private var rowBytes = 0L
-
-  private val log = org.apache.log4j.Logger.getLogger("graft.ResultCache")
+  private val entries = new Memo[String, Entry]("ResultCache", RowBudgetBytes,
+    weigh = _.rowBytes.getOrElse(0L))
 
   /** Redis-key normalization (`app.py:118`): collapse whitespace,
     * lowercase, trim — outside quotes only. A quoted literal or
@@ -105,7 +102,7 @@ object ResultCache {
     * the same JVM must never receive another session's frame.
     * [[Sessions.uuid]], not `identityHashCode` — identity hashes
     * can collide across live sessions and be reused after GC (r19
-    * advice, the loadIndex memo pattern). */
+    * advice). */
   private def key(spark: SparkSession, query: String): String =
     graft.io.Sessions.uuid(spark) + ":" +
       java.security.MessageDigest.getInstance("MD5")
@@ -118,33 +115,26 @@ object ResultCache {
   def sqlCached(spark: SparkSession, query: String, ttlMillis: Long,
       now: () => Long = () => System.currentTimeMillis()): DataFrame = {
     require(isAllowed(query), "Only SELECT queries are allowed")
-    lookup(spark, query, now).getOrElse {
+    val k = key(spark, query)
+    def entry = entries.getOrBuild(k) {
       val df = spark.sql(query)
       val deadline = now() + ttlMillis
       df.queryExecution.optimizedPlan.maxRows match {
-        case Some(n) if n <= MaxRowEntryRows =>
-          putRows(key(spark, query), df, deadline)
+        case Some(n) if n <= MaxRowEntryRows => rowEntry(df, deadline)
         case _ =>
           // a fresh frame: `df` has optimized without the cache, so its
           // own plan would never read the persisted relation
-          putPersisted(key(spark, query),
-            ColumnShim.ofRows(spark, ColumnShim.logicalPlan(df)).persist(), deadline)
+          Entry(ColumnShim.ofRows(spark, ColumnShim.logicalPlan(df)).persist(),
+            deadline, None)
       }
     }
+    val e = entry
+    if (now() < e.deadlineMillis) e.df else { evict(k, e); entry.df }
   }
 
-  private def putPersisted(k: String, df: DataFrame, deadline: Long): DataFrame =
-    // putIfAbsent: if a concurrent miss won the race, keep ITS entry
-    // and unpersist ours — an unconditional put would orphan the
-    // loser's persisted frame in executor memory
-    entries.putIfAbsent(k, Entry(df, deadline, None)) match {
-      case Some(winner) => df.unpersist(blocking = false); winner.df
-      case None => df
-    }
-
-  /** Collect `df` once and cache its rows as a LocalRelation frame,
-    * within the byte budget. */
-  private def putRows(k: String, df: DataFrame, deadline: Long): DataFrame = {
+  /** Collect `df` once into a row entry: its rows as a LocalRelation
+    * frame. */
+  private def rowEntry(df: DataFrame, deadline: Long): Entry = {
     lazy val toUnsafe = UnsafeProjection.create(df.schema)
     val rows = Resident.collectRows(df).map {
       case u: UnsafeRow => u
@@ -154,35 +144,7 @@ object ResultCache {
       df.queryExecution.analyzed.output.map(_.newInstance()), rows)
     // charged twice: the frame's first collect plans a LocalTableScan,
     // which keeps its own copy of the rows
-    val bytes = 2 * rows.iterator.map(_.getSizeInBytes.toLong).sum
-    if (bytes > RowBudgetBytes) {
-      log.warn(s"result of ${rows.length} rows ($bytes bytes) is over the " +
-        s"$RowBudgetBytes-byte row budget; returned uncached")
-      frame
-    } else {
-      val e = Entry(frame, deadline, Some(bytes))
-      rowEntries.synchronized {
-        entries.putIfAbsent(k, e) match {
-          case Some(winner) => winner.df
-          case None =>
-            // an entry under this key that left `entries` but whose
-            // evict has not reached `rowEntries` yet
-            Option(rowEntries.remove(k)).foreach(old => rowBytes -= old.rowBytes.get)
-            rowEntries.put(k, e)
-            rowBytes += bytes
-            val oldest = rowEntries.entrySet.iterator
-            while (rowBytes > RowBudgetBytes) {
-              val o = oldest.next()
-              oldest.remove()
-              rowBytes -= o.getValue.rowBytes.get
-              entries.remove(o.getKey, o.getValue)
-              log.info(s"row entry of ${o.getValue.rowBytes.get} bytes evicted " +
-                s"to keep row entries within $RowBudgetBytes bytes")
-            }
-            frame
-        }
-      }
-    }
+    Entry(frame, deadline, Some(2 * rows.iterator.map(_.getSizeInBytes.toLong).sum))
   }
 
   /** Live entry for `query`, or None — an expired entry is
@@ -190,26 +152,23 @@ object ResultCache {
   def lookup(spark: SparkSession, query: String,
       now: () => Long = () => System.currentTimeMillis()): Option[DataFrame] = {
     val k = key(spark, query)
-    entries.get(k) match {
-      case Some(e) if now() < e.deadlineMillis => Some(e.df)
-      case Some(e) => evict(k, e); None
-      case None => None
+    entries.get(k).flatMap { e =>
+      if (now() < e.deadlineMillis) Some(e.df)
+      else { evict(k, e); None }
     }
   }
 
-  def evictAll(): Unit = entries.foreach { case (k, e) => evict(k, e) }
+  def evictAll(): Unit = entries.clear().foreach(unpersist)
 
   /** Bytes the row entries are charged in total — for specs. */
-  private[graft] def rowBytesHeld: Long = rowEntries.synchronized(rowBytes)
+  private[graft] def rowBytesHeld: Long = entries.stats.weight
 
   private def evict(k: String, e: Entry): Unit =
     // conditional remove: only drop the exact entry we decided to
     // evict — a fresh entry raced in under the same key must survive
     // (and keep its persisted frame or its rows)
-    if (entries.remove(k, e)) e.rowBytes match {
-      case None => e.df.unpersist(blocking = false)
-      case Some(bytes) => rowEntries.synchronized {
-        if (rowEntries.remove(k, e)) rowBytes -= bytes
-      }
-    }
+    if (entries.remove(k, e)) unpersist(e)
+
+  private def unpersist(e: Entry): Unit =
+    if (e.rowBytes.isEmpty) e.df.unpersist(blocking = false)
 }

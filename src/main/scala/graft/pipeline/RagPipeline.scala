@@ -89,8 +89,7 @@ object RagPipeline {
     * `indexedCells` (`hybrid_indexed` only): the coarse-quantizer
     * cell count — [[IndexedCells]] is the fixed catalog geometry; a
     * corpus-proportional caller passes ~√n(chunks) (the SemDeDup
-    * cost-balance argument), which is what the ScaleStress ragserve
-    * probe measures. Folded into the index cache key, so differing
+    * cost-balance argument). Folded into the index cache key, so differing
     * geometries can never serve each other's files. */
   def run(spark: SparkSession, docs: DataFrame, queryTexts: Seq[String],
       strategy: String = "simple",
@@ -236,9 +235,12 @@ object RagPipeline {
     *
     * Memory: the resident copy holds the store's embeddings, texts
     * and postings on the driver — roughly the saved pair's
-    * uncompressed size. The loadIndex LRUs (16 entries each) bound how
-    * many stores stay resident. The store must fit the driver heap;
-    * serving larger stores from the executors is out of scope here.
+    * uncompressed size. Each copy hangs off its `loadIndex` entry in
+    * the engine's one [[graft.io.Memo]], whose 16-entry bound (per
+    * index kind) bounds how many stores stay resident; a pair it no
+    * longer holds is collected again per serve, with a warning. The
+    * store must fit the driver heap; serving larger stores from the
+    * executors is out of scope here.
     *
     * `queries` must carry (query_id, query_text, q_embedding) —
     * embedded with the same embedder as the store. `cacheKeyBase`

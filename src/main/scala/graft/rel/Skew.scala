@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 
 /** Skew-mitigation utilities (100 TB design note, SURVEY §7.4 #7).
   *
-  * MEASURED guidance ([[graft.tools.SkewBench]], 9.6 M rows with one
+  * MEASURED guidance (a skew-join probe since deleted, 9.6 M rows with one
   * key holding 50%, dim ~150 k, broadcast disabled, local[32] —
   * SKEW_BENCH.json): plain sort-merge 2.40 s, [[saltedJoin]] 1.51 s
   * (1.6x), AQE skew-split 1.12 s (2.1x). So the preference order is:

@@ -12,7 +12,6 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DoubleType, IntegerType, StringType, StructField}
 import org.apache.spark.unsafe.types.UTF8String
-import scala.jdk.CollectionConverters._
 
 /** BM25 lexical retrieval — the classic sparse complement to the
   * dense cosine path ([[graft.vector.Ann]]): Okapi BM25 with
@@ -259,46 +258,42 @@ object Bm25 {
     lazy val segments: Segments = loadSegments(index)
   }
 
-  /** Memoized per (session UUID, path) — bounded LRU, the
-    * [[graft.vector.Pq.loadIndex]] pattern: the four parquet reads
-    * cost footer I/O per call, and paths are content-addressed
-    * (fresh TempDirs per rebuild) so a cached entry can never go
-    * stale. Each entry also holds its resident [[Segments]] once
-    * served, so the 16-entry bound also bounds the resident copies. */
-  private val loadedIndexes = java.util.Collections.synchronizedMap(
-    new java.util.LinkedHashMap[(String, String), Loaded](32, 0.75f, true) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[(String, String), Loaded]): Boolean =
-        size() > 16
-    })
+  /** Loads per (session UUID, path), in the engine's one
+    * [[graft.io.Memo]] (16 entries, single-flight): the four parquet
+    * reads cost footer I/O per call, and paths are content-addressed
+    * (fresh TempDirs per rebuild), so an entry never goes stale. The
+    * bound also bounds the resident copies each entry holds once
+    * served. */
+  private val loaded =
+    new graft.io.Memo[(String, String), Loaded]("Bm25.loadIndex", 16)
+
+  /** The load memo's counters — for specs. */
+  private[graft] def loadStats: graft.io.Memo.Stats = loaded.stats
+
+  private val logger = org.apache.log4j.Logger.getLogger("graft.Bm25")
 
   def loadIndex(spark: org.apache.spark.sql.SparkSession,
-      path: String): Bm25Index = {
+      path: String): Bm25Index =
     // Sessions.uuid, not identityHashCode — unique per session and
     // never reused after GC (see graft.io.Sessions)
-    val key = (graft.io.Sessions.uuid(spark), path)
-    val hit = loadedIndexes.get(key)
-    if (hit != null) hit.index
-    else {
-      val v = new Loaded(Bm25Index(
+    loaded.getOrBuild((graft.io.Sessions.uuid(spark), path)) {
+      new Loaded(Bm25Index(
         spark.read.parquet(s"$path/postings"),
         spark.read.parquet(s"$path/doclen"),
         spark.read.parquet(s"$path/dfreq"),
         spark.read.parquet(s"$path/stats")))
-      loadedIndexes.put(key, v)
-      v.index
-    }
-  }
+    }.index
 
-  /** The resident [[Segments]] of an index: its memo entry's (built
-    * on first use, outside the memo lock), or a fresh uncached copy
-    * for an index that did not come from [[loadIndex]]. */
-  private[graft] def resident(idx: Bm25Index): Segments = {
-    val entry = loadedIndexes.synchronized {
-      loadedIndexes.values.iterator.asScala.find(_.index eq idx)
-    }
-    entry.fold(loadSegments(idx))(_.segments)
-  }
+  /** The resident [[Segments]] of an index: its memo entry's, found by
+    * reference. An index not held there — not from [[loadIndex]], or
+    * evicted — is collected again, uncached, on every call: logged and
+    * counted as a miss in [[loadStats]]. */
+  private[graft] def resident(idx: Bm25Index): Segments =
+    loaded.find(_.index eq idx).fold {
+      logger.warn("a BM25 index not held by the loadIndex memo is served: " +
+        "collecting all of it again")
+      loadSegments(idx)
+    }(_.segments)
 
   /** Serve top-k from a loaded index by the resident scorer, with no
     * Spark job: the first serve of a loaded index builds its
@@ -309,9 +304,9 @@ object Bm25 {
     * [[queryTerms]]. Rows, values, types and (desc score, doc_id) ties
     * are those of [[topK]]'s Column tree over the same corpus (the
     * equality Bm25Spec pins), returned as a LocalRelation frame with the
-    * caller's spelling of `query_id`. An index that did not come from
-    * [[loadIndex]], or whose entry left its LRU, is collected again on
-    * every call. */
+    * caller's spelling of `query_id`. An index the load memo does not
+    * hold is collected again on every call, with a warning
+    * ([[resident]]). */
   def topKIndexed(idx: Bm25Index, queries: DataFrame, k: Int,
       k1: Double = 1.2, b: Double = 0.75): DataFrame = {
     val spark = queries.sparkSession

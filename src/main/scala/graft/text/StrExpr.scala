@@ -225,7 +225,7 @@ case class CodePointSlices(left: Expression, right: Expression)
   * hash-aggregate state but paid interpreted-lambda dispatch and a
   * per-element struct allocation for EVERY gram of every size —
   * measurably slower per row than the exploded aggregate it replaced
-  * (10× ScaleStress: 7.4 s vs 5.8 s at 10× sf0.1). This kernel keeps
+  * (r11 scale probe: 7.4 s vs 5.8 s at 10× sf0.1). This kernel keeps
   * the zero-aggregation-state plan shape (pure scan → project) and
   * does the counting in one tight loop per row: token strings
   * decoded once, grams assembled into a reused StringBuilder, counts

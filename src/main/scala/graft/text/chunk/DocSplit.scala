@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Giant-document split policy — the EXECUTABLE answer to the
-  * row-skew straggler axis the r11 ScaleStress probe measured: every
+  * row-skew straggler axis the r11 scale probe measured: every
   * per-document kernel (chunkers, simhash, BPE apply, repetition) is
   * linear in doc length, but a document is one ROW, and one 50 MB
   * document is one serial task no partitioning can split (~15 s for

@@ -8,7 +8,6 @@ import org.apache.spark.sql.catalyst.types.DataTypeUtils
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DoubleType, IntegerType, StructField}
-import scala.jdk.CollectionConverters._
 
 /** IVF (inverted-file) approximate nearest neighbor — the second
   * scale path next to LSH ([[Ann.lshTopK]]): a k-means coarse
@@ -286,9 +285,8 @@ object Ivf {
     * Rows, values, types and `(desc cos_sim, vec_id)` ties are those of
     * [[topK]]'s Column trees over the same index (the equality
     * AnnIvfSpec pins), returned as a LocalRelation frame with the
-    * caller's spelling of `query_id`. A corpus frame that did not come
-    * from [[loadIndex]], or whose entry left its LRU, is collected
-    * again on every call. */
+    * caller's spelling of `query_id`. A pair the load memo does not hold
+    * is collected again on every call, with a warning ([[resident]]). */
   def topKIndexed(corpusFromDisk: DataFrame, centroids: Array[Array[Double]],
       queries: DataFrame, k: Int, nProbe: Int = 4): DataFrame = {
     val spark = queries.sparkSession
@@ -406,54 +404,45 @@ object Ivf {
     lazy val segments: Segments = loadSegments(pair._1, pair._2)
   }
 
-  /** Memoized per (session UUID, path) like [[graft.vector.Pq
-    * .loadIndex]] (bounded LRU — epoch-moving consumers mint a fresh
-    * path per rebuild, so an unbounded memo would retain every
-    * superseded version): the centroid collect is a driver-side
-    * Spark job, and without the memo every serve on the documented
-    * O(1) epoch-hit path paid it again. Paths are content-addressed
-    * (fresh TempDirs per rebuild), so a cached entry can never go
-    * stale. Each entry also holds its resident [[Segments]] once
-    * served, so the 16-entry bound also bounds the resident copies:
-    * at most 16 loaded stores' embeddings and texts on the driver. */
-  private val loadedIndexes = java.util.Collections.synchronizedMap(
-    new java.util.LinkedHashMap[(String, String), Loaded](32, 0.75f, true) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[(String, String), Loaded]): Boolean =
-        size() > 16
-    })
+  /** Loads per (session UUID, path), in the engine's one
+    * [[graft.io.Memo]] (16 entries, single-flight): the centroid
+    * collect is a driver-side Spark job that an O(1) epoch-hit serve
+    * must not pay again. Paths are content-addressed (fresh TempDirs
+    * per rebuild), so an entry never goes stale, and the bound keeps
+    * an epoch-moving consumer from retaining every superseded version;
+    * it also bounds the resident copies each entry holds once served. */
+  private val loaded =
+    new graft.io.Memo[(String, String), Loaded]("Ivf.loadIndex", 16)
+
+  /** The load memo's counters — for specs. */
+  private[graft] def loadStats: graft.io.Memo.Stats = loaded.stats
+
+  private val logger = org.apache.log4j.Logger.getLogger("graft.Ivf")
 
   def loadIndex(spark: org.apache.spark.sql.SparkSession,
-      path: String): (DataFrame, Array[Array[Double]]) = {
-    // Sessions.uuid, not identityHashCode: identity hashes are not
-    // unique across live sessions and can be REUSED after a stopped
-    // session is GC'd, which would serve frames bound to a dead
-    // session for the same path
-    val key = (graft.io.Sessions.uuid(spark), path)
-    val hit = loadedIndexes.get(key)
-    if (hit != null) hit.pair
-    else {
+      path: String): (DataFrame, Array[Array[Double]]) =
+    // Sessions.uuid, not identityHashCode — unique per session and
+    // never reused after GC (see graft.io.Sessions)
+    loaded.getOrBuild((graft.io.Sessions.uuid(spark), path)) {
       val corpus = spark.read.parquet(s"$path/corpus")
       val cents = spark.read.parquet(s"$path/centroids")
         .orderBy("cell").collect()
         .map(_.getAs[scala.collection.Seq[Double]]("centroid").toArray)
-      val v = new Loaded((corpus, cents))
-      loadedIndexes.put(key, v)
-      v.pair
-    }
-  }
+      new Loaded((corpus, cents))
+    }.pair
 
-  /** The resident [[Segments]] of a loaded pair: its memo entry's
-    * (built on first use, outside the memo lock), or a fresh uncached
-    * copy for a pair that did not come from [[loadIndex]]. */
+  /** The resident [[Segments]] of a loaded pair: its memo entry's,
+    * found by reference. A pair not held there — not from [[loadIndex]],
+    * or evicted — is collected again, uncached, on every call: logged
+    * and counted as a miss in [[loadStats]]. */
   private[graft] def resident(corpus: DataFrame,
-      centroids: Array[Array[Double]]): Segments = {
-    val entry = loadedIndexes.synchronized {
-      loadedIndexes.values.iterator.asScala
-        .find(e => (e.pair._1 eq corpus) && (e.pair._2 eq centroids))
-    }
-    entry.fold(loadSegments(corpus, centroids))(_.segments)
-  }
+      centroids: Array[Array[Double]]): Segments =
+    loaded.find(e => (e.pair._1 eq corpus) && (e.pair._2 eq centroids))
+      .fold {
+        logger.warn("an IVF pair not held by the loadIndex memo is served: " +
+          "collecting its whole store again")
+        loadSegments(corpus, centroids)
+      }(_.segments)
 
   /** One saved index per cache key per JVM (build-once-serve-many,
     * same [[graft.io.SavedIndex]] staleness contract as [[graft.text

@@ -387,55 +387,35 @@ object Pq {
       .coalesce(1).write.mode("overwrite").parquet(s"$path/centroids")
   }
 
-  /** Loaded indexes memoize per (session, path): a SavedIndex path is
-    * content-addressed (every rebuild lands in a FRESH TempDirs dir,
-    * never overwriting a served one), so a path's contents are
-    * immutable for the JVM's lifetime and the three driver-side
-    * reads (codebooks, centroids, codes schema) need not repeat —
-    * they cost ~0.5 s of job latency per serve otherwise. BOUNDED
-    * (LRU, 16 entries): a long-lived consumer whose corpus epochs
-    * keep moving gets a fresh path per rebuild, and an unbounded
-    * memo would retain every superseded version's codebooks for the
-    * JVM's lifetime (the Caches.persistTracked retention rule,
-    * applied to this driver-side cache). */
-  private val loadedIndexes = java.util.Collections.synchronizedMap(
-    new java.util.LinkedHashMap[
-        (String, String), (DataFrame, Codebooks, Array[Array[Double]])](
-        32, 0.75f, true) {
-      override def removeEldestEntry(e: java.util.Map.Entry[
-          (String, String), (DataFrame, Codebooks, Array[Array[Double]])])
-          : Boolean = size() > 16
-    })
+  /** Loads per (session UUID, path), in the engine's one
+    * [[graft.io.Memo]] (16 entries, single-flight): a SavedIndex path
+    * is content-addressed (every rebuild lands in a FRESH TempDirs dir,
+    * never overwriting a served one), so its contents are immutable
+    * for the JVM's lifetime and the driver-side reads (codebooks,
+    * centroids) need not repeat — they cost ~0.5 s of job latency per
+    * serve otherwise. The bound keeps an epoch-moving consumer from
+    * retaining every superseded version's codebooks. */
+  private val loadedIndexes = new graft.io.Memo[
+    (String, String), (DataFrame, Codebooks, Array[Array[Double]])]("Pq.loadIndex", 16)
 
   def loadIndex(spark: org.apache.spark.sql.SparkSession, path: String)
-      : (DataFrame, Codebooks, Array[Array[Double]]) = {
+      : (DataFrame, Codebooks, Array[Array[Double]]) =
     // Sessions.uuid, not identityHashCode — unique per session and
-    // never reused after GC (r19 advice; see graft.io.Sessions)
-    val key = (graft.io.Sessions.uuid(spark), path)
-    val hit = loadedIndexes.get(key)
-    if (hit != null) hit
-    else {
-      val v = doLoadIndex(spark, path)
-      loadedIndexes.put(key, v)
-      v
+    // never reused after GC (see graft.io.Sessions)
+    loadedIndexes.getOrBuild((graft.io.Sessions.uuid(spark), path)) {
+      val codes = spark.read.parquet(s"$path/codes")
+      val flat = spark.read.parquet(s"$path/books")
+        .orderBy(col("s"), col("code")).collect()
+        .map(r => (r.getInt(0), r.getInt(1),
+          r.getAs[scala.collection.Seq[Double]]("cent").toArray))
+      val m = flat.map(_._1).max + 1
+      val books: Codebooks = Array.tabulate(m)(s =>
+        flat.filter(_._1 == s).sortBy(_._2).map(_._3))
+      val cents = spark.read.parquet(s"$path/centroids")
+        .orderBy(col("cell")).collect()
+        .map(_.getAs[scala.collection.Seq[Double]]("centroid").toArray)
+      (codes, books, cents)
     }
-  }
-
-  private def doLoadIndex(spark: org.apache.spark.sql.SparkSession,
-      path: String): (DataFrame, Codebooks, Array[Array[Double]]) = {
-    val codes = spark.read.parquet(s"$path/codes")
-    val flat = spark.read.parquet(s"$path/books")
-      .orderBy(col("s"), col("code")).collect()
-      .map(r => (r.getInt(0), r.getInt(1),
-        r.getAs[scala.collection.Seq[Double]]("cent").toArray))
-    val m = flat.map(_._1).max + 1
-    val books: Codebooks = Array.tabulate(m)(s =>
-      flat.filter(_._1 == s).sortBy(_._2).map(_._3))
-    val cents = spark.read.parquet(s"$path/centroids")
-      .orderBy(col("cell")).collect()
-      .map(_.getAs[scala.collection.Seq[Double]]("centroid").toArray)
-    (codes, books, cents)
-  }
 
   /** One saved IVF+PQ index per cache key per JVM — the same
     * [[graft.io.SavedIndex]] build-once/serve-many + staleness

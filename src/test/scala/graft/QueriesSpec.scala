@@ -364,7 +364,7 @@ class QueriesSpec extends AnyFunSuite with SparkTestBase {
   }
 
   test("q_repetition / q_tfidf_keywords plan gates (r11 rewrites)") {
-    // the two worst 10x ScaleStress ratios of r10, both rewritten to
+    // the two worst ratios of r10's 10x scale probe, both rewritten to
     // shapes whose state no longer grows with the corpus — pin the
     // shapes so a refactor can't silently reintroduce the old plans.
     // AQE off for stable static plans (assertion only).

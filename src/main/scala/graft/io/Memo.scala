@@ -45,6 +45,9 @@ final class Memo[K, V <: AnyRef](name: String, capacity: Long,
     * recency); otherwise None (a miss, and an invalid value leaves). */
   def get(k: K): Option[V] = lookup(k, count = true)
 
+  /** [[get]], uncounted: a look that is neither a hit nor a miss. */
+  def peek(k: K): Option[V] = lookup(k, count = false)
+
   /** The value of `k`: held, or built once however many callers miss
     * it together. A caller that finds it built under the gate counts
     * its miss only. */

@@ -2,9 +2,9 @@ package graft.io
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.{EliminateSubqueryAliases, Resolver,
-  UnresolvedAttribute}
-import org.apache.spark.sql.catalyst.expressions.Attribute
+import org.apache.spark.sql.catalyst.analysis.{EliminateSubqueryAliases, EliminateView,
+  Resolver, UnresolvedAttribute}
+import org.apache.spark.sql.catalyst.expressions.{Attribute, CommonExpressionRef, With}
 import org.apache.spark.sql.catalyst.optimizer.{ConvertToLocalRelation, ReplaceExpressions}
 import org.apache.spark.sql.catalyst.plans.logical.{LocalRelation, LogicalPlan}
 import org.apache.spark.sql.execution.SQLExecution
@@ -124,26 +124,42 @@ object Resident {
   def ansi(spark: SparkSession): Boolean = ColumnShim.sqlConf(spark).ansiEnabled
 
   /** The rows behind `df` when it is driver rows: a [[localFrame]] or
-    * [[internalFrame]], a [[ResultCache]] row entry, or a projection,
-    * filter or limit of one. Read from the ANALYZED plan, which every
-    * Dataset already holds: subquery aliases and runtime-replaceable
-    * expressions are removed as the optimizer's first batch removes
-    * them, and Catalyst's own `ConvertToLocalRelation` then folds each
-    * Project, Filter and Limit over a LocalRelation into its rows, to
-    * a fixpoint, under the frame's session conf (ANSI mode, time zone,
-    * case mappings). No optimizer batch runs, so the test costs a
-    * fraction of a millisecond on a small frame. A caller that mirrors
-    * a Column tree on the driver dispatches on this and reads the
-    * folded rows directly; any plan the rule cannot fold (an
+    * [[internalFrame]], a [[ResultCache]] row entry, a temp view over
+    * one, or a projection, filter or limit of one. Read from the
+    * ANALYZED plan, which every Dataset already holds: it is
+    * [[normalize]]d, and Catalyst's own `ConvertToLocalRelation` then
+    * folds each Project, Filter and Limit over a LocalRelation into its
+    * rows, to a fixpoint, under the frame's session conf (ANSI mode,
+    * time zone, case mappings). No optimizer batch runs, so the test
+    * costs a fraction of a millisecond on a small frame. A caller that
+    * mirrors a Column tree on the driver dispatches on this and reads
+    * the folded rows directly; any plan the rule cannot fold (an
     * aggregate, a sort, a scan, an unevaluable expression) is None. */
   def driverRows(df: DataFrame): Option[LocalRelation] =
     if (df.isStreaming) None
     else withSessionConf(df.sparkSession) {
-      fold(ReplaceExpressions(EliminateSubqueryAliases(df.queryExecution.analyzed)))
+      fold(normalize(df.queryExecution.analyzed))
     } match {
       case l: LocalRelation => Some(l)
       case _ => None
     }
+
+  /** An analyzed plan as the optimizer's first batch leaves it, and no
+    * further: subquery aliases and views removed, runtime-replaceable
+    * expressions replaced (`to_date(s, fmt)` throws if evaluated
+    * unreplaced), and the common expressions of a `With` — what SQL
+    * `BETWEEN` becomes on Spark 4.1, and which is unevaluable — inlined
+    * when they are deterministic. The one normalization behind
+    * [[driverRows]] and [[ResidentTable.page]]. */
+  private[graft] def normalize(plan: LogicalPlan): LogicalPlan =
+    ReplaceExpressions(EliminateView(EliminateSubqueryAliases(plan)))
+      .transformAllExpressions {
+        case With(child, defs) if defs.forall(_.child.deterministic) =>
+          val byId = defs.map(d => d.id -> d.child).toMap
+          child.transformUp {
+            case r: CommonExpressionRef if byId.contains(r.id) => byId(r.id)
+          }
+      }
 
   @scala.annotation.tailrec
   private def fold(plan: LogicalPlan): LogicalPlan = {

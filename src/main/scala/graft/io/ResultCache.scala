@@ -10,15 +10,21 @@ import org.apache.spark.sql.graftshim.ColumnShim
   * and only SELECT statements may reach the engine.
   *
   * Spark mapping: a value is a DataFrame instead of pickled bytes, in
-  * one of two forms, chosen by what the optimized plan proves about
-  * the result's size:
+  * one of two forms:
   *
-  *  - Bounded (`optimizedPlan.maxRows` at most [[MaxRowEntryRows]]: a
-  *    `LIMIT` page, a global aggregate). The result is collected once
-  *    and kept as driver rows in a LocalRelation frame — the
-  *    reference's driver-side blob. Collecting it on a hit, or a
-  *    filter, projection or [[graft.rel.Rel.valueCounts]] over it, runs
-  *    no Spark job.
+  *  - Bounded: a result of at most [[MaxRowEntryRows]] rows, kept as
+  *    driver rows in a LocalRelation frame — the reference's
+  *    driver-side blob. Collecting it on a hit, or a filter, projection
+  *    or [[graft.rel.Rel.valueCounts]] over it, runs no Spark job. A
+  *    miss fills it in one of two ways. A page — `LIMIT n ≤ 10k`, an
+  *    optional `OFFSET`, a sort on columns, an optional column list and
+  *    a filter that cannot raise an error, over a small file-backed
+  *    table — is walked from the table's driver-resident copy in
+  *    `ORDER BY` order, stopping after `offset + limit` matches
+  *    ([[ResidentTable.page]]): no optimizer run and, once the copy is
+  *    loaded, no Spark job. Any other result the optimized plan proves
+  *    small (`optimizedPlan.maxRows`: a page the walk does not answer,
+  *    a global aggregate) is scanned by Spark and collected once.
   *  - Unbounded (a `GROUP BY` with no `LIMIT`, a scan). The persisted
   *    DataFrame (columnar InMemoryRelation): a hit is served from
   *    executor memory as an InMemoryTableScan, partition-parallel, and
@@ -39,8 +45,8 @@ import org.apache.spark.sql.graftshim.ColumnShim
 object ResultCache {
 
   /** The most rows a result may be proven to have and still be kept as
-    * driver rows. */
-  private val MaxRowEntryRows = 10000L
+    * driver rows; also the largest `LIMIT` the resident walk answers. */
+  private[io] val MaxRowEntryRows = 10000L
 
   /** Driver bytes all row entries together may hold. */
   private[graft] val RowBudgetBytes: Long = 32L << 20
@@ -119,27 +125,34 @@ object ResultCache {
     def entry = entries.getOrBuild(k) {
       val df = spark.sql(query)
       val deadline = now() + ttlMillis
-      df.queryExecution.optimizedPlan.maxRows match {
-        case Some(n) if n <= MaxRowEntryRows => rowEntry(df, deadline)
-        case _ =>
-          // a fresh frame: `df` has optimized without the cache, so its
-          // own plan would never read the persisted relation
-          Entry(ColumnShim.ofRows(spark, ColumnShim.logicalPlan(df)).persist(),
-            deadline, None)
+      ResidentTable.page(df) match {
+        case Some(rows) => rowEntry(df, rows, deadline)
+        case None => df.queryExecution.optimizedPlan.maxRows match {
+          case Some(n) if n <= MaxRowEntryRows => rowEntry(df, collectUnsafe(df), deadline)
+          case _ =>
+            // a fresh frame: `df` has optimized without the cache, so its
+            // own plan would never read the persisted relation
+            Entry(ColumnShim.ofRows(spark, ColumnShim.logicalPlan(df)).persist(),
+              deadline, None)
+        }
       }
     }
     val e = entry
     if (now() < e.deadlineMillis) e.df else { evict(k, e); entry.df }
   }
 
-  /** Collect `df` once into a row entry: its rows as a LocalRelation
-    * frame. */
-  private def rowEntry(df: DataFrame, deadline: Long): Entry = {
+  /** `df`'s rows, collected by Spark, as `UnsafeRow`s. */
+  private def collectUnsafe(df: DataFrame): Seq[UnsafeRow] = {
     lazy val toUnsafe = UnsafeProjection.create(df.schema)
-    val rows = Resident.collectRows(df).map {
+    Resident.collectRows(df).map {
       case u: UnsafeRow => u
       case r => toUnsafe(r).copy()
     }
+  }
+
+  /** A row entry: `rows`, the result of `df`, as a LocalRelation
+    * frame. */
+  private def rowEntry(df: DataFrame, rows: Seq[UnsafeRow], deadline: Long): Entry = {
     val frame = Resident.internalFrame(df.sparkSession,
       df.queryExecution.analyzed.output.map(_.newInstance()), rows)
     // charged twice: the frame's first collect plans a LocalTableScan,
@@ -148,11 +161,12 @@ object ResultCache {
   }
 
   /** Live entry for `query`, or None — an expired entry is
-    * evicted on the way out (lazy TTL eviction). */
+    * evicted on the way out (lazy TTL eviction). Not counted in
+    * [[stats]]. */
   def lookup(spark: SparkSession, query: String,
       now: () => Long = () => System.currentTimeMillis()): Option[DataFrame] = {
     val k = key(spark, query)
-    entries.get(k).flatMap { e =>
+    entries.peek(k).flatMap { e =>
       if (now() < e.deadlineMillis) Some(e.df)
       else { evict(k, e); None }
     }
@@ -162,6 +176,12 @@ object ResultCache {
 
   /** Bytes the row entries are charged in total — for specs. */
   private[graft] def rowBytesHeld: Long = entries.stats.weight
+
+  /** The cache's counters: `hits` and `misses` count [[sqlCached]]
+    * calls, `weight` is [[rowBytesHeld]]. How misses were
+    * answered is in [[ResidentTable.pagesServed]] and
+    * [[ResidentTable.fallbacks]]. */
+  def stats: Memo.Stats = entries.stats
 
   private def evict(k: String, e: Entry): Unit =
     // conditional remove: only drop the exact entry we decided to

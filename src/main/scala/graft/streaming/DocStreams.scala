@@ -484,7 +484,7 @@ object DocStreams {
       embedder: graft.vector.Embedder = graft.vector.HashingEmbedder(64),
       checkpoint: String = ""): org.apache.spark.sql.streaming.StreamingQuery = {
     val cp = if (checkpoint.nonEmpty) checkpoint
-      else java.nio.file.Files.createTempDirectory("graft-store-cp").toString
+      else graft.io.TempDirs.create("graft-store-cp")
     docs.writeStream
       .outputMode("append")
       .option("checkpointLocation", cp)

@@ -22,6 +22,9 @@ trait SparkTestBase {
   lazy val spark: SparkSession = SparkTestBase.spark
   def sf: String = SparkTestBase.sf
 
+  /** A fresh temp directory, deleted when the JVM exits. */
+  protected def tempDir(prefix: String): String = graft.io.TempDirs.create(prefix)
+
   /** Runs `body` with a listener attached; returns its value and one
     * entry per Spark job it submitted. */
   protected def jobsDuring[T](body: => T): (T, Seq[String]) = {

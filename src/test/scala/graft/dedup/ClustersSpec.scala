@@ -114,7 +114,7 @@ class ClustersSpec extends AnyFunSuite with SparkTestBase {
 
   test("ensureComponents: dead reliable-checkpoint backing detected, rebuilt") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-ccm").toString
+    val dir = tempDir("graft-ccm")
     spark.conf.set(Clusters.CheckpointDirConf, dir)
     val key = s"spec-ccv-${java.util.UUID.randomUUID()}"
     var built = 0
@@ -159,7 +159,7 @@ class ClustersSpec extends AnyFunSuite with SparkTestBase {
 
   test("ensureComponents: a deleted round subdir under a live run dir is detected, rebuilt") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-ccr").toString
+    val dir = tempDir("graft-ccr")
     spark.conf.set(Clusters.CheckpointDirConf, dir)
     val key = s"spec-ccr-${java.util.UUID.randomUUID()}"
     var built = 0
@@ -199,7 +199,7 @@ class ClustersSpec extends AnyFunSuite with SparkTestBase {
 
   test("ensureComponents: a held frame survives eviction past 16 keys; clearMemo reclaims it") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-cce").toString
+    val dir = tempDir("graft-cce")
     spark.conf.set(Clusters.CheckpointDirConf, dir)
     val tag = java.util.UUID.randomUUID()
     def pairs = Seq((1L, 2L), (2L, 3L)).toDF("doc_a", "doc_b")
@@ -233,7 +233,7 @@ class ClustersSpec extends AnyFunSuite with SparkTestBase {
 
   test("reliable-checkpoint toggle: distributed path converges and writes durably") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-ccp").toString
+    val dir = tempDir("graft-ccp")
     spark.conf.set(Clusters.CheckpointDirConf, dir)
     try {
       val pairs = (1L to 30L).sliding(2).map(s => (s.head, s.last)).toSeq

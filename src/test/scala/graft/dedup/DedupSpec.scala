@@ -174,7 +174,7 @@ class DedupSpec extends AnyFunSuite with SparkTestBase {
     val d = docs(
       1L -> base, 2L -> (base + "tail"),
       3L -> "totally different content here x y z", 4L -> " ")
-    val dir = java.nio.file.Files.createTempDirectory("sigidx").toString
+    val dir = tempDir("sigidx")
     Dedup.saveSignatureIndex(d, dir)
     val idx = spark.read.parquet(dir)
     val served = Dedup.candidatesFromIndex(idx)

@@ -24,7 +24,7 @@ class EpochSpec extends AnyFunSuite with SparkTestBase {
   }
 
   test("duplicate base names across partition dirs do not cancel") {
-    val tmp = java.nio.file.Files.createTempDirectory("epoch").toFile
+    val tmp = new java.io.File(tempDir("epoch"))
     val mtime = (System.currentTimeMillis() / 1000) * 1000
     // shape A: the same part-file base name in two partition dirs
     val a = new java.io.File(tmp, "a/t.parquet")
@@ -45,7 +45,7 @@ class EpochSpec extends AnyFunSuite with SparkTestBase {
   }
 
   test("stable listing yields a stable token") {
-    val tmp = java.nio.file.Files.createTempDirectory("epoch2").toFile
+    val tmp = new java.io.File(tempDir("epoch2"))
     val root = new java.io.File(tmp, "t.parquet")
     val mtime = (System.currentTimeMillis() / 1000) * 1000
     mkTable(root, Seq("p=1/part-0.x" -> "abc", "p=2/part-0.x" -> "def"), mtime)

@@ -11,7 +11,7 @@ import graft.rel.Rel
 class IngestSpec extends AnyFunSuite with SparkTestBase {
 
   test("partitionBy(year, quarter) write + partition pruning on read") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft-ingest").toString
+    val tmp = tempDir("graft-ingest")
     val orders = spark.read.parquet(s"$sf/orders.parquet")
       .withColumn("year", year(col("o_orderdate")))
       .withColumn("quarter", quarter(col("o_orderdate")))
@@ -31,7 +31,7 @@ class IngestSpec extends AnyFunSuite with SparkTestBase {
   }
 
   test("tab-delimited source reads SEC-style .txt members (S4)") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-sec")
+    val dir = java.nio.file.Paths.get(tempDir("graft-sec"))
     val f = dir.resolve("sub.txt")
     java.nio.file.Files.writeString(f,
       "adsh\tcik\tname\tfye\n0001-23\t320193\tAPPLE INC\t0930\n0002-41\t789019\tMSFT CORP\t0630\n")
@@ -42,7 +42,7 @@ class IngestSpec extends AnyFunSuite with SparkTestBase {
   }
 
   test("whole-text source reads one file as one row (S5)") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-wholetext")
+    val dir = java.nio.file.Paths.get(tempDir("graft-wholetext"))
     val body = "# Report\n\nParagraph one.\n\nParagraph two.\n"
     java.nio.file.Files.writeString(dir.resolve("report.md"), body)
     val df = Tables.wholeText(spark, dir.toString)
@@ -53,7 +53,7 @@ class IngestSpec extends AnyFunSuite with SparkTestBase {
   }
 
   test("json-lines source reads modeled OCR responses (S13 shape)") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-jsonl")
+    val dir = java.nio.file.Paths.get(tempDir("graft-jsonl"))
     java.nio.file.Files.writeString(dir.resolve("resp.jsonl"),
       """{"doc_id": 1, "page": 0, "text": "alpha"}
         |{"doc_id": 1, "page": 1, "text": "beta"}
@@ -65,7 +65,7 @@ class IngestSpec extends AnyFunSuite with SparkTestBase {
   }
 
   test("orc round-trip preserves rows and pushes filters like parquet") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-orc").toString
+    val dir = tempDir("graft-orc")
     val docs = Tables.documents(spark, sf).select("doc_id", "n_chars")
     docs.write.mode("overwrite").orc(dir)
     val back = spark.read.orc(dir)
@@ -99,8 +99,8 @@ class IngestSpec extends AnyFunSuite with SparkTestBase {
 
   test("zip extraction: corrupt-skip + delete-archive, members feed tabDelimited (S4)") {
     import java.util.zip.{ZipEntry, ZipOutputStream}
-    val src = java.nio.file.Files.createTempDirectory("graft-zips-src").toFile
-    val dst = java.nio.file.Files.createTempDirectory("graft-zips-dst").toString
+    val src = new java.io.File(tempDir("graft-zips-src"))
+    val dst = tempDir("graft-zips-dst")
     // a good archive with a nested tab-delimited member (2023q4.zip)
     val good = new java.io.File(src, "2023q4.zip")
     val zos = new ZipOutputStream(new java.io.FileOutputStream(good))
@@ -129,8 +129,8 @@ class IngestSpec extends AnyFunSuite with SparkTestBase {
 
   test("zip-slip archive is rejected wholesale with no partial extraction") {
     import java.util.zip.{ZipEntry, ZipOutputStream}
-    val src = java.nio.file.Files.createTempDirectory("graft-zipslip-src").toFile
-    val dst = java.nio.file.Files.createTempDirectory("graft-zipslip-dst").toString
+    val src = new java.io.File(tempDir("graft-zipslip-src"))
+    val dst = tempDir("graft-zipslip-dst")
     val z = new java.io.File(src, "2025q1.zip")
     val zos = new ZipOutputStream(new java.io.FileOutputStream(z))
     zos.putNextEntry(new ZipEntry("ok.txt"))

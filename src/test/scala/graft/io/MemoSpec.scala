@@ -133,4 +133,12 @@ class MemoSpec extends AnyFunSuite {
     assert(m.stats == Memo.Stats(hits = 2, misses = 5, builds = 3, evictions = 1,
       weight = 2, size = 2, retired = 0))
   }
+
+  test("peek reads a held value uncounted") {
+    val m = new Memo[String, String]("spec", 2)
+    val a = m.getOrBuild("a")(value("a")) // miss + build
+    assert(m.peek("a").exists(_ eq a) && m.peek("z").isEmpty)
+    assert(m.stats == Memo.Stats(hits = 0, misses = 1, builds = 1, evictions = 0,
+      weight = 1, size = 1, retired = 0))
+  }
 }

@@ -118,6 +118,26 @@ class ResultCacheSpec extends AnyFunSuite with SparkTestBase {
     ResultCache.evictAll()
   }
 
+  test("SQL over a cached page's temp view, BETWEEN included, reads driver rows with no job") {
+    ResultCache.evictAll()
+    val page = ResultCache.sqlCached(spark, s"SELECT l_orderkey, l_returnflag " +
+      s"FROM parquet.`$sf/lineitem.parquet` ORDER BY l_orderkey, l_linenumber LIMIT 100",
+      3600 * 1000L)
+    page.createOrReplaceTempView("cached_page")
+    val lo = page.collect().map(_.getLong(0)).sorted.apply(20)
+    try Seq(s"SELECT * FROM cached_page WHERE l_orderkey >= $lo AND l_orderkey <= ${lo + 50}",
+        s"SELECT * FROM cached_page WHERE l_orderkey BETWEEN $lo AND ${lo + 50}").foreach { q =>
+      val ((rows, counts), jobs) = jobsDuring {
+        val df = spark.sql(q)
+        (Resident.columns(df, "l_orderkey")._2, graft.rel.Rel.valueCounts(df, "l_returnflag")
+          .collect())
+      }
+      assert(jobs.isEmpty, s"$q: $jobs")
+      assert(rows.nonEmpty && counts.map(_.getLong(1)).sum == rows.length)
+    } finally spark.catalog.dropTempView("cached_page")
+    ResultCache.evictAll()
+  }
+
   test("an expired row entry is evicted, its bytes released, and a fresh run re-caches") {
     var t = 1000L
     val clock = () => t
@@ -199,6 +219,19 @@ class ResultCacheSpec extends AnyFunSuite with SparkTestBase {
     ResultCache.evictAll()
     ResultCache.sqlCached(spark, q, 3600 * 1000L)
     assert(ResultCache.rowBytesHeld == held, "only one entry may be charged")
+    ResultCache.evictAll()
+  }
+
+  test("stats count sqlCached calls, not lookups") {
+    ResultCache.evictAll()
+    val q = rowQuery(100, 9)
+    val before = ResultCache.stats
+    ResultCache.lookup(spark, q)
+    ResultCache.sqlCached(spark, q, 3600 * 1000L)
+    ResultCache.lookup(spark, q)
+    ResultCache.sqlCached(spark, q, 3600 * 1000L)
+    val after = ResultCache.stats
+    assert((after.hits - before.hits, after.misses - before.misses) == (1L, 1L))
     ResultCache.evictAll()
   }
 }

@@ -28,7 +28,7 @@ class IngestPipelineSpec extends AnyFunSuite with SparkTestBase {
   }
 
   test("land writes the year/quarter partition layout (S6)") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft-land").toString
+    val tmp = tempDir("graft-land")
     Ingest.land(Ingest.selectQuarterReports(links), tmp)
     val back = spark.read.parquet(tmp)
     assert(back.count() == 3)

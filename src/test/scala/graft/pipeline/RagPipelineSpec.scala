@@ -17,7 +17,7 @@ class RagPipelineSpec extends AnyFunSuite with SparkTestBase {
   }
 
   test("vector store round-trips through parquet and retrieval still works") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft-store").toString
+    val tmp = tempDir("graft-store")
     RagPipeline.buildStore(docs, "simple").write.mode("overwrite").parquet(tmp)
     val store = spark.read.parquet(tmp)
     val embedder = HashingEmbedder(64)

@@ -175,7 +175,7 @@ class ServeRowsSpec extends AnyFunSuite with SparkTestBase {
       finally java.util.Locale.setDefault(locale)
     assert(res.passed, res.status.toString)
     // a frame that is not driver rows keeps the UDF projection
-    val dir = java.nio.file.Files.createTempDirectory("graft-embed").toString
+    val dir = tempDir("graft-embed")
     frame(IntegerType, Seq((1, "a b"))).write.mode("overwrite").parquet(dir)
     assert(Resident.driverRows(emb.embed(spark.read.parquet(dir), "query_text")).isEmpty)
   }

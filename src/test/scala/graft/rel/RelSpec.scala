@@ -127,6 +127,24 @@ class RelSpec extends AnyFunSuite with SparkTestBase {
       Seq(("a", 2L), ("b", 1L)))
   }
 
+  test("valueCounts over SQL on a temp view of driver rows runs no Spark job") {
+    // a temp view adds a View node, and BETWEEN analyzes to a With
+    Resident.localFrame(spark,
+      StructType(Seq(StructField("x", IntegerType), StructField("s", StringType))),
+      (1 to 8).map(i => Row(i, if (i % 2 == 0) "even" else "odd")))
+      .createOrReplaceTempView("loc")
+    try Seq("SELECT * FROM loc WHERE x >= 2 AND x <= 5",
+        "SELECT * FROM loc WHERE x BETWEEN 2 AND 5").foreach { q =>
+      val df = spark.sql(q)
+      assert(Resident.driverRows(df).isDefined, q)
+      val (counts, jobs) = jobsDuring(Rel.valueCounts(df, "s").collect())
+      assert(jobs.isEmpty, s"$q: $jobs")
+      assert(counts.toSeq == Rel.valueCountsAggregate(df, "s").collect().toSeq)
+      assert(counts.map(r => (r.getString(0), r.getLong(1))).toSeq ==
+        Seq(("even", 2L), ("odd", 2L)))
+    } finally spark.catalog.dropTempView("loc")
+  }
+
   test("valueCounts plans the Aggregate for double and collated columns and parquet-backed frames") {
     def aggregates(df: DataFrame) = Resident.driverRows(df).isEmpty &&
       df.queryExecution.optimizedPlan.collectFirst { case a: Aggregate => a }.isDefined

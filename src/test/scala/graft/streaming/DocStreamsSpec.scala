@@ -14,7 +14,7 @@ class DocStreamsSpec extends AnyFunSuite with SparkTestBase {
     val docs = Tables.documents(spark, sf)
     val doubled = docs.unionByName(
       docs.withColumn("doc_id", col("doc_id") + lit(1000000L)))
-    val tmp = java.nio.file.Files.createTempDirectory("graft-dedup-stream").toString
+    val tmp = tempDir("graft-dedup-stream")
     doubled.write.mode("overwrite").parquet(tmp)
 
     val query = DocStreams.dedupDocumentStream(spark, tmp)
@@ -36,7 +36,7 @@ class DocStreamsSpec extends AnyFunSuite with SparkTestBase {
   test("watermarked event dedup drops same-id re-deliveries") {
     val events = Tables.events(spark, sf).limit(500)
     val doubled = events.unionByName(events)
-    val tmp = java.nio.file.Files.createTempDirectory("graft-dedup-events").toString
+    val tmp = tempDir("graft-dedup-events")
     doubled.write.mode("overwrite").parquet(tmp)
 
     val query = DocStreams.dedupEventStream(spark, tmp)
@@ -380,7 +380,7 @@ class DocStreamsSpec extends AnyFunSuite with SparkTestBase {
     import spark.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    val storeDir = java.nio.file.Files.createTempDirectory("graft-store-inc").toString + "/store"
+    val storeDir = tempDir("graft-store-inc") + "/store"
     val mem = MemoryStream[(Long, String, String, Long)]
     val stream = mem.toDF().toDF("doc_id", "text", "source", "n_chars")
     val q = DocStreams.upsertIntoStore(stream, storeDir)
@@ -422,7 +422,7 @@ class DocStreamsSpec extends AnyFunSuite with SparkTestBase {
     import spark.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    val storeDir = java.nio.file.Files.createTempDirectory("graft-store-epoch").toString + "/store"
+    val storeDir = tempDir("graft-store-epoch") + "/store"
     val mem = MemoryStream[(Long, String, String, Long)]
     val stream = mem.toDF().toDF("doc_id", "text", "source", "n_chars")
     val q = DocStreams.upsertIntoStore(stream, storeDir)
@@ -550,8 +550,7 @@ class DocStreamsSpec extends AnyFunSuite with SparkTestBase {
     import spark.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    val storeDir = java.nio.file.Files
-      .createTempDirectory("graft-store-se").toString + "/store"
+    val storeDir = tempDir("graft-store-se") + "/store"
     val mem = MemoryStream[(Long, String, String, Long)]
     val stream = mem.toDF().toDF("doc_id", "text", "source", "n_chars")
     // no commits yet: no version token — serves would content-check
@@ -660,8 +659,7 @@ class DocStreamsSpec extends AnyFunSuite with SparkTestBase {
     // the composed query path — each committed micro-batch triggers
     // exactly one staleness re-check + rebuild; serves in between
     // are O(1) epoch hits
-    val storeDir = java.nio.file.Files
-      .createTempDirectory("graft-ragserve-store").toString + "/store"
+    val storeDir = tempDir("graft-ragserve-store") + "/store"
     val mem = MemoryStream[(Long, String, String, Long)]
     val q = DocStreams.upsertIntoStore(
       mem.toDF().toDF("doc_id", "text", "source", "n_chars"), storeDir)

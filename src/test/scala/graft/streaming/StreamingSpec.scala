@@ -16,7 +16,7 @@ class StreamingSpec extends AnyFunSuite with SparkTestBase {
     // ts arrives as LONG nanos under the legacy conf; stream over the
     // converted frame is not possible from parquet directly, so stream
     // the normalized frame via an in-memory roundtrip dir
-    val tmp = java.nio.file.Files.createTempDirectory("graft-stream").toString
+    val tmp = tempDir("graft-stream")
     Tables.events(spark, sf).write.mode("overwrite").parquet(tmp)
     val stream = EventStreams.hourlyByTypeStream(spark, tmp)
     val query = stream.writeStream.outputMode("complete")
@@ -187,7 +187,7 @@ class StreamingSpec extends AnyFunSuite with SparkTestBase {
       .collect().map(_.toSeq).toSeq
     assert(expected.nonEmpty)
 
-    val dir = java.nio.file.Files.createTempDirectory("graft-wave").toString
+    val dir = tempDir("graft-wave")
     val rows = ev.select(col("event_id"), col("ts"), col("event_type"),
       col("value"))
     val maxTs = rows.agg(max(col("ts"))).head.getTimestamp(0)
@@ -279,8 +279,8 @@ class StreamingSpec extends AnyFunSuite with SparkTestBase {
     // before its mtime pin); each arrival state is then drained by an
     // AvailableNow run restarting from one shared checkpoint, so the
     // watermark carries across runs exactly like batches of one query.
-    val dir = java.nio.file.Files.createTempDirectory("graft-mft").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("graft-mft-ck").toString
+    val dir = tempDir("graft-mft")
+    val ckpt = tempDir("graft-mft-ck")
     def land(df: org.apache.spark.sql.DataFrame, mtimeMs: Long): Unit = {
       df.coalesce(1).write.mode("append").parquet(dir)
       val part = new java.io.File(dir).listFiles()
@@ -292,7 +292,7 @@ class StreamingSpec extends AnyFunSuite with SparkTestBase {
     // a parquet FILE sink (not memory: it can't recover from a
     // checkpoint) accumulates the emitted set exactly-once across the
     // restarts via its _spark_metadata log
-    val sinkDir = java.nio.file.Files.createTempDirectory("graft-mft-out").toString
+    val sinkDir = tempDir("graft-mft-out")
     def runAvailable(): Unit = {
       val q = EventStreams
         .hourlyByTypeStream(spark, dir, Map("maxFilesPerTrigger" -> "1"))

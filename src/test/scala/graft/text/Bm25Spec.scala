@@ -41,7 +41,7 @@ class Bm25Spec extends AnyFunSuite with SparkTestBase {
     import spark.implicits._
     val q = Seq((0L, "join spark"), (1L, "window merge")).toDF("query_id", "qtext")
     val inline = Bm25.topK(docsDf, q, 5)
-    val dir = java.nio.file.Files.createTempDirectory("graft-bm25-spec").toString
+    val dir = tempDir("graft-bm25-spec")
     Bm25.saveIndex(docsDf, dir)
     val served = Bm25.topKIndexed(Bm25.loadIndex(spark, dir), q, 5)
     assert(ranked(served) == ranked(inline))
@@ -62,7 +62,7 @@ class Bm25Spec extends AnyFunSuite with SparkTestBase {
       (3L, "spark spark shuffle"), (4L, "spark spark shuffle"),
       (5L, "İstanbul ÉTÉ window"), (6L, "window merge join merge"))
       .toDF("doc_id", "text")
-    val dir = java.nio.file.Files.createTempDirectory("graft-bm25-ties").toString
+    val dir = tempDir("graft-bm25-ties")
     Bm25.saveIndex(docs, dir)
     val idx = Bm25.loadIndex(spark, dir)
     // 3: no indexed term; 4: no token at all; 5: NULL text

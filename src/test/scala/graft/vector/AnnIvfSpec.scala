@@ -101,7 +101,7 @@ class AnnIvfSpec extends AnyFunSuite with SparkTestBase {
       .select(col("vec_id").as("query_id"), col("embedding").as("q_embedding"))
     val inMem = Ivf.topK(assigned, cents, q, 3, nProbe = 2)
       .collect().map(_.toSeq).toSet
-    val dir = java.nio.file.Files.createTempDirectory("graft-ivf-idx").toString
+    val dir = tempDir("graft-ivf-idx")
     Ivf.saveIndex(assigned, cents, dir)
     val (loaded, loadedCents) = Ivf.loadIndex(spark, dir)
     assert(loadedCents.zip(cents).forall { case (a, b) =>
@@ -119,8 +119,8 @@ class AnnIvfSpec extends AnyFunSuite with SparkTestBase {
   test("loadIndex memoizes per (session, path): repeat loads return the cached frames, distinct paths stay distinct") {
     val df = corpus(30, 0).toDF("vec_id", "embedding")
     val (assigned, cents) = Ivf.index(df, nCells = 2)
-    val d1 = java.nio.file.Files.createTempDirectory("graft-ivf-memo1").toString
-    val d2 = java.nio.file.Files.createTempDirectory("graft-ivf-memo2").toString
+    val d1 = tempDir("graft-ivf-memo1")
+    val d2 = tempDir("graft-ivf-memo2")
     Ivf.saveIndex(assigned, cents, d1)
     Ivf.saveIndex(assigned, cents, d2)
     val a = Ivf.loadIndex(spark, d1)
@@ -136,7 +136,7 @@ class AnnIvfSpec extends AnyFunSuite with SparkTestBase {
     import spark.implicits._
     val docs = (0L until 20L).map(i => (i, s"alpha beta token$i"))
       .toDF("doc_id", "text")
-    val b1 = java.nio.file.Files.createTempDirectory("graft-bm25-memo1").toString
+    val b1 = tempDir("graft-bm25-memo1")
     graft.text.Bm25.saveIndex(docs, b1)
     val bi = graft.text.Bm25.loadIndex(spark, b1)
     assert(graft.text.Bm25.loadIndex(spark, b1).asInstanceOf[AnyRef]

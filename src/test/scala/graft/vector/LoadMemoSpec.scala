@@ -4,7 +4,6 @@ import java.nio.file.{Files, Path, Paths}
 import java.util.concurrent.{CountDownLatch, Executors, TimeUnit}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 import graft.SparkTestBase
 import graft.text.Bm25
@@ -12,20 +11,8 @@ import graft.text.Bm25
 /** The Ivf and Bm25 `loadIndex` memos: concurrent first loads share one
   * pair and one resident copy, and a pair the memo no longer holds
   * still serves the Column tree's answer, counted. */
-class LoadMemoSpec extends AnyFunSuite with SparkTestBase with BeforeAndAfterAll {
+class LoadMemoSpec extends AnyFunSuite with SparkTestBase {
   import spark.implicits._
-
-  private val dirs = scala.collection.mutable.ArrayBuffer.empty[Path]
-
-  private def tempDir(): Path = {
-    val d = Files.createTempDirectory("graft-load-memo")
-    dirs += d
-    d
-  }
-
-  override def afterAll(): Unit =
-    try dirs.foreach(d => org.apache.commons.io.FileUtils.deleteDirectory(d.toFile))
-    finally super.afterAll()
 
   private def vectors = {
     val rnd = new scala.util.Random(11)
@@ -39,7 +26,7 @@ class LoadMemoSpec extends AnyFunSuite with SparkTestBase with BeforeAndAfterAll
 
   /** `n` directories holding the same saved files as `dir`. */
   private def copies(dir: String, n: Int): Seq[String] = (1 to n).map { _ =>
-    val to = tempDir()
+    val to = Paths.get(tempDir("graft-load-memo"))
     val from = Paths.get(dir)
     Files.walk(from).forEach { p: Path =>
       val t = to.resolve(from.relativize(p).toString)
@@ -64,7 +51,7 @@ class LoadMemoSpec extends AnyFunSuite with SparkTestBase with BeforeAndAfterAll
 
   test("concurrent first loads of one path return one pair and build its segments once") {
     val (assigned, cents) = Ivf.index(vectors, nCells = 2)
-    val dir = tempDir().toString
+    val dir = tempDir("graft-load-memo")
     Ivf.saveIndex(assigned, cents, dir)
     val builds = Ivf.loadStats.builds
     val ivf = together {
@@ -75,7 +62,7 @@ class LoadMemoSpec extends AnyFunSuite with SparkTestBase with BeforeAndAfterAll
     assert(ivf.forall(r => (r._1._1 eq ivf.head._1._1) && (r._1._2 eq ivf.head._1._2)))
     assert(ivf.forall(_._2 eq ivf.head._2), "one resident copy")
 
-    val bDir = tempDir().toString
+    val bDir = tempDir("graft-load-memo")
     Bm25.saveIndex(docs, bDir)
     val bBuilds = Bm25.loadStats.builds
     val bm = together {
@@ -88,7 +75,7 @@ class LoadMemoSpec extends AnyFunSuite with SparkTestBase with BeforeAndAfterAll
 
   test("a pair evicted from the load memo is collected again, counted, and serves the Column tree's answer") {
     val (assigned, cents) = Ivf.index(vectors, nCells = 4)
-    val dir = tempDir().toString
+    val dir = tempDir("graft-load-memo")
     Ivf.saveIndex(assigned, cents, dir)
     val (disk, diskCents) = Ivf.loadIndex(spark, dir)
     copies(dir, 16).foreach(Ivf.loadIndex(spark, _))
@@ -101,7 +88,7 @@ class LoadMemoSpec extends AnyFunSuite with SparkTestBase with BeforeAndAfterAll
     assert(served.schema == reference.schema)
     assert(ranked(served) == ranked(reference))
 
-    val bDir = tempDir().toString
+    val bDir = tempDir("graft-load-memo")
     Bm25.saveIndex(docs, bDir)
     val idx = Bm25.loadIndex(spark, bDir)
     copies(bDir, 16).foreach(Bm25.loadIndex(spark, _))

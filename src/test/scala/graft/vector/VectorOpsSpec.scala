@@ -125,7 +125,7 @@ class VectorOpsSpec extends AnyFunSuite with SparkTestBase {
   }
 
   test("assembleContext plans the aggregate over a parquet-backed frame or an unmirrored rank type") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-context").toString
+    val dir = tempDir("graft-context")
     Seq((0, 1, "a", "x"), (0, 2, "b", "y"))
       .toDF("query_id", "rank", "source", "text")
       .write.mode("overwrite").parquet(dir)

@@ -41,6 +41,13 @@ import org.apache.spark.sql.graftshim.ColumnShim
   * TTL is enforced at access time (lazy expiry — the same observable
   * contract as Redis `ex`), plus explicit `evictAll` for shutdown. The
   * clock is injectable so expiry is deterministic under test.
+  *
+  * Staleness: an entry is keyed by session and normalized SQL text
+  * only, not by the files its query reads. A view re-created over
+  * rewritten files therefore keeps serving the old rows for the same
+  * SQL until the TTL expires or `evictAll` runs — the reference's Redis
+  * `ex` contract. A miss is always fresh: the [[ResidentTable]] copy a
+  * page is walked from is keyed by the table's file listing.
   */
 object ResultCache {
 

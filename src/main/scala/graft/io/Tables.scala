@@ -175,10 +175,6 @@ object Tables {
   def wholeText(spark: SparkSession, path: String): DataFrame =
     spark.read.option("wholetext", "true").text(path)
 
-  /** Binary-file source (reference S2 landing dir: PDFs/images as bytes). */
-  def binaryFiles(spark: SparkSession, dir: String): DataFrame =
-    spark.read.format("binaryFile").load(dir)
-
   /** Tab-delimited text source with header (reference S4: the SEC
     * financial-statement `.txt` members extracted from ZIPs,
     * `testing_airflow_sec_pipeline.py:195,216`). */

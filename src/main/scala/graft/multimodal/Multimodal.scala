@@ -6,7 +6,6 @@ import javax.imageio.ImageIO
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
 
 /** Multimodal column plumbing (north-star extension, BASELINE.json):
   * image/audio/video payloads as opaque `binary` columns with typed
@@ -24,17 +23,6 @@ object Multimodal {
 
   // PNG encode buffers in memory, not a disk cache dir
   ImageIO.setUseCache(false)
-
-  val featureSchema: StructType = StructType(Seq(
-    StructField("asset_id", LongType, nullable = false),
-    StructField("media_type", StringType, nullable = false),
-    StructField("byte_length", IntegerType, nullable = false),
-    StructField("checksum", StringType, nullable = false),
-    StructField("width", IntegerType, nullable = true),
-    StructField("height", IntegerType, nullable = true),
-    StructField("lum_sum", LongType, nullable = true),
-    StructField("hist", ArrayType(IntegerType), nullable = true),
-    StructField("feature", ArrayType(FloatType), nullable = true)))
 
   /** Build an assets table: opaque binary payload + metadata struct.
     * (Fixture stand-in: payload = UTF-8 bytes of document text — NOT

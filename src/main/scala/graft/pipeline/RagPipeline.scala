@@ -59,45 +59,28 @@ object RagPipeline {
     * collection's embedding fn, `chromadb_rag.py:127-140`).
     *
     * `retrieval` dispatches like the reference's chunking-strategy
-    * dispatch (C4): "brute" = exact cosine via the TopKPerKey
-    * operator; "ivf" / "lsh" / "signlsh" = the sub-linear ANN paths,
-    * with the store enumerated to numeric ids by the distributed
-    * prefix sum (deterministic: id-ordered, partition-independent) —
-    * "signlsh" is the md5-hyperplane LSH ([[graft.vector.Ann
-    * .signLshTopK]]), the engine's deterministic banded ANN (the one
-    * the q_topk_signlsh oracle hash-checks); "hybrid" =
-    * reciprocal-rank fusion of the dense cosine list with a BM25
-    * lexical list over the same chunk store (the calibration-free
-    * dense+sparse combiner); "bm25_indexed" = lexical retrieval
-    * served from the persisted bucket-partitioned inverted index
-    * (build-once-serve-many). Unknown strategies raise, mirroring
-    * the reference's error path. */
-  /** `indexKey` (bm25_indexed only): a caller-chosen stable name for
-    * the DOCUMENT SET, enabling the build-once-serve-many memo across
-    * calls; the chunking strategy and embedder dim are folded into
-    * the cache key automatically, so the same name with a different
-    * store configuration can never serve the wrong index. Empty (the
-    * default) serves from an in-memory inline build — a plan hash is
-    * NOT a usable default because fresh UDF/flatMap lambdas get
-    * identity hashCodes in the canonicalized plan, so identical
-    * invocations hash differently (measured), and a
-    * silently-colliding key would serve the wrong corpus. */
-  /** `epoch` (saved-serve modes only): the caller's corpus-version
-    * token, forwarded to [[graft.io.SavedIndex]] — when it matches
-    * the recorded one the serve is O(1) (no fingerprint scan, no
-    * store build); see SavedIndex's serve-cost policy.
-    * `indexedCells` (`hybrid_indexed` only): the coarse-quantizer
-    * cell count — [[IndexedCells]] is the fixed catalog geometry; a
-    * corpus-proportional caller passes ~√n(chunks) (the SemDeDup
-    * cost-balance argument). Folded into the index cache key, so differing
-    * geometries can never serve each other's files. */
+    * dispatch (C4); any other value raises:
+    *  - "brute": exact cosine via the TopKPerKey operator;
+    *  - "hybrid": reciprocal-rank fusion of the dense cosine list with
+    *    a BM25 lexical list over the same chunk store (the
+    *    calibration-free dense+sparse combiner);
+    *  - "hybrid_indexed": the same fusion served from the saved IVF
+    *    and BM25 pair ([[hybridIndexedServe]], [[IndexedCells]] cells).
+    *    `indexKey` names the DOCUMENT SET and is required: the
+    *    chunking strategy, embedder and cell count are folded into the
+    *    cache key ([[indexedCacheKeyBase]]), so the same name with a
+    *    different store configuration never serves the wrong index. A
+    *    plan hash is not a usable default, because fresh UDF/flatMap
+    *    lambdas get identity hashCodes in the canonicalized plan.
+    *    `epoch` is the caller's corpus-version token, forwarded to
+    *    [[graft.io.SavedIndex]]: when it matches the recorded one the
+    *    serve is O(1) (no fingerprint scan, no store build). */
   def run(spark: SparkSession, docs: DataFrame, queryTexts: Seq[String],
       strategy: String = "simple",
       embedder: Embedder = HashingEmbedder(64),
       retrieval: String = "brute",
       indexKey: String = "",
-      epoch: Option[String] = None,
-      indexedCells: Int = IndexedCells): DataFrame = {
+      epoch: Option[String] = None): DataFrame = {
     import spark.implicits._
     lazy val store = buildStore(docs, strategy, embedder)
     val queries = embedder
@@ -108,31 +91,14 @@ object RagPipeline {
         VectorOps.topK(store, queries, TopK,
           tiebreak = Seq(col("doc_id"), col("chunk_index")))
           .select(col("query_id"), col("rank"), col("source"), col("text"))
-      case "ivf" | "lsh" | "signlsh" =>
-        val indexed = graft.rel.PrefixSum.exclusivePrefixSum(
-          store, col("id"), lit(1L), "vec_id")
-        val hits = retrieval match {
-          case "ivf" =>
-            val (assigned, cents) = graft.vector.Ivf.index(indexed)
-            graft.vector.Ivf.topK(assigned, cents, queries, TopK)
-          case "signlsh" =>
-            graft.vector.Ann.signLshTopK(indexed, queries, TopK)
-          case _ =>
-            graft.vector.Ann.lshTopK(indexed, queries, TopK)
-        }
-        hits.join(indexed.select(col("vec_id"), col("source"), col("text")),
-            "vec_id")
-          .select(col("query_id"), col("rank"), col("source"), col("text"))
       case "hybrid" =>
         // dense + lexical candidate lists at depth 2k fused by RRF
         // (deeper lists than the final k, the usual fusion setup).
         // ONE materialization of the embedded-chunk stage: dense,
         // lexical, and the citation join-back all read this single
-        // InMemoryRelation — no enumeration pass runs, because the
-        // store's string `id` is already the total order the ANN
-        // paths' prefix-sum enumeration would assign (vec_id is
-        // id-ordered, so every doc_id tiebreak below yields the
-        // identical permutation the enumerated form produced)
+        // InMemoryRelation. No enumeration pass runs: the store's
+        // string `id` is already a total order, so ties break on it
+        // as the q_rag_e2e_hybrid oracle's id-ordered enumeration does
         val shared = store
           .persistTracked("rag.hybrid_store")
         val dense = VectorOps.topK(shared, queries, TopK * 2,
@@ -147,46 +113,11 @@ object RagPipeline {
           .withColumnRenamed("doc_id", "id")
           .join(shared.select(col("id"), col("source"), col("text")), "id")
           .select(col("query_id"), col("rank"), col("source"), col("text"))
-      case "bm25_indexed" =>
-        // lexical retrieval from a PERSISTED inverted index — the
-        // build-once-serve-many path: first run per store builds +
-        // saves, every later run serves from the resident copy
-        val indexed = graft.rel.PrefixSum.exclusivePrefixSum(
-            store, col("id"), lit(1L), "vec_id")
-          .persistTracked("rag.indexed_store")
-        val corpus = indexed.select(col("vec_id").as("doc_id"), col("text"))
-        val qtexts = queries.select(col("query_id"), col("query_text").as("qtext"))
-        val hits =
-          if (indexKey.nonEmpty) {
-            // length-prefixed indexKey: plain '-' concatenation would
-            // let a key containing '-' collide with another
-            // (indexKey, strategy) pair and serve the wrong index
-            val path = graft.text.Bm25.ensureSavedIndex(corpus,
-              s"ragpipeline/${indexKey.length}:$indexKey/$strategy/${embedder.dim}")
-            graft.text.Bm25.topKIndexed(
-              graft.text.Bm25.loadIndex(spark, path), qtexts, TopK)
-          } else
-            // no stable identity for this store → serve from an
-            // in-memory inline build (identical scores — shared
-            // scoring tree) rather than leaking one saved index per
-            // call to disk; see the indexKey doc
-            graft.text.Bm25.topK(corpus, qtexts, TopK)
-        hits.withColumnRenamed("doc_id", "vec_id")
-          .join(indexed.select(col("vec_id"), col("source"), col("text")),
-            "vec_id")
-          .select(col("query_id"), col("rank"), col("source"), col("text"))
       case "hybrid_indexed" =>
         require(indexKey.nonEmpty,
-          "hybrid_indexed serves from saved indexes and needs a stable " +
-            "indexKey (see the indexKey doc above)")
-        // the embedder CLASS is part of the key, not just its dim: a
-        // same-dim different-embedder caller would otherwise produce
-        // an identical key, and the O(1) epoch path — which by design
-        // never re-fingerprints — would serve it the wrong index
-        // (r19 review)
+          "hybrid_indexed serves from saved indexes and needs a stable indexKey")
         hybridIndexedServe(spark, store, queries,
-          indexedCacheKeyBase(indexKey, strategy, embedder, indexedCells),
-          epoch, indexedCells)
+          indexedCacheKeyBase(indexKey, strategy, embedder, IndexedCells), epoch)
       case other =>
         throw new IllegalArgumentException(
           s"unknown retrieval strategy: $other") // C4-style dispatch error

@@ -47,10 +47,6 @@ object Rel {
   def distinctValues(df: DataFrame, c: String): DataFrame =
     df.select(col(c)).na.drop(Seq(c)).distinct().orderBy(col(c))
 
-  /** A8 cardinality gate: categorical iff < maxDistinct distinct. */
-  def isCategorical(df: DataFrame, c: String, maxDistinct: Int = 15): Boolean =
-    df.select(approx_count_distinct(col(c))).head().getLong(0) < maxDistinct
-
   /** A7 — value_counts for the pie chart (`Frontend/app.py:567`): one
     * `(c, count)` row per distinct value, the most frequent first, ties
     * by value ascending (NULL first).

@@ -41,6 +41,13 @@ import org.apache.spark.unsafe.types.UTF8String
   */
 object Bm25 {
 
+  /** Okapi BM25's term-frequency saturation and length normalization. */
+  private val K1 = 1.2
+  private val B = 0.75
+
+  /** The reciprocal-rank fusion constant: a rank-r hit adds 1/(RrfC + r). */
+  private val RrfC = 60.0
+
   /** The four relational pieces of a BM25 index. */
   case class Bm25Index(postings: DataFrame, docLen: DataFrame,
       dfreq: DataFrame, stats: DataFrame)
@@ -88,13 +95,12 @@ object Bm25 {
     * doc_id, tf, df, dl, n_docs, avgdl). The resident
     * [[Segments.topK]] and the DuckDB oracle both mirror this exact
     * association, so all three agree bit for bit. */
-  private def rankMatched(matched: DataFrame, k: Int,
-      k1: Double, b: Double): DataFrame = {
+  private def rankMatched(matched: DataFrame, k: Int): DataFrame = {
     val idf: Column =
       log(lit(1.0) + (col("n_docs") - col("df") + 0.5) / (col("df") + 0.5))
     val tfNorm: Column =
-      col("tf") * (lit(k1) + 1.0) /
-        (col("tf") + lit(k1) * (lit(1.0) - lit(b) + lit(b) * col("dl") / col("avgdl")))
+      col("tf") * (lit(K1) + 1.0) /
+        (col("tf") + lit(K1) * (lit(1.0) - lit(B) + lit(B) * col("dl") / col("avgdl")))
     val scored = matched
       .groupBy(col("query_id"), col("doc_id"))
       .agg(round(sum(idf * tfNorm), 6).as("score"))
@@ -108,15 +114,14 @@ object Bm25 {
   /** Join a query-term set against index frames — only queried terms'
     * postings flow past the first (broadcast) join. */
   private def serveFrom(postings: DataFrame, docLen: DataFrame,
-      dfreq: DataFrame, stats: DataFrame, queries: DataFrame, k: Int,
-      k1: Double, b: Double): DataFrame = {
+      dfreq: DataFrame, stats: DataFrame, queries: DataFrame, k: Int): DataFrame = {
     val qterms = queryTerms(queries)
     val matched = postings.join(broadcast(qterms), "term")
       .join(broadcast(dfreq.join(broadcast(qterms.select("term").distinct()), "term")),
         "term")
       .join(docLen, "doc_id")
       .crossJoin(broadcast(stats))
-    rankMatched(matched, k, k1, b)
+    rankMatched(matched, k)
   }
 
   /** Shared corpus tokenization — the one regex pass both the BM25
@@ -156,10 +161,9 @@ object Bm25 {
 
   /** Top-k docs per query, building the index inline. `queries`:
     * (query_id, qtext). Output: (query_id, rank, doc_id, score). */
-  def topK(docs: DataFrame, queries: DataFrame, k: Int,
-      k1: Double = 1.2, b: Double = 0.75): DataFrame = {
+  def topK(docs: DataFrame, queries: DataFrame, k: Int): DataFrame = {
     val idx = buildIndex(docs)
-    serveFrom(idx.postings, idx.docLen, idx.dfreq, idx.stats, queries, k, k1, b)
+    serveFrom(idx.postings, idx.docLen, idx.dfreq, idx.stats, queries, k)
   }
 
   /** Term → storage bucket for the persisted inverted index: the same
@@ -207,16 +211,15 @@ object Bm25 {
       * summed per doc in term order, `round(·, 6)`, cut at `k` by
       * (desc score, doc_id). A query with no indexed term yields no
       * rows. */
-    def topK(queries: Seq[(Any, Seq[String])], k: Int, k1: Double = 1.2,
-        b: Double = 0.75): Seq[graft.io.Resident.Hit] =
+    def topK(queries: Seq[(Any, Seq[String])], k: Int): Seq[graft.io.Resident.Hit] =
       graft.io.Resident.byQuery(queries).flatMap { case (qid, termLists) =>
         val acc = scala.collection.mutable.HashMap.empty[Long, Double]
         for (ts <- termLists; t <- ts; p <- terms.get(t)) {
           val idf = StrictMath.log(1.0 + ((nDocs - p.df) + 0.5) / (p.df + 0.5))
           var i = 0
           while (i < p.docs.length) {
-            val tfNorm = (p.tf(i) * (k1 + 1.0)) /
-              (p.tf(i) + k1 * ((1.0 - b) + (b * p.dl(i)) / avgdl))
+            val tfNorm = (p.tf(i) * (K1 + 1.0)) /
+              (p.tf(i) + K1 * ((1.0 - B) + (B * p.dl(i)) / avgdl))
             acc(p.docs(i)) = acc.getOrElse(p.docs(i), 0.0) + idf * tfNorm
             i += 1
           }
@@ -307,8 +310,7 @@ object Bm25 {
     * caller's spelling of `query_id`. An index the load memo does not
     * hold is collected again on every call, with a warning
     * ([[resident]]). */
-  def topKIndexed(idx: Bm25Index, queries: DataFrame, k: Int,
-      k1: Double = 1.2, b: Double = 0.75): DataFrame = {
+  def topKIndexed(idx: Bm25Index, queries: DataFrame, k: Int): DataFrame = {
     val spark = queries.sparkSession
     val seg = resident(idx)
     val (Seq(qid, _), rows) = graft.io.Resident.columns(queries, "query_id", "qtext")
@@ -317,7 +319,7 @@ object Bm25 {
       Seq(qid.newInstance(), AttributeReference("rank", IntegerType, nullable = false)(),
         DataTypeUtils.toAttribute(seg.docField),
         AttributeReference("score", DoubleType)()),
-      seg.topK(rows.map(_.get(0, qid.dataType)).zip(terms), k, k1, b).map(h =>
+      seg.topK(rows.map(_.get(0, qid.dataType)).zip(terms), k).map(h =>
         InternalRow(h.queryId, h.rank,
           graft.io.Resident.idValue(h.id, seg.docField.dataType), h.score)))
   }
@@ -384,28 +386,27 @@ object Bm25 {
       .persistTracked("bm25.hybrid_tokens")
     val idx = buildIndexFromTokens(toks)
     val lex = serveFrom(idx.postings, idx.docLen, idx.dfreq, idx.stats,
-      queries, depth, 1.2, 0.75)
+      queries, depth)
     rrfFuse(lex, tokenJaccardFromTokens(toks, queries, depth), k)
   }
 
   /** Reciprocal-rank fusion of two ranked lists (SIGIR'09 form,
-    * 1/(c + rank), c = 60): the standard way to combine a lexical
+    * 1/(60 + rank)): the standard way to combine a lexical
     * and a similarity ranking without score calibration. Inputs need
     * (query_id, doc_id, rank); fused score is rounded before the
     * final ranking for cross-engine determinism. */
-  def rrfFuse(a: DataFrame, b: DataFrame, k: Int, c: Double = 60.0): DataFrame =
-    rrfFuseKeyed(a, b, k, c, Nil)
+  def rrfFuse(a: DataFrame, b: DataFrame, k: Int): DataFrame =
+    rrfFuseKeyed(a, b, k)
 
   /** [[rrfFuse]] over driver lists (the resident serve's fusion):
-    * per (query, doc) the `1/(c + rank)` contributions of both lists
+    * per (query, doc) the `1/(60 + rank)` contributions of both lists
     * summed, `round(·, 6)`, cut at `k` by (desc score, doc_id). */
   private[graft] def rrfFuseResident(a: Seq[graft.io.Resident.Hit],
-      b: Seq[graft.io.Resident.Hit], k: Int,
-      c: Double = 60.0): Seq[graft.io.Resident.Hit] =
+      b: Seq[graft.io.Resident.Hit], k: Int): Seq[graft.io.Resident.Hit] =
     graft.io.Resident.byQuery((a ++ b).map(h => (h.queryId, h))).flatMap {
       case (qid, hits) =>
         val acc = scala.collection.mutable.HashMap.empty[Long, Double]
-        hits.foreach(h => acc(h.id) = acc.getOrElse(h.id, 0.0) + 1.0 / (c + h.rank))
+        hits.foreach(h => acc(h.id) = acc.getOrElse(h.id, 0.0) + 1.0 / (RrfC + h.rank))
         graft.io.Resident.rankTopK(qid,
           acc.map { case (d, sc) => (d, graft.io.Resident.round6(sc)) }, k)
     }
@@ -418,10 +419,10 @@ object Bm25 {
     * [[rrfFuse]] over that rung's lists (same contribution, sum — ≤2
     * commutative double addends per (query, doc) —, round-6 and
     * (desc score, doc_id) tiebreak trees, keyed). */
-  def rrfFuseKeyed(a: DataFrame, b: DataFrame, k: Int, c: Double = 60.0,
+  def rrfFuseKeyed(a: DataFrame, b: DataFrame, k: Int,
       keys: Seq[String] = Nil): DataFrame = {
     val kc = keys.map(col)
-    val contrib = (r: Column) => lit(1.0) / (lit(c) + r)
+    val contrib = (r: Column) => lit(1.0) / (lit(RrfC) + r)
     val leg = (df: DataFrame) => df.select(kc ++ Seq(col("query_id"),
       col("doc_id"), contrib(col("rank")).as("contrib")): _*)
     val pooled = leg(a).unionByName(leg(b))

@@ -1,6 +1,6 @@
 package graft.textan
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
 /** PII-style text scrubbing for training-data preparation (north-star
@@ -26,10 +26,6 @@ object Scrub {
         regexp_replace(c, EmailRe, "<EMAIL>"),
         UrlRe, "<URL>"),
       NumRe, "<NUM>")
-
-  def withRedacted(df: DataFrame, textCol: String = "text",
-      out: String = "redacted"): DataFrame =
-    df.withColumn(out, redact(col(textCol)))
 
   /** Unicode NFC normalization — the canonical-composition pass every
     * multilingual training pipeline runs before hashing/dedup (the

@@ -54,16 +54,6 @@ object TextAnalysis {
       zip_with(acc, coalesce(element_at(membershipMap, t), zeros),
         (a, b) => a + b))
 
-  /** Language ID: CJK-character presence → "zh"; otherwise the
-    * language with the highest stopword-hit count, ties broken in
-    * fixed order en > fr > es > de; no hits at all → "und". */
-  def langScores(textCol: Column): Seq[(String, Column)] = {
-    val toks = Tok.tokens(lower(textCol))
-    langs.zipWithIndex.map { case (l, i) =>
-      l -> element_at(stopwordHitArray(toks), i + 1)
-    }
-  }
-
   /** Picks the language from a precomputed hit array (cheap: no
     * re-evaluation — `sc` should be a plain column reference or a
     * lambda variable). `array_position` returns the FIRST index of
@@ -75,6 +65,9 @@ object TextAnalysis {
           array_position(sc, array_max(sc)).cast("int")))
       .otherwise(lit("und"))
 
+  /** Language ID: CJK-character presence → "zh"; otherwise the
+    * language with the highest stopword-hit count, ties broken in
+    * fixed order en > fr > es > de; no hits at all → "und". */
   def detectLang(textCol: Column): Column =
     bind(stopwordHitArray(Tok.tokens(lower(textCol))), sc =>
       pickLang(textCol, sc))
@@ -200,11 +193,6 @@ object TextAnalysis {
     if (hashes.length <= window) return Seq(hashes.min).distinct
     hashes.sliding(window).map(_.min).toSeq.distinct
   }
-
-  private val winnowUdf = udf((s: String) => winnow(s))
-
-  def withWinnowFingerprint(docs: DataFrame): DataFrame =
-    docs.withColumn("fingerprint", winnowUdf(col("text")))
 
   // ===== frozen linear classifier (hashing-trick inference) =====
 

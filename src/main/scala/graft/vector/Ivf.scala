@@ -34,9 +34,12 @@ import org.apache.spark.sql.types.{DoubleType, IntegerType, StructField}
   */
 object Ivf {
 
-  /** Hard cap on the driver-collected training sample: `maxSample`
-    * rows × dim floats (64-dim default ⇒ ~13 MB at the cap). */
+  /** Hard cap on [[index]]'s driver-collected training sample: this
+    * many rows × dim floats (64-dim ⇒ ~13 MB at the cap). */
   val DefaultMaxSample = 50000
+
+  /** [[index]]'s Lloyd's iteration cap. */
+  private val MaxIter = 10
 
   /** Deterministic Lloyd's k-means on L2-normalized vectors.
     * Init: k evenly spaced rows of the sorted sample (spread beats
@@ -184,21 +187,18 @@ object Ivf {
     } finally fit.unpersist(blocking = false)
   }
 
-  /** Assign each corpus row to its quantizer cell.
+  /** Assign each corpus row to its quantizer cell, fit on the
+    * [[DefaultMaxSample]] lowest vec_ids.
     * Returns (assignedCorpus, centroids) — reuse across queries. */
-  def index(corpus: DataFrame, nCells: Int = 16, sampleFraction: Double = 1.0,
-      seed: Long = 42L, maxIter: Int = 10,
-      maxSample: Int = DefaultMaxSample): (DataFrame, Array[Array[Double]]) = {
-    val sampled = if (sampleFraction >= 1.0) corpus
-      else corpus.sample(withReplacement = false, sampleFraction, seed)
+  def index(corpus: DataFrame, nCells: Int): (DataFrame, Array[Array[Double]]) = {
     // vec_id sort makes the collected order — and therefore the fit —
     // independent of partitioning; limit bounds driver memory
-    val sample: Array[Array[Float]] = sampled
+    val sample: Array[Array[Float]] = corpus
       .select(col("vec_id"), col("embedding"))
-      .orderBy(col("vec_id")).limit(maxSample)
+      .orderBy(col("vec_id")).limit(DefaultMaxSample)
       .collect()
       .map(_.getAs[scala.collection.Seq[Float]]("embedding").toArray)
-    val centroids = lloyd(sample, nCells, maxIter)
+    val centroids = lloyd(sample, nCells, MaxIter)
     val bc = corpus.sparkSession.sparkContext.broadcast(centroids)
     val assignUdf = udf((v: scala.collection.Seq[Float]) =>
       nearest(bc.value, normalize(v.toArray)))

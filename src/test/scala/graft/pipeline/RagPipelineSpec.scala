@@ -63,24 +63,6 @@ class RagPipelineSpec extends AnyFunSuite with SparkTestBase {
       .exists(w => out(0).getString(1).contains(w)))
   }
 
-  test("run: bm25_indexed serves from the saved index and matches inline lexical top ranks") {
-    val out = RagPipeline.run(spark, docs.limit(50),
-      Seq("table scan filter"), "simple", retrieval = "bm25_indexed",
-      indexKey = "ragpipeline-spec-store").collect()
-    assert(out.length == 1)
-    assert(out(0).getString(1).split("\n\n").nonEmpty)
-    // second run with the same stable key hits the memoized saved
-    // index (serve-only) and is value-identical; an unkeyed run
-    // builds fresh and must also agree
-    val again = RagPipeline.run(spark, docs.limit(50),
-      Seq("table scan filter"), "simple", retrieval = "bm25_indexed",
-      indexKey = "ragpipeline-spec-store").collect()
-    assert(out.map(_.toSeq).toSeq == again.map(_.toSeq).toSeq)
-    val unkeyed = RagPipeline.run(spark, docs.limit(50),
-      Seq("table scan filter"), "simple", retrieval = "bm25_indexed").collect()
-    assert(out.map(_.toSeq).toSeq == unkeyed.map(_.toSeq).toSeq)
-  }
-
   test("run: hybrid_indexed composes BOTH saved serves — warm epoch serve is build-free and value-identical") {
     val corpus = docs.limit(50)
     val key = "ragpipeline-spec-hybrid-indexed"
@@ -241,44 +223,13 @@ class RagPipelineSpec extends AnyFunSuite with SparkTestBase {
     assert(warm.length == 2)
   }
 
-  test("run: signlsh retrieval agrees with brute on an exact-chunk query") {
-    val corpus = docs.limit(50)
-    // query = an exact chunk text: its embedding equals the stored
-    // chunk's, so every sign-LSH band key collides and the candidate
-    // set must contain the chunk — rank-1 is then the cosine-1 chunk,
-    // exactly what brute retrieval returns
-    // a UNIQUE chunk text: the fixture corpus contains near-duplicate
-    // documents, and a duplicated chunk would make rank-1 a cosine-1
-    // tie that brute and signlsh break by different keys
-    val store = RagPipeline.buildStore(corpus, "simple")
-    val chunkText = store.groupBy(col("text")).count()
-      .filter(col("count") === 1)
-      .orderBy(col("text")).select(col("text")).head().getString(0)
-    val brute = RagPipeline.run(spark, corpus, Seq(chunkText), "simple",
-      retrieval = "brute").collect()
-    val lsh = RagPipeline.run(spark, corpus, Seq(chunkText), "simple",
-      retrieval = "signlsh").collect()
-    assert(lsh.length == 1)
-    val bruteTop = brute(0).getString(1).split("\n\n").head
-    val cited = lsh(0).getString(1).split("\n\n")
-    assert(cited.nonEmpty && cited.head == bruteTop,
-      "signlsh rank-1 must be the exact-match chunk brute retrieval finds")
-    // banded ANN may cite fewer than TopK on sparse collisions, never more
-    assert(cited.length <= RagPipeline.TopK)
-  }
-
-  test("run: ivf and lsh retrieval produce a full cited context; unknown retrieval raises") {
-    for (retrieval <- Seq("ivf", "lsh")) {
-      val out = RagPipeline.run(spark, docs.limit(50),
-        Seq("table scan filter"), "simple", retrieval = retrieval).collect()
-      assert(out.length == 1, s"$retrieval: one context row per query")
-      assert(out(0).getString(1).split("\n\n").length == RagPipeline.TopK,
-        s"$retrieval: context must cite TopK chunks")
+  test("run: an unserved retrieval mode raises, naming it") {
+    for (retrieval <- Seq("ivf", "lsh", "signlsh", "bm25_indexed", "bogus-ann")) {
+      val e = intercept[IllegalArgumentException] {
+        RagPipeline.run(spark, docs.limit(5), Seq("x"), "simple",
+          retrieval = retrieval, indexKey = "ragpipeline-spec-unknown")
+      }
+      assert(e.getMessage.contains(retrieval), e.getMessage)
     }
-    val e = intercept[IllegalArgumentException] {
-      RagPipeline.run(spark, docs.limit(5), Seq("x"), "simple",
-        retrieval = "bogus-ann")
-    }
-    assert(e.getMessage.contains("bogus-ann"))
   }
 }

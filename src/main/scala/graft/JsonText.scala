@@ -1,7 +1,7 @@
 package graft
 
-/** The one JSON string-escape used by every artifact-emitting main
-  * (Verify's oracle_sql.json, Bench's one-line report): backslash,
+/** The one JSON string-escape the artifact-emitting main uses
+  * (Verify's oracle_sql.json): backslash,
   * quote, and ALL control chars (<0x20). A tab or CR in
   * builder-authored SQL or an exception message would otherwise make
   * the driver's json.load fail and silently zero a round's artifact —

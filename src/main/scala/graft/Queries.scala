@@ -308,6 +308,39 @@ object Queries {
       epoch = tableEpoch(s, dir, "documents"))
       .orderBy(col("query_id"))
 
+  /** The legs [[q_rag_fusion_overlap]] and [[q_rag_fusion_curve]]
+    * share, all at depth 2k: the saved index pair [[q_rag_e2e_indexed]]
+    * serves from (same key, same epoch), the embedded flagship queries
+    * (query_id, q_embedding), the lexical list both fusions read
+    * verbatim (served from the saved postings' resident copy), and the
+    * exact dense list over the index's enumerated corpus. Returns
+    * (disk, cents, qe, lex, denseExact). */
+  private def ragFusionLegs(s: SparkSession, dir: String)
+      : (DataFrame, Array[Array[Double]], DataFrame, DataFrame, DataFrame) = {
+    import s.implicits._
+    val depth = graft.pipeline.RagPipeline.TopK * 2
+    val emb8 = graft.vector.LatticeEmbedder(8)
+    val (disk, cents, bm) = graft.pipeline.RagPipeline.ensureIndexedServe(
+      s, graft.pipeline.RagPipeline.buildStore(
+        t(s, dir, "documents"), "simple", emb8),
+      graft.pipeline.RagPipeline.indexedCacheKeyBase(
+        s"rag-e2e/$dir", "simple", emb8),
+      epoch = tableEpoch(s, dir, "documents"))
+    val indexed = disk.select(col("vec_id"), col("text"), col("embedding"))
+    val queries = emb8.embed(
+      ragE2eQueries.zipWithIndex.toDF("query_text", "query_id"),
+      textCol = "query_text", out = "q_embedding")
+    val qe = queries.select(col("query_id"), col("q_embedding"))
+    val qt = queries.select(col("query_id"), col("query_text").as("qtext"))
+    val lex = graft.text.Bm25.topKIndexed(bm, qt, depth)
+      .select(col("query_id"), col("rank"), col("doc_id"))
+      .persistTracked("ragfusion.lex")
+    val denseExact = graft.vector.VectorOps.topK(indexed, qe, depth,
+        tiebreak = Seq(col("vec_id")))
+      .select(col("query_id"), col("rank"), col("vec_id").as("doc_id"))
+    (disk, cents, qe, lex, denseExact)
+  }
+
   /** Fusion ROBUSTNESS of the saved-serve flagship — the recall/
     * loss-decomposition discipline ([[q_ann_recall]] family) applied
     * to the COMPOSED row: per flagship query, the indexed hybrid's
@@ -336,31 +369,9 @@ object Queries {
     * the chunk→embed store per run. Eval row: the brute leg is its
     * denominator's price, bounded by 3 queries. */
   def q_rag_fusion_overlap(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
     val k = graft.pipeline.RagPipeline.TopK
     val depth = k * 2
-    val emb8 = graft.vector.LatticeEmbedder(8)
-    val (disk, cents, bm) = graft.pipeline.RagPipeline.ensureIndexedServe(
-      s, graft.pipeline.RagPipeline.buildStore(
-        t(s, dir, "documents"), "simple", emb8),
-      graft.pipeline.RagPipeline.indexedCacheKeyBase(
-        s"rag-e2e/$dir", "simple", emb8,
-        graft.pipeline.RagPipeline.IndexedCells),
-      epoch = tableEpoch(s, dir, "documents"))
-    val indexed = disk.select(col("vec_id"), col("text"), col("embedding"))
-    val queries = emb8.embed(
-      ragE2eQueries.zipWithIndex.toDF("query_text", "query_id"),
-      textCol = "query_text", out = "q_embedding")
-    val qe = queries.select(col("query_id"), col("q_embedding"))
-    val qt = queries.select(col("query_id"), col("query_text").as("qtext"))
-    // the lexical leg is SHARED verbatim by both fusions — served
-    // from the saved postings' resident copy
-    val lex = graft.text.Bm25.topKIndexed(bm, qt, depth)
-      .select(col("query_id"), col("rank"), col("doc_id"))
-      .persistTracked("ragfusion.lex")
-    val denseExact = graft.vector.VectorOps.topK(indexed, qe, depth,
-        tiebreak = Seq(col("vec_id")))
-      .select(col("query_id"), col("rank"), col("vec_id").as("doc_id"))
+    val (disk, cents, qe, lex, denseExact) = ragFusionLegs(s, dir)
     val denseIvf = vector.Ivf.topKIndexed(disk, cents, qe, depth,
         nProbe = graft.pipeline.RagPipeline.IndexedProbe)
       .select(col("query_id"), col("rank"), col("vec_id").as("doc_id"))
@@ -402,26 +413,7 @@ object Queries {
     import s.implicits._
     val k = graft.pipeline.RagPipeline.TopK
     val depth = k * 2
-    val emb8 = graft.vector.LatticeEmbedder(8)
-    val (disk, cents, bm) = graft.pipeline.RagPipeline.ensureIndexedServe(
-      s, graft.pipeline.RagPipeline.buildStore(
-        t(s, dir, "documents"), "simple", emb8),
-      graft.pipeline.RagPipeline.indexedCacheKeyBase(
-        s"rag-e2e/$dir", "simple", emb8,
-        graft.pipeline.RagPipeline.IndexedCells),
-      epoch = tableEpoch(s, dir, "documents"))
-    val indexed = disk.select(col("vec_id"), col("text"), col("embedding"))
-    val queries = emb8.embed(
-      ragE2eQueries.zipWithIndex.toDF("query_text", "query_id"),
-      textCol = "query_text", out = "q_embedding")
-    val qe = queries.select(col("query_id"), col("q_embedding"))
-    val qt = queries.select(col("query_id"), col("query_text").as("qtext"))
-    val lex = graft.text.Bm25.topKIndexed(bm, qt, depth)
-      .select(col("query_id"), col("rank"), col("doc_id"))
-      .persistTracked("ragfusion.lex")
-    val denseExact = graft.vector.VectorOps.topK(indexed, qe, depth,
-        tiebreak = Seq(col("vec_id")))
-      .select(col("query_id"), col("rank"), col("vec_id").as("doc_id"))
+    val (disk, cents, qe, lex, denseExact) = ragFusionLegs(s, dir)
     val fusedExact = graft.text.Bm25.rrfFuse(denseExact, lex, k)
       .select(col("query_id"), col("doc_id"))
       .persistTracked("ragfusion.exact")
@@ -3516,22 +3508,27 @@ object Queries {
       .orderBy(col("doc_id"))
   }
 
+  /** The synthesized OCR response both OCR rows read: every document
+    * of at least 2 chars split at `n_chars / 2` into two pages
+    * (doc_id, page_no 0/1, page_text). */
+  private def ocrPages(s: SparkSession, dir: String): DataFrame =
+    t(s, dir, "documents")
+      .filter(col("n_chars") >= 2)
+      .select(col("doc_id"), col("text"), (col("n_chars") / 2).cast("int").as("half"),
+        col("n_chars").cast("int").as("n"))
+      .select(col("doc_id"),
+        posexplode(array(
+          col("text").substr(lit(1), col("half")),
+          col("text").substr(col("half") + 1, col("n") - col("half"))))
+          .as(Seq("page_no", "page_text")))
+
   /** C5 + F8/F9/F10/F11 — OCR-response flatten: synthesized two-page
     * markdown with one embedded image per page (models the Mistral
     * OCR shape, `MistralTest.py:33-39, 66-86`): explode pages,
     * rewrite image links, extract extension with `.jpeg` default,
     * number images sequentially, round-trip the payload via base64. */
   def q_ocr_flatten(s: SparkSession, dir: String): DataFrame = {
-    val docs = t(s, dir, "documents")
-      .filter(col("n_chars") >= 2)
-      .select(col("doc_id"), col("text"), (col("n_chars") / 2).cast("int").as("half"),
-        col("n_chars").cast("int").as("n"))
-    val pages = docs.select(col("doc_id"),
-      posexplode(array(
-        col("text").substr(lit(1), col("half")),
-        col("text").substr(col("half") + 1, col("n") - col("half"))))
-        .as(Seq("page_no", "page_text")))
-    pages
+    ocrPages(s, dir)
       .withColumn("image_id",
         concat(lit("img-"), col("doc_id"), lit("-"), col("page_no"),
           when(col("page_no") === 0, lit(".png")).otherwise(lit(""))))
@@ -4557,21 +4554,11 @@ object Queries {
     * the strip (`MistralTest.py:70-72`). Complements [[q_ocr_flatten]]
     * (which covers link rewrite + the global counter). */
   def q_ocr_nested(s: SparkSession, dir: String): DataFrame = {
-    val docs = t(s, dir, "documents")
-      .filter(col("n_chars") >= 2)
-      .select(col("doc_id"), col("text"),
-        (col("n_chars") / 2).cast("int").as("half"),
-        col("n_chars").cast("int").as("n"))
-    val pages = docs.select(col("doc_id"),
-      posexplode(array(
-        col("text").substr(lit(1), col("half")),
-        col("text").substr(col("half") + 1, col("n") - col("half"))))
-        .as(Seq("page_no", "page_text")))
     def b64At(i: Column): Column =
       regexp_replace(
         base64(encode(col("page_text").substr(i, lit(16)), "UTF-8")),
         "[\\r\\n]", "")
-    val withImgs = pages
+    val withImgs = ocrPages(s, dir)
       .withColumn("n_imgs", ((col("doc_id") + col("page_no")) % 3).cast("int"))
       .withColumn("images",
         transform(slice(sequence(lit(1), lit(2)), lit(1), col("n_imgs")), i =>

@@ -182,15 +182,14 @@ object Clusters {
     * the next [[clearMemo]]. `epoch = None` resolves unconditionally
     * ([[graft.io.SavedIndex]]'s vouching contract).
     *
-    * Registered with [[graft.io.Caches.clearAll]] (r20 verdict #1):
-    * the bench clears all caches between its min-of-3 runs so every
-    * run prices the row's declared work — the r20 memo was
-    * engineered to survive that clear, which made the five
-    * signature-index consumer rows price a cached-map read instead
-    * of the candidate self-join + union-find they declare. The memo
-    * now shares the clearAll lifecycle: it dedupes resolution WITHIN
-    * a run (and between batch boundaries for long-lived consumers),
-    * never across bench runs. */
+    * Registered with [[graft.io.Caches.clearAll]]: `graft.Verify`
+    * clears all caches between catalog rows so every row does its
+    * declared work — a memo surviving that clear would make the five
+    * signature-index consumer rows a cached-map read instead of the
+    * candidate self-join + union-find they declare. The memo shares
+    * the clearAll lifecycle: it dedupes resolution between batch
+    * boundaries (within one Verify row, or a long-lived consumer's
+    * batch), never across them. */
   private val componentMemo = new graft.io.Memo[(String, String, String), CompEntry](
     "Clusters.ensureComponents", 16, valid = entryValid, release = Some(releaseEntry))
 

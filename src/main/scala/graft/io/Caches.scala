@@ -28,8 +28,9 @@ import org.apache.spark.storage.StorageLevel
   * dedupes by plan, and evicting a stale twin would un-cache the live
   * one, so the registry refreshes the entry's position instead.
   *
-  * [[clearAll]] remains the batch-boundary big hammer the engine's
-  * own drivers (Bench / Verify) call between queries.
+  * [[clearAll]] remains the batch-boundary big hammer: `graft.Verify`
+  * calls it between catalog rows, and long-lived consumers call it
+  * between batches.
   */
 object Caches {
 
@@ -109,13 +110,15 @@ object Caches {
 
   /** JVM-level memo stores (the BPE trained-merges memo, the
     * cluster-component memo) register a hook here so [[clearAll]]
-    * reaches them too. Rationale (r20 verdict #1): the bench's
-    * min-of-3 contract is that every run is self-contained — a memo
-    * engineered to survive `cacheManager.clearCache()` made runs 2–3
-    * price a memo HIT instead of the row's declared work. Any future
-    * cross-run memo MUST register here or key strictly on artifacts
-    * that live outside the JVM (the [[SavedIndex]] on-disk contract,
-    * which is priced by explicit inline/`_indexed` twin rows). */
+    * reaches them too. Rationale: a batch boundary means every batch
+    * after it is self-contained — `graft.Verify`'s per-row `clearAll`
+    * must leave each catalog row doing its declared work, and a memo
+    * engineered to survive `cacheManager.clearCache()` would hand the
+    * next row (or a long-lived consumer's next batch) a memo HIT
+    * instead. Any future cross-batch memo MUST register here or key
+    * strictly on artifacts that live outside the JVM (the
+    * [[SavedIndex]] on-disk contract, which is priced by explicit
+    * inline/`_indexed` twin rows). */
   private val onClear =
     new java.util.concurrent.CopyOnWriteArrayList[Runnable]()
 

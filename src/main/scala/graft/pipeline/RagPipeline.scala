@@ -27,7 +27,9 @@ object RagPipeline {
   /** Saved-serve geometry of the `hybrid_indexed` retrieval mode,
     * shared verbatim with the q_rag_e2e_indexed oracle: 8 coarse
     * cells over the chunk store, 2 probed per query (each dense
-    * candidate pass scores ~1/4 of the store). */
+    * candidate pass scores ~1/4 of the store). A store of n < 8
+    * chunks fits n cells, one per chunk ([[graft.vector.Ivf
+    * .boundedIndex]]). */
   val IndexedCells = 8
   val IndexedProbe = 2
 
@@ -67,7 +69,7 @@ object RagPipeline {
     *  - "hybrid_indexed": the same fusion served from the saved IVF
     *    and BM25 pair ([[hybridIndexedServe]], [[IndexedCells]] cells).
     *    `indexKey` names the DOCUMENT SET and is required: the
-    *    chunking strategy, embedder and cell count are folded into the
+    *    chunking strategy and embedder are folded into the
     *    cache key ([[indexedCacheKeyBase]]), so the same name with a
     *    different store configuration never serves the wrong index. A
     *    plan hash is not a usable default, because fresh UDF/flatMap
@@ -117,7 +119,7 @@ object RagPipeline {
         require(indexKey.nonEmpty,
           "hybrid_indexed serves from saved indexes and needs a stable indexKey")
         hybridIndexedServe(spark, store, queries,
-          indexedCacheKeyBase(indexKey, strategy, embedder, IndexedCells), epoch)
+          indexedCacheKeyBase(indexKey, strategy, embedder), epoch)
       case other =>
         throw new IllegalArgumentException(
           s"unknown retrieval strategy: $other") // C4-style dispatch error
@@ -176,13 +178,12 @@ object RagPipeline {
     * `queries` must carry (query_id, query_text, q_embedding) —
     * embedded with the same embedder as the store. `cacheKeyBase`
     * must be a stable, collision-free identity for the (store,
-    * geometry) pair — `run` builds it from the length-prefixed
-    * indexKey + strategy + dim + cells. */
+    * embedder) pair — `run` builds it from the length-prefixed
+    * indexKey + strategy + embedder. */
   def hybridIndexedServe(spark: SparkSession, store: => DataFrame,
-      queries: DataFrame, cacheKeyBase: String, epoch: Option[String],
-      indexedCells: Int = IndexedCells): DataFrame = {
-    val pair @ (disk, _, _) =
-      ensureIndexedServe(spark, store, cacheKeyBase, epoch, indexedCells)
+      queries: DataFrame, cacheKeyBase: String,
+      epoch: Option[String]): DataFrame = {
+    val pair @ (disk, _, _) = ensureIndexedServe(spark, store, cacheKeyBase, epoch)
     val (Seq(qid, _, _), rows) =
       Resident.columns(queries, "query_id", "query_text", "q_embedding")
     val served = serveRows(pair, rows.map(r =>
@@ -223,9 +224,9 @@ object RagPipeline {
   /** The stable cache-key base every consumer of one saved serve
     * pair must share — `run("hybrid_indexed")` and the fusion eval
     * rows ([[graft.Queries.q_rag_fusion_overlap]]/`_curve`) all
-    * derive it from the same (indexKey, strategy, embedder, cells)
-    * tuple, so they hit ONE pair of saved indexes instead of each
-    * building their own. Length-prefixed indexKey: plain '-'
+    * derive it from the same (indexKey, strategy, embedder) tuple,
+    * so they hit ONE pair of saved indexes instead of each building
+    * their own. Length-prefixed indexKey: plain '-'
     * concatenation would let a key containing '-' collide with
     * another (indexKey, strategy) pair and serve the wrong index;
     * the embedder CLASS is part of the key, not just its dim — a
@@ -233,9 +234,9 @@ object RagPipeline {
     * identical key, and the O(1) epoch path (which by design never
     * re-fingerprints) would serve it the wrong index (r19 review). */
   def indexedCacheKeyBase(indexKey: String, strategy: String,
-      embedder: Embedder, indexedCells: Int): String =
+      embedder: Embedder): String =
     s"${indexKey.length}:$indexKey/$strategy/" +
-      s"${embedder.getClass.getName}-${embedder.dim}/$indexedCells"
+      s"${embedder.getClass.getName}-${embedder.dim}"
 
   /** The BUILD-ONCE half of [[hybridIndexedServe]], shared with the
     * fusion eval rows so they price the production serve path
@@ -247,8 +248,7 @@ object RagPipeline {
     * cell files, coarse centroids, loaded BM25 index frames) — all
     * three served from memoized loads on a warm epoch, zero jobs. */
   def ensureIndexedServe(spark: SparkSession, store: => DataFrame,
-      cacheKeyBase: String, epoch: Option[String],
-      indexedCells: Int = IndexedCells)
+      cacheKeyBase: String, epoch: Option[String])
       : (DataFrame, Array[Array[Double]], graft.text.Bm25.Bm25Index) = {
     def enumerated = {
       // first-wins dedup on id BEFORE enumeration — buildStore output
@@ -268,7 +268,7 @@ object RagPipeline {
         .select(col("vec_id"), col("source"), col("text"), col("embedding"))
     }
     val ivfPath = graft.vector.Ivf.ensureSavedBoundedIndex(enumerated,
-      nCells = indexedCells, rounds = 2,
+      nCells = IndexedCells, rounds = 2,
       cacheKey = s"ragpipeline-ivf/$cacheKeyBase", epoch = epoch)
     val (disk, cents) = graft.vector.Ivf.loadIndex(spark, ivfPath)
     val bmPath = graft.text.Bm25.ensureSavedIndex(

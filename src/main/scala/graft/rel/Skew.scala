@@ -17,7 +17,7 @@ import org.apache.spark.sql.functions._
   *     only the oversized partitions and replicates nothing. Note the
   *     default `skewedPartitionThresholdInBytes` (256 MB) is sized
   *     for cluster-scale partitions; below that, tune it down or AQE
-  *     never engages (the bench sets 8 MB);
+  *     never engages (the SKEW_BENCH.json run set 8 MB);
   *  3. [[saltedJoin]] when AQE can't see or can't split the skew: a
   *     non-shuffle stage feeding the join, skew that emerges AFTER a
   *     transformation AQE stats don't capture (e.g. an exploded

@@ -223,7 +223,7 @@ object EventStreams {
     } finally q.stop()
     // hand the result back as a PARENT-session local DataFrame and
     // drop the child's memory-sink view: repeated invocations
-    // (min-of-3 bench, determinism sweeps) must not accumulate live
+    // (Verify's catalog run, determinism sweeps) must not accumulate live
     // sessions or retained sink rows — after this the child session
     // holds no registered state and is unreachable once we return
     ss.catalog.dropTempView(sink)

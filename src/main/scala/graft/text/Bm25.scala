@@ -137,7 +137,7 @@ object Bm25 {
     // aggregate is exchange-free and exchange reuse can't bridge the
     // branches; same finding as the r10 LM-scorer rewrite). The
     // persisted frame is the compact aggregate, not the token stream;
-    // Bench/Verify clear the cache between runs, and long-lived
+    // Verify clears the cache between catalog rows, and long-lived
     // serving goes through ensureSavedIndex, which materializes to
     // parquet instead.
     val postings = toks

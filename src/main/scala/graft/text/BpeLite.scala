@@ -297,7 +297,7 @@ object BpeLite {
     * [[graft.io.Memo]] (16 entries, single-flight): a production
     * pipeline trains its BPE once per corpus version and serves every
     * encode from the saved merge table, so repeated consumers
-    * (q_bpe_tokens, q_tokenizer_fertility, repeated bench runs) must
+    * (q_bpe_tokens, q_tokenizer_fertility, repeated serves) must
     * not re-run the 8-round distributed trainer while the corpus epoch
     * is unchanged. Merges are plain values (no session-bound
     * resources), so the key is (cacheKey|textCol|numMerges, epoch)
@@ -305,12 +305,12 @@ object BpeLite {
     * declaring it has no version token to vouch with, exactly
     * [[graft.io.SavedIndex]]'s contract.
     *
-    * Registered with [[graft.io.Caches.clearAll]] (r20 verdict #1):
-    * the bench clears all caches between its min-of-3 runs so every
-    * run prices the row's declared work — a memo surviving that
-    * clear made q_bpe_tokens price an encode-only memo hit. Within
-    * one run (and for any long-lived consumer between batch
-    * boundaries) the memo still dedupes the trainer. */
+    * Registered with [[graft.io.Caches.clearAll]]: `graft.Verify`
+    * clears all caches between catalog rows so every row does its
+    * declared work — a memo surviving that clear would make
+    * q_bpe_tokens an encode-only memo hit. Between batch boundaries
+    * (within one Verify row, or a long-lived consumer's batch) the
+    * memo still dedupes the trainer. */
   private val trainedMerges =
     new graft.io.Memo[(String, String), Vector[Merge]]("BpeLite.ensureTrainedMerges", 16)
 

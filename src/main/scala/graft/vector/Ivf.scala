@@ -141,9 +141,11 @@ object Ivf {
     *    nothing else — no driver sample cap, no per-round shuffle of
     *    the embeddings.
     *
-    * Init: the quantized vectors of the `nCells` lowest vec_ids.
-    * Empty cells keep their previous centroid. Returns the assigned
-    * corpus (with `qv` and `cell`) and the final centroids. */
+    * Init: the quantized vectors of the `nCells` lowest vec_ids — or,
+    * on a corpus of n < nCells rows, of all n, fitting n cells as
+    * [[lloyd]] does. Empty cells keep their previous centroid. Returns
+    * the assigned corpus (with `qv` and `cell`) and the final
+    * centroids. */
   def boundedIndex(corpus: DataFrame, nCells: Int = 8, rounds: Int = 2)
       : (DataFrame, Array[Array[Double]]) = {
     val qcorpus = corpus.withColumn("qv", Quantize.int8(col("embedding")))
@@ -155,15 +157,17 @@ object Ivf {
     val fit = qcorpus.select(col("vec_id"), col("qv"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
-      var cents: Array[Array[Double]] = fit
-        .filter(col("vec_id") < nCells).orderBy(col("vec_id"))
-        .select(col("qv")).collect()
-        .map(_.getAs[scala.collection.Seq[Int]](0).map(_.toDouble).toArray)
-      // ALL of 0..nCells-1 must exist: a sparse id range would shift
+      val seeds = fit.orderBy(col("vec_id").asc_nulls_last).limit(nCells)
+        .select(col("vec_id").cast("long"), col("qv")).collect()
+      // the k seeds must be vec_ids 0..k-1 (k = nCells, or n when the
+      // corpus has only n < nCells rows): a sparse id range would shift
       // every later centroid index and silently mis-key cells (the
       // oracle assumes cell c was seeded from vec_id c)
-      require(cents.length == nCells,
-        s"boundedIndex needs vec_ids 0..${nCells - 1} present, found ${cents.length}")
+      require(seeds.nonEmpty && seeds.indices.forall(i => seeds(i).get(0) == i.toLong),
+        s"boundedIndex needs vec_ids 0..${nCells - 1} present (0..n-1 on an " +
+          s"n-row corpus), found ${seeds.map(_.get(0)).mkString(",")}")
+      var cents: Array[Array[Double]] = seeds
+        .map(_.getAs[scala.collection.Seq[Int]](1).map(_.toDouble).toArray)
       val dim = cents(0).length
       for (_ <- 1 to rounds) {
         // bounded driver aggregate: nCells rows × dim exact integer sums

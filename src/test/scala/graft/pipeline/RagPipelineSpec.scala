@@ -9,6 +9,29 @@ class RagPipelineSpec extends AnyFunSuite with SparkTestBase {
 
   private lazy val docs = spark.read.parquet(s"$sf/documents.parquet")
 
+  /** The Column trees the resident hybrid serve mirrors, over a saved
+    * pair from [[RagPipeline.ensureIndexedServe]]: in-memory IVF
+    * top-2k, inline BM25 top-2k, rrfFuse, the citation join-back. */
+  private def columnTreeServe(disk: org.apache.spark.sql.DataFrame,
+      cents: Array[Array[Double]], queries: org.apache.spark.sql.DataFrame) = {
+    val k2 = RagPipeline.TopK * 2
+    val dense = graft.vector.Ivf.topK(disk, cents,
+        queries.select(col("query_id"), col("q_embedding")), k2,
+        nProbe = RagPipeline.IndexedProbe)
+      .select(col("query_id"), col("rank"), col("vec_id").as("doc_id"))
+    val lex = graft.text.Bm25.topK(
+        disk.select(col("vec_id").as("doc_id"), col("text")),
+        queries.select(col("query_id"), col("query_text").as("qtext")), k2)
+      .select(col("query_id"), col("rank"), col("doc_id"))
+    graft.text.Bm25.rrfFuse(dense, lex, RagPipeline.TopK)
+      .withColumnRenamed("doc_id", "vec_id")
+      .join(disk.select(col("vec_id"), col("source"), col("text")), "vec_id")
+      .select(col("query_id"), col("rank"), col("source"), col("text"))
+  }
+
+  private def byQuery(rows: Array[org.apache.spark.sql.Row]) =
+    rows.map(_.toSeq).toSeq.sortBy(_.head.asInstanceOf[Int])
+
   test("buildStore: ids are {source}_chunk_{i}, upsert dedups ids (V1)") {
     val store = RagPipeline.buildStore(docs, "simple")
     assert(store.filter(!col("id").rlike("^src[0-9]+_chunk_[0-9]+$")).count() == 0)
@@ -109,7 +132,7 @@ class RagPipelineSpec extends AnyFunSuite with SparkTestBase {
     val key = "ragpipeline-spec-ensure-shared"
     val epoch = Some("spec-ensure-shared-v1")
     val base = RagPipeline.indexedCacheKeyBase(key, "simple",
-      graft.vector.HashingEmbedder(64), RagPipeline.IndexedCells)
+      graft.vector.HashingEmbedder(64))
     // cold: builds both indexes through the shared half
     val (disk, cents, bm) = RagPipeline.ensureIndexedServe(spark,
       RagPipeline.buildStore(corpus, "simple"), base, epoch)
@@ -151,7 +174,7 @@ class RagPipelineSpec extends AnyFunSuite with SparkTestBase {
     val emb = HashingEmbedder(64)
     val epoch = Some("spec-resident-v1")
     val base = RagPipeline.indexedCacheKeyBase("ragpipeline-spec-resident",
-      "simple", emb, RagPipeline.IndexedCells)
+      "simple", emb)
     val queries = emb.embed(
       Seq(("table scan filter", 0), ("window merge join", 1), ("zzz", 2))
         .toDF("query_text", "query_id"),
@@ -178,36 +201,52 @@ class RagPipelineSpec extends AnyFunSuite with SparkTestBase {
     assert(sc.getRDDStorageInfo.map(_.id).toSet == cachedBefore,
       "a warm serve must persist nothing")
     assert(warm.map(_.toSeq).toSeq == cold.map(_.toSeq).toSeq)
-    // the same answer as the Column trees over the same saved pair:
-    // in-memory IVF top-2k, inline BM25 top-2k, rrfFuse, join-back
+    // the same answer as the Column trees over the same saved pair
     val (disk, cents, _) = RagPipeline.ensureIndexedServe(spark,
       RagPipeline.buildStore(corpus, "simple", emb), base, epoch)
-    val k2 = RagPipeline.TopK * 2
-    val dense = graft.vector.Ivf.topK(disk, cents,
-        queries.select(col("query_id"), col("q_embedding")), k2,
-        nProbe = RagPipeline.IndexedProbe)
-      .select(col("query_id"), col("rank"), col("vec_id").as("doc_id"))
-    val lex = graft.text.Bm25.topK(
-        disk.select(col("vec_id").as("doc_id"), col("text")),
-        queries.select(col("query_id"), col("query_text").as("qtext")), k2)
-      .select(col("query_id"), col("rank"), col("doc_id"))
-    val reference = graft.text.Bm25.rrfFuse(dense, lex, RagPipeline.TopK)
-      .withColumnRenamed("doc_id", "vec_id")
-      .join(disk.select(col("vec_id"), col("source"), col("text")), "vec_id")
-      .select(col("query_id"), col("rank"), col("source"), col("text"))
+    val reference = columnTreeServe(disk, cents, queries)
     def ordered(rows: Array[org.apache.spark.sql.Row]) =
       rows.map(_.toSeq).toSeq.sortBy(r => (r(0).asInstanceOf[Int], r(1).asInstanceOf[Int]))
     assert(ordered(warm) == ordered(reference.collect()))
     // the driver-assembled context equals the context aggregate over
     // the Column-tree reference (a distributed frame: it plans the
     // aggregate)
-    def byQuery(rows: Array[org.apache.spark.sql.Row]) =
-      rows.map(_.toSeq).toSeq.sortBy(_.head.asInstanceOf[Int])
     assert(byQuery(context) ==
       byQuery(VectorOps.assembleContext(reference).collect()))
     assert(context.length == 3)
     // query 2 has no indexed term: RRF runs on its dense list alone
     assert(warm.exists(_.getInt(0) == 2))
+  }
+
+  test("run: hybrid_indexed serves a store of fewer chunks than IndexedCells, one cell per chunk") {
+    import spark.implicits._
+    // a young stream-maintained store: three one-chunk documents
+    val small = Seq((1L, "alpha beta gamma delta", "srcA", 22L),
+        (2L, "epsilon zeta eta theta", "srcB", 22L),
+        (3L, "nu xi omicron pi", "srcC", 16L))
+      .toDF("doc_id", "text", "source", "n_chars")
+    val emb = HashingEmbedder(64)
+    val key = "ragpipeline-spec-small-store"
+    val epoch = Some("spec-small-store-v1")
+    val queryTexts = Seq("omicron pi", "epsilon zeta")
+    val out = RagPipeline.run(spark, small, queryTexts, "simple",
+      retrieval = "hybrid_indexed", indexKey = key, epoch = epoch).collect()
+    val (disk, cents, _) = RagPipeline.ensureIndexedServe(spark,
+      RagPipeline.buildStore(small, "simple", emb),
+      RagPipeline.indexedCacheKeyBase(key, "simple", emb), epoch)
+    assert(disk.count() == 3 && cents.length == 3,
+      s"a 3-chunk store fits 3 cells, got ${cents.length}")
+    val queries = emb.embed(queryTexts.zipWithIndex.toDF("query_text", "query_id"),
+      textCol = "query_text", out = "q_embedding")
+    assert(byQuery(out) ==
+      byQuery(VectorOps.assembleContext(columnTreeServe(disk, cents, queries)).collect()))
+    assert(out.length == 2 && byQuery(out).head(1).toString.contains("omicron"))
+    // a sparse id range still raises: cell c is seeded from vec_id c
+    val e = intercept[IllegalArgumentException] {
+      graft.vector.Ivf.boundedIndex(
+        disk.select((col("vec_id") * 2).as("vec_id"), col("embedding")))
+    }
+    assert(e.getMessage.contains("vec_ids 0"), e.getMessage)
   }
 
   test("run: a warm hybrid_indexed run and collect submit no Spark job") {

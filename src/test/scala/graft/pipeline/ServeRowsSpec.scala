@@ -36,7 +36,7 @@ class ServeRowsSpec extends AnyFunSuite with SparkTestBase {
     .withColumn("id", concat(col("source"), lit("_chunk_"), col("doc_id")))
 
   private val base = RagPipeline.indexedCacheKeyBase("serve-rows-spec", "simple",
-    emb, RagPipeline.IndexedCells)
+    emb)
   private val epoch = Some("serve-rows-spec-v1")
   private lazy val pair = RagPipeline.ensureIndexedServe(spark, store, base, epoch)
 
@@ -206,7 +206,7 @@ class ServeRowsSpec extends AnyFunSuite with SparkTestBase {
 
   test("concurrent warm serves answer as serial ones while the epoch moves and the pair rebuilds") {
     val key = RagPipeline.indexedCacheKeyBase("serve-rows-spec-concurrent", "simple",
-      emb, RagPipeline.IndexedCells)
+      emb)
     val stores = Vector(store, store.filter(col("doc_id") % 3 =!= 0))
     val queries = embedded(frame(LongType,
       Seq((1, "spark table scan"), (2, "merge join"), (3, "İstanbul straße 😀"))))

@@ -671,7 +671,7 @@ class DocStreamsSpec extends AnyFunSuite with SparkTestBase {
     def serve(store: org.apache.spark.sql.DataFrame, key: String,
         epoch: Option[String]) =
       graft.pipeline.RagPipeline.hybridIndexedServe(spark, store, queries,
-          cacheKeyBase = key, epoch = epoch, indexedCells = 2)
+          cacheKeyBase = key, epoch = epoch)
         .collect().map(r => (r.getInt(0), r.getInt(1), r.getString(3)))
         .sortBy(t => (t._1, t._2)).toSeq
     try {

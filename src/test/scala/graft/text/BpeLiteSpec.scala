@@ -228,8 +228,8 @@ class BpeLiteSpec extends AnyFunSuite {
     // same (key, epoch): the memo serves d1's merges even when offered
     // a different corpus — the epoch token is the caller's promise
     assert(BpeLite.ensureTrainedMerges(d2, key, Some("e1")) == m1)
-    // the bench's between-run boundary: the memo must NOT survive it
-    // (r20 verdict #1 — min-of-3 runs price the 8-round trainer)
+    // Verify's between-row batch boundary: the memo must NOT survive
+    // it, so every catalog row runs its 8-round trainer
     graft.io.Caches.clearAll(spark)
     assert(BpeLite.ensureTrainedMerges(d2, key, Some("e1")) == m2direct,
       "clearAll must empty the trained-merges memo")

@@ -2562,7 +2562,7 @@ object Queries {
     * executors, broadcastable in bytes); only the bounded probe set
     * joins it. */
   def q_cms_topk(s: SparkSession, dir: String): DataFrame = {
-    val w = 64; val d = 4
+    val (w, d) = (graft.rel.Sketches.CmsWidth, graft.rel.Sketches.CmsDepth)
     val tf = t(s, dir, "documents")
       .select(explode(Tok.tokens(lower(col("text")))).as("term"))
       .groupBy(col("term")).agg(count(lit(1)).as("cnt"))
@@ -3201,7 +3201,8 @@ object Queries {
         round(vector.FloatVecExpr.dotF(col("embedding"), col("q_embedding")) /
           (vector.FloatVecExpr.normF(col("embedding")) *
             vector.FloatVecExpr.normF(col("q_embedding"))), 6))
-      .withColumn("kept", (col("cos_sim") >= 0.999).cast("int"))
+      .withColumn("kept",
+        (col("cos_sim") >= graft.multimodal.Multimodal.ClipGate).cast("int"))
     scored
       .select(col("pair_id"), col("caption_id"), col("cos_sim"), col("kept"))
       .orderBy(col("pair_id"))
@@ -3387,7 +3388,7 @@ object Queries {
         round(vector.FloatVecExpr.dotF(col("embedding"), col("q_embedding")) /
           (vector.FloatVecExpr.normF(col("embedding")) *
             vector.FloatVecExpr.normF(col("q_embedding"))), 6))
-      .filter(col("cos_sim") >= 0.999)
+      .filter(col("cos_sim") >= graft.multimodal.Multimodal.ClipGate)
       .withColumn("n_chars", length(col("caption")).cast("int"))
       .select(col("pair_id"), col("caption_id"), col("cell"),
         col("cos_sim"), col("n_chars"))

@@ -4,7 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** The ONE self-join candidate-generation kernel behind every banded
-  * blocking surface — MinHash LSH bands ([[Dedup.minhashCandidatesOf]]
+  * blocking surface — MinHash LSH bands ([[Dedup.minhashCandidates]]
   * and the saved-index serve [[Dedup.candidatesFromIndex]]), SimHash
   * sub-bands ([[Dedup.simhashCandidates]]), and CDC shared-block
   * pairing ([[graft.Queries.q_cdc_shared]]). Each of those used to

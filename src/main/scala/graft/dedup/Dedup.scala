@@ -22,6 +22,20 @@ import graft.vector.{FloatVecExpr, VectorOps}
   */
 object Dedup {
 
+  /** MinHash geometry — one setting for every minhash consumer (the
+    * recomputing candidates, the saved signature index, the streaming
+    * band keys, containment and n-gram Jaccard), the one the DuckDB
+    * oracles replay: 8 md5-seeded hashes in 4 bands of 2 over token
+    * 3-shingles. */
+  val NumHashes = 8
+  val Bands = 4
+  val ShingleN = 3
+  private val RowsPerBand = NumHashes / Bands
+
+  /** Tokens per "line" for line-level dedup (the fixture corpus has
+    * no newlines — see [[lineDedup]]). */
+  val LineTokens = 10
+
   /** Token n-gram shingles as an array column (distinct, order-free).
     *
     * Shape matters here: the n-gram is built by zipping n shifted
@@ -33,7 +47,8 @@ object Dedup {
     * once PER SHINGLE (measured 12× slower at sf0.1). With the zip
     * form the token array is a direct child of `slice`/`size` only,
     * evaluated once per row. */
-  def shingles(textCol: Column, n: Int = 3): Column = {
+  def shingles(textCol: Column): Column = {
+    val n = ShingleN
     val toks = Tok.tokens(textCol)
     val cnt = size(toks) - (n - 1)
     val shifted = (1 to n).map(k => slice(toks, lit(k), cnt))
@@ -184,53 +199,29 @@ object Dedup {
     * shingle array in its own projection matters: inlining
     * [[shingles]] here would duplicate its whole expression subtree
     * once per seed and blow up codegen compile time. */
-  def minhashSignatureOf(shinglesCol: Column, numHashes: Int = 8): Column =
+  def minhashSignatureOf(shinglesCol: Column, numHashes: Int = NumHashes): Column =
     transform(sequence(lit(0), lit(numHashes - 1)),
       seed => array_min(transform(shinglesCol,
         s => md5(concat(seed.cast("string"), lit("|"), s)))))
 
   /** Convenience: signature straight from text (two-step projection). */
-  def minhashSignature(textCol: Column, numHashes: Int = 8, shingleN: Int = 3): Column =
-    minhashSignatureOf(shingles(textCol, shingleN), numHashes)
+  def minhashSignature(textCol: Column): Column =
+    minhashSignatureOf(shingles(textCol))
 
-  /** MinHash + LSH banding: signature split into `bands` bands of
-    * `rowsPerBand` hashes; docs sharing any band key are candidates.
-    * Pipeline: per-doc signature (narrow) → explode bands →
-    * groupBy band key (the only shuffle; keys are 32-byte hashes) →
-    * emit candidate pairs from same-bucket docs. Bucket fan-out is
-    * bounded by near-dup cluster size, not corpus size. */
-  def minhashCandidates(docs: DataFrame, numHashes: Int = 8,
-      bands: Int = 4, shingleN: Int = 3): DataFrame =
-    minhashCandidatesOf(
+  /** MinHash + LSH banding: the signature split into [[Bands]] bands
+    * of [[NumHashes]] / [[Bands]] hashes; docs sharing any band key
+    * are candidates. Pipeline: per-doc signature ([[signature]]) →
+    * explode bands → groupBy band key (the only shuffle; keys are
+    * 32-byte hashes) → emit candidate pairs from same-bucket docs.
+    * Bucket fan-out is bounded by near-dup cluster size, not corpus
+    * size. */
+  def minhashCandidates(docs: DataFrame): DataFrame = {
+    val sig = signature(
       docs
         // equivalent to tokenCount>0 (any non-space char tokenizes)
         // but avoids a second regexp_extract_all pass per row
         .filter(trim(col("text")) =!= "")
-        .select(col("doc_id"), shingles(col("text"), shingleN).as("sh")),
-      numHashes, bands)
-
-  /** [[minhashCandidates]] over an already-shingled `(doc_id,
-    * sh: array<string>)` frame — lets a caller that ALSO needs the
-    * shingle arrays (the verify join, the KMV sketch) compute and
-    * persist the shingle pass once instead of once per consumer. */
-  def minhashCandidatesOf(shingled: DataFrame, numHashes: Int = 8,
-      bands: Int = 4): DataFrame = {
-    require(numHashes % bands == 0)
-    val rpb = numHashes / bands
-    // Row-wise shape instead of nested lambdas: explode shingles once,
-    // then ONE partial+final hash aggregate computes all `numHashes`
-    // minima as separate agg columns (no per-seed row fan-out, no
-    // second shuffle). Equivalent keys to the array-lambda form, but
-    // it spills, parallelizes per row, and avoids the multi-second
-    // codegen compile that deep nested HOFs trigger (CollapseProject
-    // re-inlines projection barriers, so staging selects don't help).
-    val sh = shingled
-      .select(col("doc_id"), explode(col("sh")).as("shingle"))
-    val minCols = (0 until numHashes).map(s =>
-      min(md5(concat(lit(s.toString), lit("|"), col("shingle")))).as(s"h$s"))
-    val sig = sh.groupBy(col("doc_id")).agg(minCols.head, minCols.tail: _*)
-    val bandKeys = (0 until bands).map(b =>
-      concat((b * rpb until (b + 1) * rpb).map(s => col(s"h$s")): _*))
+        .select(col("doc_id"), shingles(col("text")).as("sh")))
     // shared-exchange self-join discipline lives in Banded (measured
     // here first: without the shared repartition the whole
     // shingle+md5+signature pipeline ran once PER SIDE, 2.1s vs 1.4s
@@ -240,6 +231,28 @@ object Dedup {
     Banded.candidatePairs(banded, Seq("band", "band_key"))
       .distinct()
   }
+
+  /** `(doc_id, h0 … h7)` — the per-document MinHash signature as
+    * [[NumHashes]] columns — from an already-shingled `(doc_id, sh:
+    * array<string>)` frame. Row-wise shape instead of nested lambdas:
+    * explode shingles once, then ONE partial+final hash aggregate
+    * computes all minima as separate agg columns (no per-seed row
+    * fan-out, no second shuffle). Equivalent keys to the array-lambda
+    * form ([[minhashBandKeyArray]]), but it spills, parallelizes per
+    * row, and avoids the multi-second codegen compile that deep nested
+    * HOFs trigger (CollapseProject re-inlines projection barriers, so
+    * staging selects don't help). */
+  private def signature(shingled: DataFrame): DataFrame = {
+    val minCols = (0 until NumHashes).map(s =>
+      min(md5(concat(lit(s.toString), lit("|"), col("shingle")))).as(s"h$s"))
+    shingled.select(col("doc_id"), explode(col("sh")).as("shingle"))
+      .groupBy(col("doc_id")).agg(minCols.head, minCols.tail: _*)
+  }
+
+  /** The [[Bands]] band keys over [[signature]]'s columns: each band
+    * concatenates its [[RowsPerBand]] consecutive hashes. */
+  private def bandKeys: Seq[Column] = (0 until Bands).map(b =>
+    concat((b * RowsPerBand until (b + 1) * RowsPerBand).map(s => col(s"h$s")): _*))
 
   /** Jaccard-CONTAINMENT near-dup pairs — the asymmetric case
     * symmetric near-dup misses: a document EMBEDDED in a larger one
@@ -275,13 +288,15 @@ object Dedup {
     *
     * Emits one row per candidate pair (doc_a < doc_b) with both
     * directional containments and the `is_contained` decision at
-    * 0.9, filtered to max-containment ≥ `minCont`. */
-  def containmentPairs(docs: DataFrame, shingleN: Int = 3,
-      maxDf: Int = 20, minShared: Int = 3,
-      minCont: Double = 0.5): DataFrame = {
+    * 0.9, filtered to max-containment ≥ `minCont`.
+    *
+    * The thresholds are the oracle's: `maxDf` 20, `minShared` 3,
+    * `minCont` 0.5. */
+  def containmentPairs(docs: DataFrame): DataFrame = {
+    val (maxDf, minShared, minCont) = (20, 3, 0.5)
     val shh = docs.filter(trim(col("text")) =!= "")
       .select(col("doc_id"),
-        transform(shingles(col("text"), shingleN),
+        transform(shingles(col("text")),
           s => conv(substring(md5(s), 1, 15), 16, 10).cast("long")).as("shh"))
       .persistTracked("containment.shh")
     val ex = shh.select(col("doc_id"), explode(col("shh")).as("g"))
@@ -324,42 +339,33 @@ object Dedup {
   // ===== saved signature index (build-once / serve-many) =====
 
   /** Materialize the MinHash signature index: one row per non-blank
-    * document with its distinct shingle array (`sh`) and its `bands`
-    * LSH band keys (`bks`). The tokenize → shingle → md5-min
+    * document with its distinct shingle array (`sh`) and its
+    * [[Bands]] LSH band keys (`bks`). The tokenize → shingle → md5-min
     * signature pass is the expensive part of every minhash consumer
     * (candidates, verify, clustering, corpus filter); a real corpus
     * computes it ONCE per ingest and serves every downstream dedup
     * decision from the saved table — the same build/serve split as
     * [[graft.text.Bm25.saveIndex]] and [[graft.vector.Ivf]].
     *
-    * Band keys are value-identical to [[minhashCandidatesOf]]'s
-    * aggregate pipeline (same min over md5(seed|shingle), same
-    * per-band concat), so candidates served from the index hash-match
-    * the recomputing form and the DuckDB oracle. At 100 TB the index
+    * Band keys come from the same [[signature]] aggregate and
+    * per-band concat as [[minhashCandidates]], so candidates served
+    * from the index hash-match the recomputing form and the DuckDB
+    * oracle. At 100 TB the index
     * is a (doc_id, shingle hashes, 4 short keys) table — a small
     * constant factor of the corpus, append-mergeable per ingest
     * batch. */
-  def saveSignatureIndex(docs: DataFrame, path: String, numHashes: Int = 8,
-      bands: Int = 4, shingleN: Int = 3): Unit = {
-    require(numHashes % bands == 0)
-    val rpb = numHashes / bands
+  def saveSignatureIndex(docs: DataFrame, path: String): Unit = {
     val shingled = docs.filter(trim(col("text")) =!= "")
-      .select(col("doc_id"), shingles(col("text"), shingleN).as("sh"))
+      .select(col("doc_id"), shingles(col("text")).as("sh"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
-      val sh = shingled.select(col("doc_id"), explode(col("sh")).as("shingle"))
-      val minCols = (0 until numHashes).map(s =>
-        min(md5(concat(lit(s.toString), lit("|"), col("shingle")))).as(s"h$s"))
-      val sig = sh.groupBy(col("doc_id")).agg(minCols.head, minCols.tail: _*)
-      val bandKeys = (0 until bands).map(b =>
-        concat((b * rpb until (b + 1) * rpb).map(s => col(s"h$s")): _*))
-      // merge hint: `sig` is one row PER DOCUMENT — corpus-
+      // merge hint: the signature is one row PER DOCUMENT — corpus-
       // proportional, so a broadcast pick here is a stats fluke that
       // stops scaling (the same r17 class as containmentPairs'
       // `rare`: at tile×10 the starved harness measured the fluke
       // materializing a >150 MB broadcast). Both sides key on
       // doc_id; the shuffle plan is flat at every size.
-      sig.select(col("doc_id"), array(bandKeys: _*).as("bks"))
+      signature(shingled).select(col("doc_id"), array(bandKeys: _*).as("bks"))
         .hint("merge")
         .join(shingled, "doc_id")
         .write.mode("overwrite").parquet(path)
@@ -367,7 +373,7 @@ object Dedup {
   }
 
   /** Single-flight memo over [[saveSignatureIndex]], keyed by caller
-    * key + parameters, with the same [[graft.io.SavedIndex]]
+    * key, with the same [[graft.io.SavedIndex]]
     * staleness contract as [[graft.text.Bm25.ensureSavedIndex]]:
     * every call re-checks the offered corpus (content fingerprint
     * scan, or an O(1) caller `epoch` token) and a mismatch rebuilds
@@ -381,14 +387,12 @@ object Dedup {
   private val savedSigIndexes = new graft.io.SavedIndex("graft-minhash-idx")
 
   def ensureSavedSignatureIndex(docs: DataFrame, cacheKey: String,
-      numHashes: Int = 8, bands: Int = 4, shingleN: Int = 3,
       epoch: Option[String] = None): String =
-    savedSigIndexes.ensure(s"$cacheKey|$numHashes|$bands|$shingleN", docs,
-      epoch)(p => saveSignatureIndex(docs, p, numHashes, bands, shingleN))
+    savedSigIndexes.ensure(cacheKey, docs, epoch)(saveSignatureIndex(docs, _))
 
   /** Candidate pairs served from a saved signature index (`doc_id`,
     * `bks`, `sh`): posexplode the band keys and self-join — the
-    * identical join to [[minhashCandidatesOf]], minus the signature
+    * identical join to [[minhashCandidates]], minus the signature
     * recompute. Column pruning drops `sh` from this branch, so the
     * scan reads two thin columns. */
   def candidatesFromIndex(idx: DataFrame): DataFrame =
@@ -417,27 +421,20 @@ object Dedup {
     * no explode and no aggregate on the stream side). Blank texts
     * yield null — no keys, a singleton downstream, matching the
     * batch operators' no-candidate semantics. */
-  def minhashBandKeyArray(textCol: Column, numHashes: Int = 8,
-      bands: Int = 4, shingleN: Int = 3): Column = {
-    require(numHashes % bands == 0)
-    val rpb = numHashes / bands
-    val sig = minhashSignatureOf(shingles(textCol, shingleN), numHashes)
+  def minhashBandKeyArray(textCol: Column): Column = {
+    val sig = minhashSignatureOf(shingles(textCol))
     when(trim(textCol) =!= "",
-      array((0 until bands).map(b =>
-        concat_ws("", slice(sig, b * rpb + 1, rpb))): _*))
+      array((0 until Bands).map(b =>
+        concat_ws("", slice(sig, b * RowsPerBand + 1, RowsPerBand))): _*))
   }
 
-  def minhashBandKeys(docs: DataFrame, numHashes: Int = 8,
-      bands: Int = 4, shingleN: Int = 3): DataFrame = {
-    require(numHashes % bands == 0)
-    val rpb = numHashes / bands
+  def minhashBandKeys(docs: DataFrame): DataFrame =
     docs.filter(trim(col("text")) =!= "")
-      .select(col("doc_id"), shingles(col("text"), shingleN).as("sh"))
-      .select(col("doc_id"), minhashSignatureOf(col("sh"), numHashes).as("sig"))
-      .select(col("doc_id"), posexplode(array((0 until bands).map(b =>
-          concat_ws("", slice(col("sig"), b * rpb + 1, rpb))): _*))
+      .select(col("doc_id"), shingles(col("text")).as("sh"))
+      .select(col("doc_id"), minhashSignatureOf(col("sh")).as("sig"))
+      .select(col("doc_id"), posexplode(array((0 until Bands).map(b =>
+          concat_ws("", slice(col("sig"), b * RowsPerBand + 1, RowsPerBand))): _*))
         .as(Seq("band", "band_key")))
-  }
 
   private val md5Local = ThreadLocal.withInitial[java.security.MessageDigest](
     () => java.security.MessageDigest.getInstance("MD5"))
@@ -615,8 +612,7 @@ object Dedup {
   /** n-gram Jaccard similarity for candidate pairs: explode distinct
     * shingles, equi-join on shingle (intersection counts), union via
     * |A|+|B|−|A∩B|. Only shingle hashes shuffle. */
-  def ngramJaccard(docs: DataFrame, shingleN: Int = 3,
-      minJaccard: Double = 0.0): DataFrame = {
+  def ngramJaccard(docs: DataFrame, minJaccard: Double = 0.0): DataFrame = {
     // one repartition on the intersection-join key, shared by all
     // three consumers (sizes agg + both join sides): the tokenize →
     // shingle → explode pipeline runs once and its exchange is reused,
@@ -624,7 +620,7 @@ object Dedup {
     val sh = docs
       .filter(Tok.tokenCount(col("text")) > 0)
       .select(col("doc_id"),
-        explode(shingles(col("text"), shingleN)).as("shingle"))
+        explode(shingles(col("text"))).as("shingle"))
       .repartition(col("shingle"))
     val sizes = sh.groupBy(col("doc_id")).agg(count(lit(1)).as("set_size"))
     val inter = sh.select(col("shingle"), col("doc_id").as("doc_a"))
@@ -673,7 +669,7 @@ object Dedup {
     * Boilerplate (headers, footers, nav text) repeats across
     * documents far below the document-dedup radar — this is the
     * stage that catches it. The fixture corpus has no newlines, so a
-    * "line" here is a fixed `lineTokens`-token segment (documented
+    * "line" here is a fixed [[LineTokens]]-token segment (documented
     * adaptation; a newline-structured corpus would split on '\n').
     *
     * Shape: lines never self-join — first-wins is ONE exchange keyed
@@ -757,10 +753,10 @@ object Dedup {
     * ordinary rows and segment partition-parallel with a base line
     * offset; both branches emit bit-identical rows for the same
     * document (spec-pinned in LineSplitSpec). */
-  def linesOf(docs: DataFrame, lineTokens: Int = 10,
+  def linesOf(docs: DataFrame,
       splitChars: Long = LineSplitChars,
       linesPerPiece: Int = LinesPerPiece): DataFrame = {
-    val L = lineTokens
+    val L = LineTokens
     def narrow(d: DataFrame): DataFrame = d
       .select(col("doc_id"),
         split(coalesce(col("text"), lit("")), " ").as("ts"))
@@ -818,19 +814,19 @@ object Dedup {
       .groupBy(col("canon"), col("digest"))
       .agg(min(col("fetch_id")).as("first_fetch"))
 
-  def lineIndex(docs: DataFrame, lineTokens: Int = 10): DataFrame =
-    linesOf(docs, lineTokens)
+  def lineIndex(docs: DataFrame): DataFrame =
+    linesOf(docs)
       .groupBy(md5(col("line")).as("line_md5"))
       .agg(min(struct(col("doc_id"), col("p"))).as("f"))
       .select(col("line_md5"), col("f.doc_id").as("first_doc"),
         col("f.p").as("first_p"))
 
-  def lineDedup(docs: DataFrame, lineTokens: Int = 10,
+  def lineDedup(docs: DataFrame,
       splitChars: Long = LineSplitChars,
       linesPerPiece: Int = LinesPerPiece): DataFrame = {
     val w = Window.partitionBy(md5(col("line")))
       .orderBy(col("doc_id"), col("p"))
-    linesOf(docs, lineTokens, splitChars, linesPerPiece)
+    linesOf(docs, splitChars, linesPerPiece)
       .withColumn("kept", (row_number().over(w) === 1).cast("int"))
       .groupBy(col("doc_id")).agg(
         count(lit(1)).cast("int").as("n_lines"),

@@ -59,18 +59,23 @@ import org.apache.spark.sql.functions._
   */
 object SemDedup {
 
+  /** ε² as an exact rational, `EpsNum / EpsDen` = 361/400, i.e.
+    * ε = 0.95 — the paper's ballpark for web data. */
+  val EpsNum = 361L
+  val EpsDen = 400L
+
+  /** The inline fit's geometry: k-means cells and bounded rounds. */
+  val Cells = 8
+  val Rounds = 2
+
   /** Per-vector dedup decision over `emb` (`vec_id`, `embedding`):
     * `(vec_id, cell, cluster_id, cluster_size, keep)` — `cluster_id`
     * the smallest vec_id in the vector's duplicate group (itself when
-    * unduplicated), `keep` 1 on exactly one row per group.
-    *
-    * `epsNum/epsDen` is ε² as an exact rational — default 361/400,
-    * i.e. ε = 0.95, the paper's ballpark for web data. */
-  def semanticDedup(emb: DataFrame, nCells: Int = 8, rounds: Int = 2,
-      epsNum: Long = 361L, epsDen: Long = 400L): DataFrame = {
+    * unduplicated), `keep` 1 on exactly one row per group. */
+  def semanticDedup(emb: DataFrame): DataFrame = {
     val (assigned, _) =
-      graft.vector.Ivf.boundedIndex(emb, nCells = nCells, rounds = rounds)
-    semanticDedupAssigned(assigned, epsNum, epsDen)
+      graft.vector.Ivf.boundedIndex(emb, nCells = Cells, rounds = Rounds)
+    semanticDedupAssigned(assigned)
   }
 
   /** [[semanticDedup]]'s decision stage over a PRE-ASSIGNED corpus
@@ -89,7 +94,6 @@ object SemDedup {
     * the closure is a deterministic min-label fixpoint over a
     * deterministic pair set. */
   def semanticDedupAssigned(assigned: DataFrame,
-      epsNum: Long = 361L, epsDen: Long = 400L,
       compKey: Option[(String, Option[String])] = None): DataFrame = {
     val dq = graft.vector.Quantize.dotQ _
     // norms are per-VECTOR (n rows), never per-pair (n²/cells rows):
@@ -106,13 +110,12 @@ object SemDedup {
       .candidatePairs(keyed, Seq("cell"), carry = Seq("qv", "nn"))
       .withColumn("dot", dq(col("a_qv"), col("b_qv")))
       .filter(col("dot") > 0 &&
-        col("dot") * col("dot") * lit(epsDen) >=
-          lit(epsNum) * col("a_nn") * col("b_nn"))
+        col("dot") * col("dot") * lit(EpsDen) >=
+          lit(EpsNum) * col("a_nn") * col("b_nn"))
       .select(col("doc_a"), col("doc_b"))
     val comp = compKey match {
       case Some((k, e)) =>
-        Clusters.ensureComponents(assigned.sparkSession,
-          s"$k|$epsNum/$epsDen", e)(pairs)
+        Clusters.ensureComponents(assigned.sparkSession, k, e)(pairs)
       case None => Clusters.connectedComponents(pairs)
     }
     val w = Window.partitionBy(col("cluster_id"))
@@ -142,13 +145,10 @@ object SemDedup {
     * never refit, and only same-cell (history, batch) pairs are
     * scored. Returns one row per batch vector:
     * `(vec_id, cell, dup_of, keep)` — `dup_of` −1 when fresh. */
-  def semanticDedupIncremental(history: DataFrame, batch: DataFrame,
-      nCells: Int = 8, rounds: Int = 2,
-      epsNum: Long = 361L, epsDen: Long = 400L): DataFrame = {
+  def semanticDedupIncremental(history: DataFrame, batch: DataFrame): DataFrame = {
     val (histAssigned, cents) =
-      graft.vector.Ivf.boundedIndex(history, nCells = nCells, rounds = rounds)
-    semanticDedupIncrementalAssigned(histAssigned, cents, batch,
-      epsNum, epsDen)
+      graft.vector.Ivf.boundedIndex(history, nCells = Cells, rounds = Rounds)
+    semanticDedupIncrementalAssigned(histAssigned, cents, batch)
   }
 
   /** [[semanticDedupIncremental]] over a PRE-ASSIGNED history — the
@@ -159,13 +159,12 @@ object SemDedup {
     * parquet losslessly, so batch cell assignment against loaded
     * centroids matches the in-memory fit). */
   def semanticDedupIncrementalAssigned(histAssigned: DataFrame,
-      cents: Array[Array[Double]], batch: DataFrame,
-      epsNum: Long = 361L, epsDen: Long = 400L): DataFrame = {
+      cents: Array[Array[Double]], batch: DataFrame): DataFrame = {
     val dq = graft.vector.Quantize.dotQ _
     def close(dot: org.apache.spark.sql.Column,
         na: org.apache.spark.sql.Column,
         nb: org.apache.spark.sql.Column) =
-      dot > 0 && dot * dot * lit(epsDen) >= lit(epsNum) * na * nb
+      dot > 0 && dot * dot * lit(EpsDen) >= lit(EpsNum) * na * nb
     val hist = histAssigned.select(col("vec_id").as("hist_id"),
       col("cell"), col("qv").as("hqv"), dq(col("qv"), col("qv")).as("hnn"))
     val b = batch

@@ -21,6 +21,10 @@ import org.apache.spark.sql.functions._
   */
 object Multimodal {
 
+  /** CLIP-score gate of the cross-modal curation rows and their
+    * streaming twin: a pair is kept at cosine ≥ 0.999. */
+  val ClipGate = 0.999
+
   // PNG encode buffers in memory, not a disk cache dir
   ImageIO.setUseCache(false)
 

@@ -30,13 +30,18 @@ import org.apache.spark.sql.functions._
   */
 object LinkGraph {
 
+  /** The saved prior's graph and walk: [[syntheticEdges]] fanout and
+    * [[pageRank]] rounds. */
+  val Fanout = 3
+  val Rounds = 3
+
   /** Deterministic synthetic out-links: doc i links to
     * (i·131 + 37k) mod N for k = 1..fanout, self-loops dropped,
     * duplicates collapsed. Models the scrape-result link table (S1)
     * with arithmetic any engine replays — no RNG, no wall-clock.
     * N rides the plan as a broadcast 1-row aggregate, never a
     * driver-side collect. */
-  def syntheticEdges(docs: DataFrame, fanout: Int = 3): DataFrame = {
+  def syntheticEdges(docs: DataFrame, fanout: Int = Fanout): DataFrame = {
     val n = docs.agg(count(lit(1)).as("n_docs"))
     docs.select(col("doc_id").as("src"))
       .crossJoin(broadcast(n))
@@ -99,11 +104,9 @@ object LinkGraph {
   private val savedRanks = new graft.io.SavedIndex("graft-pagerank")
 
   def ensureSavedRanks(docs: DataFrame, cacheKey: String,
-      epoch: Option[String] = None, rounds: Int = 3,
-      fanout: Int = 3): String =
+      epoch: Option[String] = None): String =
     savedRanks.ensure(cacheKey, docs, epoch) { p =>
-      pageRank(docs.select(col("doc_id")),
-          syntheticEdges(docs, fanout), rounds)
+      pageRank(docs.select(col("doc_id")), syntheticEdges(docs), Rounds)
         .write.mode("overwrite").parquet(p)
     }
 }

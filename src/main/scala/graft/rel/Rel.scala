@@ -115,7 +115,8 @@ object Rel {
     * Two-pass like `np.histogram`; both passes are single aggregates.
     * All arithmetic in DOUBLE so the DuckDB oracle bins identically.
     */
-  def histogram(df: DataFrame, c: String, bins: Int = 10): DataFrame = {
+  def histogram(df: DataFrame, c: String): DataFrame = {
+    val bins = 10
     val mm = df.agg(min(col(c)).cast("double").as("lo"),
       max(col(c)).cast("double").as("hi")).head()
     val lo = mm.getDouble(0); val hi = mm.getDouble(1)
@@ -142,10 +143,10 @@ object Rel {
       year(to_date(s, "yyyy-MM-dd")).between(2009, 2024)
 
   /** P9 — column-exclusion filter (`Frontend/app.py:488-493`):
-    * drop exact names and suffix families. */
-  def excludeColumns(df: DataFrame,
-      exact: Set[String] = Set("cik", "ein", "changed", "value"),
-      suffixes: Seq[String] = Seq("_sk", "_dt", "_id", "_code")): DataFrame = {
+    * drop the reference's exact names and suffix families. */
+  def excludeColumns(df: DataFrame): DataFrame = {
+    val exact = Set("cik", "ein", "changed", "value")
+    val suffixes = Seq("_sk", "_dt", "_id", "_code")
     val keep = df.columns.filterNot(c =>
       exact.contains(c.toLowerCase) ||
         suffixes.exists(c.toLowerCase.endsWith))

@@ -62,6 +62,13 @@ object Sketches {
   val HllAlphaM2Scaled: Double =
     0.7213 / (1.0 + 1.079 / 256.0) * 65536.0 * 9007199254740992.0
 
+  /** Count-Min geometry (q_cms_topk and its streaming twin
+    * [[graft.streaming.DocStreams.cmsCounters]]): `CmsDepth` rows of
+    * `CmsWidth` counters, the rows hashed by [[bloomPositions]] —
+    * 256 counters in all. */
+  val CmsWidth = 64
+  val CmsDepth = 4
+
   /** Bloom bit positions of a term: `hashes` md5-derived positions in
     * a `bits`-bit filter. The filter itself is just the DISTINCT set
     * of positions — broadcastable at `bits/8` bytes regardless of how

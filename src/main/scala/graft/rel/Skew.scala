@@ -32,10 +32,11 @@ import org.apache.spark.sql.functions._
 object Skew {
 
   /** Equi-join `big ⋈ small` on `key`, with the big side's hot keys
-    * split across `factor` salted sub-keys and the small side
+    * split across `factor` = 8 salted sub-keys and the small side
     * replicated `factor` times. Output equals the plain join. */
   def saltedJoin(big: DataFrame, small: DataFrame, key: String,
-      saltSource: Column, factor: Int = 8): DataFrame = {
+      saltSource: Column): DataFrame = {
+    val factor = 8
     val salted = big.withColumn("_salt",
       pmod(xxhash64(saltSource), lit(factor)).cast("int"))
     val replicated = small.withColumn("_salt",

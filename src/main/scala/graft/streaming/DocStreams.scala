@@ -20,6 +20,10 @@ import graft.io.Caches
   */
 object DocStreams {
 
+  /** How long event-id dedup state lives past the watermark
+    * ([[dedupEvents]]). */
+  val DedupHorizon = "1 hour"
+
   /** Content-exact dedup on a document stream: first arrival per
     * normalized-content fingerprint wins (same key as
     * [[graft.textan.TextAnalysis.contentFingerprint]], so the kept
@@ -33,12 +37,12 @@ object DocStreams {
   }
 
   /** The watermark + in-horizon dedup core: state for an `event_id`
-    * lives until the watermark passes its event time + `delay`; a
+    * lives until the watermark passes its event time + [[DedupHorizon]]; a
     * re-delivery while the state lives is dropped, one past the
     * horizon is re-admitted — the deliberate bounded-state trade,
     * pinned batch-by-batch in DocStreamsSpec. */
-  def dedupEvents(events: DataFrame, delay: String = "1 hour"): DataFrame =
-    events.withWatermark("ts", delay)
+  def dedupEvents(events: DataFrame): DataFrame =
+    events.withWatermark("ts", DedupHorizon)
       .dropDuplicatesWithinWatermark("event_id")
 
   /** Streaming NEAR-dup candidates against a STATIC historical
@@ -96,8 +100,8 @@ object DocStreams {
     * twin, pinned with an independent exploded-join displacement
     * oracle in DocStreamsSpec. */
   def splitAssignAgainstStatic(incoming: DataFrame,
-      historyIndex: DataFrame, historySplit: DataFrame,
-      bands: Int = 4): DataFrame = {
+      historyIndex: DataFrame, historySplit: DataFrame): DataFrame = {
+    val bands = graft.dedup.Dedup.Bands
     val reps = historySplit.select(col("doc_id").as("hist_id"), col("rep"))
     // static prep, once per twin: per band, the smallest history rep
     // per band key — the only thing an arriving doc needs to inherit
@@ -138,11 +142,11 @@ object DocStreams {
 
   /** LINE-level boilerplate detection on the ingest stream — the
     * continuous twin of [[graft.dedup.Dedup.lineDedup]]: each
-    * incoming document segments into `lineTokens`-token lines
-    * per-row (narrow explode, [[graft.dedup.Dedup.linesOf]] — no
-    * stateful op; pass the SAME `lineTokens` the index was built
-    * with, or the join matches fingerprints across mismatched
-    * segmentations and flags nothing — ADVICE r13), the
+    * incoming document segments into
+    * [[graft.dedup.Dedup.LineTokens]]-token lines per-row (narrow
+    * explode, [[graft.dedup.Dedup.linesOf]] — no stateful op; the
+    * same segmentation [[graft.dedup.Dedup.lineIndex]] builds the
+    * history with, so fingerprints always match), the
     * line fingerprints equi-join the precomputed history index
     * (stream-static inner join, stateless on the stream side), and
     * one (doc_id, p, dup_of, first_p) row emits per historically-
@@ -151,8 +155,8 @@ object DocStreams {
     * reassembly drops the flagged positions exactly as the batch
     * operator does. */
   def lineDupAgainstStatic(incoming: DataFrame,
-      lineIndex: DataFrame, lineTokens: Int = 10): DataFrame =
-    graft.dedup.Dedup.linesOf(incoming, lineTokens)
+      lineIndex: DataFrame): DataFrame =
+    graft.dedup.Dedup.linesOf(incoming)
       .select(col("doc_id"), col("p"), md5(col("line")).as("line_md5"))
       .join(lineIndex, Seq("line_md5"))
       .select(col("doc_id"), col("p"),
@@ -189,14 +193,14 @@ object DocStreams {
     * ([[graft.multimodal.Multimodal.captionParse]]), scores the
     * pair's cosine with the batch row's exact expression (dotF /
     * (normF·normF), rounded before the gate) and keeps pairs at or
-    * above `threshold`. Everything is map-only — no state, no
-    * watermark, no shuffle — so it runs on an unbounded crawl stream;
+    * above [[graft.multimodal.Multimodal.ClipGate]]. Everything is
+    * map-only — no state, no watermark, no shuffle — so it runs on an
+    * unbounded crawl stream;
     * undecodable payloads drop (decode-or-skip). Emits
     * (pair_id, cos_sim, kept) for EVERY decodable pair (kept 0/1, so
     * the downstream writer can route keeps and drops differently);
     * batch == stream on the same pairs (spec-pinned). */
-  def crossmodalGateStream(pairs: DataFrame,
-      threshold: Double = 0.999): DataFrame = {
+  def crossmodalGateStream(pairs: DataFrame): DataFrame = {
     val spark = pairs.sparkSession
     import spark.implicits._
     val decoded = pairs
@@ -215,7 +219,8 @@ object DocStreams {
           (graft.vector.FloatVecExpr.normF(col("embedding")) *
             graft.vector.FloatVecExpr.normF(col("q_embedding"))), 6))
       .select(col("pair_id"), col("cos_sim"),
-        (col("cos_sim") >= threshold).cast("int").as("kept"))
+        (col("cos_sim") >= graft.multimodal.Multimodal.ClipGate)
+          .cast("int").as("kept"))
   }
 
   /** Stream-static crawl-frontier ADMISSION — the continuous twin of
@@ -415,12 +420,11 @@ object DocStreams {
   }
 
   /** Watermarked event dedup: drops re-deliveries of the same
-    * `event_id` arriving within `delay` of the watermark — bounded
-    * state for at-least-once upstreams. */
-  def dedupEventStream(spark: SparkSession, path: String,
-      delay: String = "1 hour"): DataFrame = {
+    * `event_id` arriving within [[DedupHorizon]] of the watermark —
+    * bounded state for at-least-once upstreams. */
+  def dedupEventStream(spark: SparkSession, path: String): DataFrame = {
     val schema = spark.read.parquet(path).schema
-    dedupEvents(spark.readStream.schema(schema).parquet(path), delay)
+    dedupEvents(spark.readStream.schema(schema).parquet(path))
   }
 
   /** Streaming HLL cardinality-sketch maintenance — the continuous
@@ -450,9 +454,11 @@ object DocStreams {
     * one-sided bound survives), and dedup-then-sum equals batch cell
     * for cell. State is the d×w counter grid (≤256 longs) plus the
     * dedup stage's horizon-bounded ids. */
-  def cmsCounters(terms: DataFrame, w: Int = 64, d: Int = 4): DataFrame =
+  def cmsCounters(terms: DataFrame): DataFrame =
     terms
-      .select(posexplode(graft.rel.Sketches.bloomPositions(col("term"), w, d))
+      .select(posexplode(
+          graft.rel.Sketches.bloomPositions(col("term"),
+            graft.rel.Sketches.CmsWidth, graft.rel.Sketches.CmsDepth))
         .as(Seq("h", "pos")))
       .groupBy(col("h"), col("pos"))
       .agg(count(lit(1)).as("counter"))
@@ -477,11 +483,11 @@ object DocStreams {
     * once needs a transactional table format underneath); re-reads of
     * the store remain first-wins because consumers dedup on id.
     *
+    * Each batch chunks with the "simple" strategy and embeds with
+    * [[graft.pipeline.RagPipeline.buildStore]]'s default embedder.
     * Returns the StreamingQuery; the store lives at `storePath` as
     * plain parquet readable by the batch retrieval surface. */
   def upsertIntoStore(docs: DataFrame, storePath: String,
-      strategy: String = "simple",
-      embedder: graft.vector.Embedder = graft.vector.HashingEmbedder(64),
       checkpoint: String = ""): org.apache.spark.sql.streaming.StreamingQuery = {
     val cp = if (checkpoint.nonEmpty) checkpoint
       else graft.io.TempDirs.create("graft-store-cp")
@@ -490,7 +496,7 @@ object DocStreams {
       .option("checkpointLocation", cp)
       .foreachBatch { (batch: DataFrame, _: Long) =>
         val spark = batch.sparkSession
-        val fresh = graft.pipeline.RagPipeline.buildStore(batch, strategy, embedder)
+        val fresh = graft.pipeline.RagPipeline.buildStore(batch, "simple")
         val hPath = new org.apache.hadoop.fs.Path(storePath)
         val fs = hPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
         val toWrite =

@@ -18,6 +18,15 @@ case class UserRunning(user_id: Long, n_events: Long, total_value: Double,
   */
 object EventStreams {
 
+  /** How far event time may lag the stream's maximum before a row is
+    * late: the watermark delay of every streaming aggregate and join
+    * here. */
+  val WatermarkDelay = "1 hour"
+
+  /** The replay's late wave ([[hourlyWatermarkedReplay]]): events
+    * with `event_id % LateMod == 0` arrive after the on-time wave. */
+  val LateMod = 3
+
   /** Tumbling-window aggregate per event type. Batch form; event time
     * truncated to the hour — identical semantics to
     * `groupBy(window($"ts", "1 hour"))` with the window start kept.
@@ -96,11 +105,10 @@ object EventStreams {
     * there), which is how the spec proves stream == batch. Emits one
     * row per qualifying (view, purchase) pair; the per-user
     * conversion rollup is a downstream aggregate. */
-  def funnelPairs(views: DataFrame, purchases: DataFrame,
-      delay: String = "1 hour"): DataFrame = {
-    val v = views.withWatermark("view_ts", delay)
+  def funnelPairs(views: DataFrame, purchases: DataFrame): DataFrame = {
+    val v = views.withWatermark("view_ts", WatermarkDelay)
     val b = purchases.withColumnRenamed("user_id", "buy_user_id")
-      .withWatermark("buy_ts", delay)
+      .withWatermark("buy_ts", WatermarkDelay)
     v.join(b,
         col("user_id") === col("buy_user_id") &&
           col("buy_ts") > col("view_ts") &&
@@ -114,12 +122,13 @@ object EventStreams {
     * Structured Streaming query (`MemoryStream` → `withWatermark` →
     * `groupBy(window(ts, '1 hour'), type)` → append-mode memory
     * sink) in three deterministic arrival waves — on-time rows
-    * (`event_id % lateMod != 0`), then the late wave (`% lateMod ==
+    * (`event_id % LateMod != 0`), then the late wave (`% LateMod ==
     * 0`), then two far-future advancer rows that flush every real
     * window past the final watermark. Spark's contract, which the
     * DuckDB oracle replays in closed form:
     *
-    *  - after wave 1 the watermark is `max(on-time ts) − delay`;
+    *  - after wave 1 the watermark is `max(on-time ts) −
+    *    WatermarkDelay`;
     *  - a wave-2 row is DROPPED iff its window END (hour start + 1 h)
     *    is ≤ that watermark (the StreamingSpec-pinned eviction rule);
     *  - append mode emits a window once the watermark passes its end,
@@ -137,8 +146,7 @@ object EventStreams {
     * watermark, and the two far-future advancers flush every real
     * window past the final watermark (each batch emits with its
     * start-of-batch watermark). */
-  def hourlyWatermarkedReplay(events: DataFrame,
-      lateMod: Int = 3): DataFrame = {
+  def hourlyWatermarkedReplay(events: DataFrame): DataFrame = {
     val spark = events.sparkSession
     import spark.implicits._
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
@@ -150,9 +158,9 @@ object EventStreams {
     if (rows.isEmpty)
       return Seq.empty[(java.sql.Timestamp, String, Long, Double)]
         .toDF("hour", "event_type", "n", "total_value")
-    val onTime0 = rows.filter(_._1 % lateMod != 0).toSeq
-    val late0 = rows.filter(_._1 % lateMod == 0).toSeq
-    // ALL-LATE degenerate case (every event_id % lateMod == 0): wave 1
+    val onTime0 = rows.filter(_._1 % LateMod != 0).toSeq
+    val late0 = rows.filter(_._1 % LateMod == 0).toSeq
+    // ALL-LATE degenerate case (every event_id % LateMod == 0): wave 1
     // would be an empty batch, which establishes NO watermark, so the
     // real stream keeps the whole of wave 2 — equivalently, everything
     // arrives in one wave. Fold it so explicitly; an oracle deriving
@@ -194,7 +202,7 @@ object EventStreams {
     implicit val ssCtx: org.apache.spark.sql.SQLContext = ss.sqlContext
     val mem = MemoryStream[(Long, java.sql.Timestamp, String, Double)]
     val agg = mem.toDF().toDF("event_id", "ts", "event_type", "value")
-      .withWatermark("ts", "1 hour")
+      .withWatermark("ts", WatermarkDelay)
       .groupBy(window(col("ts"), "1 hour"), col("event_type"))
       .agg(count(lit(1)).as("n"),
         round(sum(col("value")), 4).as("total_value"))
@@ -240,7 +248,7 @@ object EventStreams {
     val schema = spark.read.parquet(path).schema
     spark.readStream.schema(schema).options(options)
       .parquet(path)
-      .withWatermark("ts", "1 hour")
+      .withWatermark("ts", WatermarkDelay)
       .groupBy(window(col("ts"), "1 hour"), col("event_type"))
       .agg(count(lit(1)).as("n"), round(sum(col("value")), 4).as("total_value"))
       .select(col("window.start").as("hour"), col("event_type"),

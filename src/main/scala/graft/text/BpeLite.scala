@@ -136,12 +136,12 @@ object BpeLite {
     * aggregate; deterministic order (−count, word)). `topN` must be an
     * explicit bound — for full-vocabulary training use
     * [[trainDistributed]], which never collects the vocabulary. */
-  def wordCounts(docs: DataFrame, textCol: String = "text",
+  def wordCounts(docs: DataFrame,
       topN: Int = 10000): Map[String, Long] = {
     require(topN <= (1 << 20),
       s"wordCounts collects topN=$topN words to the driver; " +
         "full-vocabulary training must use trainDistributed")
-    docs.select(explode(split(col(textCol), s"[${Tok.Ws}]+")).as("w"))
+    docs.select(explode(split(col("text"), s"[${Tok.Ws}]+")).as("w"))
       .filter(col("w") =!= "")
       .groupBy(col("w")).agg(count(lit(1)).as("c"))
       .orderBy(desc("c"), col("w")).limit(topN)
@@ -300,7 +300,7 @@ object BpeLite {
     * (q_bpe_tokens, q_tokenizer_fertility, repeated serves) must
     * not re-run the 8-round distributed trainer while the corpus epoch
     * is unchanged. Merges are plain values (no session-bound
-    * resources), so the key is (cacheKey|textCol|numMerges, epoch)
+    * resources), so the key is (cacheKey|numMerges, epoch)
     * only. `epoch = None` trains unconditionally — the caller is
     * declaring it has no version token to vouch with, exactly
     * [[graft.io.SavedIndex]]'s contract.
@@ -317,12 +317,11 @@ object BpeLite {
   graft.io.Caches.registerOnClear(() => trainedMerges.clear())
 
   def ensureTrainedMerges(docs: DataFrame, cacheKey: String,
-      epoch: Option[String], textCol: String = "text",
-      numMerges: Int = 8): Vector[Merge] = epoch match {
-    case None => trainDistributed(docs, textCol, numMerges)
+      epoch: Option[String], numMerges: Int = 8): Vector[Merge] = epoch match {
+    case None => trainDistributed(docs, numMerges)
     case Some(e) =>
-      trainedMerges.getOrBuild((s"$cacheKey|$textCol|$numMerges", e))(
-        trainDistributed(docs, textCol, numMerges))
+      trainedMerges.getOrBuild((s"$cacheKey|$numMerges", e))(
+        trainDistributed(docs, numMerges))
   }
 
   /** Fully distributed merge training over the FULL vocabulary: the
@@ -336,9 +335,8 @@ object BpeLite {
     * `train(wordCounts(docs, topN = ∞), numMerges)`: same pair
     * weights (per distinct word × frequency), same (−count, left,
     * right) tie rule, same early stop when no pair remains. */
-  def trainDistributed(docs: DataFrame, textCol: String = "text",
-      numMerges: Int = 8, foldEvery: Int = 4,
-      batchK: Int = 16): Vector[Merge] = {
+  def trainDistributed(docs: DataFrame,
+      numMerges: Int = 8, foldEvery: Int = 4): Vector[Merge] = {
     // each round is its own action over the distinct-word frame:
     // persist the narrow (syms, c) projection, release it before
     // returning. Round k re-applies only the merges PENDING since the
@@ -361,8 +359,8 @@ object BpeLite {
     // sequence is bit-identical by construction, and the specs pin
     // batched == serial == driver `train` on real and adversarial
     // vocabularies.
-    require(batchK >= 1, "batchK must be >= 1")
-    var words = wordFrame(docs, textCol)
+    val batchK = 16
+    var words = wordFrame(docs, "text")
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
       val merges = Vector.newBuilder[Merge]

@@ -82,8 +82,8 @@ object DocSplit {
     * DuckDB oracle fixture is ASCII, where the units coincide — the
     * same caveat as every chunker oracle's `substr` replay). */
   def cutOffsets(text: String, maxChars: Int,
-      lookback: Int = DefaultLookback,
-      seps: Seq[String] = DefaultSeps): Array[(Int, Int)] = {
+      lookback: Int = DefaultLookback): Array[(Int, Int)] = {
+    val seps = DefaultSeps
     // ≥ 2, not ≥ 1: at maxChars == 1 a surrogate pair (2 units) can
     // neither fit a part nor be sheared, so the "each part ≤
     // maxChars" invariant is unsatisfiable on astral text — the
@@ -141,11 +141,10 @@ object DocSplit {
     * contract, and the fan-out is a Generate on the scan stage — no
     * shuffle. */
   def parts(docs: DataFrame, maxChars: Int,
-      lookback: Int = DefaultLookback,
-      seps: Seq[String] = DefaultSeps): DataFrame = {
+      lookback: Int = DefaultLookback): DataFrame = {
     val f = udf((text: String) =>
       if (text == null) Array.empty[Part]
-      else cutOffsets(text, maxChars, lookback, seps).map { case (s, e) =>
+      else cutOffsets(text, maxChars, lookback).map { case (s, e) =>
         Part(s, e, text.substring(s, e))
       })
     docs
@@ -192,9 +191,7 @@ object DocSplit {
     * so the big branch fails FAST with `raise_error` instead —
     * callers with wide ids must renumber (e.g. zipWithIndex /
     * row_number over the corpus) before splitting. */
-  def chunkParts(docs: DataFrame, chunker: Chunker, maxChars: Int,
-      lookback: Int = DefaultLookback,
-      seps: Seq[String] = DefaultSeps): DataFrame = {
+  def chunkParts(docs: DataFrame, chunker: Chunker, maxChars: Int): DataFrame = {
     // routing predicate: the Chunker input contract's `n_chars`
     // storage column when present (PUSHABLE — the giant branch
     // prunes at the parquet scan instead of reading every text to
@@ -226,8 +223,7 @@ object DocSplit {
         col("doc_id").cast("string"),
         lit(" cannot pack a part id; renumber ids before splitting"))))
       .otherwise(col("doc_id"))
-    val p = parts(docs.filter(sizeCol > maxChars),
-        maxChars, lookback, seps)
+    val p = parts(docs.filter(sizeCol > maxChars), maxChars)
       .repartition(docs.sparkSession.sessionState.conf.numShufflePartitions,
         col("doc_id"), col("part_index"))
       .select((shiftleft(guardedId, 31) + col("start")).as("doc_id"),

@@ -338,11 +338,11 @@ object Html {
     * expensive regex passes are per-piece, the single-task remainder
     * is O(n) string work. Both branches emit bit-identical rows
     * (HtmlSplitSpec). */
-  def pageReport(pages: DataFrame, htmlCol: String = "html",
+  def pageReport(pages: DataFrame,
       sizeCol: Option[Column] = None,
       splitChars: Long = PageSplitChars,
       pieceChars: Int = PagePieceChars): DataFrame = {
-    val h = col(htmlCol)
+    val h = col("html")
     def perRow(d: DataFrame): DataFrame = d
       .select(col("doc_id"),
         extractTitle(h).as("title"),

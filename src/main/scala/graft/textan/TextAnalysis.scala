@@ -76,10 +76,9 @@ object TextAnalysis {
     * projection, so the aggregate runs once per row and the consuming
     * projection only touches a column reference (CollapseProject
     * leaves non-cheap expressions referenced more than once staged). */
-  def withDetectedLang(df: DataFrame, textCol: String = "text",
-      out: String = "pred_lang"): DataFrame =
-    df.withColumn("__sc", stopwordHitArray(Tok.tokens(lower(col(textCol)))))
-      .withColumn(out, pickLang(col(textCol), col("__sc")))
+  def withDetectedLang(df: DataFrame): DataFrame =
+    df.withColumn("__sc", stopwordHitArray(Tok.tokens(lower(col("text")))))
+      .withColumn("pred_lang", pickLang(col("text"), col("__sc")))
       .drop("__sc")
 
   /** Quality scoring: length/punctuation/stopword/digit ratios
@@ -135,8 +134,8 @@ object TextAnalysis {
     * (same DOUBLE arithmetic, same single terminal rounding); only
     * the expression sharing differs. CollapseProject keeps the staged
     * columns because each is referenced more than once. */
-  def withQuality(df: DataFrame, textCol: String = "text"): DataFrame = {
-    val t = col(textCol)
+  def withQuality(df: DataFrame): DataFrame = {
+    val t = col("text")
     val staged = df
       .withColumn("__toks", Tok.tokens(lower(t)))
       .withColumn("__nchars", length(t).cast("double"))
@@ -173,8 +172,10 @@ object TextAnalysis {
 
   /** Winnowing fingerprint (Schleimer et al., SIGMOD 2003): k-gram
     * rolling hashes, minimum per sliding window, distinct retained
-    * set. Deterministic UDF (bit math is not oracle-portable). */
-  def winnow(text: String, k: Int = 8, window: Int = 4): Seq[Long] = {
+    * set, over 8-char grams in windows of 4. Deterministic UDF (bit
+    * math is not oracle-portable). */
+  def winnow(text: String): Seq[Long] = {
+    val (k, window) = (8, 4)
     if (text == null || text.length < k) return Seq.empty
     val s = text.toLowerCase
     // modulus kept < 2^31 so h*base never overflows Long
@@ -234,6 +235,10 @@ object TextAnalysis {
   /** Token stride of one split part. */
   val ClassifierPartTokens: Int = 1 << 16
 
+  /** `keep` threshold of [[classifierScore]] on the mean feature
+    * weight: a document is kept when its score is at least this. */
+  val ClassifierThreshold = 0.0
+
   /** (n_features, s_int, score, keep) per document: unigram + bigram
     * hashing-trick features, exact integer weight fold, one division.
     *
@@ -248,7 +253,7 @@ object TextAnalysis {
     * per-row bit-identically; sub-threshold corpora pay one existence
     * probe (answered by parquet row-group stats) and keep the pure
     * per-row plan. */
-  def classifierScore(docs: DataFrame, threshold: Double = 0.0,
+  def classifierScore(docs: DataFrame,
       splitChars: Long = ClassifierSplitChars,
       partTokens: Int = ClassifierPartTokens): DataFrame = {
     def finish(scored: DataFrame): DataFrame = scored
@@ -261,7 +266,7 @@ object TextAnalysis {
           .otherwise(lit(0.0)))
       .withColumn("keep",
         (col("s_int").cast("double") >=
-          lit(threshold) * lit(1000.0) * col("n_features")).cast("int"))
+          lit(ClassifierThreshold) * lit(1000.0) * col("n_features")).cast("int"))
 
     def perRow(d: DataFrame): DataFrame = {
       // null text == empty text (the giant branch's coalesce, and the
@@ -375,7 +380,7 @@ object TextAnalysis {
     * break split == per-row bit-identity. */
   val GopherPieceChars: Int = 1 << 20
 
-  def gopherRules(df: DataFrame, textCol: String = "text",
+  def gopherRules(df: DataFrame,
       splitChars: Long = GopherSplitChars,
       pieceChars: Int = GopherPieceChars): DataFrame = {
     // shared per-WORD / per-LINE counter expressions — the giant
@@ -433,7 +438,7 @@ object TextAnalysis {
     }
 
     def perRow(d: DataFrame): DataFrame = {
-      val t = col(textCol)
+      val t = col("text")
       val staged = d
         .withColumn("__words", wordsOf(t))
         .withColumn("__lines", split(t, "\n", -1))
@@ -479,7 +484,7 @@ object TextAnalysis {
     // and word-counter aggregates share ONE split of the giant text.
     val giantLines = giants
       .select(col("doc_id"),
-        posexplode(split(col(textCol), "\n", -1)).as(Seq("__ln", "__line")))
+        posexplode(split(col("text"), "\n", -1)).as(Seq("__ln", "__line")))
       .persistTracked("gopher.lines")
     val lineAgg = giantLines
       .select(col("doc_id"),

@@ -52,39 +52,21 @@ object Ann {
     * tables with high probability. */
   def autoBucketLength(dim: Int): Double = 0.4 / math.sqrt(dim.toDouble)
 
-  /** Embedding dimension per input plan, probed at most once per JVM:
-    * the one-row probe is cheap, but launching it before EVERY LSH
-    * call stacks a needless extra scan in front of the real job at
-    * corpus scale. Keyed by the analyzed plan's semantic hash so
-    * repeated calls over the same table share one probe. Known
-    * tradeoff of any dim memo: if the FILES under a semantically
-    * identical plan are rewritten with different-dimension vectors in
-    * the same JVM, the stale dim degrades LSH recall (never
-    * correctness — the exact-cosine confirm still runs). Pass an
-    * explicit `bucketLength` to bypass the probe entirely when the
-    * dim is known to the caller. */
-  private val dimCache = scala.collection.concurrent.TrieMap.empty[Int, Int]
+  /** Embedding dimension of `df`'s `embedding` column, from a one-row
+    * probe per call. Total on an empty frame: dim 0 (degenerate keys,
+    * still correct — exact confirm/rerank runs on zero rows). */
+  private def embeddingDim(df: DataFrame): Int =
+    df.select(size(col("embedding"))).take(1)
+      .headOption.map(_.getInt(0)).getOrElse(0)
 
-  private def embeddingDim(df: DataFrame, embCol: String): Int = {
-    val k = df.select(col(embCol)).queryExecution.analyzed.semanticHash()
-    dimCache.get(k) match {
-      case Some(d) => d
-      case None =>
-        // total on an empty frame: dim 0 (degenerate keys, still
-        // correct — exact confirm/rerank runs on zero rows) and NOT
-        // cached, so a later populated frame with the same plan
-        // shape re-probes the real dim
-        val d = df.select(size(col(embCol))).take(1)
-          .headOption.map(_.getInt(0)).getOrElse(0)
-        if (d > 0) dimCache.putIfAbsent(k, d)
-        d
-    }
-  }
+  /** BRP-LSH geometry: OR'd hash tables, each bucketed at
+    * [[autoBucketLength]] of the embedding dimension. */
+  val BrpTables = 4
 
-  private def resolveBucketLength(df: DataFrame, embCol: String,
-      bucketLength: Double): Double =
-    if (bucketLength > 0) bucketLength
-    else autoBucketLength(embeddingDim(df, embCol))
+  /** Sign-LSH geometry: bands × sign bits per band (see
+    * [[signLshNearDup]] for how the two scale together). */
+  val SignBands = 8
+  val SignBitsPerBand = 8
 
   /** md5-derived UNIT projection direction for BRP table `t`: raw
     * cube weights from md5("b<t>|<j>") (the sign-LSH mapping with a
@@ -111,25 +93,24 @@ object Ann {
 
   /** Per-vector BRP keys `(vec_id, table, key)`: key = floor of the
     * vector's scalar projection onto table `t`'s unit direction, in
-    * units of `bucketLength`, after normalizing the vector
+    * units of [[autoBucketLength]], after normalizing the vector
     * (`key = floor(dot / nrm / L)`). Left-to-right accumulation in
     * ascending dimension order, like [[signLshKeys]], so the oracle's
     * ordered `list_sum` lands on the bit-identical double and the
     * floor can never disagree across engines. Zero vectors key to 0
     * in every table (they have no direction; the exact confirm stage
     * disposes of any spurious candidates). */
-  def brpKeys(embeddings: DataFrame, numHashTables: Int = 4,
-      bucketLength: Double = -1.0): DataFrame = {
-    val dim = embeddingDim(embeddings, "embedding")
-    val L = resolveBucketLength(embeddings, "embedding", bucketLength)
+  def brpKeys(embeddings: DataFrame): DataFrame = {
+    val dim = embeddingDim(embeddings)
+    val L = autoBucketLength(dim)
     val planes: Array[Array[Double]] =
-      Array.tabulate(numHashTables)(brpPlane(_, dim))
+      Array.tabulate(BrpTables)(brpPlane(_, dim))
     val keysUdf = udf((v: Seq[Float]) => {
       var ss = 0.0
       var j = 0
       while (j < v.length) { ss += v(j).toDouble * v(j).toDouble; j += 1 }
       val nrm = math.sqrt(ss)
-      Array.tabulate(numHashTables) { t =>
+      Array.tabulate(BrpTables) { t =>
         val p = planes(t)
         var d = 0.0
         var i = 0
@@ -186,15 +167,13 @@ object Ann {
     * cosine. Query keys broadcast (inverted-probe pattern — the
     * corpus never shuffles for candidate generation). Deterministic
     * and DuckDB-replayable end to end: md5 directions, ordered
-    * accumulation, floor buckets. `bucketLength ≤ 0` (the default)
-    * derives the width from the embedding dimension — see
-    * [[autoBucketLength]]. */
-  def lshTopK(corpus: DataFrame, queries: DataFrame, k: Int,
-      bucketLength: Double = -1.0, numHashTables: Int = 4): DataFrame = {
-    val ck = brpKeys(corpus, numHashTables, bucketLength)
+    * accumulation, floor buckets. The bucket width derives from the
+    * embedding dimension — see [[autoBucketLength]]. */
+  def lshTopK(corpus: DataFrame, queries: DataFrame, k: Int): DataFrame = {
+    val ck = brpKeys(corpus)
     val qk = brpKeys(
         queries.select(col("query_id").as("vec_id"),
-          col("q_embedding").as("embedding")), numHashTables, bucketLength)
+          col("q_embedding").as("embedding")))
       .select(col("vec_id").as("query_id"), col("table"), col("key"))
     val cand = ck.join(broadcast(qk), Seq("table", "key"))
       .select(col("query_id"), col("vec_id")).distinct()
@@ -219,14 +198,14 @@ object Ann {
   }
 
   /** Per-vector sign-LSH band keys `(vec_id, band, key)`: key packs
-    * the sign bits of the `bitsPerBand` planes of that band (plane
-    * index p = band·bitsPerBand + bit). The dot products accumulate
+    * the sign bits of the [[SignBitsPerBand]] planes of that band
+    * (plane index p = band·SignBitsPerBand + bit). The dot products accumulate
     * left-to-right in ascending dimension order so the DuckDB oracle's
     * `list_sum(list_transform(...))` (also ordered) lands on the
     * bit-identical double — signs can never disagree across engines. */
-  def signLshKeys(embeddings: DataFrame, bands: Int = 8,
-      bitsPerBand: Int = 8): DataFrame = {
-    val dim = embeddingDim(embeddings, "embedding")
+  def signLshKeys(embeddings: DataFrame): DataFrame = {
+    val (bands, bitsPerBand) = (SignBands, SignBitsPerBand)
+    val dim = embeddingDim(embeddings)
     val planes: Array[Array[Double]] =
       Array.tabulate(bands * bitsPerBand)(p => Array.tabulate(dim)(planeWeight(p, _)))
     val keysUdf = udf((v: Seq[Float]) => {
@@ -253,7 +232,7 @@ object Ann {
   }
 
   /** Sign (hyperplane) LSH near-dup — the cosine-native LSH:
-    * each band key packs the sign bits of `bitsPerBand` md5-derived
+    * each band key packs the sign bits of [[SignBitsPerBand]] md5-derived
     * projections ([[signLshKeys]]); vectors agreeing on any band are
     * candidates, then confirmed by exact cosine. P[bit agrees] =
     * 1 − θ/π, so near-dup pairs (θ small) collide with high
@@ -262,19 +241,17 @@ object Ann {
     * 1-D floor buckets degenerate to a near-cross-join). Fully
     * deterministic and DuckDB-replayable end to end.
     *
-    * SCALING KNOB (100 TB note): `bitsPerBand` bounds the band
-    * keyspace at 2^bitsPerBand buckets, and this is a SELF-join — at
-    * fixed defaults (8, 8) bucket occupancy grows linearly with the
+    * SCALING NOTE: [[SignBitsPerBand]] bounds the band keyspace at
+    * 2^bits buckets, and this is a SELF-join — at the fixed
+    * (8 bands, 8 bits) geometry bucket occupancy grows linearly with the
     * corpus and per-band pair comparisons grow O(N²/256). Unlike the
     * simhash bands (width-independent pigeonhole recall — see
     * [[graft.dedup.Dedup.simhash60]]), widening a sign-LSH band CUTS
     * recall (P[band] = (1−θ/π)^bits), so bits and bands must scale
-    * TOGETHER: e.g. (bands 24, bitsPerBand 16) keeps detection ≈ 0.88
-    * at cos 0.9 while widening the keyspace 256x. The (8, 8) defaults
-    * are sized (and oracle-pinned) for the fixture scales; pass both
-    * parameters up for corpus-scale runs. */
-  def signLshNearDup(embeddings: DataFrame, cosThreshold: Double,
-      bands: Int = 8, bitsPerBand: Int = 8): DataFrame = {
+    * TOGETHER: e.g. 24 bands of 16 bits keep detection ≈ 0.88
+    * at cos 0.9 while widening the keyspace 256x. The (8, 8) geometry
+    * is sized (and oracle-pinned) for the fixture scales. */
+  def signLshNearDup(embeddings: DataFrame, cosThreshold: Double): DataFrame = {
     // Candidate generation stays NARROW: only (vec_id, band, key) goes
     // through the self-join and the pair-dedup shuffles, never the
     // embedding arrays (the old shape shuffled 8 copies of every
@@ -285,7 +262,7 @@ object Ann {
     // shared repartition on the join key (same discipline as the
     // Dedup self-joins): both sides canonicalize to one exchange, so
     // the projection UDF runs once instead of once per side
-    val keyed = signLshKeys(embeddings, bands, bitsPerBand)
+    val keyed = signLshKeys(embeddings)
       .repartition(col("band"), col("key"))
     val pairs = keyed.as("x").join(keyed.as("y"),
         col("x.band") === col("y.band") && col("x.key") === col("y.key") &&
@@ -305,12 +282,11 @@ object Ann {
     * collide return fewer than k rows — the standard ANN recall
     * trade, bounded in AnnIvfSpec by the constructed-near-dup
     * guarantee. `queries` carries (query_id, q_embedding). */
-  def signLshTopK(corpus: DataFrame, queries: DataFrame, k: Int,
-      bands: Int = 8, bitsPerBand: Int = 8): DataFrame = {
-    val ck = signLshKeys(corpus, bands, bitsPerBand)
+  def signLshTopK(corpus: DataFrame, queries: DataFrame, k: Int): DataFrame = {
+    val ck = signLshKeys(corpus)
     val qk = signLshKeys(
         queries.select(col("query_id").as("vec_id"),
-          col("q_embedding").as("embedding")), bands, bitsPerBand)
+          col("q_embedding").as("embedding")))
       .select(col("vec_id").as("query_id"), col("band"), col("key"))
     val cand = ck.join(broadcast(qk), Seq("band", "key"))
       .select(col("query_id"), col("vec_id")).distinct()
@@ -380,9 +356,8 @@ object Ann {
     * narrow candidate/verify shape as [[signLshNearDup]]: only
     * (vec_id, table, key) moves through the self-join, vectors are
     * joined back once per side for the exact confirm. */
-  def lshNearDup(embeddings: DataFrame, cosThreshold: Double,
-      bucketLength: Double = -1.0, numHashTables: Int = 4): DataFrame = {
-    val keyed = brpKeys(embeddings, numHashTables, bucketLength)
+  def lshNearDup(embeddings: DataFrame, cosThreshold: Double): DataFrame = {
+    val keyed = brpKeys(embeddings)
       .repartition(col("table"), col("key"))
     val pairs = keyed.as("x").join(keyed.as("y"),
         col("x.table") === col("y.table") && col("x.key") === col("y.key") &&

@@ -132,10 +132,9 @@ object VectorOps {
     * rescales cosine by nothing). One partial+final aggregate per
     * dimension; no collect, no shuffle beyond the key. Emits
     * `pooled: array<double>` plus `n_chunks`. */
-  def sumPool(df: DataFrame, key: Column, dim: Int,
-      embCol: String = "embedding"): DataFrame =
+  def sumPool(df: DataFrame, key: Column, dim: Int): DataFrame =
     df.groupBy(key)
       .agg(count(lit(1)).cast("int").as("n_chunks"),
         array((0 until dim).map(i =>
-          sum(element_at(col(embCol), i + 1))): _*).as("pooled"))
+          sum(element_at(col("embedding"), i + 1))): _*).as("pooled"))
 }

@@ -112,10 +112,8 @@ class ClustersSpec extends AnyFunSuite with SparkTestBase {
     assert(c.collect().length == 3)
   }
 
-  test("ensureComponents: dead reliable-checkpoint backing detected, rebuilt") {
+  test("ensureComponents: dead localCheckpoint backing detected, rebuilt") {
     import spark.implicits._
-    val dir = tempDir("graft-ccm")
-    spark.conf.set(Clusters.CheckpointDirConf, dir)
     val key = s"spec-ccv-${java.util.UUID.randomUUID()}"
     var built = 0
     def pairs = {
@@ -123,144 +121,50 @@ class ClustersSpec extends AnyFunSuite with SparkTestBase {
       (1L to 20L).sliding(2).map(s => (s.head, s.last)).toSeq
         .toDF("doc_a", "doc_b")
     }
-    try {
-      // threshold 0 forces the distributed path -> checkpoint-backed
-      val a = Clusters.ensureComponents(spark, key, Some("e1"),
-        smallGraphThreshold = 0)(pairs)
-      assert(a.collect().forall(_.getLong(1) == 1L) && built == 1)
-      // simulate the operator consuming the run dir (the log message
-      // invites exactly that): a memo hit over the dead backing must
-      // REBUILD, not FileNotFound (r20 advice, medium)
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles()).getOrElse(Array.empty).foreach(rm)
-        f.delete()
-      }
-      Option(new java.io.File(dir).listFiles()).getOrElse(Array.empty)
-        .filter(_.getName.startsWith("cc-")).foreach(rm)
-      val b = Clusters.ensureComponents(spark, key, Some("e1"),
-        smallGraphThreshold = 0)(pairs)
-      assert(built == 2, "invalid backing must trigger a rebuild")
-      assert(b.collect().forall(_.getLong(1) == 1L))
-      // clearMemo releases the rebuilt entry's run dir too
-      Clusters.clearMemo()
-      val left = Option(new java.io.File(dir).listFiles())
-        .getOrElse(Array.empty).filter(_.getName.startsWith("cc-"))
-      assert(left.isEmpty,
-        s"clearMemo must reclaim retained checkpoint dirs; found ${left.toSeq}")
-    } finally {
-      spark.conf.unset(Clusters.CheckpointDirConf)
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles()).getOrElse(Array.empty).foreach(rm)
-        f.delete()
-      }
-      rm(new java.io.File(dir))
-    }
-  }
-
-  test("ensureComponents: a deleted round subdir under a live run dir is detected, rebuilt") {
-    import spark.implicits._
-    val dir = tempDir("graft-ccr")
-    spark.conf.set(Clusters.CheckpointDirConf, dir)
-    val key = s"spec-ccr-${java.util.UUID.randomUUID()}"
-    var built = 0
-    def pairs = {
-      built += 1
-      (1L to 20L).sliding(2).map(s => (s.head, s.last)).toSeq
-        .toDF("doc_a", "doc_b")
-    }
-    def rm(f: java.io.File): Unit = {
-      Option(f.listFiles()).getOrElse(Array.empty).foreach(rm)
-      f.delete()
-    }
-    try {
-      // threshold 0 forces the distributed path -> checkpoint-backed
-      val a = Clusters.ensureComponents(spark, key, Some("e1"),
-        smallGraphThreshold = 0)(pairs)
-      assert(a.collect().forall(_.getLong(1) == 1L) && built == 1)
-      // delete only the round parquet the frame reads; the run dir
-      // stays, so probing the run dir alone would call the entry valid
-      val runDirs = Option(new java.io.File(dir).listFiles()).getOrElse(Array.empty)
-        .filter(_.getName.startsWith("cc-"))
-      val rounds = runDirs.flatMap(d => Option(d.listFiles()).getOrElse(Array.empty))
-        .filter(_.getName.startsWith("labels-"))
-      assert(rounds.nonEmpty, s"no round subdir under ${runDirs.toSeq}")
-      rounds.foreach(rm)
-      assert(runDirs.forall(_.exists))
-      val b = Clusters.ensureComponents(spark, key, Some("e1"),
-        smallGraphThreshold = 0)(pairs)
-      assert(built == 2, "a missing round path must trigger a rebuild")
-      assert(b.collect().forall(_.getLong(1) == 1L))
-      Clusters.clearMemo()
-    } finally {
-      spark.conf.unset(Clusters.CheckpointDirConf)
-      rm(new java.io.File(dir))
-    }
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
+    // threshold 0 forces the distributed path -> localCheckpoint-backed
+    val a = Clusters.ensureComponents(spark, key, Some("e1"),
+      smallGraphThreshold = 0)(pairs)
+    val answer = rows(a)
+    assert(answer.length == 20 && answer.forall(_._2 == 1L) && built == 1)
+    // the checkpoint blocks go away (unpersisted, or lost with their
+    // executor): a memo hit over the dead backing must REBUILD, not
+    // fail the query
+    val backing = Clusters.backingRdds(a)
+    assert(backing.nonEmpty, "the distributed path must be checkpoint-backed")
+    backing.foreach(_.unpersist(blocking = true))
+    val b = Clusters.ensureComponents(spark, key, Some("e1"),
+      smallGraphThreshold = 0)(pairs)
+    assert(built == 2, "invalid backing must trigger a rebuild")
+    assert(rows(b) == answer)
+    Clusters.clearMemo()
   }
 
   test("ensureComponents: a held frame survives eviction past 16 keys; clearMemo reclaims it") {
     import spark.implicits._
-    val dir = tempDir("graft-cce")
-    spark.conf.set(Clusters.CheckpointDirConf, dir)
     val tag = java.util.UUID.randomUUID()
     def pairs = Seq((1L, 2L), (2L, 3L)).toDF("doc_a", "doc_b")
     // threshold 0 forces the checkpoint-backed distributed path
     def ensure(i: Int) = Clusters.ensureComponents(spark, s"spec-cce-$tag-$i",
       Some("e1"), smallGraphThreshold = 0)(pairs)
-    def runDirs = Option(new java.io.File(dir).listFiles())
-      .getOrElse(Array.empty).filter(_.getName.startsWith("cc-"))
-    def rm(f: java.io.File): Unit = {
-      Option(f.listFiles()).getOrElse(Array.empty).foreach(rm)
-      f.delete()
-    }
-    try {
-      Clusters.clearMemo()
-      val held = ensure(0)
-      (1 to 16).foreach(ensure(_))
-      assert(Clusters.memoSize == 16 && Clusters.retiredCount == 1,
-        "the 17th key evicts the first entry into the retired list")
-      assert(held.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap ==
-        Map(1L -> 1L, 2L -> 1L, 3L -> 1L),
-        "an evicted frame a caller still holds must keep collecting")
-      assert(runDirs.length == 17, "eviction must not delete backing")
-      Clusters.clearMemo()
-      assert(runDirs.isEmpty && Clusters.retiredCount == 0,
-        s"clearMemo must reclaim retired backing; found ${runDirs.toSeq}")
-    } finally {
-      spark.conf.unset(Clusters.CheckpointDirConf)
-      rm(new java.io.File(dir))
-    }
-  }
-
-  test("reliable-checkpoint toggle: distributed path converges and writes durably") {
-    import spark.implicits._
-    val dir = tempDir("graft-ccp")
-    spark.conf.set(Clusters.CheckpointDirConf, dir)
-    try {
-      val pairs = (1L to 30L).sliding(2).map(s => (s.head, s.last)).toSeq
-        .toDF("doc_a", "doc_b")
-      val got = Clusters.connectedComponents(pairs.repartition(7),
-          smallGraphThreshold = 0)
-        .collect().map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
-      assert(got.forall(_._2 == 1L))
-      // the rounds really landed durably, AND superseded rounds were
-      // cleaned up: exactly one labels-* dir (the final round) remains
-      // under this call's cc-* run dir
-      val runDirs = Option(new java.io.File(dir).listFiles())
-        .getOrElse(Array.empty).filter(_.getName.startsWith("cc-"))
-      assert(runDirs.length == 1, s"expected one cc-* run dir in $dir")
-      val labelDirs = Option(runDirs.head.listFiles()).getOrElse(Array.empty)
-        .filter(_.getName.startsWith("labels-"))
-      assert(labelDirs.length == 1,
-        s"superseded rounds must be deleted; found ${labelDirs.map(_.getName).toSeq}")
-      assert(labelDirs.head.listFiles().exists(_.getName.endsWith(".parquet")))
-    } finally {
-      spark.conf.unset(Clusters.CheckpointDirConf)
-      // the spec owns its temp dir — remove it entirely
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles()).getOrElse(Array.empty).foreach(rm)
-        f.delete()
-      }
-      rm(new java.io.File(dir))
-    }
+    def stored(df: org.apache.spark.sql.DataFrame) =
+      Clusters.backingRdds(df).map(_.getStorageLevel)
+        .filter(_ != org.apache.spark.storage.StorageLevel.NONE)
+    Clusters.clearMemo()
+    val held = ensure(0)
+    val backing = Clusters.backingRdds(held)
+    assert(backing.nonEmpty && stored(held).length == backing.length)
+    (1 to 16).foreach(ensure(_))
+    assert(Clusters.memoSize == 16 && Clusters.retiredCount == 1,
+      "the 17th key evicts the first entry into the retired list")
+    assert(held.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap ==
+      Map(1L -> 1L, 2L -> 1L, 3L -> 1L),
+      "an evicted frame a caller still holds must keep collecting")
+    assert(stored(held).length == backing.length,
+      "eviction must not release backing")
+    Clusters.clearMemo()
+    assert(stored(held).isEmpty && Clusters.retiredCount == 0,
+      "clearMemo must reclaim retired backing")
   }
 }

@@ -526,7 +526,7 @@ class DocStreamsSpec extends AnyFunSuite with SparkTestBase {
     val mem = MemoryStream[(Long, java.sql.Timestamp)]
     def ts(h: Int, m: Int) =
       java.sql.Timestamp.valueOf(f"2026-01-01 $h%02d:$m%02d:00")
-    val q = DocStreams.dedupEvents(mem.toDF().toDF("event_id", "ts"), "1 hour")
+    val q = DocStreams.dedupEvents(mem.toDF().toDF("event_id", "ts"))
       .writeStream.outputMode("append")
       .format("memory").queryName("wm_out").start()
     try {
@@ -663,7 +663,7 @@ class DocStreamsSpec extends AnyFunSuite with SparkTestBase {
     val mem = MemoryStream[(Long, String, String, Long)]
     val q = DocStreams.upsertIntoStore(
       mem.toDF().toDF("doc_id", "text", "source", "n_chars"), storeDir)
-    val emb = graft.vector.HashingEmbedder(64) // upsertIntoStore's default
+    val emb = graft.vector.HashingEmbedder(64) // the embedder upsertIntoStore uses
     val queries = emb.embed(
       Seq(("omicron pi", 0), ("epsilon zeta", 1))
         .toDF("query_text", "query_id"),

@@ -312,10 +312,10 @@ object Queries {
     * share, all at depth 2k: the saved index pair [[q_rag_e2e_indexed]]
     * serves from (same key, same epoch), the embedded flagship queries
     * (query_id, q_embedding), the lexical list both fusions read
-    * verbatim (served from the saved postings' resident copy), and the
-    * exact dense list over the index's enumerated corpus. Returns
+    * verbatim (driver rows from the saved postings' resident copy), and
+    * the exact dense list over the index's enumerated corpus. Returns
     * (disk, cents, qe, lex, denseExact). */
-  private def ragFusionLegs(s: SparkSession, dir: String)
+  private[graft] def ragFusionLegs(s: SparkSession, dir: String)
       : (DataFrame, Array[Array[Double]], DataFrame, DataFrame, DataFrame) = {
     import s.implicits._
     val depth = graft.pipeline.RagPipeline.TopK * 2
@@ -334,7 +334,6 @@ object Queries {
     val qt = queries.select(col("query_id"), col("query_text").as("qtext"))
     val lex = graft.text.Bm25.topKIndexed(bm, qt, depth)
       .select(col("query_id"), col("rank"), col("doc_id"))
-      .persistTracked("ragfusion.lex")
     val denseExact = graft.vector.VectorOps.topK(indexed, qe, depth,
         tiebreak = Seq(col("vec_id")))
       .select(col("query_id"), col("rank"), col("vec_id").as("doc_id"))
@@ -398,19 +397,17 @@ object Queries {
     * serve point: how the user-facing disagreement closes as probes
     * widen — at exhaustive probing the dense candidate sets are
     * equal, so any residual gap there is purely the serve's round-6
-    * cosine ties (measured, not assumed — the honest ceiling). The
-    * exact fusion runs ONCE (persisted); all depths share ONE
-    * widest-depth scored pass over the SAME saved index pair as
-    * [[q_rag_e2e_indexed]]
-    * ([[graft.pipeline.RagPipeline.ensureIndexedServe]] — zero
-    * fit/build jobs on a warm epoch; saved and in-memory scores are
-    * bit-identical by AnnIvfSpec's round-trip pin, and each rung's
-    * `crank <= p` cut of the pool is bit-identical to its standalone
-    * serve, so the oracle is unchanged — r19 verdict #2). This is the
-    * curve a deployment reads NEXT TO the scan-cost curve
-    * (q_ivfpq_probe_recall) to pick nProbe for the composed serve. */
+    * cosine ties (measured, not assumed — the honest ceiling). Each
+    * rung is the production composition at its depth:
+    * [[vector.Ivf.topKIndexed]] over the SAME saved index pair as
+    * [[q_rag_e2e_indexed]] ([[graft.pipeline.RagPipeline
+    * .ensureIndexedServe]] — zero fit/build jobs on a warm epoch),
+    * fused with the shared lexical list, semi-joined against the
+    * exact fusion (run once, persisted) and counted; a rung with no
+    * overlap still emits its row. This is the curve a deployment
+    * reads NEXT TO the scan-cost curve (q_ivfpq_probe_recall) to pick
+    * nProbe for the composed serve. */
   def q_rag_fusion_curve(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
     val k = graft.pipeline.RagPipeline.TopK
     val depth = k * 2
     val (disk, cents, qe, lex, denseExact) = ragFusionLegs(s, dir)
@@ -418,58 +415,14 @@ object Queries {
       .select(col("query_id"), col("doc_id"))
       .persistTracked("ragfusion.exact")
     val totK = fusedExact.agg(count(lit(1)).cast("int").as("total_k"))
-    // ONE widest-depth dense pass shared by every rung (r20, guide
-    // §2.4): per-rung Ivf.topKIndexed re-probed, re-collected cells
-    // and re-scanned overlapping cell files (14/8ths of the store
-    // per row across the ladder); the probed cells nest, so score
-    // once with the per-query cell rank kept, persist the pool, and
-    // cut each rung by crank <= p — bit-identical top-k lists to the
-    // standalone serves ([[vector.Ivf.scoredProbed]]), oracle
-    // unchanged. The per-depth PRODUCTION serve cost lives in
-    // q_rag_e2e_indexed / q_topk_ivf_indexed; this row prices only
-    // the overlap measurement.
-    val densePool = vector.Ivf.scoredProbed(disk,
-        vector.Ivf.probeRanked(qe, cents, IvfpqProbeLadder.max))
-      .select(col("query_id"), col("vec_id"), col("cos_sim"), col("crank"))
-      .persistTracked("ragfusion.densepool")
-    // r21 (the q_ivfpq_probe_recall fusion applied to the fused
-    // ladder): ONE plan for all rungs. Ordered by rankTopK's exact
-    // total order (desc cos_sim, vec_id), the running count of rows
-    // with crank <= p IS row_number within the depth-p subset, so
-    // each rung's dense top-`depth` list (rank value included — RRF
-    // consumes it) is reproduced bit-for-bit in one window pass; the
-    // rung-independent lexical list replicates across rungs, ONE
-    // keyed RRF (rrfFuseKeyed, n_probe in every key) fuses all rungs,
-    // and one semi-join + groupBy counts every rung's overlap — was a
-    // fuse + semi-join + aggregate chain PER rung, unioned. The
-    // ladder left join keeps zero-overlap rung rows.
-    val wCum = Window.partitionBy(col("query_id"))
-      .orderBy(desc("cos_sim"), col("vec_id"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val cums = IvfpqProbeLadder.zipWithIndex.map { case (p, i) =>
-      sum(when(col("crank") <= p, 1).otherwise(0)).over(wCum).as(s"cum_$i")
-    }
-    val rankedPool = densePool.select(
-      Seq(col("query_id"), col("vec_id"), col("crank")) ++ cums: _*)
-    val rungCols = IvfpqProbeLadder.zipWithIndex.map { case (p, i) =>
-      when(col("crank") <= p && col(s"cum_$i") <= depth,
-        struct(lit(p).as("n_probe"), col(s"cum_$i").as("rank")))
-    }
-    val denseAll = rankedPool
-      .withColumn("pr", explode(array(rungCols: _*)))
-      .filter(col("pr").isNotNull)
-      .select(col("pr.n_probe").as("n_probe"), col("query_id"),
-        col("pr.rank").as("rank"), col("vec_id").as("doc_id"))
-    val ladder = IvfpqProbeLadder.toDF("n_probe")
-    val fusedAll = graft.text.Bm25.rrfFuseKeyed(denseAll,
-        lex.crossJoin(broadcast(ladder)), k, keys = Seq("n_probe"))
-      .select(col("n_probe"), col("query_id"), col("doc_id"))
-    val overlaps = fusedAll
-      .join(fusedExact, Seq("query_id", "doc_id"), "left_semi")
-      .groupBy(col("n_probe"))
-      .agg(count(lit(1)).cast("int").as("overlap"))
-    ladder.join(overlaps, Seq("n_probe"), "left")
-      .withColumn("total_overlap", coalesce(col("overlap"), lit(0)))
+    IvfpqProbeLadder.map { p =>
+      val dense = vector.Ivf.topKIndexed(disk, cents, qe, depth, nProbe = p)
+        .select(col("query_id"), col("rank"), col("vec_id").as("doc_id"))
+      graft.text.Bm25.rrfFuse(dense, lex, k)
+        .join(fusedExact, Seq("query_id", "doc_id"), "left_semi")
+        .agg(count(lit(1)).cast("int").as("total_overlap"))
+        .select(lit(p).as("n_probe"), col("total_overlap"))
+    }.reduce(_ unionByName _)
       .crossJoin(broadcast(totK))
       .select(col("n_probe"), col("total_overlap"), col("total_k"),
         round(col("total_overlap").cast("double") / col("total_k"), 4)
@@ -1076,17 +1029,6 @@ object Queries {
     ivfpqRerankServe(s, dir, pqQueries(t(s, dir, "embeddings")))
       .orderBy(col("query_id"), col("rank"))
 
-  /** Recall@5 of the IVFPQ+refine serve vs the exact lattice truth —
-    * with [[q_pq_rerank_recall]] (0.94) and [[q_ivfpq_recall]]
-    * (0.38) this row completes the committed loss decomposition:
-    * refine recovers the codebook half (0.38 → 0.63 at sf0.01), and
-    * the residual gap to 1.0 is pure CELL PRUNING — at 2 probed
-    * cells of 8 over a 500-vector corpus the shortlist (64 of ~125
-    * in-cell candidates) is nearly exhaustive, so 0.63 IS the
-    * nProbe=2 pruning ceiling under the lattice-L2 truth (the 0.77
-    * of [[q_ann_recall]] is the same ceiling under its own
-    * float-cosine truth and probe). More probes, not a wider
-    * shortlist, is the production knob for that half. */
   /** The probed depths of [[q_ivfpq_probe_recall]], shared verbatim
     * with the oracle SQL so the curve's geometry cannot drift. 2 is
     * the catalog serve's depth, 8 == nCells probes every cell (zero
@@ -1103,95 +1045,25 @@ object Queries {
     * pruning: recall must rise monotonically with probes and meet
     * the flat-funnel ceiling ([[q_pq_rerank_recall]], 0.94) at
     * nProbe = nCells = 8, where probing is exhaustive. The truth
-    * pass runs ONCE (persisted) and all depths share ONE
-    * widest-depth ADC pass over the same saved index (r20: scored
-    * once with the per-query cell rank kept, each rung cut by
-    * `crank <= p` — bit-identical shortlists to the standalone
-    * serves, one codes scan instead of three); the per-depth
-    * PRODUCTION serve cost lives in q_topk_ivfpq_indexed and the
-    * committed probe-cost curve, this row prices only the recall
-    * measurement. This is the curve a 100 TB deployment reads to
-    * pick its recall/scan-cost operating point. */
+    * pass runs ONCE (persisted); each rung is the production serve
+    * at its depth ([[ivfpqRerankServe]] over the same saved index),
+    * semi-joined against the truth and counted, so a rung with no
+    * hit still emits its row. This is the curve a deployment reads
+    * to pick its recall/scan-cost operating point. */
   def q_ivfpq_probe_recall(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
     val emb = t(s, dir, "embeddings")
     val queries = pqQueries(emb, RecallQueryCount)
     val quantized = emb.withColumn("qv", vector.Quantize.int8(col("embedding")))
-    // ONE exact-scored crossjoin per run (r21): the truth cut AND
-    // every rung's rerank distances read this persisted frame — the
-    // truth pass already scores every (query, vector) pair, so a
-    // second exactScored join over the shortlist union would
-    // recompute values this frame holds (same l2Q tree, bit-equal).
-    val scored = vector.Pq.exactAllScored(
-        quantized.select(col("vec_id"), col("qv")), queries)
-      .select(col("query_id"), col("vec_id"), col("l2_dist"))
-      .persistTracked("probecurve.scored")
-    val truth = vector.Pq.l2RankCut(scored, 5)
+    val truth = vector.Pq.exactTopK(quantized, queries, 5)
       .select(col("query_id"), col("vec_id"))
       .persistTracked("probecurve.truth")
     val totK = truth.agg(count(lit(1)).cast("int").as("total_k"))
-    // ONE widest-depth ADC pass shared by every rung (r20, guide
-    // §2.4): the cells a depth-p serve scans nest inside the
-    // max-depth probe set, so score once with the per-query cell
-    // rank kept, persist the pool, and cut each rung by
-    // crank <= p — the per-rung serve (one probe + cells collect +
-    // cell-pruned scan + distance-table collect EACH) re-read
-    // overlapping cell files 14/8ths of the corpus per row. The
-    // rank filter commutes with the cell join and the scoring
-    // expressions, so each rung's shortlist is bit-identical to its
-    // standalone serve ([[vector.Pq.probedScored]]); the oracle is
-    // unchanged.
-    val (codes, books, cents) = pqEnsured(s, dir)
-    val pool = vector.Pq.probedScored(codes,
-        vector.Ivf.probeRanked(queries, cents, IvfpqProbeLadder.max)
-          .select(col("query_id"), col("cell"), col("crank")),
-        books, queries)
-      .select(col("query_id"), col("vec_id"), col("adc_dist"), col("crank"))
-    // r21 (r20-verdict #2, guide §2.4): ONE PLAN for all rungs. The
-    // per-rung pipeline (window cut + rerank joins + semi-join
-    // aggregate, unioned) materialized 42 Spark jobs of AQE stages
-    // over 2,000 rows. Fused via conditional ranks: ordered by
-    // adcRankCut's exact total order (adc_dist, vec_id), the running
-    // count of rows with crank <= p IS row_number within the depth-p
-    // subset, so `crank <= p && cum_p <= K` reproduces each rung's
-    // shortlist bit-for-bit in ONE window pass. Rerank distances are
-    // read from the persisted `scored` frame (the same l2Q values
-    // exactRerank would recompute), then one (n_probe, query_id)
-    // window replays exactRerank's (l2_dist, vec_id) top-5 per rung
-    // and one semi-join + groupBy counts every rung's hits. A left
-    // join from the ladder literals keeps the zero-hit rung rows the
-    // per-rung aggregates emitted.
-    val wCum = Window.partitionBy(col("query_id"))
-      .orderBy(col("adc_dist"), col("vec_id"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    // window expressions can't live inside a generator — project the
-    // three conditional ranks first (ONE Window node: shared spec),
-    // then explode the rung membership in a follow-on projection
-    val cums = IvfpqProbeLadder.zipWithIndex.map { case (p, i) =>
-      sum(when(col("crank") <= p, 1).otherwise(0)).over(wCum).as(s"cum_$i")
-    }
-    val ranked = pool.select(
-      Seq(col("query_id"), col("vec_id"), col("crank")) ++ cums: _*)
-    val rungCols = IvfpqProbeLadder.zipWithIndex.map { case (p, i) =>
-      when(col("crank") <= p && col(s"cum_$i") <= PqRerankShortlist, lit(p))
-    }
-    val members = ranked
-      .withColumn("n_probe", explode(array(rungCols: _*)))
-      .filter(col("n_probe").isNotNull)
-      .select(col("query_id"), col("vec_id"), col("n_probe"))
-    val wRung = Window.partitionBy(col("n_probe"), col("query_id"))
-      .orderBy(col("l2_dist"), col("vec_id"))
-    val approx = members.join(scored, Seq("query_id", "vec_id"))
-      .withColumn("rank", row_number().over(wRung))
-      .filter(col("rank") <= 5)
-      .select(col("n_probe"), col("query_id"), col("vec_id"))
-    val hits = approx
-      .join(truth, Seq("query_id", "vec_id"), "left_semi")
-      .groupBy(col("n_probe"))
-      .agg(count(lit(1)).cast("int").as("hit"))
-    IvfpqProbeLadder.toDF("n_probe")
-      .join(hits, Seq("n_probe"), "left")
-      .withColumn("total_hit", coalesce(col("hit"), lit(0)))
+    IvfpqProbeLadder.map { p =>
+      ivfpqRerankServe(s, dir, queries, p)
+        .join(truth, Seq("query_id", "vec_id"), "left_semi")
+        .agg(count(lit(1)).cast("int").as("total_hit"))
+        .select(lit(p).as("n_probe"), col("total_hit"))
+    }.reduce(_ unionByName _)
       .crossJoin(broadcast(totK))
       .select(col("n_probe"), col("total_hit"), col("total_k"),
         round(col("total_hit").cast("double") / col("total_k"), 4)
@@ -1199,28 +1071,24 @@ object Queries {
       .orderBy(col("n_probe"))
   }
 
+  /** Recall@5 of the IVFPQ+refine serve vs the exact lattice truth —
+    * with [[q_pq_rerank_recall]] (0.94) and [[q_ivfpq_recall]]
+    * (0.38) this row completes the committed loss decomposition:
+    * refine recovers the codebook half (0.38 → 0.63 at sf0.01), and
+    * the residual gap to 1.0 is pure CELL PRUNING — at 2 probed
+    * cells of 8 over a 500-vector corpus the shortlist (64 of ~125
+    * in-cell candidates) is nearly exhaustive, so 0.63 IS the
+    * nProbe=2 pruning ceiling under the lattice-L2 truth (the 0.77
+    * of [[q_ann_recall]] is the same ceiling under its own
+    * float-cosine truth and probe). More probes, not a wider
+    * shortlist, is the production knob for that half. */
   def q_ivfpq_rerank_recall(s: SparkSession, dir: String): DataFrame = {
     val emb = t(s, dir, "embeddings")
     val queries = pqQueries(emb, RecallQueryCount)
     val quantized = emb.withColumn("qv", vector.Quantize.int8(col("embedding")))
-    // ONE exact-scored crossjoin per run (r21 — the probe-curve
-    // discipline extended here): the truth cut AND the serve's exact
-    // rerank read the persisted (query, vec, l2) frame — the rerank's
-    // distances are the same l2Q values the truth pass computes
-    // (adcRerankTopK IS exactRerank ∘ adcTopK, and exactRerank ranks
-    // exactScored's tree), so scoring them again was pure recompute.
-    val scored = vector.Pq.exactAllScored(
-        quantized.select(col("vec_id"), col("qv")), queries)
-      .select(col("query_id"), col("vec_id"), col("l2_dist"))
-      .persistTracked("rerankrecall.scored")
-    val truth = vector.Pq.l2RankCut(scored, 5)
+    val truth = vector.Pq.exactTopK(quantized, queries, 5)
       .select(col("query_id"), col("vec_id"))
-    val (codes, books, cents) = pqEnsured(s, dir)
-    val sl = vector.Pq.adcTopKIndexed(codes, books, cents, queries,
-        PqRerankShortlist, nProbe = 2)
-      .select(col("query_id"), col("vec_id"))
-    val approx = vector.Pq.l2RankCut(
-        sl.join(scored, Seq("query_id", "vec_id")), 5)
+    val approx = ivfpqRerankServe(s, dir, queries)
       .select(col("query_id"), col("vec_id"))
     recallFrame(truth, approx, "q_ivfpq_rerank_recall")
   }
@@ -1317,22 +1185,10 @@ object Queries {
     val queries = pqQueries(emb, RecallQueryCount)
     val (codes, books, _) = pqEnsured(s, dir)
     val quantized = emb.withColumn("qv", vector.Quantize.int8(col("embedding")))
-    // ONE exact-scored crossjoin per run shared by truth and rerank
-    // (r21 — the probe-curve discipline; was one narrow qv persist
-    // with the l2 values still computed twice). adcRerankTopK IS
-    // exactRerank ∘ adcTopK, and exactRerank ranks exactScored's
-    // tree, so ranking the shortlist against the persisted scored
-    // frame is value-identical.
-    val scored = vector.Pq.exactAllScored(
-        quantized.select(col("vec_id"), col("qv")), queries)
-      .select(col("query_id"), col("vec_id"), col("l2_dist"))
-      .persistTracked("pqrerankrecall.scored")
-    val truth = vector.Pq.l2RankCut(scored, 5)
+    val truth = vector.Pq.exactTopK(quantized, queries, 5)
       .select(col("query_id"), col("vec_id"))
-    val sl = vector.Pq.adcTopK(codes, books, queries, PqRerankShortlist)
-      .select(col("query_id"), col("vec_id"))
-    val approx = vector.Pq.l2RankCut(
-        sl.join(scored, Seq("query_id", "vec_id")), 5)
+    val approx = vector.Pq.adcRerankTopK(codes, books, quantized, queries,
+        5, shortlist = PqRerankShortlist)
       .select(col("query_id"), col("vec_id"))
     recallFrame(truth, approx, "q_pq_rerank_recall")
   }
@@ -3160,16 +3016,27 @@ object Queries {
       Multimodal.clipAssets(s, CrossModalN))
     val parsed = clipCaptionVecs(s)
       .withColumnRenamed("caption_id", "query_id")
-    val top = vector.Ann.bruteTopK(img, parsed, 3)
+    crossmodalRecall(vector.Ann.bruteTopK(img, parsed, 3), "cos_sim",
+      CrossModalN, "crossmodal.top")
+  }
+
+  /** The tail every cross-modal serve row shares: each result row's
+    * `hit` (rank 1 is the caption's own image), persisted under
+    * `tag`, and the planted-pair `recall_at_1` over `n` captions on
+    * every row, ordered by (query_id, rank). `score` names the serve's
+    * score column. */
+  private def crossmodalRecall(top: DataFrame, score: String, n: Int,
+      tag: String): DataFrame = {
+    val hits = top
       .withColumn("hit",
         (col("rank") === 1 && col("vec_id") === col("query_id"))
           .cast("int"))
-      .persistTracked("crossmodal.top")
-    val tot = top.agg(sum(col("hit")).cast("int").as("total_hit"))
-    top.crossJoin(broadcast(tot))
+      .persistTracked(tag)
+    val tot = hits.agg(sum(col("hit")).cast("int").as("total_hit"))
+    hits.crossJoin(broadcast(tot))
       .withColumn("recall_at_1",
-        round(col("total_hit").cast("double") / lit(CrossModalN), 4))
-      .select(col("query_id"), col("rank"), col("vec_id"), col("cos_sim"),
+        round(col("total_hit").cast("double") / lit(n), 4))
+      .select(col("query_id"), col("rank"), col("vec_id"), col(score),
         col("hit"), col("recall_at_1"))
       .orderBy(col("query_id"), col("rank"))
   }
@@ -3259,18 +3126,8 @@ object Queries {
   def q_crossmodal_indexed(s: SparkSession, dir: String): DataFrame = {
     val path = ensureClipIndex(s, CrossModalServeN, nCells = 8,
       key = "crossmodal-clip-ivf")
-    val top = crossmodalServeAt(s, path, CrossModalServeN)
-      .withColumn("hit",
-        (col("rank") === 1 && col("vec_id") === col("query_id"))
-          .cast("int"))
-      .persistTracked("crossmodal.idxtop")
-    val tot = top.agg(sum(col("hit")).cast("int").as("total_hit"))
-    top.crossJoin(broadcast(tot))
-      .withColumn("recall_at_1",
-        round(col("total_hit").cast("double") / lit(CrossModalServeN), 4))
-      .select(col("query_id"), col("rank"), col("vec_id"), col("cos_sim"),
-        col("hit"), col("recall_at_1"))
-      .orderBy(col("query_id"), col("rank"))
+    crossmodalRecall(crossmodalServeAt(s, path, CrossModalServeN),
+      "cos_sim", CrossModalServeN, "crossmodal.idxtop")
   }
 
   /** Cross-modal COMPRESSED-serve geometry, shared verbatim with the
@@ -3341,18 +3198,8 @@ object Queries {
     val n = CrossModalServeN
     val path = ensureClipPqIndex(s, n, nCells = 8,
       key = "crossmodal-clip-pq")
-    val top = crossmodalPqServeAt(s, path, n, corpusN = n)
-      .withColumn("hit",
-        (col("rank") === 1 && col("vec_id") === col("query_id"))
-          .cast("int"))
-      .persistTracked("crossmodal.pqtop")
-    val tot = top.agg(sum(col("hit")).cast("int").as("total_hit"))
-    top.crossJoin(broadcast(tot))
-      .withColumn("recall_at_1",
-        round(col("total_hit").cast("double") / lit(n), 4))
-      .select(col("query_id"), col("rank"), col("vec_id"), col("l2_dist"),
-        col("hit"), col("recall_at_1"))
-      .orderBy(col("query_id"), col("rank"))
+    crossmodalRecall(crossmodalPqServeAt(s, path, n, corpusN = n),
+      "l2_dist", n, "crossmodal.pqtop")
   }
 
   /** The MULTIMODAL corpus materialization (r17 verdict #7) — the

@@ -395,8 +395,18 @@ object Bm25 {
     * and a similarity ranking without score calibration. Inputs need
     * (query_id, doc_id, rank); fused score is rounded before the
     * final ranking for cross-engine determinism. */
-  def rrfFuse(a: DataFrame, b: DataFrame, k: Int): DataFrame =
-    rrfFuseKeyed(a, b, k)
+  def rrfFuse(a: DataFrame, b: DataFrame, k: Int): DataFrame = {
+    val leg = (df: DataFrame) => df.select(col("query_id"), col("doc_id"),
+      (lit(1.0) / (lit(RrfC) + col("rank"))).as("contrib"))
+    val w = Window.partitionBy(col("query_id"))
+      .orderBy(desc("rrf_score"), col("doc_id"))
+    leg(a).unionByName(leg(b))
+      .groupBy(col("query_id"), col("doc_id"))
+      .agg(round(sum(col("contrib")), 6).as("rrf_score"))
+      .withColumn("rank", row_number().over(w))
+      .filter(col("rank") <= k)
+      .select(col("query_id"), col("rank"), col("doc_id"), col("rrf_score"))
+  }
 
   /** [[rrfFuse]] over driver lists (the resident serve's fusion):
     * per (query, doc) the `1/(60 + rank)` contributions of both lists
@@ -410,29 +420,4 @@ object Bm25 {
         graft.io.Resident.rankTopK(qid,
           acc.map { case (d, sc) => (d, graft.io.Resident.round6(sc)) }, k)
     }
-
-  /** [[rrfFuse]] with extra grouping keys carried through every stage
-    * (union → groupBy → per-key window) — what the probe-ladder
-    * fusion rows use to fuse ALL rungs in ONE plan: `keys =
-    * Seq("n_probe")` makes each rung an independent fusion inside one
-    * aggregate + one window, value-identical per rung to a standalone
-    * [[rrfFuse]] over that rung's lists (same contribution, sum — ≤2
-    * commutative double addends per (query, doc) —, round-6 and
-    * (desc score, doc_id) tiebreak trees, keyed). */
-  def rrfFuseKeyed(a: DataFrame, b: DataFrame, k: Int,
-      keys: Seq[String] = Nil): DataFrame = {
-    val kc = keys.map(col)
-    val contrib = (r: Column) => lit(1.0) / (lit(RrfC) + r)
-    val leg = (df: DataFrame) => df.select(kc ++ Seq(col("query_id"),
-      col("doc_id"), contrib(col("rank")).as("contrib")): _*)
-    val pooled = leg(a).unionByName(leg(b))
-      .groupBy(kc ++ Seq(col("query_id"), col("doc_id")): _*)
-      .agg(round(sum(col("contrib")), 6).as("rrf_score"))
-    val w = Window.partitionBy(kc :+ col("query_id"): _*)
-      .orderBy(desc("rrf_score"), col("doc_id"))
-    pooled.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(kc ++ Seq(col("query_id"), col("rank"), col("doc_id"),
-        col("rrf_score")): _*)
-  }
 }

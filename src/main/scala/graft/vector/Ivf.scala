@@ -214,18 +214,7 @@ object Ivf {
     * cosine against the FLOAT-cast centroids (ties → lowest cell).
     * Output (query_id, q_embedding, cell) — tiny: |queries| × nProbe. */
   private[vector] def probe(queries: DataFrame, centroids: Array[Array[Double]],
-      nProbe: Int): DataFrame =
-    probeRanked(queries, centroids, nProbe).drop("crank")
-
-  /** [[probe]] keeping the per-query cell rank (`crank`) — the
-    * shared-scan form the probe-curve rows pool on: the candidates a
-    * depth-`p` serve would score are exactly the pooled rows with
-    * `crank <= p` (the rank filter commutes with the cell join and
-    * the scoring expressions), so ONE widest-depth scan serves every
-    * rung of a ladder with bit-identical scores instead of one scan
-    * per rung (guide §2.4: share the pass). */
-  private[graft] def probeRanked(queries: DataFrame,
-      centroids: Array[Array[Double]], nProbe: Int): DataFrame = {
+      nProbe: Int): DataFrame = {
     val spark = queries.sparkSession
     import spark.implicits._
     // centroid table is tiny → crossJoin(broadcast) to score cells
@@ -239,7 +228,7 @@ object Ivf {
       .withColumn("crank", row_number().over(
         Window.partitionBy(col("query_id")).orderBy(desc("cdist"), col("cell"))))
       .filter(col("crank") <= nProbe)
-      .select(col("query_id"), col("q_embedding"), col("cell"), col("crank"))
+      .select(col("query_id"), col("q_embedding"), col("cell"))
   }
 
   /** Fine search: equi-join corpus ⋈ probed on cell — only probed
@@ -247,28 +236,15 @@ object Ivf {
     * reference the resident [[Segments.topK]] mirrors, so their scores
     * are bit-identical. */
   private def fineSearch(assignedCorpus: DataFrame, probed: DataFrame,
-      k: Int): DataFrame =
-    rankTopK(scoredProbed(assignedCorpus, probed), k)
-
-  /** The scoring half of [[fineSearch]] without the per-query top-k
-    * cut — probe-curve rows score once at the widest depth (probed
-    * rows carrying `crank` flow through the join untouched), persist
-    * the pool, and cut each rung with [[rankTopK]] after a `crank`
-    * filter. Same Column tree as the single-depth serves. */
-  private[graft] def scoredProbed(assignedCorpus: DataFrame,
-      probed: DataFrame): DataFrame =
+      k: Int): DataFrame = {
+    val w = Window.partitionBy(col("query_id"))
+      .orderBy(desc("cos_sim"), col("vec_id"))
     assignedCorpus.join(broadcast(probed), "cell")
       .withColumn("cos_sim",
         round(FloatVecExpr.dotF(col("embedding"), col("q_embedding")) /
           (FloatVecExpr.normF(col("embedding")) *
             FloatVecExpr.normF(col("q_embedding"))), 6))
-
-  /** The rank/cut half of [[fineSearch]] (same window, same
-    * tiebreak), shared with the pooled probe-curve path. */
-  private[graft] def rankTopK(scored: DataFrame, k: Int): DataFrame = {
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(desc("cos_sim"), col("vec_id"))
-    scored.withColumn("rank", row_number().over(w))
+      .withColumn("rank", row_number().over(w))
       .filter(col("rank") <= k)
       .select(col("query_id"), col("rank"), col("vec_id"), col("cos_sim"))
   }

@@ -169,11 +169,9 @@ object Pq {
     val probedRows = Ivf.probe(queries, centroids, nProbe)
       .select(col("query_id"), col("cell"))
       .collect().map(r => (r.getLong(0), r.getInt(1)))
-    val qs = queries.withColumn("qq", Quantize.int8(col("q_embedding")))
-      .select(col("query_id"), col("qq")).collect()
+    val qs = queryLattice(queries).collect()
       .map(r => r.getLong(0) ->
         r.getAs[scala.collection.Seq[Int]]("qq").toArray).toMap
-    val m = books.length
     val tabs = probedRows.toSeq.map { case (qid, cell) =>
       val qq = qs(qid)
       val cent = centroids(cell)
@@ -183,18 +181,8 @@ object Pq {
       (qid, cell, distanceTable(rqq, books).map(_.toSeq).toSeq)
     }.toDF("query_id", "cell", "dtab")
     val cells = probedRows.map(_._2).distinct.toSeq
-    val adc = (0 until m)
-      .map(s => element_at(element_at(col("dtab"), s + 1),
-        element_at(col("codes"), s + 1) + 1))
-      .reduce(_ + _)
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("adc_dist"), col("vec_id"))
-    codesFromDisk.filter(col("cell").isin(cells: _*))
-      .join(broadcast(tabs), "cell")
-      .withColumn("adc_dist", round(adc, 6))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("rank"), col("vec_id"), col("adc_dist"))
+    adcCut(codesFromDisk.filter(col("cell").isin(cells: _*))
+      .join(broadcast(tabs), "cell"), books, k)
   }
 
   /** Saved RESIDUAL index: same on-disk format as [[saveIndex]]
@@ -259,26 +247,37 @@ object Pq {
     * [[Ivf.topKIndexed]] / [[graft.text.Bm25]] query-collect rule).
     * Ties → lowest vec_id. */
   def adcTopK(encoded: DataFrame, books: Codebooks, queries: DataFrame,
-      k: Int): DataFrame = {
+      k: Int): DataFrame =
+    adcCut(encoded.crossJoin(broadcast(distanceTables(queries, books))),
+      books, k)
+
+  /** Per query id its [[distanceTable]] as a (query_id, dtab) frame:
+    * the query lattice is collected driver-side in query_id order
+    * (bounded by |queries|) and the tables go back as local rows. */
+  private def distanceTables(queries: DataFrame, books: Codebooks)
+      : DataFrame = {
     val spark = queries.sparkSession
     import spark.implicits._
-    val qs = queries.withColumn("qq", Quantize.int8(col("q_embedding")))
-      .select(col("query_id"), col("qq")).orderBy(col("query_id"))
-      .collect()
-      .map(r => (r.getLong(0),
-        r.getAs[scala.collection.Seq[Int]]("qq").toArray))
-    val tabs = qs.toSeq
-      .map { case (qid, qq) => (qid, distanceTable(qq, books).map(_.toSeq).toSeq) }
+    queryLattice(queries).orderBy(col("query_id")).collect().toSeq
+      .map(r => (r.getLong(0), distanceTable(
+        r.getAs[scala.collection.Seq[Int]]("qq").toArray, books)
+        .map(_.toSeq).toSeq))
       .toDF("query_id", "dtab")
-    val m = books.length
-    val adc = (0 until m)
+  }
+
+  /** The ADC score and top-k cut every PQ serve shares: over rows
+    * carrying `codes` and their query's `dtab`, `adc_dist =
+    * round(Σ_s dtab(s)(code_s), 6)` accumulated in ascending subspace
+    * order, then per query the `k` smallest by (adc_dist, vec_id). */
+  private def adcCut(scored: DataFrame, books: Codebooks, k: Int)
+      : DataFrame = {
+    val adc = books.indices
       .map(s => element_at(element_at(col("dtab"), s + 1),
         element_at(col("codes"), s + 1) + 1))
       .reduce(_ + _)
     val w = Window.partitionBy(col("query_id"))
       .orderBy(col("adc_dist"), col("vec_id"))
-    encoded.crossJoin(broadcast(tabs))
-      .withColumn("adc_dist", round(adc, 6))
+    scored.withColumn("adc_dist", round(adc, 6))
       .withColumn("rank", row_number().over(w))
       .filter(col("rank") <= k)
       .select(col("query_id"), col("rank"), col("vec_id"), col("adc_dist"))
@@ -325,46 +324,8 @@ object Pq {
     * one broadcast distance-table join, partial-then-final top-k. */
   private def probedServe(encodedWithCell: DataFrame, probed: DataFrame,
       books: Codebooks, queries: DataFrame, k: Int): DataFrame =
-    adcRankCut(probedScored(encodedWithCell, probed, books, queries), k)
-
-  /** The scoring half of [[probedServe]] without the per-query top-k
-    * cut — the probe-curve row scores once at the widest depth
-    * (probed rows carrying `crank` flow through the cell join
-    * untouched), persists the pool, and cuts each rung with
-    * [[adcRankCut]] after a `crank` filter: one codes scan and one
-    * distance-table collect serve every rung with bit-identical
-    * scores (same Column trees as the single-depth serves). */
-  private[graft] def probedScored(encodedWithCell: DataFrame,
-      probed: DataFrame, books: Codebooks, queries: DataFrame): DataFrame = {
-    val spark = queries.sparkSession
-    import spark.implicits._
-    val qs = queries.withColumn("qq", Quantize.int8(col("q_embedding")))
-      .select(col("query_id"), col("qq")).orderBy(col("query_id"))
-      .collect()
-      .map(r => (r.getLong(0),
-        r.getAs[scala.collection.Seq[Int]]("qq").toArray))
-    val tabs = qs.toSeq
-      .map { case (qid, qq) => (qid, distanceTable(qq, books).map(_.toSeq).toSeq) }
-      .toDF("query_id", "dtab")
-    val m = books.length
-    val adc = (0 until m)
-      .map(s => element_at(element_at(col("dtab"), s + 1),
-        element_at(col("codes"), s + 1) + 1))
-      .reduce(_ + _)
-    encodedWithCell.join(broadcast(probed), "cell")
-      .join(broadcast(tabs), "query_id")
-      .withColumn("adc_dist", round(adc, 6))
-  }
-
-  /** The rank/cut half of [[probedServe]] (same window, same
-    * tiebreak), shared with the pooled probe-curve path. */
-  private[graft] def adcRankCut(scored: DataFrame, k: Int): DataFrame = {
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("adc_dist"), col("vec_id"))
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("rank"), col("vec_id"), col("adc_dist"))
-  }
+    adcCut(encodedWithCell.join(broadcast(probed), "cell")
+      .join(broadcast(distanceTables(queries, books)), "query_id"), books, k)
 
   /** Persist an IVF+PQ index: codes land `partitionBy("cell")` (the
     * FAISS on-disk shape — inverted lists of compressed codes), the
@@ -462,56 +423,13 @@ object Pq {
     FloatVecExpr.dotI(qq, qq) + FloatVecExpr.dotI(qv, qv) -
       lit(2L) * FloatVecExpr.dotI(qq, qv)
 
-  /** The exact-rerank half of every refine funnel: re-score ONLY the
-    * `(query_id, vec_id)` shortlist rows with the exact integer
-    * lattice L2 and keep the top `k`. The shortlist broadcasts (it is
-    * |queries| × width at any corpus size) and the full-vector table
-    * is touched for shortlist rows only — shared by the flat-PQ
-    * funnel ([[adcRerankTopK]]) and the IVFPQ+refine serve. */
-  /** The distance half of [[exactRerank]] without the per-query cut:
-    * every `(query_id, vec_id)` shortlist row scored with the exact
-    * integer lattice L2. Shared with the pooled probe-curve row,
-    * which scores the UNION of its rungs' shortlists once and ranks
-    * per rung — the Column tree is the single definition here, so
-    * the fused path cannot drift from the standalone serves. */
-  private[graft] def exactScored(quantized: DataFrame,
-      shortlist: DataFrame, queries: DataFrame): DataFrame = {
-    val qs = queries.withColumn("qq", Quantize.int8(col("q_embedding")))
+  /** The queries' int8 lattice, (query_id, qq). */
+  private def queryLattice(queries: DataFrame): DataFrame =
+    queries.withColumn("qq", Quantize.int8(col("q_embedding")))
       .select(col("query_id"), col("qq"))
-    quantized.select(col("vec_id"), col("qv"))
-      .join(broadcast(shortlist), "vec_id")
-      .join(broadcast(qs), "query_id")
-      .withColumn("l2_dist", l2Q(col("qq"), col("qv")))
-  }
 
-  def exactRerank(quantized: DataFrame, shortlist: DataFrame,
-      queries: DataFrame, k: Int): DataFrame = {
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("l2_dist"), col("vec_id"))
-    exactScored(quantized, shortlist, queries)
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("rank"), col("vec_id"), col("l2_dist"))
-  }
-
-  /** The scored crossjoin under [[exactTopK]] — EVERY
-    * (query, vector) pair with its exact integer lattice L2. The
-    * probe-curve row persists this once and derives both its truth
-    * cut and every rung's rerank distances from it (the distances
-    * are the same values [[exactScored]] would recompute, by the
-    * shared `l2Q` tree), so the corpus is crossjoin-scored exactly
-    * once per run. */
-  private[graft] def exactAllScored(quantized: DataFrame,
-      queries: DataFrame): DataFrame = {
-    val qs = queries.withColumn("qq", Quantize.int8(col("q_embedding")))
-      .select(col("query_id"), col("qq"))
-    quantized.select(col("vec_id"), col("qv")).crossJoin(broadcast(qs))
-      .withColumn("l2_dist", l2Q(col("qq"), col("qv")))
-  }
-
-  /** The rank/cut half of [[exactTopK]] (same window, same tiebreak),
-    * shared with the pooled probe-curve path. */
-  private[graft] def l2RankCut(scored: DataFrame, k: Int): DataFrame = {
+  /** Per query the `k` smallest `l2_dist` rows, ties → lowest vec_id. */
+  private def l2Cut(scored: DataFrame, k: Int): DataFrame = {
     val w = Window.partitionBy(col("query_id"))
       .orderBy(col("l2_dist"), col("vec_id"))
     scored.withColumn("rank", row_number().over(w))
@@ -519,10 +437,26 @@ object Pq {
       .select(col("query_id"), col("rank"), col("vec_id"), col("l2_dist"))
   }
 
+  /** The exact-rerank half of every refine funnel: re-score ONLY the
+    * `(query_id, vec_id)` shortlist rows with the exact integer
+    * lattice L2 and keep the top `k`. The shortlist broadcasts (it is
+    * |queries| × width at any corpus size) and the full-vector table
+    * is touched for shortlist rows only — shared by the flat-PQ
+    * funnel ([[adcRerankTopK]]) and the IVFPQ+refine serve. */
+  def exactRerank(quantized: DataFrame, shortlist: DataFrame,
+      queries: DataFrame, k: Int): DataFrame =
+    l2Cut(quantized.select(col("vec_id"), col("qv"))
+      .join(broadcast(shortlist), "vec_id")
+      .join(broadcast(queryLattice(queries)), "query_id")
+      .withColumn("l2_dist", l2Q(col("qq"), col("qv"))), k)
+
   /** Exact brute-force squared-L2 top-k on the SAME int8 lattice —
     * integer distances (no float accumulation at all), the ground
-    * truth [[adcTopK]]'s recall is measured against. */
+    * truth [[adcTopK]]'s recall is measured against: every
+    * (query, vector) pair scored by one broadcast crossjoin. */
   def exactTopK(quantized: DataFrame, queries: DataFrame, k: Int)
       : DataFrame =
-    l2RankCut(exactAllScored(quantized, queries), k)
+    l2Cut(quantized.select(col("vec_id"), col("qv"))
+      .crossJoin(broadcast(queryLattice(queries)))
+      .withColumn("l2_dist", l2Q(col("qq"), col("qv"))), k)
 }

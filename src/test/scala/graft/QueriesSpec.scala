@@ -63,6 +63,23 @@ class QueriesSpec extends AnyFunSuite with SparkTestBase {
       s"exhaustive-probe funnel (${hitByProbe(8)}) != flat funnel ($flat)")
   }
 
+  test("q_rag_fusion_curve at the serve's probe depth counts q_rag_fusion_overlap's hits") {
+    val p = graft.pipeline.RagPipeline.IndexedProbe
+    val rung = Queries.q_rag_fusion_curve(spark, sf)
+      .filter(col("n_probe") === p).collect()
+    assert(rung.length == 1, s"no curve row at n_probe = $p")
+    // both rows fuse the same dense leg (the indexed serve at
+    // IndexedProbe) with the same lexical list, against the same exact
+    // fusion: the rung's overlap is the sum of the overlap row's flags
+    val inExact = Queries.q_rag_fusion_overlap(spark, sf)
+      .agg(sum(col("in_exact"))).head().getLong(0)
+    assert(rung.head.getInt(1) == inExact)
+    val (_, _, _, lex, denseExact) = Queries.ragFusionLegs(spark, sf)
+    val exactRows = graft.text.Bm25.rrfFuse(denseExact, lex,
+      graft.pipeline.RagPipeline.TopK).count()
+    assert(rung.head.getInt(2) == exactRows)
+  }
+
   test("q_crossmodal_topk: planted image-caption pairs all recovered at rank 1") {
     val rows = Queries.q_crossmodal_topk(spark, sf).collect()
     assert(rows.length == Queries.CrossModalN * 3)

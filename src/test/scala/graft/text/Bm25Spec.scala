@@ -212,30 +212,4 @@ class Bm25Spec extends AnyFunSuite with SparkTestBase {
     assert(out.head.getLong(2) == 2L) // doc 2 == exactly {spark, shuffle}
     assert(out.head.getDouble(3) == 1.0)
   }
-
-  test("rrfFuseKeyed: each key slice is bit-identical to a standalone rrfFuse") {
-    import spark.implicits._
-    // two rungs with overlapping and disjoint docs, deliberate rank
-    // disagreements and a doc present in only one list per rung
-    def dense(p: Int) = Seq(
-      (p, 0L, 1, 10L + p), (p, 0L, 2, 20L), (p, 1L, 1, 30L),
-      (p, 1L, 2, 40L + p)).toDF("n_probe", "query_id", "rank", "doc_id")
-    val lex = Seq(
-      (0L, 1, 20L), (0L, 2, 99L), (1L, 1, 40L), (1L, 2, 30L))
-      .toDF("query_id", "rank", "doc_id")
-    val rungs = Seq(2, 4)
-    val fusedAll = Bm25.rrfFuseKeyed(
-        dense(2).unionByName(dense(4)),
-        lex.crossJoin(rungs.toDF("n_probe")), k = 3,
-        keys = Seq("n_probe"))
-      .collect().map(r => (r.getInt(0), r.getLong(1), r.getInt(2),
-        r.getLong(3), r.getDouble(4))).toSet
-    val expected = rungs.flatMap { p =>
-      Bm25.rrfFuse(dense(p).drop("n_probe"), lex, k = 3)
-        .collect().map(r => (p, r.getLong(0), r.getInt(1),
-          r.getLong(2), r.getDouble(3)))
-    }.toSet
-    assert(fusedAll == expected,
-      "keyed fusion must reproduce every rung's standalone fusion exactly")
-  }
 }

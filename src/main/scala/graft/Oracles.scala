@@ -132,7 +132,6 @@ object Oracles {
       |r3 AS (SELECT i.doc_id, 150000 + COALESCE(c.in_mass, 0) AS pr
       |       FROM ids i LEFT JOIN c3 c ON c.dst = i.doc_id)""".stripMargin
 
-  /** Shared CTE: token 3-gram distinct shingles per doc. */
   /** Corpus-wide semantic-chunker replay (engine pipeline op for op:
     * `block`-word min-split → `dim`-bucket md5 integer-count
     * embeddings → adjacent cosine distances (exact-integer dot/norm²)
@@ -228,6 +227,7 @@ object Oracles {
        |FROM m JOIN d ON d.doc_id = m.doc_id
        |ORDER BY m.doc_id, chunk_index""".stripMargin
 
+  /** Shared CTE: token 3-gram distinct shingles per doc. */
   private def shingleCte(filter: String): String =
     s"""WITH t AS (
        |  SELECT doc_id, regexp_extract_all(text, '$RE') AS toks
@@ -684,12 +684,6 @@ object Oracles {
        |)""".stripMargin
   }
 
-  /** PQ fit chain (mirrors Pq.boundedTrain + Pq.encode): seed
-    * codebooks `cb0`, two unrolled exact-integer update rounds,
-    * final per-subspace assignment `enc`, quantized queries `pqs`,
-    * and the per-query subspace distance tables `dt`. Assumes `qvt`
-    * from [[latticeCte]] precedes it; the rerank and IVF+PQ rows
-    * reuse it without the full-corpus ranking. */
   /** Per-subspace codebook chain over an arbitrary lattice CTE
     * (`src` must expose (vec_id, qv)): seed `cb0`, two unrolled
     * exact-integer rounds, final assignment `enc`. Shared by the
@@ -748,6 +742,12 @@ object Oracles {
     * (`pqs` quantized queries, `dt` per-query distance tables). */
   private lazy val pqFitCte: String = pqFitCteN(3)
 
+  /** PQ fit chain (mirrors Pq.boundedTrain + Pq.encode): seed
+    * codebooks `cb0`, two unrolled exact-integer update rounds,
+    * final per-subspace assignment `enc`, quantized queries `pqs`,
+    * and the per-query subspace distance tables `dt`. Assumes `qvt`
+    * from [[latticeCte]] precedes it; the rerank and IVF+PQ rows
+    * reuse it without the full-corpus ranking. */
   private def pqFitCteN(nQ: Int): String =
     s"""${pqCodebookCte("qvt")}
        |, pqs AS MATERIALIZED (
@@ -4804,10 +4804,6 @@ object Oracles {
         |FROM f ORDER BY asset_id, frame_off""".stripMargin
   )
 
-  /** Catalog oracle SQL. Composed rows (the ANN recall evaluation)
-    * embed constituent oracles as derived tables, so the truth and
-    * approx rankings replay from EXACTLY the SQL the driver already
-    * hash-checks for those rows. */
   /** The separator-snapped cut of [[graft.text.chunk.DocSplit]] at
     * (maxChars 120, lookback 40), as a SQL expression in the running
     * position `p` over doc columns `d.text` / `d.n`. Mirrors

@@ -668,20 +668,6 @@ object Queries {
       .orderBy(col("query_id"), col("rank"))
   }
 
-  /** IVF ANN top-k on the REAL embeddings table, hash-checked: the
-    * coarse quantizer is [[vector.Ivf.boundedIndex]] — a distributed
-    * 2-round k-means over int8-quantized vectors whose centroid
-    * updates are exact-integer sums (order-free), so DuckDB unrolls
-    * the identical two rounds and replays probe + fine search bit for
-    * bit. Since r8 the row SERVES from the memoized saved index
-    * ([[vector.Ivf.ensureSavedBoundedIndex]]): the rounds+1-scan fit
-    * runs once per JVM, every later call scores the resident copy of
-    * the `partitionBy("cell")` layout — the build-once/serve-many split
-    * of a persistent vector store, now proven for the distributed fit
-    * too (scores bit-identical to the in-memory path, so the oracle
-    * is unchanged). The driver-sample Lloyd's fit
-    * ([[vector.Ivf.index]]) stays pinned by q_topk_ivf_crafted /
-    * q_topk_ivf_indexed. */
   /** Query-vector frame: the first `nQ` corpus vectors as queries —
     * the deterministic query-set convention every retrieval row
     * shares with its oracle (`WHERE vec_id < nQ`). */
@@ -709,21 +695,24 @@ object Queries {
     vector.Ivf.topKIndexed(diskCorpus, centroids, queries, 5, nProbe = 2)
   }
 
+  /** IVF ANN top-k on the REAL embeddings table, hash-checked: the
+    * coarse quantizer is [[vector.Ivf.boundedIndex]] — a distributed
+    * 2-round k-means over int8-quantized vectors whose centroid
+    * updates are exact-integer sums (order-free), so DuckDB unrolls
+    * the identical two rounds and replays probe + fine search bit for
+    * bit. Since r8 the row SERVES from the memoized saved index
+    * ([[vector.Ivf.ensureSavedBoundedIndex]]): the rounds+1-scan fit
+    * runs once per JVM, every later call scores the resident copy of
+    * the `partitionBy("cell")` layout — the build-once/serve-many split
+    * of a persistent vector store, now proven for the distributed fit
+    * too (scores bit-identical to the in-memory path, so the oracle
+    * is unchanged). The driver-sample Lloyd's fit
+    * ([[vector.Ivf.index]]) stays pinned by q_topk_ivf_crafted /
+    * q_topk_ivf_indexed. */
   def q_topk_ivf(s: SparkSession, dir: String): DataFrame =
     ivfIndexedServe(s, dir, embQueries(t(s, dir, "embeddings"), 3))
       .orderBy(col("query_id"), col("rank"))
 
-  /** ANN recall evaluation — the measurement row every approximate
-    * index needs before it replaces the exact path: recall@5 of the
-    * served IVF tier ([[ivfIndexedServe]], the q_topk_ivf serve,
-    * nProbe=2) against the brute-force cosine truth, judged over
-    * [[RecallQueryCount]] deterministic queries (r15 — 3 was
-    * statistically thin for a recall claim) with the micro-averaged
-    * mean on every row. The DuckDB replay embeds the SAME serve SQL
-    * the 3-query catalog rows hash-check, widened only in its query
-    * CTE — the eval loop is itself hash-checked. Scale shape: both
-    * inputs are k-bounded top-k outputs (rows = |queries|·k), so the
-    * recall join is trivially small no matter the corpus size. */
   /** Shared recall-evaluation frame: per-query recall@k of `approx`
     * against `truth`, plus the tier's micro-averaged mean (total
     * hits / total k — equal to the arithmetic mean of per-query
@@ -749,6 +738,17 @@ object Queries {
       .orderBy(col("query_id"))
   }
 
+  /** ANN recall evaluation — the measurement row every approximate
+    * index needs before it replaces the exact path: recall@5 of the
+    * served IVF tier ([[ivfIndexedServe]], the q_topk_ivf serve,
+    * nProbe=2) against the brute-force cosine truth, judged over
+    * [[RecallQueryCount]] deterministic queries (r15 — 3 was
+    * statistically thin for a recall claim) with the micro-averaged
+    * mean on every row. The DuckDB replay embeds the SAME serve SQL
+    * the 3-query catalog rows hash-check, widened only in its query
+    * CTE — the eval loop is itself hash-checked. Scale shape: both
+    * inputs are k-bounded top-k outputs (rows = |queries|·k), so the
+    * recall join is trivially small no matter the corpus size. */
   def q_ann_recall(s: SparkSession, dir: String): DataFrame = {
     val emb = t(s, dir, "embeddings")
     val qs = embQueries(emb, RecallQueryCount)
@@ -884,17 +884,6 @@ object Queries {
       .orderBy(col("query_id"), col("rank"))
   }
 
-  /** Product quantization serve on the REAL embeddings — the
-    * memory-side ANN scale path ([[vector.Pq]]): per-subspace
-    * bounded-rounds k-means on the int8 lattice (m = 8 subspaces ×
-    * 8 dims, 8 codes, 2 exact-integer update rounds — the
-    * [[q_topk_ivf]] oracle-replayable fit discipline applied
-    * per-subspace), map-side encode to 8 code ids per vector (32×
-    * smaller than the float corpus), then ADC top-5: each corpus
-    * vector scored by 8 table lookups instead of 64 multiplies.
-    * Fully DuckDB-hash-checked — every arithmetic step is lattice-
-    * integer or ascending-order double, so the oracle replays the
-    * train + encode + serve chain bit-identically. */
   /** PQ geometry shared with [[Oracles]]: 16 subspaces × 4 dims over
     * the 64-dim embeddings, 16 codes per subspace, 2 exact-integer
     * update rounds — 16 B/vector, vs 256 B of floats. */
@@ -922,6 +911,17 @@ object Queries {
     vector.Pq.loadIndex(s, path)
   }
 
+  /** Product quantization serve on the REAL embeddings — the
+    * memory-side ANN scale path ([[vector.Pq]]): per-subspace
+    * bounded-rounds k-means on the int8 lattice (m = 8 subspaces ×
+    * 8 dims, 8 codes, 2 exact-integer update rounds — the
+    * [[q_topk_ivf]] oracle-replayable fit discipline applied
+    * per-subspace), map-side encode to 8 code ids per vector (32×
+    * smaller than the float corpus), then ADC top-5: each corpus
+    * vector scored by 8 table lookups instead of 64 multiplies.
+    * Fully DuckDB-hash-checked — every arithmetic step is lattice-
+    * integer or ascending-order double, so the oracle replays the
+    * train + encode + serve chain bit-identically. */
   def q_topk_pq(s: SparkSession, dir: String): DataFrame = {
     val emb = t(s, dir, "embeddings")
     val (codes, books, _) = pqEnsured(s, dir)
@@ -953,22 +953,6 @@ object Queries {
       .orderBy(col("query_id"), col("rank"))
   }
 
-  /** PQ recall evaluation — recall@5 of the ADC serve ([[q_topk_pq]])
-    * against EXACT squared-L2 top-5 on the same int8 lattice
-    * ([[vector.Pq.exactTopK]], pure integer distances). Measuring
-    * against the lattice truth (not float cosine) isolates the PQ
-    * codebook approximation error from the shared int8 quantization
-    * step — the eval semantics a quantized index actually needs.
-    * Same composed-oracle shape as [[q_ann_recall]]: both sides'
-    * SQL embed as derived tables, so the eval loop is hash-checked;
-    * rows = |queries| · k regardless of corpus size. */
-  /** IVF+PQ — the FAISS-style billion-scale composition: the coarse
-    * quantizer ([[vector.Ivf.boundedIndex]], same fit as
-    * [[q_topk_ivf]]) restricts the scan to 2 probed cells of 8 per
-    * query, and within them the PQ codes ([[q_topk_pq]]'s fit) are
-    * ADC-scored — scan-count win × memory win. Both fits and the
-    * serve replay bit-identically from the same shared oracle CTEs
-    * the standalone rows hash-check. */
   /** The composed IVF+PQ serve of [[q_topk_ivfpq]], parameterized
     * over the query set for the wider recall row. */
   private def ivfpqServe(s: SparkSession, dir: String,
@@ -984,6 +968,13 @@ object Queries {
       queries, 5, nProbe = 2)
   }
 
+  /** IVF+PQ — the FAISS-style billion-scale composition: the coarse
+    * quantizer ([[vector.Ivf.boundedIndex]], same fit as
+    * [[q_topk_ivf]]) restricts the scan to 2 probed cells of 8 per
+    * query, and within them the PQ codes ([[q_topk_pq]]'s fit) are
+    * ADC-scored — scan-count win × memory win. Both fits and the
+    * serve replay bit-identically from the same shared oracle CTEs
+    * the standalone rows hash-check. */
   def q_topk_ivfpq(s: SparkSession, dir: String): DataFrame =
     ivfpqServe(s, dir, pqQueries(t(s, dir, "embeddings")))
       .orderBy(col("query_id"), col("rank"))
@@ -1093,15 +1084,6 @@ object Queries {
     recallFrame(truth, approx, "q_ivfpq_rerank_recall")
   }
 
-  /** RESIDUAL IVFPQ — the authentic FAISS shape: PQ codebooks trained
-    * on `vector − coarse centroid` over an ×8 lattice (the scale is a
-    * power of two, so every residual step stays exact-replayable),
-    * codes spend their resolution on the within-cell residual instead
-    * of re-describing the cell. Served from the saved compressed
-    * index with the same static cell PartitionFilters as
-    * [[q_topk_ivfpq_indexed]]; distance tables are per
-    * (query, probed cell) since the query's residual depends on the
-    * cell it probes. */
   /** The saved residual-IVFPQ serve of [[q_topk_ivfpq_res]],
     * parameterized over the query set for the wider recall row. */
   private def ivfpqResServe(s: SparkSession, dir: String,
@@ -1115,6 +1097,15 @@ object Queries {
       queries, 5, nProbe = 2)
   }
 
+  /** RESIDUAL IVFPQ — the authentic FAISS shape: PQ codebooks trained
+    * on `vector − coarse centroid` over an ×8 lattice (the scale is a
+    * power of two, so every residual step stays exact-replayable),
+    * codes spend their resolution on the within-cell residual instead
+    * of re-describing the cell. Served from the saved compressed
+    * index with the same static cell PartitionFilters as
+    * [[q_topk_ivfpq_indexed]]; distance tables are per
+    * (query, probed cell) since the query's residual depends on the
+    * cell it probes. */
   def q_topk_ivfpq_res(s: SparkSession, dir: String): DataFrame =
     ivfpqResServe(s, dir, pqQueries(t(s, dir, "embeddings")))
       .orderBy(col("query_id"), col("rank"))
@@ -1158,6 +1149,15 @@ object Queries {
     recallFrame(truth, approx, "q_ivfpq_recall")
   }
 
+  /** PQ recall evaluation — recall@5 of the ADC serve ([[q_topk_pq]])
+    * against EXACT squared-L2 top-5 on the same int8 lattice
+    * ([[vector.Pq.exactTopK]], pure integer distances). Measuring
+    * against the lattice truth (not float cosine) isolates the PQ
+    * codebook approximation error from the shared int8 quantization
+    * step — the eval semantics a quantized index actually needs.
+    * Same composed-oracle shape as [[q_ann_recall]]: both sides'
+    * SQL embed as derived tables, so the eval loop is hash-checked;
+    * rows = |queries| · k regardless of corpus size. */
   def q_pq_recall(s: SparkSession, dir: String): DataFrame = {
     val emb = t(s, dir, "embeddings")
     val queries = pqQueries(emb, RecallQueryCount)
@@ -2959,6 +2959,34 @@ object Queries {
   /** Cross-modal corpus size, shared verbatim with the oracle. */
   private[graft] val CrossModalN = 30
 
+  /** [[clipCaptionVecs]] keeping the caption STRING beside the parsed
+    * vector — the composed materialization row charges its shard
+    * offsets by caption length, so the text must survive the parse. */
+  private def clipCaptionTable(s: SparkSession, n: Int): DataFrame = {
+    val dim = Multimodal.ClipDim
+    val toneCols: Seq[Column] = (0 until dim).map { x =>
+      ((col("id") * 131 + lit(x * 79) + col("id") * lit(x * 57) +
+        col("id") * lit(x * x * 23)) % 256 / lit(4)).cast("int")
+        .cast("string")
+    }
+    s.range(n).select(col("id"),
+        concat_ws(" ", lit("photo") +: col("id").cast("string") +:
+          lit("tones") +: toneCols: _*).as("caption"))
+      .select(col("id").as("caption_id"), col("caption"),
+        Multimodal.captionParse(col("caption")).as("q_embedding"))
+  }
+
+  /** The caption side of the cross-modal rows: each id's crafted
+    * caption STRING (quantized tone tokens from the shared
+    * [[Multimodal.clipPixel]] formula, generated in-plan), then the
+    * plan PARSES the tokens back out and dequantizes to the caption
+    * vector (midpoint of the 4-wide quantization cell) —
+    * `(caption_id, q_embedding)`. The parse is the text-side encoder
+    * seam the oracle checks against the formula. */
+  private def clipCaptionVecs(s: SparkSession,
+      n: Int = CrossModalN): DataFrame =
+    clipCaptionTable(s, n).select(col("caption_id"), col("q_embedding"))
+
   /** CROSS-MODAL image↔caption retrieval (r16 verdict #7) — the
     * LAION-style pair-curation join no prior row exercised: image
     * embeddings come from a REAL ImageIO decode of the crafted CLIP
@@ -2982,34 +3010,6 @@ object Queries {
     * [[q_crossmodal_indexed]] and the compressed tier in
     * [[q_crossmodal_pq]], both at the wider [[CrossModalServeN]]
     * fixture with measured scale-flat ×10 serves). */
-  /** The caption side of the cross-modal rows: each id's crafted
-    * caption STRING (quantized tone tokens from the shared
-    * [[Multimodal.clipPixel]] formula, generated in-plan), then the
-    * plan PARSES the tokens back out and dequantizes to the caption
-    * vector (midpoint of the 4-wide quantization cell) —
-    * `(caption_id, q_embedding)`. The parse is the text-side encoder
-    * seam the oracle checks against the formula. */
-  /** [[clipCaptionVecs]] keeping the caption STRING beside the parsed
-    * vector — the composed materialization row charges its shard
-    * offsets by caption length, so the text must survive the parse. */
-  private def clipCaptionTable(s: SparkSession, n: Int): DataFrame = {
-    val dim = Multimodal.ClipDim
-    val toneCols: Seq[Column] = (0 until dim).map { x =>
-      ((col("id") * 131 + lit(x * 79) + col("id") * lit(x * 57) +
-        col("id") * lit(x * x * 23)) % 256 / lit(4)).cast("int")
-        .cast("string")
-    }
-    s.range(n).select(col("id"),
-        concat_ws(" ", lit("photo") +: col("id").cast("string") +:
-          lit("tones") +: toneCols: _*).as("caption"))
-      .select(col("id").as("caption_id"), col("caption"),
-        Multimodal.captionParse(col("caption")).as("q_embedding"))
-  }
-
-  private def clipCaptionVecs(s: SparkSession,
-      n: Int = CrossModalN): DataFrame =
-    clipCaptionTable(s, n).select(col("caption_id"), col("q_embedding"))
-
   def q_crossmodal_topk(s: SparkSession, dir: String): DataFrame = {
     // image side: REAL decode of the crafted CLIP PNGs
     val img = Multimodal.clipImageVecs(
@@ -3081,6 +3081,26 @@ object Queries {
     * of the corpus), shared verbatim with the oracle. */
   private[graft] val CrossModalServeN = 120
 
+  /** Build-or-reuse the saved IVF index over the crafted clip image
+    * corpus at size `n` / geometry `nCells` — the catalog rows share
+    * one key. */
+  private[graft] def ensureClipIndex(s: SparkSession, n: Int,
+      nCells: Int, key: String): String =
+    vector.Ivf.ensureSavedBoundedIndex(
+      Multimodal.clipImageVecs(Multimodal.clipAssets(s, n)),
+      nCells = nCells, rounds = 2, cacheKey = key,
+      epoch = Some(s"clip-fixture-v1-n$n-c$nCells"))
+
+  /** The caption→saved-index serve funnel of [[q_crossmodal_indexed]]
+    * parameterized over the index path and caption-query count. */
+  private[graft] def crossmodalServeAt(s: SparkSession, path: String,
+      nQueries: Int): DataFrame = {
+    val (disk, cents) = vector.Ivf.loadIndex(s, path)
+    val queries = clipCaptionVecs(s, nQueries)
+      .select(col("caption_id").as("query_id"), col("q_embedding"))
+    vector.Ivf.topKIndexed(disk, cents, queries, 3, nProbe = 2)
+  }
+
   /** CROSS-MODAL retrieval on the SAVED ANN serve (r17 verdict #3) —
     * the row that makes the LAION-curation story ride the tier the
     * 100 TB claim ships on: the REAL-decoded image embeddings
@@ -3103,26 +3123,6 @@ object Queries {
     * build/serve split
     * applied cross-modally. Oracle: the shared bounded-fit replay
     * chain at dim = 8 with the caption formula as the query CTE. */
-  /** Build-or-reuse the saved IVF index over the crafted clip image
-    * corpus at size `n` / geometry `nCells` — the catalog rows share
-    * one key. */
-  private[graft] def ensureClipIndex(s: SparkSession, n: Int,
-      nCells: Int, key: String): String =
-    vector.Ivf.ensureSavedBoundedIndex(
-      Multimodal.clipImageVecs(Multimodal.clipAssets(s, n)),
-      nCells = nCells, rounds = 2, cacheKey = key,
-      epoch = Some(s"clip-fixture-v1-n$n-c$nCells"))
-
-  /** The caption→saved-index serve funnel of [[q_crossmodal_indexed]]
-    * parameterized over the index path and caption-query count. */
-  private[graft] def crossmodalServeAt(s: SparkSession, path: String,
-      nQueries: Int): DataFrame = {
-    val (disk, cents) = vector.Ivf.loadIndex(s, path)
-    val queries = clipCaptionVecs(s, nQueries)
-      .select(col("caption_id").as("query_id"), col("q_embedding"))
-    vector.Ivf.topKIndexed(disk, cents, queries, 3, nProbe = 2)
-  }
-
   def q_crossmodal_indexed(s: SparkSession, dir: String): DataFrame = {
     val path = ensureClipIndex(s, CrossModalServeN, nCells = 8,
       key = "crossmodal-clip-ivf")
@@ -3138,25 +3138,6 @@ object Queries {
   private[graft] val XmPqK = 8
   private[graft] val XmPqShortlist = 16
 
-  /** Cross-modal retrieval on the COMPRESSED (IVFPQ + refine) serve —
-    * the second saved tier ([[q_crossmodal_indexed]] is the
-    * raw-vector IVF one): the decoded image corpus trains + persists
-    * a saved IVF+PQ index ([[vector.Pq.ensureSavedIndex]] — coarse
-    * cells and per-subspace codebooks both bounded-fit, codes
-    * `partitionBy("cell")`), caption queries ADC-scan ONLY probed
-    * cells' codes ([[vector.Pq.adcTopKIndexed]], [[XmPqShortlist]]
-    * candidates each), and only shortlist rows re-score on the exact
-    * int8 lattice ([[vector.Pq.exactRerank]]) — FAISS's
-    * IndexRefineFlat shape serving image↔caption pairs. 100 TB
-    * story: the serve reads 4 B/image codes in probed cells plus
-    * |queries|×16 full vectors — the memory tier the multimodal
-    * corpus actually ships on. Recall@1 carried on every row; the
-    * coarse chain is the same fit as the IVF row, so the cell-
-    * pruning miss set is shared and any additional loss is the
-    * codebook's (the shortlist refine recovers it here). Oracle: the
-    * shared dim-8 replay chains — coarse ([[Oracles]] ivfCoarseCteN),
-    * codebooks (pqCodebookCte at 4×2×8), caption lattice, ADC,
-    * exact-lattice refine. */
   /** Build-or-reuse the saved IVF+PQ index over the clip image corpus
     * at size `n` / coarse geometry `nCells` (codebooks stay at the
     * [[XmPqM]]×[[XmPqK]] serve geometry) — the catalog row shares one
@@ -3194,6 +3175,25 @@ object Queries {
     vector.Pq.exactRerank(quantized, sl, queries, 3)
   }
 
+  /** Cross-modal retrieval on the COMPRESSED (IVFPQ + refine) serve —
+    * the second saved tier ([[q_crossmodal_indexed]] is the
+    * raw-vector IVF one): the decoded image corpus trains + persists
+    * a saved IVF+PQ index ([[vector.Pq.ensureSavedIndex]] — coarse
+    * cells and per-subspace codebooks both bounded-fit, codes
+    * `partitionBy("cell")`), caption queries ADC-scan ONLY probed
+    * cells' codes ([[vector.Pq.adcTopKIndexed]], [[XmPqShortlist]]
+    * candidates each), and only shortlist rows re-score on the exact
+    * int8 lattice ([[vector.Pq.exactRerank]]) — FAISS's
+    * IndexRefineFlat shape serving image↔caption pairs. 100 TB
+    * story: the serve reads 4 B/image codes in probed cells plus
+    * |queries|×16 full vectors — the memory tier the multimodal
+    * corpus actually ships on. Recall@1 carried on every row; the
+    * coarse chain is the same fit as the IVF row, so the cell-
+    * pruning miss set is shared and any additional loss is the
+    * codebook's (the shortlist refine recovers it here). Oracle: the
+    * shared dim-8 replay chains — coarse ([[Oracles]] ivfCoarseCteN),
+    * codebooks (pqCodebookCte at 4×2×8), caption lattice, ADC,
+    * exact-lattice refine. */
   def q_crossmodal_pq(s: SparkSession, dir: String): DataFrame = {
     val n = CrossModalServeN
     val path = ensureClipPqIndex(s, n, nCells = 8,
@@ -3858,14 +3858,6 @@ object Queries {
       .orderBy(col("source"))
   }
 
-  /** URL canonicalization ([[graft.rel.Urls]]) — the ingest
-    * normalization before URL-keyed dedup: seven deterministic messy
-    * variants per 7-doc block (uppercase scheme/host, default ports,
-    * tracking params, fragments, trailing slashes) collapse to their
-    * canonical forms, and `n_same_canon` shows the collapse (messy
-    * pairs land on one key). Pure codegen'd string/array expressions
-    * — no UDF — and the window is partitioned by the canonical key,
-    * so the count never funnels the corpus through one task. */
   /** Deterministic messy-URL synthesis keyed on `keyName` (a long
     * column): seven variant shapes per 7-key block (incl. a
     * scheme-less passthrough and bare no-`=` tracking params) — shared by
@@ -3894,6 +3886,14 @@ object Queries {
         lit("?fbclid&utm_&x=1")))
   }
 
+  /** URL canonicalization ([[graft.rel.Urls]]) — the ingest
+    * normalization before URL-keyed dedup: seven deterministic messy
+    * variants per 7-doc block (uppercase scheme/host, default ports,
+    * tracking params, fragments, trailing slashes) collapse to their
+    * canonical forms, and `n_same_canon` shows the collapse (messy
+    * pairs land on one key). Pure codegen'd string/array expressions
+    * — no UDF — and the window is partitioned by the canonical key,
+    * so the count never funnels the corpus through one task. */
   def q_url_canonical(s: SparkSession, dir: String): DataFrame = {
     val w = Window.partitionBy(col("canon"))
     t(s, dir, "documents")
@@ -4189,6 +4189,13 @@ object Queries {
       .orderBy(col("doc_id"))
   }
 
+  /** The saved CDC block table for `dir`'s documents
+    * ([[graft.text.chunk.CdcChunker.ensureSavedBlocks]]). */
+  private def cdcBlocksEnsured(s: SparkSession, dir: String): String =
+    graft.text.chunk.CdcChunker.ensureSavedBlocks(
+      t(s, dir, "documents"), s"cdc-$dir",
+      epoch = tableEpoch(s, dir, "documents"))
+
   /** Content-defined chunking over the corpus
     * ([[graft.text.chunk.CdcChunker]]): one row per CDC block with
     * its token start, length and content md5. Cut decisions are
@@ -4198,13 +4205,6 @@ object Queries {
     * Scan-stage hashing plus ONE per-doc window + the same-keyed
     * block aggregate — no global window, no corpus-wide exchange
     * beyond the doc_id shuffle. */
-  /** The saved CDC block table for `dir`'s documents
-    * ([[graft.text.chunk.CdcChunker.ensureSavedBlocks]]). */
-  private def cdcBlocksEnsured(s: SparkSession, dir: String): String =
-    graft.text.chunk.CdcChunker.ensureSavedBlocks(
-      t(s, dir, "documents"), s"cdc-$dir",
-      epoch = tableEpoch(s, dir, "documents"))
-
   def q_chunk_cdc(s: SparkSession, dir: String): DataFrame =
     graft.text.chunk.CdcChunker.blocks(t(s, dir, "documents"))
       .select(col("doc_id"), col("block_index"), col("token_start"),

@@ -137,8 +137,10 @@ object Dedup {
     // the aggregate+join-back form shuffled the gram stream for the
     // count AND re-read it for the join (with a broadcast whose size
     // is the duplicated-gram set — corpus-proportional on
-    // boilerplate-heavy corpora); a count-over-partition keeps the
-    // same one shuffle and nothing else. Identical candidate rows.
+    // boilerplate-heavy corpora). The window shuffles the FULL gram
+    // stream, with no map-side partial count, and one very frequent
+    // gram lands whole in one window task, which spills rather than
+    // OOMs. Identical candidate rows.
     val wDup = Window.partitionBy(col("gh"))
     val cand = grams.withColumn("cnt", count(lit(1)).over(wDup))
       .filter(col("cnt") > 1).select(col("doc_id"), col("pos"))
@@ -402,15 +404,6 @@ object Dedup {
         Seq("band", "band_key"))
       .distinct()
 
-  /** (doc_id, band, band_key) via the NARROW per-row signature form
-    * (array HOFs, no groupBy) — value-identical keys to the aggregate
-    * pipeline inside [[minhashCandidates]] (same min over
-    * md5(seed|shingle), same per-band concat), but computable on an
-    * unbounded STREAM row-by-row: this is the projection the
-    * stream-static near-dup join keys on
-    * ([[graft.streaming.DocStreams.nearDupCandidatesAgainstStatic]]).
-    * Batch callers building the static history side use it too, so
-    * both sides of that join share one key definition. */
   /** Per-row band-key ARRAY — the explode-free sibling of
     * [[minhashBandKeys]], value-identical to the saved signature
     * index's `bks` column (same min-over-md5(seed|shingle) signature,
@@ -428,6 +421,11 @@ object Dedup {
         concat_ws("", slice(sig, b * RowsPerBand + 1, RowsPerBand))): _*))
   }
 
+  /** (doc_id, band, band_key) via the NARROW per-row signature form
+    * (array HOFs, no groupBy) — value-identical keys to the aggregate
+    * pipeline inside [[minhashCandidates]] (same min over
+    * md5(seed|shingle), same per-band concat), but computable on an
+    * unbounded STREAM row-by-row. */
   def minhashBandKeys(docs: DataFrame): DataFrame =
     docs.filter(trim(col("text")) =!= "")
       .select(col("doc_id"), shingles(col("text")).as("sh"))
@@ -661,27 +659,6 @@ object Dedup {
       .select(col("id_a"), col("id_b"), col("cos_sim"))
   }
 
-  /** Line-level EXACT dedup — the C4/MassiveText/RefinedWeb corpus
-    * stage between document dedup and quality filtering: a line that
-    * occurs anywhere else in the corpus keeps only its FIRST
-    * occurrence (document order, then position); later copies are
-    * removed and each document reassembled from its surviving lines.
-    * Boilerplate (headers, footers, nav text) repeats across
-    * documents far below the document-dedup radar — this is the
-    * stage that catches it. The fixture corpus has no newlines, so a
-    * "line" here is a fixed [[LineTokens]]-token segment (documented
-    * adaptation; a newline-structured corpus would split on '\n').
-    *
-    * Shape: lines never self-join — first-wins is ONE exchange keyed
-    * by the line's md5 (content fingerprints shuffle, the dedup
-    * discipline) carrying (doc_id, p, line); reassembly is one
-    * exchange keyed by doc_id. Per-key state is the line's occurrence
-    * count; no global sort, no driver state.
-    *
-    * Per document: total/kept/removed line counts plus the md5 of the
-    * reassembled text. When nothing is removed the reassembly is the
-    * identity (disjoint token segments re-joined by the same single
-    * space), so `clean_md5 == md5(text)` — spec-pinned. */
   /** Characters above which a document's segmentation leaves the
     * narrow per-row explode for the token-snapped piece split: a
     * giant document's `split(text, ' ')` + per-line slicing is one
@@ -738,8 +715,7 @@ object Dedup {
     out.result()
   }
 
-  /** `(doc_id, p, line)` segmentation shared by [[lineDedup]], the
-    * static [[lineIndex]] and the streaming ingest path — a NARROW
+  /** `(doc_id, p, line)` segmentation behind [[lineDedup]] — a NARROW
     * per-row explode (no window, no shuffle) for every document at
     * or under [[LineSplitChars]], so it runs unchanged on a
     * streaming frame (streaming frames can't run the existence
@@ -795,32 +771,27 @@ object Dedup {
     small.unionByName(giant)
   }
 
-  /** Static line-fingerprint index for the continuous-ingest path:
-    * one row per DISTINCT line with its first (doc order, then
-    * position) owner. The compact history a stream of incoming
-    * documents joins against — fingerprints only, never line text at
-    * the join. */
-  /** Compact CDX history index over a fetch log
-    * (fetch_id, url, text): one row per distinct
-    * (canonical URL, content digest) pair with its first fetch id —
-    * the static side of
-    * [[graft.streaming.DocStreams.cdxDupAgainstStatic]]. At 100 TB
-    * this table is bytes per distinct page VERSION (two 16-byte
-    * hashes + an id), never the crawl itself. */
-  def cdxIndex(fetches: DataFrame): DataFrame =
-    fetches.select(col("fetch_id"),
-        graft.rel.Urls.canonical(col("url")).as("canon"),
-        md5(col("text")).as("digest"))
-      .groupBy(col("canon"), col("digest"))
-      .agg(min(col("fetch_id")).as("first_fetch"))
-
-  def lineIndex(docs: DataFrame): DataFrame =
-    linesOf(docs)
-      .groupBy(md5(col("line")).as("line_md5"))
-      .agg(min(struct(col("doc_id"), col("p"))).as("f"))
-      .select(col("line_md5"), col("f.doc_id").as("first_doc"),
-        col("f.p").as("first_p"))
-
+  /** Line-level EXACT dedup — the C4/MassiveText/RefinedWeb corpus
+    * stage between document dedup and quality filtering: a line that
+    * occurs anywhere else in the corpus keeps only its FIRST
+    * occurrence (document order, then position); later copies are
+    * removed and each document reassembled from its surviving lines.
+    * Boilerplate (headers, footers, nav text) repeats across
+    * documents far below the document-dedup radar — this is the
+    * stage that catches it. The fixture corpus has no newlines, so a
+    * "line" here is a fixed [[LineTokens]]-token segment (documented
+    * adaptation; a newline-structured corpus would split on '\n').
+    *
+    * Shape: lines never self-join — first-wins is ONE exchange keyed
+    * by the line's md5 (content fingerprints shuffle, the dedup
+    * discipline) carrying (doc_id, p, line); reassembly is one
+    * exchange keyed by doc_id. Per-key state is the line's occurrence
+    * count; no global sort, no driver state.
+    *
+    * Per document: total/kept/removed line counts plus the md5 of the
+    * reassembled text. When nothing is removed the reassembly is the
+    * identity (disjoint token segments re-joined by the same single
+    * space), so `clean_md5 == md5(text)` — spec-pinned. */
   def lineDedup(docs: DataFrame,
       splitChars: Long = LineSplitChars,
       linesPerPiece: Int = LinesPerPiece): DataFrame = {

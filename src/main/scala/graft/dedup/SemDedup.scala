@@ -85,8 +85,9 @@ object SemDedup {
     * half, and at 100 TB a dedup service refits per corpus VERSION,
     * not per call — this seam is where the epoch'd saved index plugs
     * in. Bit-identical to the inline path (qv ints and cell ids
-    * round-trip parquet losslessly). */
-  /** `compKey`: optional (cacheKey, corpus epoch) voucher — with it,
+    * round-trip parquet losslessly).
+    *
+    * `compKey`: optional (cacheKey, corpus epoch) voucher — with it,
     * the ε-pair self-join + transitive closure resolve ONCE per
     * corpus version ([[Clusters.ensureComponents]], r20) and every
     * later call reuses the component map; the per-call work drops to

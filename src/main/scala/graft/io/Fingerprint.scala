@@ -5,9 +5,8 @@ import org.apache.spark.sql.functions._
 
 /** Order-free corpus fingerprint for saved-index staleness checks —
   * the contract a build-once-serve-many index needs once corpora stop
-  * being immutable (e.g. [[graft.streaming.DocStreams]] upserting into
-  * a store that feeds a served index; the reference's analog is the
-  * persistent ChromaDB collection,
+  * being immutable (e.g. a store that grows under a served index;
+  * the reference's analog is the persistent ChromaDB collection,
   * `/root/reference/Chunking_Strats/chromadb_rag.py:96-107`).
   *
   * `of` computes `"<rows>:<md5sum>:<md5xor>"` in ONE narrow

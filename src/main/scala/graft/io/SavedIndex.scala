@@ -98,9 +98,8 @@ final class SavedIndex(prefix: String) {
                 // deleting under that reader. The previously parked
                 // dir (superseded two versions ago) is reclaimed NOW:
                 // retention is bounded at current + 1 per key, so a
-                // streaming upserter rebuilding every micro-batch
-                // (DocStreams.storeEpoch moves the epoch per commit)
-                // holds two index copies, not one per batch.
+                // caller whose epoch moves on every build holds two
+                // index copies, not one per build.
                 prev.foreach { old =>
                   parked.put(key, old.path).foreach(TempDirs.reclaim)
                 }

@@ -21,8 +21,8 @@ import org.apache.spark.sql.functions._
   */
 object Multimodal {
 
-  /** CLIP-score gate of the cross-modal curation rows and their
-    * streaming twin: a pair is kept at cosine ≥ 0.999. */
+  /** CLIP-score gate of the cross-modal curation rows: a pair is
+    * kept at cosine ≥ 0.999. */
   val ClipGate = 0.999
 
   // PNG encode buffers in memory, not a disk cache dir
@@ -574,20 +574,10 @@ object Multimodal {
       .toDF("asset_id", "payload")
   }
 
-  /** REAL-decode image embeddings of a cross-modal asset table:
-    * ImageIO decodes each payload and row 0's luminances (grayscale,
-    * so lum == the written pixel value under the exact-1000 ITU
-    * weights) become the `float[8]` embedding — `(vec_id,
-    * embedding)` ready for the shared ANN funnel. Undecodable
-    * payloads drop (decode-or-skip, the [[assetFeatures]] rule).
-    * Map-only: at 100 TB this is one decode pass per asset, no
-    * shuffle until the retrieval join. */
   /** Decode ONE clip payload to its embedding row — the per-row
-    * kernel of [[clipImageVecs]], shared with the streaming gate twin
-    * ([[graft.streaming.DocStreams.crossmodalGateStream]]) so the two
-    * paths cannot drift: ImageIO decode, row 0's ITU-601 integer
-    * luminances as `float[ClipDim]`, None on undecodable payloads
-    * (decode-or-skip). */
+    * kernel of [[clipImageVecs]]: ImageIO decode, row 0's ITU-601
+    * integer luminances as `float[ClipDim]`, None on undecodable
+    * payloads (decode-or-skip). */
   private[graft] def decodeClipVec(payload: Array[Byte]): Option[Array[Float]] =
     try {
       val img = ImageIO.read(new ByteArrayInputStream(payload))
@@ -603,12 +593,20 @@ object Multimodal {
 
   /** The caption-side encoder seam as a Column: parse a crafted
     * caption's quantized tone tokens back into the dequantized
-    * `float[ClipDim]` vector (midpoint of the 4-wide cell) — shared
-    * by the batch caption table and the streaming gate twin. */
+    * `float[ClipDim]` vector (midpoint of the 4-wide cell) — used
+    * by the batch caption table. */
   def captionParse(c: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
     transform(slice(split(c, " "), 4, ClipDim),
       t => (t.cast("int") * 4 + 2).cast("float"))
 
+  /** REAL-decode image embeddings of a cross-modal asset table:
+    * ImageIO decodes each payload and row 0's luminances (grayscale,
+    * so lum == the written pixel value under the exact-1000 ITU
+    * weights) become the `float[8]` embedding — `(vec_id,
+    * embedding)` ready for the shared ANN funnel. Undecodable
+    * payloads drop (decode-or-skip, the [[assetFeatures]] rule).
+    * Map-only: at 100 TB this is one decode pass per asset, no
+    * shuffle until the retrieval join. */
   def clipImageVecs(assets: DataFrame): DataFrame = {
     val spark = assets.sparkSession
     import spark.implicits._

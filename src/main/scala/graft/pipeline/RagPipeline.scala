@@ -130,11 +130,8 @@ object RagPipeline {
   /** THE query path: hybrid (dense + lexical) retrieval composed
     * onto the SAVED serve tier, over an already-built chunk STORE —
     * either [[buildStore]]'s output (the `run("hybrid_indexed")`
-    * route) or a stream-maintained store read back from parquet
-    * ([[graft.streaming.DocStreams.upsertIntoStore]], with
-    * `DocStreams.storeEpoch` as the epoch token so each committed
-    * micro-batch triggers exactly one staleness re-check + rebuild
-    * and every serve in between is O(1)).
+    * route) or a caller-built frame with the same columns (ragbench
+    * chunks and embeds its own).
     *
     * Build-once (Spark): the store is enumerated (distributed prefix
     * sum → dense vec_id), fit + persisted through the
@@ -252,13 +249,13 @@ object RagPipeline {
       : (DataFrame, Array[Array[Double]], graft.text.Bm25.Bm25Index) = {
     def enumerated = {
       // first-wins dedup on id BEFORE enumeration — buildStore output
-      // is already unique per id (no-op there), but a STREAM-
-      // maintained store is at-least-once (upsertIntoStore's
-      // documented caveat: a batch retry can re-append rows, and
-      // 'consumers dedup on id'); indexing a duplicated id twice
-      // would inflate BM25's n_docs/df and let one chunk occupy two
-      // citation slots (r19 review). Build-time-only cost: the
-      // window runs once per index build, never on a serve.
+      // is already unique per id (no-op there), but a caller-built
+      // store (ragbench's withChunkId frame) is not deduplicated by
+      // id, and the enumeration needs a unique key: a repeated id
+      // would share one vec_id with its original and leave a gap in
+      // the dense vec_id range the IVF fit and the serve assume.
+      // Build-time-only cost: the window runs once per index build,
+      // never on a serve.
       val w = org.apache.spark.sql.expressions.Window
         .partitionBy(col("id")).orderBy(col("doc_id"), col("chunk_index"))
       graft.rel.PrefixSum.exclusivePrefixSum(

@@ -62,8 +62,7 @@ object Sketches {
   val HllAlphaM2Scaled: Double =
     0.7213 / (1.0 + 1.079 / 256.0) * 65536.0 * 9007199254740992.0
 
-  /** Count-Min geometry (q_cms_topk and its streaming twin
-    * [[graft.streaming.DocStreams.cmsCounters]]): `CmsDepth` rows of
+  /** Count-Min geometry (q_cms_topk): `CmsDepth` rows of
     * `CmsWidth` counters, the rows hashed by [[bloomPositions]] —
     * 256 counters in all. */
   val CmsWidth = 64

@@ -1,73 +1,27 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import graft.textan.TextAnalysis
 import graft.io.Caches
 
-/** Streaming twins of the dedup operators — the continuous-ingest
-  * shape of a training-data pipeline (SURVEY §2.11 extension; the
-  * reference's ingest DAG is a daily batch, `/root/reference/Airflow/
-  * dags/nvidia_quarterly_reports_pipeline.py:70-71`).
+/** Stream-static twins of two batch curation operators, for the
+  * continuous-ingest shape of a training-data pipeline (SURVEY §2.11
+  * extension; the reference's ingest DAG is a daily batch,
+  * `Airflow/dags/nvidia_quarterly_reports_pipeline.py:70-71`).
   *
-  * Scale notes: streaming exact dedup keeps ONE fingerprint (16-byte
-  * md5) per distinct document in the state store — state is bounded
-  * by distinct content, not stream length, and with RocksDB state
-  * backing it spills off-heap. The watermarked variant bounds state
-  * by the watermark horizon instead: a duplicate arriving later than
-  * the delay is no longer caught, which is the deliberate trade for
-  * O(horizon) state on an unbounded stream.
+  * Both score each arriving document against a FROZEN static side
+  * built once from the history, with no aggregation state and no
+  * watermark on the stream, so the same transform runs on a batch
+  * frame or an unbounded stream:
+  *  - [[splitAssignAgainstStatic]] assigns the leak-proof near-dup
+  *    split (the delta face of `q_split_assign_delta`);
+  *  - [[dsirScoreAgainstStatic]] scores DSIR importance weights
+  *    against frozen hashed LMs (`q_dsir_frozen`).
   */
 object DocStreams {
 
-  /** How long event-id dedup state lives past the watermark
-    * ([[dedupEvents]]). */
-  val DedupHorizon = "1 hour"
-
-  /** Content-exact dedup on a document stream: first arrival per
-    * normalized-content fingerprint wins (same key as
-    * [[graft.textan.TextAnalysis.contentFingerprint]], so the kept
-    * set matches batch [[graft.dedup.Dedup.dropExactDuplicates]] up
-    * to arrival order). */
-  def dedupDocumentStream(spark: SparkSession, path: String): DataFrame = {
-    val schema = spark.read.parquet(path).schema
-    spark.readStream.schema(schema).parquet(path)
-      .withColumn("fingerprint", TextAnalysis.contentFingerprint(col("text")))
-      .dropDuplicates("fingerprint")
-  }
-
-  /** The watermark + in-horizon dedup core: state for an `event_id`
-    * lives until the watermark passes its event time + [[DedupHorizon]]; a
-    * re-delivery while the state lives is dropped, one past the
-    * horizon is re-admitted — the deliberate bounded-state trade,
-    * pinned batch-by-batch in DocStreamsSpec. */
-  def dedupEvents(events: DataFrame): DataFrame =
-    events.withWatermark("ts", DedupHorizon)
-      .dropDuplicatesWithinWatermark("event_id")
-
-  /** Streaming NEAR-dup candidates against a STATIC historical
-    * corpus — the continuous-ingest twin of the banded minhash
-    * pipeline: each incoming document is minhash-banded on the fly
-    * (narrow per-row signature, [[graft.dedup.Dedup.minhashBandKeys]]
-    * — no stateful aggregation) and equi-joined against the
-    * precomputed band table of the history (a stream-static inner
-    * join, stateless on the stream side). Emits one
-    * (doc_id, dup_of, band) row per colliding band — deliberately
-    * not `distinct()`ed, which would be a stateful op; downstream
-    * consumers (or the exact-cosine confirm) dedup pairs. At scale
-    * the static band table is the compact (doc_id, band, 64-hex key)
-    * index, not the corpus. */
-  def nearDupCandidatesAgainstStatic(incoming: DataFrame,
-      historyBands: DataFrame): DataFrame =
-    graft.dedup.Dedup.minhashBandKeys(incoming)
-      .join(historyBands
-          .select(col("doc_id").as("dup_of"), col("band"), col("band_key")),
-        Seq("band", "band_key"))
-      .select(col("doc_id"), col("dup_of"), col("band"))
-
   /** Stream-static LEAK-PROOF SPLIT assignment — the continuous-
-    * ingest twin of [[graft.Queries.q_split_neardup]] (r19 verdict
-    * #5, the last untwinned curation surface): each arriving
+    * ingest twin of [[graft.Queries.q_split_neardup]]: each arriving
     * document computes its minhash band keys PER ROW
     * ([[graft.dedup.Dedup.minhashBandKeyArray]] — the explode-free
     * form, value-identical to the saved signature index's `bks`),
@@ -85,12 +39,10 @@ object DocStreams {
     * document near-duplicating ANY history document inherits a
     * HISTORY rep — its split is the frozen assignment of that rep,
     * so a near-dup of a train-split doc can never land in test.
-    * Frozen-state caveat (the twin family's contract, the
-    * [[quotaAdmitAgainstStatic]] discipline): a doc whose matches
-    * span two history components takes the smaller rep — MERGING
-    * those components (and re-keying their splits) is the next
-    * batch re-fit's job, exactly like same-batch re-ranking in the
-    * quota twin; and same-batch arrivals don't see each other
+    * Frozen-state caveat: a doc whose matches span two history
+    * components takes the smaller rep — MERGING those components
+    * (and re-keying their splits) is the next batch re-fit's job;
+    * and same-batch arrivals don't see each other
     * (each assigns against frozen history only — folding admissions
     * into the index moves the map for the NEXT epoch).
     *
@@ -140,159 +92,6 @@ object DocStreams {
       .select(col("doc_id"), col("rep"), col("bucket"), col("split"))
   }
 
-  /** LINE-level boilerplate detection on the ingest stream — the
-    * continuous twin of [[graft.dedup.Dedup.lineDedup]]: each
-    * incoming document segments into
-    * [[graft.dedup.Dedup.LineTokens]]-token lines per-row (narrow
-    * explode, [[graft.dedup.Dedup.linesOf]] — no stateful op; the
-    * same segmentation [[graft.dedup.Dedup.lineIndex]] builds the
-    * history with, so fingerprints always match), the
-    * line fingerprints equi-join the precomputed history index
-    * (stream-static inner join, stateless on the stream side), and
-    * one (doc_id, p, dup_of, first_p) row emits per historically-
-    * duplicate line. At scale the static side is the compact
-    * (md5, first-owner) index, never corpus text; downstream
-    * reassembly drops the flagged positions exactly as the batch
-    * operator does. */
-  def lineDupAgainstStatic(incoming: DataFrame,
-      lineIndex: DataFrame): DataFrame =
-    graft.dedup.Dedup.linesOf(incoming)
-      .select(col("doc_id"), col("p"), md5(col("line")).as("line_md5"))
-      .join(lineIndex, Seq("line_md5"))
-      .select(col("doc_id"), col("p"),
-        col("first_doc").as("dup_of"), col("first_p"))
-
-  /** Stream-static CDX dedup — the continuous-crawl twin of
-    * [[graft.Queries.q_cdx_dedup]]: incoming fetches
-    * (fetch_id, url, text) are duplicates iff the HISTORICAL index
-    * already holds their (canonical URL, content digest) pair. The
-    * projection is narrow and per-row (canonicalization expressions
-    * + md5 — no aggregate, no window), so it runs on an unbounded
-    * stream; the history side is the compact
-    * (canon, digest, first_fetch) table, not the crawl. A changed
-    * page (same canon, new digest) does NOT join — it flows through
-    * as a new revision, exactly the batch row's keep=1 semantics.
-    * Returns one row per historically-duplicate fetch. */
-  def cdxDupAgainstStatic(incoming: DataFrame,
-      cdxIndex: DataFrame): DataFrame =
-    incoming
-      .select(col("fetch_id"),
-        graft.rel.Urls.canonical(col("url")).as("canon"),
-        md5(col("text")).as("digest"))
-      .join(cdxIndex, Seq("canon", "digest"))
-      .select(col("fetch_id"), col("canon"), col("digest"),
-        col("first_fetch").as("dup_of"))
-
-  /** Streaming CROSS-MODAL pair gate — the continuous twin of
-    * [[graft.Queries.q_crossmodal_curation]], proving the multimodal
-    * plumbing is streaming-safe end to end: each incoming
-    * (pair_id, payload, caption) row REAL-decodes its image embedding
-    * ([[graft.multimodal.Multimodal.decodeClipVec]] inside
-    * mapPartitions — the identical kernel the batch path runs),
-    * parses the caption vector per-row
-    * ([[graft.multimodal.Multimodal.captionParse]]), scores the
-    * pair's cosine with the batch row's exact expression (dotF /
-    * (normF·normF), rounded before the gate) and keeps pairs at or
-    * above [[graft.multimodal.Multimodal.ClipGate]]. Everything is
-    * map-only — no state, no watermark, no shuffle — so it runs on an
-    * unbounded crawl stream;
-    * undecodable payloads drop (decode-or-skip). Emits
-    * (pair_id, cos_sim, kept) for EVERY decodable pair (kept 0/1, so
-    * the downstream writer can route keeps and drops differently);
-    * batch == stream on the same pairs (spec-pinned). */
-  def crossmodalGateStream(pairs: DataFrame): DataFrame = {
-    val spark = pairs.sparkSession
-    import spark.implicits._
-    val decoded = pairs
-      .select(col("pair_id"), col("payload"), col("caption"))
-      .as[(Long, Array[Byte], String)]
-      .mapPartitions(_.flatMap { case (id, payload, caption) =>
-        graft.multimodal.Multimodal.decodeClipVec(payload)
-          .map(v => (id, v, caption))
-      })
-      .toDF("pair_id", "embedding", "caption")
-    decoded
-      .withColumn("q_embedding",
-        graft.multimodal.Multimodal.captionParse(col("caption")))
-      .withColumn("cos_sim",
-        round(graft.vector.FloatVecExpr.dotF(col("embedding"), col("q_embedding")) /
-          (graft.vector.FloatVecExpr.normF(col("embedding")) *
-            graft.vector.FloatVecExpr.normF(col("q_embedding"))), 6))
-      .select(col("pair_id"), col("cos_sim"),
-        (col("cos_sim") >= graft.multimodal.Multimodal.ClipGate)
-          .cast("int").as("kept"))
-  }
-
-  /** Stream-static crawl-frontier ADMISSION — the continuous twin of
-    * [[graft.Queries.q_crawl_frontier]] (r17 verdict #8), completing
-    * the ingest-shaped twin set (CDX, line-dedup, DSIR, Gopher,
-    * classifier): each incoming URL entry canonicalizes per-row
-    * ([[graft.rel.Urls.canonical]] — narrow expressions, no state),
-    * RELATIVE/scheme-less entries drop (never fetchable, the batch
-    * row's filter), first-wins goes to the STATIC frontier (a
-    * stream-static LEFT ANTI join on `canon` — an entry already
-    * scheduled is never re-admitted), and each admission carries its
-    * host's politeness continuation: `queue_base` = the host's
-    * static queue depth, `fetch_at_sec = queue_base × 2` — the next
-    * free slot in the batch row's `(host_rank − 1) × 2` schedule.
-    * Multiple same-host admissions inside one micro-batch all see
-    * the same static base (intra-batch sub-slotting would be a
-    * stateful rank — that's the scheduler's merge step, exactly like
-    * the near-dup twin leaving pair-dedup downstream). Duplicate
-    * CANONS, by contrast, dedup here: a `dropDuplicates("canon")`
-    * collapses re-sent URLs to one admission per canon per query run
-    * (r18 advice — without it two same-canon entries in one batch,
-    * or the same URL re-sent across batches, were each admitted,
-    * since the static frontier is never updated by this twin). On a
-    * stream this is Spark's stateful dedup: state is one row per
-    * distinct admitted canon — the same growth rate as the frontier
-    * the scheduler maintains anyway; an unbounded deployment passes
-    * `dedupHorizon = Some((eventTimeCol, delay))` to bound that
-    * state by the watermark horizon via
-    * `dropDuplicatesWithinWatermark` (r19 advice — a parameter, not
-    * a comment).
-    * The winner among same-batch duplicates is single-but-arbitrary
-    * (all its non-id columns are identical by construction);
-    * cross-RUN dedup — merging admissions back into the frontier —
-    * remains the downstream scheduler merge's job. The static side
-    * is the compact frontier table (canon, host, host_rank), never
-    * the crawl. Batch == stream on the same entries (spec-pinned). */
-  def frontierAdmitAgainstStatic(incoming: DataFrame,
-      frontier: DataFrame,
-      dedupHorizon: Option[(String, String)] = None): DataFrame = {
-    val prepared = incoming
-      .withColumn("canon", graft.rel.Urls.canonical(col("url")))
-      .withColumn("host",
-        regexp_extract(col("canon"), "^[a-z][a-z0-9+.-]*://([^/?#]*)", 1))
-      .filter(col("host") =!= "")
-    // dedupHorizon = (eventTimeCol, delay): on a STREAMING input this
-    // bounds the dedup state by the watermark horizon
-    // (dropDuplicatesWithinWatermark) instead of growing one state
-    // row per distinct canon forever — the production swap the
-    // scaladoc promises, now a parameter instead of a comment (r19
-    // advice). Batch inputs (and the spec-scale default, None) keep
-    // the exact unbounded dedup so the batch twin is unchanged.
-    val canoned = dedupHorizon match {
-      case Some((tsCol, delay)) if prepared.isStreaming =>
-        prepared.withWatermark(tsCol, delay)
-          .dropDuplicatesWithinWatermark("canon")
-      case _ => prepared.dropDuplicates("canon")
-    }
-    // static prep persisted once per twin (r20): per-micro-batch
-    // re-aggregation of the frozen frontier otherwise
-    val hostQueue = Caches.persistTracked(
-      frontier.groupBy(col("host"))
-        .agg(max(col("host_rank")).cast("int").as("__queued")),
-      "frontieradmit.hostqueue")
-    canoned
-      .join(frontier.select(col("canon")), Seq("canon"), "left_anti")
-      .join(hostQueue, Seq("host"), "left")
-      .select(col("entry_id"), col("host"), col("canon"),
-        coalesce(col("__queued"), lit(0)).cast("int").as("queue_base"),
-        (coalesce(col("__queued"), lit(0)) * 2).cast("long")
-          .as("fetch_at_sec"))
-  }
-
   /** Stream-static DSIR scoring — the continuous-ingest twin of
     * [[graft.Queries.q_dsir_weights]]: incoming documents are scored
     * against FROZEN hashed LMs ([[graft.textan.Dsir.collectLm]] over
@@ -313,224 +112,4 @@ object DocStreams {
       .filter(col("__s").isNotNull)
       .select(col("doc_id"), col("__s._1").as("n_feats"),
         col("__s._2").as("logw_micro"))
-
-  /** Stream-static DOMAIN-QUOTA admission — the continuous-ingest
-    * twin of [[graft.Queries.q_domain_quota]] (r18 verdict #6): each
-    * incoming document scores its composite quality per-row
-    * ([[graft.textan.TextAnalysis.withQuality]] — pure Column
-    * expressions, no state), and admits iff it would ENTER the
-    * frozen per-source top-K: its source's quota is not yet filled
-    * (n_kept < K), or it orders before the source's current K-th
-    * kept row under the batch operator's exact (quality DESC,
-    * doc_id ASC) ordering. `keptRanked` is the CURRENT kept set with
-    * ranks — the batch row's own output — so "beats the K-th kept"
-    * is literally "top-K over (kept ∪ {doc}) contains doc" (the kept
-    * set IS history's top-K; spec-pinned). Stateless on the stream
-    * side: score is a map, the static side collapses to ≤ |sources|
-    * broadcast bar rows. Same-batch admissions to one full source
-    * each beat the same frozen bar — re-ranking them against each
-    * other is the downstream scheduler merge's job (the frontier
-    * twin's discipline), as is folding admissions back into the
-    * kept set (which moves the bar for the NEXT batch). */
-  def quotaAdmitAgainstStatic(incoming: DataFrame,
-      keptRanked: DataFrame, k: Int): DataFrame = {
-    // k must be the K the kept set was RANKED with: a k smaller than
-    // the observed max rank is definitely wrong (the set holds rows
-    // past the claimed quota) and fails loudly here; a k LARGER than
-    // the builder's K cannot be detected from the output alone (it
-    // looks like open quotas) and silently disables the bar — the
-    // scaladoc pins the contract (r19 review). One bounded driver
-    // action on the static side (≤ |sources|·K rows) at twin
-    // construction. coalesce(…, 0): max over an EMPTY kept set is
-    // null and a bare getInt would NPE — a fresh deployment with no
-    // kept history must mean "all quotas open", not a crash (r19
-    // advice); with zero kept rows, sizes/bars are empty and every
-    // incoming row admits through the quota_filled < k arm.
-    val maxRank =
-      keptRanked.agg(coalesce(max(col("rank")), lit(0))).head().getInt(0)
-    require(maxRank <= k,
-      s"quotaAdmitAgainstStatic: kept set carries rank $maxRank > k=$k — " +
-        "k must equal the K the kept set was built with")
-    // static prep persisted once per twin (r20): on a streaming
-    // input every micro-batch otherwise re-aggregates the kept set
-    // for the same frozen bars
-    val sizes = Caches.persistTracked(
-      keptRanked.groupBy(col("source"))
-        .agg(count(lit(1)).cast("int").as("quota_filled")),
-      "quotaadmit.sizes")
-    val bars = Caches.persistTracked(
-      keptRanked.filter(col("rank") === k)
-        .select(col("source"), col("quality").as("bar_quality"),
-          col("doc_id").as("bar_doc_id")),
-      "quotaadmit.bars")
-    TextAnalysis.withQuality(incoming)
-      .select(col("doc_id"), col("source"), col("quality"))
-      .join(broadcast(sizes), Seq("source"), "left")
-      .join(broadcast(bars), Seq("source"), "left")
-      .filter(coalesce(col("quota_filled"), lit(0)) < k ||
-        col("quality") > col("bar_quality") ||
-        (col("quality") === col("bar_quality") &&
-          col("doc_id") < col("bar_doc_id")))
-      .select(col("doc_id"), col("source"), col("quality"),
-        coalesce(col("quota_filled"), lit(0)).as("quota_filled"))
-  }
-
-  /** Stream-static TEMPERATURE-MIX admission — the continuous-ingest
-    * twin of [[graft.Queries.q_temperature_mix]] with FROZEN weights
-    * (r18 verdict #6): the per-language quotas and the md5-ranked
-    * selection cut are computed ONCE from the history corpus (the
-    * batch row's own output `mixSelected` carries both), and each
-    * incoming document admits iff its deterministic selection key
-    * `h = md5("mix|" + doc_id)` would fall INSIDE its language's
-    * frozen quota — the quota is unfilled, or (h, doc_id) orders
-    * before the language's current LAST selected row (rk == quota).
-    * Languages outside the frozen mix drop (inner join — the frozen-
-    * weights contract: a new language waits for the next mix re-fit,
-    * it is never admitted on weights it didn't shape). Stateless on
-    * the stream side: the key is a per-row md5, the static side
-    * collapses to ≤ |langs| broadcast cut rows; recomputing weights
-    * per batch would be the stateful re-fit this twin deliberately
-    * freezes. Same-batch ties against one cut are the scheduler
-    * merge's job, as everywhere in this twin family. */
-  def mixAdmitAgainstStatic(incoming: DataFrame,
-      mixSelected: DataFrame): DataFrame = {
-    def hOf(c: org.apache.spark.sql.Column) =
-      md5(concat(lit("mix|"), c.cast("string")))
-    // static prep persisted once per twin (r20): on a streaming
-    // input every micro-batch otherwise re-aggregates the frozen mix
-    val sizes = Caches.persistTracked(
-      mixSelected.groupBy(col("lang"))
-        .agg(count(lit(1)).cast("int").as("quota_filled"),
-          max(col("quota")).as("quota")),
-      "mixadmit.sizes")
-    val cuts = Caches.persistTracked(
-      mixSelected.filter(col("rk") === col("quota"))
-        .select(col("lang"), hOf(col("doc_id")).as("cut_h"),
-          col("doc_id").as("cut_doc_id")),
-      "mixadmit.cuts")
-    incoming.select(col("doc_id"), col("lang"))
-      .withColumn("h", hOf(col("doc_id")))
-      .join(broadcast(sizes), Seq("lang"))
-      .join(broadcast(cuts), Seq("lang"), "left")
-      .filter(col("quota_filled") < col("quota") ||
-        col("h") < col("cut_h") ||
-        (col("h") === col("cut_h") && col("doc_id") < col("cut_doc_id")))
-      .select(col("doc_id"), col("lang"), col("h"), col("quota"),
-        col("quota_filled"))
-  }
-
-  /** Watermarked event dedup: drops re-deliveries of the same
-    * `event_id` arriving within [[DedupHorizon]] of the watermark —
-    * bounded state for at-least-once upstreams. */
-  def dedupEventStream(spark: SparkSession, path: String): DataFrame = {
-    val schema = spark.read.parquet(path).schema
-    dedupEvents(spark.readStream.schema(schema).parquet(path))
-  }
-
-  /** Streaming HLL cardinality-sketch maintenance — the continuous
-    * twin of [[graft.Queries.q_hll_distinct]]'s register build. The
-    * register update (max ρ per register index) is an order-free,
-    * re-delivery-immune merge, so the SAME declarative aggregate
-    * serves batch and stream: on a stream it is a stateful agg whose
-    * entire state is ≤256 ints per sketch — the poster case for
-    * mergeable-sketch state vs the unbounded distinct-set a naive
-    * streaming COUNT(DISTINCT) would need. DocStreamsSpec pins
-    * stream == batch register-for-register across multi-batch
-    * arrival orders WITH duplicate re-deliveries. */
-  def hllRegisters(terms: DataFrame): DataFrame =
-    terms
-      .select(graft.rel.Sketches.hllIndex(col("term")).as("idx"),
-        graft.rel.Sketches.hllRho(col("term")).as("rho"))
-      .groupBy(col("idx"))
-      .agg(max(col("rho")).as("mrho"))
-
-  /** Streaming Count-Min counter maintenance — the frequency-sketch
-    * twin of [[hllRegisters]] with the OPPOSITE delivery contract:
-    * counter updates are SUMS, so while the merge is order-free it is
-    * NOT re-delivery-immune — an at-least-once upstream inflates
-    * counts unless an exactly-once stage (watermarked id-dedup, as in
-    * [[dedupEvents]]) runs first. DocStreamsSpec pins both halves:
-    * raw re-delivery OVERcounts (still never undercounts — the CMS
-    * one-sided bound survives), and dedup-then-sum equals batch cell
-    * for cell. State is the d×w counter grid (≤256 longs) plus the
-    * dedup stage's horizon-bounded ids. */
-  def cmsCounters(terms: DataFrame): DataFrame =
-    terms
-      .select(posexplode(
-          graft.rel.Sketches.bloomPositions(col("term"),
-            graft.rel.Sketches.CmsWidth, graft.rel.Sketches.CmsDepth))
-        .as(Seq("h", "pos")))
-      .groupBy(col("h"), col("pos"))
-      .agg(count(lit(1)).as("counter"))
-
-  /** Incremental vector-store maintenance — the continuous-ingest
-    * twin of [[graft.pipeline.RagPipeline.buildStore]]: each
-    * micro-batch of documents is chunked + embedded, deduped within
-    * the batch (first occurrence per id by (doc_id, chunk_index)),
-    * ANTI-JOINED against the ids already in the store, and APPENDED —
-    * upsert-as-append, so an id that exists keeps its original row
-    * (the same first-wins contract, resolved by arrival order across
-    * batches) and the store parquet is never rewritten. At 100 TB the
-    * per-batch cost is the batch's own chunk/embed plus one id
-    * anti-join against the store's id column — no store-wide shuffle,
-    * no rewrite.
-    *
-    * Store existence is resolved through the Hadoop FileSystem of
-    * `storePath` (not `java.io.File`), so the first-wins anti-join
-    * fires on HDFS/S3 paths too. Caveat: foreachBatch + parquet
-    * append is at-least-once — a batch RETRY after a partial write
-    * can re-append rows the failed attempt already landed (exactly-
-    * once needs a transactional table format underneath); re-reads of
-    * the store remain first-wins because consumers dedup on id.
-    *
-    * Each batch chunks with the "simple" strategy and embeds with
-    * [[graft.pipeline.RagPipeline.buildStore]]'s default embedder.
-    * Returns the StreamingQuery; the store lives at `storePath` as
-    * plain parquet readable by the batch retrieval surface. */
-  def upsertIntoStore(docs: DataFrame, storePath: String,
-      checkpoint: String = ""): org.apache.spark.sql.streaming.StreamingQuery = {
-    val cp = if (checkpoint.nonEmpty) checkpoint
-      else graft.io.TempDirs.create("graft-store-cp")
-    docs.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", cp)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val spark = batch.sparkSession
-        val fresh = graft.pipeline.RagPipeline.buildStore(batch, "simple")
-        val hPath = new org.apache.hadoop.fs.Path(storePath)
-        val fs = hPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        val toWrite =
-          if (fs.exists(hPath)) {
-            val existing = spark.read.parquet(storePath).select(col("id"))
-            fresh.join(existing, Seq("id"), "left_anti")
-          } else fresh
-        // one file per batch at spec scale; a real deployment would
-        // partition by a stable key and compact asynchronously
-        toWrite.write.mode("append").parquet(storePath)
-        // the commit IS the version boundary: bump the store's epoch
-        // so saved-index serves re-check content exactly once per
-        // micro-batch instead of once per query (SavedIndex's
-        // serve-cost policy — the stream is the caller that "tracks
-        // corpus versions")
-        storeEpochs.merge(storePath, 1L, (a, b) => a + b)
-        () // foreachBatch wants Unit, not the merged counter
-      }
-      .start()
-  }
-
-  // ===== store version tokens (SavedIndex epoch integration) =====
-
-  private val storeEpochs =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
-
-  /** The store's current version token for [[graft.io.SavedIndex]]
-    * epoch serves: bumped once per committed [[upsertIntoStore]]
-    * micro-batch, so a serve loop over a streaming-maintained store
-    * pays ONE content re-check (and rebuild, if the batch landed new
-    * rows) per micro-batch and O(1) for every serve in between —
-    * never a per-serve corpus scan. None before the first commit (or
-    * in a JVM that hasn't streamed into the store): the serve falls
-    * back to the content fingerprint, which stays the ground truth. */
-  def storeEpoch(storePath: String): Option[String] =
-    Option(storeEpochs.get(storePath)).map(v => s"$storePath@$v")
 }

@@ -1,14 +1,8 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-
-/** Per-user running aggregate maintained as explicit stream state. */
-case class UserEvent(user_id: Long, event_id: Long, tsMicros: Long, value: Double)
-case class UserRunning(user_id: Long, n_events: Long, total_value: Double,
-    last_ts_micros: Long)
 
 /** Event-stream analytics over the `events` table. The reference has
   * no streaming (SURVEY §2.11) — this is the design-for-scale
@@ -65,35 +59,10 @@ object EventStreams {
         max(col("n_events")).as("max_session_events"),
         round(sum(col("session_value")), 4).as("total_value"))
 
-  /** Custom stateful streaming operator (SURVEY §2.11 extension;
-    * `KeyValueGroupedDataset.flatMapGroupsWithState` per the Spark
-    * guide): per-user running totals kept in explicit GroupState —
-    * the building block the windowed built-ins can't express (e.g.
-    * cross-batch monotone counters). Works identically on a batch
-    * Dataset (Spark runs the state function per group), which is how
-    * the spec pins its semantics against a plain groupBy. */
-  def runningUserTotals(events: Dataset[UserEvent]): Dataset[UserRunning] = {
-    import events.sparkSession.implicits._
-    def fn(user: Long, rows: Iterator[UserEvent],
-           state: GroupState[UserRunning]): Iterator[UserRunning] = {
-      val prev = state.getOption.getOrElse(UserRunning(user, 0L, 0.0, Long.MinValue))
-      val sorted = rows.toSeq.sortBy(e => (e.tsMicros, e.event_id))
-      val next = sorted.foldLeft(prev) { (acc, e) =>
-        UserRunning(user, acc.n_events + 1,
-          acc.total_value + e.value, e.tsMicros)
-      }
-      state.update(next)
-      Iterator(next)
-    }
-    events.groupByKey(_.user_id)
-      .flatMapGroupsWithState(OutputMode.Update,
-        GroupStateTimeout.NoTimeout)(fn)
-  }
-
   /** Stream-stream EVENT-TIME join — [[graft.Queries.q_funnel]]'s
     * A→B-within-t pair stage as a watermarked join of two live
-    * streams (the one Structured Streaming surface the aggregation /
-    * dedup / mapGroupsWithState operators don't cover): views ⋈
+    * streams (the one Structured Streaming surface the windowed
+    * aggregates here don't cover): views ⋈
     * purchases on `user_id`, the purchase constrained to
     * `(view_ts, view_ts + windowed interval]`. BOTH sides carry
     * watermarks and the time bound is two-sided, so Spark can compute

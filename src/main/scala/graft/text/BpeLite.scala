@@ -186,13 +186,6 @@ object BpeLite {
       .groupBy(col("w")).agg(count(lit(1)).as("c"))
       .select(split(col("w"), "").as("syms"), col("c"))
 
-  /** Adjacent-pair counts of `words` after re-applying the merges
-    * learned so far, reduced to the single argmax row with the
-    * deterministic (−count, left, right) tie rule — one distributed
-    * aggregate per merge round, ONE row to the driver (the
-    * `Ivf.boundedIndex` bounded-argmax pattern). Exposed for the spec
-    * that pins "no vocabulary-sized LocalRelation in the training
-    * plan". */
   /** `words` with `sofar` merges folded into the symbol column —
     * identity when no merges are pending. Folding commutes with
     * later merges: applyMerge composes sequentially, so re-applying
@@ -206,6 +199,13 @@ object BpeLite {
       col("c"))
   }
 
+  /** Adjacent-pair counts of `words` after re-applying the merges
+    * learned so far, reduced to the single argmax row with the
+    * deterministic (−count, left, right) tie rule — one distributed
+    * aggregate per merge round, ONE row to the driver (the
+    * `Ivf.boundedIndex` bounded-argmax pattern). Exposed for the spec
+    * that pins "no vocabulary-sized LocalRelation in the training
+    * plan". */
   private[text] def pairArgmax(words: DataFrame, sofar: Seq[Merge]): DataFrame =
     pairTopK(words, sofar, 1)
 

@@ -141,15 +141,6 @@ object Tok {
     throw new IllegalStateException("unreachable")
   }
 
-  /** Whitespace-snapped pieces of ~`strideChars` each, every piece
-    * carrying its `nLook`-token lookahead. Cuts land only where the
-    * PREVIOUS char is whitespace ([[Ws]]'s set), so per-piece
-    * tokenization composes into the global token stream; a
-    * whitespace-free run longer than the stride stays one piece
-    * (serial by construction, exact by construction). Null/empty
-    * text yields ONE empty piece, so an explode keeps the document
-    * (the explode_outer sentinel contract). One forward pass plus a
-    * bounded lookahead probe per cut. */
   /** Plain whitespace-snapped pieces — [[lookaheadPieces]] without
     * the lookahead, for kernels whose unit never crosses whitespace
     * (BPE word counts, regex token counts: a token is an alnum run or
@@ -176,6 +167,15 @@ object Tok {
     Array.tabulate(cs.length - 1)(i => text.substring(cs(i), cs(i + 1)))
   }
 
+  /** Whitespace-snapped pieces of ~`strideChars` each, every piece
+    * carrying its `nLook`-token lookahead. Cuts land only where the
+    * PREVIOUS char is whitespace ([[Ws]]'s set), so per-piece
+    * tokenization composes into the global token stream; a
+    * whitespace-free run longer than the stride stays one piece
+    * (serial by construction, exact by construction). Null/empty
+    * text yields ONE empty piece, so an explode keeps the document
+    * (the explode_outer sentinel contract). One forward pass plus a
+    * bounded lookahead probe per cut. */
   def lookaheadPieces(text: String, strideChars: Int,
       nLook: Int = 3): Array[LookPiece] = {
     if (text == null || text.isEmpty)

@@ -346,6 +346,19 @@ object TextAnalysis {
   val GopherStops: Seq[String] =
     Seq("the", "be", "to", "of", "and", "that", "have", "with")
 
+  /** Giant-document crossover for [[gopherRules]]'s line-exploded
+    * branch — the per-char regex kernel sits between the repetition
+    * kernel (2 Mchar) and the cheaper classifier fold (8 Mchar). */
+  val GopherSplitChars: Long = 1L << 22
+
+  /** Target stride of one sub-piece of a newline-free long line.
+    * Pieces cut ONLY at intra-line whitespace — a space-free run
+    * longer than this stays one piece (serial by construction, exact
+    * by construction) rather than taking a mid-word hard cut that
+    * would shear a `[^\s]+` word or a dot run across pieces and
+    * break split == per-row bit-identity. */
+  val GopherPieceChars: Int = 1 << 20
+
   /** Gopher/MassiveText quality-rule metrics (Rae et al. 2021,
     * "Scaling Language Models: ...", arXiv:2112.11446, Appendix A1.1)
     * — the hard-threshold document filter every pretraining pipeline
@@ -367,19 +380,6 @@ object TextAnalysis {
     * both engines, so thresholds compare identically and the oracle
     * replays bit-for-bit. Emits the metrics plus `pass` (INT — the
     * conjunction), so a caller can re-threshold without rescanning. */
-  /** Giant-document crossover for [[gopherRules]]'s line-exploded
-    * branch — the per-char regex kernel sits between the repetition
-    * kernel (2 Mchar) and the cheaper classifier fold (8 Mchar). */
-  val GopherSplitChars: Long = 1L << 22
-
-  /** Target stride of one sub-piece of a newline-free long line.
-    * Pieces cut ONLY at intra-line whitespace — a space-free run
-    * longer than this stays one piece (serial by construction, exact
-    * by construction) rather than taking a mid-word hard cut that
-    * would shear a `[^\s]+` word or a dot run across pieces and
-    * break split == per-row bit-identity. */
-  val GopherPieceChars: Int = 1 << 20
-
   def gopherRules(df: DataFrame,
       splitChars: Long = GopherSplitChars,
       pieceChars: Int = GopherPieceChars): DataFrame = {

@@ -218,9 +218,43 @@ class RagPipelineSpec extends AnyFunSuite with SparkTestBase {
     assert(warm.exists(_.getInt(0) == 2))
   }
 
+  test("hybridIndexedServe: a store that repeats an id serves exactly as the store without the repeat") {
+    import spark.implicits._
+    val emb = HashingEmbedder(64)
+    val store = RagPipeline.buildStore(docs.limit(50), "simple", emb)
+    // a caller-built store may repeat an id; the repeat sorts after the
+    // original by (doc_id, chunk_index) and carries other text, so an
+    // index that kept it would count one more document and could cite it
+    val repeatText = "table scan filter window merge join repeat"
+    val repeated = store.unionByName(
+      store.orderBy(col("doc_id"), col("chunk_index")).limit(1)
+        .withColumn("doc_id", col("doc_id") + 1000000L)
+        .withColumn("text", lit(repeatText)))
+    assert(repeated.groupBy("id").count().filter(col("count") > 1).count() == 1)
+    val queries = emb.embed(
+      Seq(("table scan filter", 0), ("window merge join", 1))
+        .toDF("query_text", "query_id"),
+      textCol = "query_text", out = "q_embedding")
+    val epoch = Some("spec-repeat-id-v1")
+    def served(s: org.apache.spark.sql.DataFrame, key: String) = {
+      val (_, _, bm) = RagPipeline.ensureIndexedServe(spark, s, key, epoch)
+      val nDocs = bm.stats.select("n_docs").head().getDouble(0)
+      val rows = RagPipeline.hybridIndexedServe(spark, s, queries, key, epoch)
+        .collect().map(_.toSeq).toSeq
+        .sortBy(r => (r(0).asInstanceOf[Int], r(1).asInstanceOf[Int]))
+      (nDocs, rows)
+    }
+    val (nDocs, rows) = served(repeated, "ragpipeline-spec-repeat-id")
+    val (nDocsUnique, rowsUnique) = served(store, "ragpipeline-spec-unique-id")
+    assert(nDocs == nDocsUnique && nDocs == store.count().toDouble,
+      s"BM25 counts $nDocs documents, the store without the repeat $nDocsUnique")
+    assert(rows == rowsUnique)
+    assert(!rows.exists(_(3) == repeatText), "the repeat must never be cited")
+  }
+
   test("run: hybrid_indexed serves a store of fewer chunks than IndexedCells, one cell per chunk") {
     import spark.implicits._
-    // a young stream-maintained store: three one-chunk documents
+    // a young store: three one-chunk documents
     val small = Seq((1L, "alpha beta gamma delta", "srcA", 22L),
         (2L, "epsilon zeta eta theta", "srcB", 22L),
         (3L, "nu xi omicron pi", "srcC", 16L))

@@ -31,23 +31,6 @@ class StreamingSpec extends AnyFunSuite with SparkTestBase {
     } finally query.stop()
   }
 
-  test("flatMapGroupsWithState: stateful running totals match groupBy") {
-    import spark.implicits._
-    val ev = Tables.events(spark, sf)
-      .select(col("user_id"), col("event_id"),
-        unix_micros(col("ts")).as("tsMicros"), col("value"))
-      .as[UserEvent]
-    val stateful = EventStreams.runningUserTotals(ev)
-      .collect().map(r => r.user_id -> (r.n_events, math.round(r.total_value * 100)))
-      .toMap
-    val batch = Tables.events(spark, sf)
-      .groupBy("user_id")
-      .agg(count(lit(1)).as("n"), sum(col("value")).as("v"))
-      .collect().map(r => r.getLong(0) ->
-        (r.getLong(1), math.round(r.getDouble(2) * 100))).toMap
-    assert(stateful == batch)
-  }
-
   test("watermark late-data contract: beyond-watermark rows drop, within-watermark rows count") {
     import spark.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext

@@ -114,4 +114,7 @@ def main(root, verbose):
 
 
 if __name__ == "__main__":
+    if len(sys.argv) < 2:
+        sys.stderr.write(__doc__)
+        sys.exit(2)
     main(sys.argv[1], "-v" in sys.argv[2:])

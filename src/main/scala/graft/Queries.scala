@@ -3388,7 +3388,9 @@ object Queries {
       // `row_number() OVER (ORDER BY ...)` would funnel the whole
       // corpus through one partition. The distributed prefix sum of
       // 1s over the unique (doc_id, page_no) order key is the same
-      // number (= row_number - 1 + 1) without the bottleneck.
+      // number (= row_number - 1 + 1) without the bottleneck. The
+      // key doc_id * 2 + page_no is unique only because ocrPages emits
+      // pages 0 and 1; a third page would tie and share a prefix.
       .transform(df => graft.rel.PrefixSum.exclusivePrefixSum(
         df, col("doc_id").cast("long") * 2 + col("page_no"), lit(1L), "img_seq0"))
       .withColumn("img_seq", (col("img_seq0") + 1).cast("int"))

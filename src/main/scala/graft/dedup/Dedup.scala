@@ -374,6 +374,8 @@ object Dedup {
     } finally shingled.unpersist()
   }
 
+  private val savedSigIndexes = new graft.io.SavedIndex("graft-minhash-idx")
+
   /** Single-flight memo over [[saveSignatureIndex]], keyed by caller
     * key, with the same [[graft.io.SavedIndex]]
     * staleness contract as [[graft.text.Bm25.ensureSavedIndex]]:
@@ -386,8 +388,6 @@ object Dedup {
     * caller pays the corpus pass; every later consumer — candidate
     * generation, verify, clustering, the corpus filter — reads the
     * parquet. */
-  private val savedSigIndexes = new graft.io.SavedIndex("graft-minhash-idx")
-
   def ensureSavedSignatureIndex(docs: DataFrame, cacheKey: String,
       epoch: Option[String] = None): String =
     savedSigIndexes.ensure(cacheKey, docs, epoch)(saveSignatureIndex(docs, _))

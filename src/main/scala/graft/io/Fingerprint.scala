@@ -10,7 +10,9 @@ import org.apache.spark.sql.functions._
   * `/root/reference/Chunking_Strats/chromadb_rag.py:96-107`).
   *
   * `of` computes `"<rows>:<md5sum>:<md5xor>"` in ONE narrow
-  * distributed aggregate: per row, the first 60 bits of
+  * distributed aggregate (over driver rows, [[Resident.driverRows]],
+  * the same per-row hash is folded on the driver and summed in Scala,
+  * with no job): per row, the first 60 bits of
   * `md5(to_json(all columns, name-sorted))` reduced by decimal SUM and
   * BIT_XOR — both commutative, so the value is independent of
   * partitioning and row order, and any row edit/insert/delete moves it
@@ -26,15 +28,24 @@ object Fingerprint {
     // name-sorted struct: fingerprint is schema-order-insensitive, so
     // a reordered projection of the same data serves the same index
     val idCols = df.columns.sorted.toSeq
-    val row = df
+    val hashed = df
       .select(conv(substring(md5(to_json(struct(idCols.map(col): _*))), 1, 15),
         16, 10).cast("long").as("__h"))
-      .agg(count(lit(1)).as("n"),
-        coalesce(sum(col("__h").cast("decimal(20,0)")),
-          lit(0).cast("decimal(20,0)")).as("s"),
-        coalesce(expr("bit_xor(__h)"), lit(0L)).as("x"))
-      .collect()(0)
-    s"${row.get(0)}:${row.get(1)}:${row.get(2)}"
+    Resident.driverRows(hashed) match {
+      // driver rows: the same per-row hash, folded on the driver, and
+      // the aggregate in Scala — no job
+      case Some(local) =>
+        val hs = local.data.filterNot(_.isNullAt(0)).map(_.getLong(0))
+        s"${local.data.length}:${hs.map(BigInt(_)).sum}:${hs.foldLeft(0L)(_ ^ _)}"
+      case None =>
+        val row = hashed
+          .agg(count(lit(1)).as("n"),
+            coalesce(sum(col("__h").cast("decimal(20,0)")),
+              lit(0).cast("decimal(20,0)")).as("s"),
+            coalesce(expr("bit_xor(__h)"), lit(0L)).as("x"))
+          .collect()(0)
+        s"${row.get(0)}:${row.get(1)}:${row.get(2)}"
+    }
   }
 
   /** Durable twin of the in-memo fingerprint: lands beside the index

@@ -144,6 +144,13 @@ object Resident {
       case _ => None
     }
 
+  /** [[driverRows]] of a frame built over driver rows with expressions
+    * that evaluate on the driver — Spark's own expressions computed
+    * with no job. Any other frame raises. */
+  def rowsOf(df: DataFrame): LocalRelation = driverRows(df).getOrElse(
+    throw new IllegalArgumentException(
+      s"not foldable to driver rows:\n${df.queryExecution.analyzed.treeString}"))
+
   /** An analyzed plan as the optimizer's first batch leaves it, and no
     * further: subquery aliases and views removed, runtime-replaceable
     * expressions replaced (`to_date(s, fmt)` throws if evaluated

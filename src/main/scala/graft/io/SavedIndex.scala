@@ -59,10 +59,10 @@ final class SavedIndex(prefix: String) {
     * two concurrent first callers can never both pay the corpus pass.
     *
     * `corpus` is BY-NAME: the O(1) epoch-hit path never evaluates it,
-    * so a caller whose corpus CONSTRUCTION is itself a Spark job (the
-    * RAG store's prefix-sum enumeration collects per-partition totals
-    * at plan-build time) pays nothing on a serve — the lazy-DataFrame
-    * callers are unaffected. */
+    * so a caller whose corpus CONSTRUCTION is itself a Spark job
+    * ([[graft.pipeline.RagPipeline.ensureIndexedServe]] collects its
+    * store to driver rows to build the corpus) pays nothing on a serve
+    * — the lazy-DataFrame callers are unaffected. */
   def ensure(key: String, corpus: => DataFrame,
       epoch: Option[String] = None)(build: String => Unit): String = {
     memo.get(key) match {

@@ -4,10 +4,11 @@ import graft.io.Caches.TrackedPersistOps
 import graft.io.Resident
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.AttributeReference
+import org.apache.spark.sql.catalyst.expressions.{Ascending, AttributeReference, BoundReference,
+  InterpretedOrdering, SortOrder}
 import org.apache.spark.sql.catalyst.types.DataTypeUtils
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.IntegerType
+import org.apache.spark.sql.types.{IntegerType, LongType}
 import org.apache.spark.unsafe.types.UTF8String
 import graft.text.chunk.Chunker
 import graft.vector.{Embedder, HashingEmbedder, VectorOps}
@@ -133,19 +134,19 @@ object RagPipeline {
     * route) or a caller-built frame with the same columns (ragbench
     * chunks and embeds its own).
     *
-    * Build-once (Spark): the store is enumerated (distributed prefix
-    * sum → dense vec_id), fit + persisted through the
-    * oracle-replayable bounded-k-means saved IVF index
-    * (partitionBy("cell") on disk) and the bucket-partitioned saved
-    * BM25 postings (md5(term) % 64; the BM25 build reads the
-    * PERSISTED store back from the IVF index's corpus files, so the
-    * store pipeline runs once for both indexes) — see
-    * [[ensureIndexedServe]].
+    * Build-once (one collect, then the driver): the store is collected
+    * once and enumerated on the driver (dense vec_ids in id order), the
+    * oracle-replayable bounded k-means is fit over those rows, the BM25
+    * postings are counted from Spark's own tokens, and both indexes are
+    * written from the rows in their saved layouts (IVF
+    * `partitionBy("cell")`, BM25 postings and df `partitionBy("bucket")`,
+    * md5(term) % 64) — see [[ensureIndexedServe]].
     *
-    * Serve-many (driver): the first serve of a saved pair loads both
-    * indexes once into their resident segments
-    * ([[graft.vector.Ivf.Segments]], [[graft.text.Bm25.Segments]]),
-    * hung off the memoized `loadIndex` entries. Every serve then runs
+    * Serve-many (driver): the build also builds both resident segments
+    * ([[graft.vector.Ivf.Segments]], [[graft.text.Bm25.Segments]]) from
+    * the same rows and hangs them off the memoized `loadIndex` entries;
+    * a pair loaded in another session is collected into its segments on
+    * its first serve. Every serve then runs
     * [[serveRows]] over those segments. This wrapper reads the
     * queries' `query_id`, `query_text` and `q_embedding` with
     * [[graft.io.Resident.columns]] (the id under the caller's spelling,
@@ -238,39 +239,61 @@ object RagPipeline {
   /** The BUILD-ONCE half of [[hybridIndexedServe]], shared with the
     * fusion eval rows so they price the production serve path
     * instead of re-fitting per run (r19 verdict #2): ensure + load
-    * the saved IVF index and the saved BM25 postings over `store`
-    * (by-name — an O(1) epoch hit never constructs the store
-    * DataFrame, whose prefix-sum enumeration is itself a Spark job).
-    * Returns (persisted enumerated corpus read from the IVF index's
-    * cell files, coarse centroids, loaded BM25 index frames) — all
-    * three served from memoized loads on a warm epoch, zero jobs. */
+    * the saved IVF index and the saved BM25 postings over `store`.
+    * Returns (the enumerated corpus read from the IVF index's cell
+    * files, the coarse centroids, the BM25 index frames): lazy parquet
+    * reads, served from the memoized loads with zero jobs on a warm
+    * epoch.
+    *
+    * The pair is one [[graft.io.SavedIndex]] entry (`ivf/` and `bm25/`
+    * under one directory), checked against one fingerprint of the
+    * enumerated store. `store` is by-name: an O(1) epoch hit never
+    * constructs or evaluates it. Otherwise the store is collected ONCE
+    * and everything else runs on the driver ([[enumerate]],
+    * [[graft.vector.Ivf.boundedIndexRows]], [[graft.text.Bm25
+    * .buildIndexRows]], the fingerprint over the driver rows), with the
+    * same answers as the Spark build, which would plan dozens of small
+    * jobs; the six saved files are written from the driver rows, and
+    * both resident segments are built from them and held in the
+    * `loadIndex` memos, so the first serve runs no job either. */
   def ensureIndexedServe(spark: SparkSession, store: => DataFrame,
       cacheKeyBase: String, epoch: Option[String])
       : (DataFrame, Array[Array[Double]], graft.text.Bm25.Bm25Index) = {
-    def enumerated = {
-      // first-wins dedup on id BEFORE enumeration — buildStore output
-      // is already unique per id (no-op there), but a caller-built
-      // store (ragbench's withChunkId frame) is not deduplicated by
-      // id, and the enumeration needs a unique key: a repeated id
-      // would share one vec_id with its original and leave a gap in
-      // the dense vec_id range the IVF fit and the serve assume.
-      // Build-time-only cost: the window runs once per index build,
-      // never on a serve.
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy(col("id")).orderBy(col("doc_id"), col("chunk_index"))
-      graft.rel.PrefixSum.exclusivePrefixSum(
-          store.withColumn("__rn", row_number().over(w))
-            .filter(col("__rn") === 1).drop("__rn"),
-          col("id"), lit(1L), "vec_id")
-        .select(col("vec_id"), col("source"), col("text"), col("embedding"))
+    lazy val enumerated = enumerate(store)
+    val path = savedPairs.ensure(s"ragpipeline/$cacheKeyBase", enumerated, epoch) { p =>
+      val (assigned, cents) = graft.vector.Ivf.boundedIndexRows(enumerated,
+        IndexedCells, rounds = 2)
+      graft.vector.Ivf.saveResident(assigned, cents, s"$p/ivf")
+      graft.text.Bm25.saveResident(graft.text.Bm25.buildIndexRows(
+        enumerated.select(col("vec_id").as("doc_id"), col("text"))), s"$p/bm25")
     }
-    val ivfPath = graft.vector.Ivf.ensureSavedBoundedIndex(enumerated,
-      nCells = IndexedCells, rounds = 2,
-      cacheKey = s"ragpipeline-ivf/$cacheKeyBase", epoch = epoch)
-    val (disk, cents) = graft.vector.Ivf.loadIndex(spark, ivfPath)
-    val bmPath = graft.text.Bm25.ensureSavedIndex(
-      disk.select(col("vec_id").as("doc_id"), col("text")),
-      s"ragpipeline-bm25/$cacheKeyBase", epoch = epoch)
-    (disk, cents, graft.text.Bm25.loadIndex(spark, bmPath))
+    val (disk, cents) = graft.vector.Ivf.loadIndex(spark, s"$path/ivf")
+    (disk, cents, graft.text.Bm25.loadIndex(spark, s"$path/bm25"))
+  }
+
+  /** The saved pairs of [[ensureIndexedServe]], one per cache key. */
+  private val savedPairs = new graft.io.SavedIndex("graft-rag-idx")
+
+  /** The store as driver rows (vec_id, source, text, embedding), from
+    * one collect of its (id, doc_id, chunk_index, source, text,
+    * embedding): the first row per `id` by (doc_id, chunk_index) — an
+    * upsert keeps the first, as [[buildStore]] does, and a caller-built
+    * store may repeat an id — numbered 0..n-1 in `id` order. Both
+    * orders are Spark's ascending ones (NULLs first, strings in UTF-8
+    * byte order), so the vec_ids are those the oracles replay. */
+  private def enumerate(store: DataFrame): DataFrame = {
+    val (attrs, rows) = Resident.columns(store,
+      "id", "doc_id", "chunk_index", "source", "text", "embedding")
+    def ascending(n: Int) = new InterpretedOrdering((0 until n).map(i =>
+      SortOrder(BoundReference(i, attrs(i).dataType, nullable = true), Ascending)))
+    val (byId, byKey) = (ascending(1), ascending(3))
+    val sorted = rows.sorted(byKey).toIndexedSeq
+    val firsts = sorted.indices.filter(i => i == 0 || byId.compare(sorted(i - 1), sorted(i)) != 0)
+    val kept = attrs.drop(3)
+    Resident.internalFrame(store.sparkSession,
+      AttributeReference("vec_id", LongType, nullable = false)() +: kept.map(_.newInstance()),
+      firsts.zipWithIndex.map { case (i, v) =>
+        InternalRow.fromSeq(v.toLong +: kept.indices.map(j => sorted(i).get(3 + j, kept(j).dataType)))
+      })
   }
 }

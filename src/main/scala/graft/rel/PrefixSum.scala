@@ -26,8 +26,13 @@ import org.apache.spark.sql.functions._
   */
 object PrefixSum {
 
-  /** Adds `out` = exclusive prefix sum of `value` in `order` order
-    * (ties in `order` must not exist — use a unique key). */
+  /** Adds `out` = exclusive prefix sum of `value` in `order` order.
+    * `order` should be a unique key; ties are not checked. The window's
+    * default RANGE frame sums a whole tie group at once, so every row of
+    * a group gets the group's running total minus its own value: over
+    * keys 1, 2, 2, 3 with value 1 the prefixes are 0, 2, 2, 3 — tied
+    * rows share one prefix and a dense range gets a gap (no row gets 1),
+    * so a tied key never numbers rows 0..n-1. */
   def exclusivePrefixSum(df: DataFrame, order: Column, value: Column,
       out: String = "prefix"): DataFrame = {
     val spark = df.sparkSession

@@ -10,7 +10,9 @@ import org.apache.spark.sql.catalyst.types.DataTypeUtils
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DoubleType, IntegerType, StringType, StructField}
+import org.apache.spark.sql.graftshim.ColumnShim
+import org.apache.spark.sql.types.{DoubleType, IntegerType, StringType, StructField,
+  StructType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** BM25 lexical retrieval — the classic sparse complement to the
@@ -159,6 +161,54 @@ object Bm25 {
   def buildIndex(docs: DataFrame): Bm25Index =
     buildIndexFromTokens(tokensOf(docs))
 
+  /** [[buildIndex]] over driver rows `docs` (doc_id, text), with no
+    * Spark job: the tokens are [[tokensOf]]'s expression folded on the
+    * driver ([[graft.io.Resident.rowsOf]]), and tf, dl, df, `n_docs` and
+    * `avgdl` are counted in Scala. They are integer-valued doubles (and
+    * `avgdl` one division of two), so no summation order can change
+    * them: the rows are [[buildIndex]]'s. Returns the four frames as
+    * driver rows. */
+  private[graft] def buildIndexRows(docs: DataFrame): Bm25Index = {
+    val spark = docs.sparkSession
+    val toks = graft.io.Resident.rowsOf(tokensOf(docs))
+    val doc = toks.output.head
+    val term = AttributeReference("term", StringType)()
+    val postings = Seq.newBuilder[InternalRow]
+    val docLen = Seq.newBuilder[InternalRow]
+    val dfs = scala.collection.mutable.LinkedHashMap.empty[UTF8String, Long]
+    // the explode + (doc_id, term) count, one document at a time (a
+    // NULL token array explodes to no row)
+    toks.data.filterNot(_.isNullAt(1)).foreach { r =>
+      val ts = r.getArray(1)
+      val tf = scala.collection.mutable.LinkedHashMap.empty[UTF8String, Long]
+      (0 until ts.numElements).foreach { i =>
+        val t = if (ts.isNullAt(i)) null else ts.getUTF8String(i)
+        tf(t) = tf.getOrElse(t, 0L) + 1
+      }
+      val id = r.get(0, doc.dataType)
+      tf.foreach { case (t, n) =>
+        postings += InternalRow(id, t, n.toDouble)
+        dfs(t) = dfs.getOrElse(t, 0L) + 1
+      }
+      if (tf.nonEmpty) docLen += InternalRow(id, ts.numElements.toDouble)
+    }
+    val lens = docLen.result()
+    val nDocs = lens.length
+    // avg(dl): the exact integer sum over the count, NULL on no rows
+    val avgdl = if (nDocs == 0) null else lens.map(_.getDouble(1)).sum / nDocs
+    def frame(cols: Seq[Attribute], rows: Seq[InternalRow]) =
+      graft.io.Resident.internalFrame(spark, cols, rows)
+    def double(name: String, nullable: Boolean = false) =
+      AttributeReference(name, DoubleType, nullable)()
+    Bm25Index(
+      frame(Seq(doc.newInstance(), term, double("tf")), postings.result()),
+      frame(Seq(doc.newInstance(), double("dl", nullable = true)), lens),
+      frame(Seq(term.newInstance(), double("df")),
+        dfs.iterator.map { case (t, n) => InternalRow(t, n.toDouble) }.toSeq),
+      frame(Seq(double("n_docs"), double("avgdl", nullable = true)),
+        Seq(InternalRow(nDocs.toDouble, avgdl))))
+  }
+
   /** Top-k docs per query, building the index inline. `queries`:
     * (query_id, qtext). Output: (query_id, rank, doc_id, score). */
   def topK(docs: DataFrame, queries: DataFrame, k: Int): DataFrame = {
@@ -181,14 +231,46 @@ object Bm25 {
     * batch; a term's postings are one bucket directory, so a serve of
     * an index too large to hold resident can read only its terms'
     * buckets. Mirrors [[graft.vector.Ivf.saveIndex]]. */
-  def saveIndex(docs: DataFrame, path: String): Unit = {
-    val idx = buildIndex(docs)
-    idx.postings.withColumn("bucket", bucketOf(col("term")))
-      .write.mode("overwrite").partitionBy("bucket").parquet(s"$path/postings")
-    idx.docLen.write.mode("overwrite").parquet(s"$path/doclen")
-    idx.dfreq.withColumn("bucket", bucketOf(col("term")))
-      .write.mode("overwrite").partitionBy("bucket").parquet(s"$path/dfreq")
-    idx.stats.coalesce(1).write.mode("overwrite").parquet(s"$path/stats")
+  def saveIndex(docs: DataFrame, path: String): Unit = writeIndex(buildIndex(docs), path)
+
+  /** Write the four files of [[saveIndex]] under `path`; returns each
+    * file's name and the schema it was written with. */
+  private def writeIndex(idx: Bm25Index, path: String): Seq[(String, StructType)] =
+    Seq(
+      ("postings", idx.postings.withColumn("bucket", bucketOf(col("term"))), Seq("bucket")),
+      ("doclen", idx.docLen, Nil),
+      ("dfreq", idx.dfreq.withColumn("bucket", bucketOf(col("term"))), Seq("bucket")),
+      ("stats", idx.stats.coalesce(1), Nil)
+    ).map { case (name, df, parts) =>
+      df.write.mode("overwrite").partitionBy(parts: _*).parquet(s"$path/$name")
+      (name, df.schema)
+    }
+
+  /** Save an index of driver-row frames (from [[buildIndexRows]]) to
+    * `path`, in [[saveIndex]]'s layout, and hold it as the
+    * [[loadIndex]] entry of `path`: the four files as lazy parquet reads
+    * (their schemas given, so opening them runs no schema-inference
+    * job) and the resident [[Segments]] built now from the same rows,
+    * so the first serve runs no job. */
+  private[graft] def saveResident(idx: Bm25Index, path: String): Unit = {
+    val spark = idx.postings.sparkSession
+    // postings and df rows in bucket order: each slice of the local scan
+    // then writes its own few bucket directories, and the slices write
+    // in parallel
+    def byBucket(df: DataFrame) = {
+      val rows = graft.io.Resident.rowsOf(df)
+      val term = rows.output.indexWhere(_.name == "term")
+      graft.io.Resident.internalFrame(spark, rows.output, rows.data.sortBy(r =>
+        graft.vector.HashingEmbedder.bucket(r.getUTF8String(term).toString, IndexBuckets)))
+    }
+    val written = writeIndex(Bm25Index(byBucket(idx.postings), idx.docLen.coalesce(1),
+      byBucket(idx.dfreq), idx.stats), path)
+    val Seq(postings, docLen, dfreq, stats) = written.map { case (name, schema) =>
+      spark.read.schema(ColumnShim.asNullable(schema)).parquet(s"$path/$name")
+    }
+    val disk = Bm25Index(postings, docLen, dfreq, stats)
+    val segments = loadSegments(idx, postings.schema("doc_id"))
+    loaded.getOrBuild((graft.io.Sessions.uuid(spark), path))(new Loaded(disk, segments))
   }
 
   /** One term's resident postings: doc ids (ascending) with their tf
@@ -231,8 +313,9 @@ object Bm25 {
 
   /** Collect an index's four frames into [[Segments]]; postings whose
     * term has no df or whose doc has no length are dropped, as the
-    * serve joins drop them. */
-  private def loadSegments(idx: Bm25Index): Segments = {
+    * serve joins drop them. Over driver rows the collects run no job.
+    * `docField` is the `doc_id` field the served answers carry. */
+  private def loadSegments(idx: Bm25Index, docField: StructField): Segments = {
     import idx.postings.sparkSession.implicits._
     val doc = col("doc_id").cast("long")
     val stats = idx.stats.select(col("n_docs"), col("avgdl")).collect()
@@ -252,13 +335,15 @@ object Bm25 {
         }
     val (nDocs, avgdl) = stats.headOption.fold((0.0, Double.NaN))(r =>
       (r.getDouble(0), if (r.isNullAt(1)) Double.NaN else r.getDouble(1)))
-    new Segments(idx.postings.schema("doc_id"), terms, nDocs, avgdl)
+    new Segments(docField, terms, nDocs, avgdl)
   }
+
+
 
   /** A memoized load: the frames [[loadIndex]] hands out, and their
     * resident [[Segments]], built once on the first serve. */
-  private final class Loaded(val index: Bm25Index) {
-    lazy val segments: Segments = loadSegments(index)
+  private final class Loaded(val index: Bm25Index, build: => Segments) {
+    lazy val segments: Segments = build
   }
 
   /** Loads per (session UUID, path), in the engine's one
@@ -280,11 +365,12 @@ object Bm25 {
     // Sessions.uuid, not identityHashCode — unique per session and
     // never reused after GC (see graft.io.Sessions)
     loaded.getOrBuild((graft.io.Sessions.uuid(spark), path)) {
-      new Loaded(Bm25Index(
+      val idx = Bm25Index(
         spark.read.parquet(s"$path/postings"),
         spark.read.parquet(s"$path/doclen"),
         spark.read.parquet(s"$path/dfreq"),
-        spark.read.parquet(s"$path/stats")))
+        spark.read.parquet(s"$path/stats"))
+      new Loaded(idx, loadSegments(idx, idx.postings.schema("doc_id")))
     }.index
 
   /** The resident [[Segments]] of an index: its memo entry's, found by
@@ -295,7 +381,7 @@ object Bm25 {
     loaded.find(_.index eq idx).fold {
       logger.warn("a BM25 index not held by the loadIndex memo is served: " +
         "collecting all of it again")
-      loadSegments(idx)
+      loadSegments(idx, idx.postings.schema("doc_id"))
     }(_.segments)
 
   /** Serve top-k from a loaded index by the resident scorer, with no

@@ -7,6 +7,7 @@ import org.apache.spark.sql.catalyst.expressions.AttributeReference
 import org.apache.spark.sql.catalyst.types.DataTypeUtils
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftshim.ColumnShim
 import org.apache.spark.sql.types.{DoubleType, IntegerType, StructField}
 
 /** IVF (inverted-file) approximate nearest neighbor — the second
@@ -191,6 +192,53 @@ object Ivf {
     } finally fit.unpersist(blocking = false)
   }
 
+  /** [[boundedIndex]] over driver rows, with no Spark job: `corpus` is
+    * a frame of driver rows ([[Resident.driverRows]]) whose `vec_id`s
+    * are 0..n-1. [[Quantize.int8]] and [[FloatVecExpr.nearestCellF]]
+    * are Spark's own expressions, evaluated by folding a projection over
+    * the rows; only the per-cell sums, exact `long`s, and the one
+    * `sum / count` division per coordinate are Scala, so the centroids
+    * and cells are [[boundedIndex]]'s bit for bit. Returns the assigned
+    * corpus (with `qv` and `cell`) as driver rows, and the centroids. */
+  private[graft] def boundedIndexRows(corpus: DataFrame, nCells: Int,
+      rounds: Int): (DataFrame, Array[Array[Double]]) = {
+    val spark = corpus.sparkSession
+    val q = Resident.rowsOf(corpus.withColumn("qv", Quantize.int8(col("embedding"))))
+    val at = (name: String) => q.output.indexWhere(_.name == name)
+    val (idAt, qvAt) = (at("vec_id"), at("qv"))
+    val n = q.data.length
+    val k = math.min(nCells, n)
+    // cell c is seeded from vec_id c, as boundedIndex requires
+    val seeds = q.data.sortBy(_.getLong(idAt)).take(k)
+    require(seeds.nonEmpty && seeds.indices.forall(i => seeds(i).getLong(idAt) == i),
+      s"boundedIndex needs vec_ids 0..${nCells - 1} present (0..n-1 on an " +
+        s"n-row corpus), found ${seeds.map(_.getLong(idAt)).mkString(",")}")
+    require(q.data.forall(!_.isNullAt(qvAt)), "boundedIndex needs non-NULL embeddings")
+    val frame = Resident.internalFrame(spark, q.output, q.data)
+    def cells(cents: Array[Array[Double]]) =
+      Resident.rowsOf(frame.select(nearestCellExpr(col("qv"), cents))).data.map(_.getInt(0))
+    var cents: Array[Array[Double]] = seeds.map { r =>
+      val a = r.getArray(qvAt)
+      Array.tabulate(a.numElements)(a.getInt(_).toDouble)
+    }.toArray
+    val dim = cents(0).length
+    for (_ <- 1 to rounds) {
+      // the round aggregate: per cell the row count and dim exact sums
+      val counts = new Array[Long](cents.length)
+      val sums = Array.fill(cents.length)(new Array[Long](dim))
+      q.data.zip(cells(cents)).foreach { case (r, c) =>
+        val a = r.getArray(qvAt)
+        counts(c) += 1
+        var j = 0
+        while (j < dim) { sums(c)(j) += a.getInt(j); j += 1 }
+      }
+      cents = cents.indices.map(c =>
+        if (counts(c) == 0) cents(c) else sums(c).map(_.toDouble / counts(c))).toArray
+    }
+    val assigned = Resident.rowsOf(frame.withColumn("cell", nearestCellExpr(col("qv"), cents)))
+    (Resident.internalFrame(spark, assigned.output, assigned.data), cents)
+  }
+
   /** Assign each corpus row to its quantizer cell, fit on the
     * [[DefaultMaxSample]] lowest vec_ids.
     * Returns (assignedCorpus, centroids) — reuse across queries. */
@@ -355,9 +403,10 @@ object Ivf {
 
   /** Collect a loaded corpus into [[Segments]] — embeddings decode
     * straight into primitive float arrays (NULL elements, which no
-    * embedder emits, read as 0). */
-  private def loadSegments(corpus: DataFrame,
-      centroids: Array[Array[Double]]): Segments = {
+    * embedder emits, read as 0). Over driver rows the collects run no
+    * job. `idField` is the `vec_id` field the served answers carry. */
+  private def loadSegments(corpus: DataFrame, centroids: Array[Array[Double]],
+      idField: StructField): Segments = {
     import corpus.sparkSession.implicits._
     val id = col("vec_id").cast("long")
     val cells = corpus.select(id, col("cell"), col("embedding"))
@@ -373,15 +422,16 @@ object Ivf {
         .as[(Long, String, String)].collect()
         .iterator.map { case (v, src, text) => v -> ((src, text)) }.toMap
     val cents = centroids.map(_.map(_.toFloat))
-    new Segments(corpus.schema("vec_id"), cells, cents, cents.map(norm), citations)
+    new Segments(idField, cells, cents, cents.map(norm), citations)
   }
 
   /** A memoized load: the pair [[loadIndex]] hands out, and its
     * resident [[Segments]], built once on the first serve (a lazy val:
     * concurrent first serves wait for one build, and every serve sees
     * the fully built segments). */
-  private final class Loaded(val pair: (DataFrame, Array[Array[Double]])) {
-    lazy val segments: Segments = loadSegments(pair._1, pair._2)
+  private final class Loaded(val pair: (DataFrame, Array[Array[Double]]),
+      build: => Segments) {
+    lazy val segments: Segments = build
   }
 
   /** Loads per (session UUID, path), in the engine's one
@@ -408,8 +458,31 @@ object Ivf {
       val cents = spark.read.parquet(s"$path/centroids")
         .orderBy("cell").collect()
         .map(_.getAs[scala.collection.Seq[Double]]("centroid").toArray)
-      new Loaded((corpus, cents))
+      new Loaded((corpus, cents), loadSegments(corpus, cents, corpus.schema("vec_id")))
     }.pair
+
+  /** Save an index whose assigned corpus is driver rows (from
+    * [[boundedIndexRows]]) to `path`, in [[saveIndex]]'s layout, and hold
+    * it as the [[loadIndex]] entry of `path`: the corpus as a lazy
+    * parquet read (its schema given, so opening it runs no
+    * schema-inference job), the centroids as fit, and the resident
+    * [[Segments]] built now from the same rows, so the first serve runs
+    * no job. */
+  private[graft] def saveResident(assigned: DataFrame,
+      centroids: Array[Array[Double]], path: String): Unit = {
+    val spark = assigned.sparkSession
+    // rows in cell order: each slice of the local scan then writes its
+    // own few cell directories, and the slices write in parallel
+    val rows = Resident.rowsOf(assigned)
+    val cell = rows.output.indexWhere(_.name == "cell")
+    saveIndex(Resident.internalFrame(spark, rows.output, rows.data.sortBy(_.getInt(cell))),
+      centroids, path)
+    val corpus = spark.read.schema(ColumnShim.asNullable(assigned.schema))
+      .parquet(s"$path/corpus")
+    val segments = loadSegments(assigned, centroids, corpus.schema("vec_id"))
+    loaded.getOrBuild((graft.io.Sessions.uuid(spark), path))(
+      new Loaded((corpus, centroids), segments))
+  }
 
   /** The resident [[Segments]] of a loaded pair: its memo entry's,
     * found by reference. A pair not held there — not from [[loadIndex]],
@@ -421,7 +494,7 @@ object Ivf {
       .fold {
         logger.warn("an IVF pair not held by the loadIndex memo is served: " +
           "collecting its whole store again")
-        loadSegments(corpus, centroids)
+        loadSegments(corpus, centroids, corpus.schema("vec_id"))
       }(_.segments)
 
   /** One saved index per cache key per JVM (build-once-serve-many,
@@ -438,9 +511,8 @@ object Ivf {
 
   // corpus is BY-NAME through the ensure* surface (evaluated at most
   // once, via the lazy val in each caller): an epoch-hit serve must
-  // never pay the corpus CONSTRUCTION — the RAG store's prefix-sum
-  // enumeration runs a totals job at plan-build time, so even
-  // building the DataFrame is a Spark job there (SavedIndex doc)
+  // never pay the corpus CONSTRUCTION, which can itself be a Spark job
+  // (SavedIndex doc)
   private def ensureWith(cacheKey: String, corpus: => DataFrame,
       epoch: Option[String])(
       build: () => (DataFrame, Array[Array[Double]])): String =

@@ -39,6 +39,12 @@ object ColumnShim {
       : org.apache.spark.sql.catalyst.plans.logical.LogicalPlan =
     df.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]].logicalPlan
 
+  /** `schema` with every field, element and value nullable: the schema
+    * a file read reports for the files a frame of `schema` wrote
+    * (`asNullable` is private[spark]). */
+  def asNullable(schema: org.apache.spark.sql.types.StructType)
+      : org.apache.spark.sql.types.StructType = schema.asNullable
+
   /** The session's own SQL conf (`sessionState` is private[sql]). */
   def sqlConf(spark: org.apache.spark.sql.SparkSession): org.apache.spark.sql.internal.SQLConf =
     spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].sessionState.conf

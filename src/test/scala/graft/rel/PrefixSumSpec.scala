@@ -24,6 +24,16 @@ class PrefixSumSpec extends AnyFunSuite with SparkTestBase {
     }
   }
 
+  test("tied order keys share one prefix and leave a gap in the range") {
+    val df = Seq((1L, "a"), (2L, "b"), (2L, "c"), (3L, "d")).toDF("k", "tag")
+    for (parts <- Seq(1, 3)) {
+      val got = PrefixSum.exclusivePrefixSum(df.repartition(parts), col("k"), lit(1L))
+        .select("tag", "prefix").as[(String, Long)].collect().toMap
+      assert(got == Map("a" -> 0L, "b" -> 2L, "c" -> 2L, "d" -> 3L),
+        s"input partitions=$parts")
+    }
+  }
+
   test("token shards: contiguous in key order, first shard starts at 0") {
     val df = (1L to 200L).map(i => (i, 10L)).toDF("k", "n")
     val shards = PrefixSum.tokenShards(df, col("k"), col("n"), budget = 170L)

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.{EliminateSubqueryAliases, EliminateView,
   Resolver, UnresolvedAttribute}
+import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 import org.apache.spark.sql.catalyst.expressions.{Attribute, CommonExpressionRef, With}
 import org.apache.spark.sql.catalyst.optimizer.{ConvertToLocalRelation, ReplaceExpressions}
 import org.apache.spark.sql.catalyst.plans.logical.{LocalRelation, LogicalPlan}
@@ -27,7 +28,9 @@ import org.apache.spark.unsafe.types.UTF8String
   * [[graft.vector.VectorOps.assembleContext]], [[graft.rel.Rel
   * .valueCounts]]) makes, the reading of their input rows
   * ([[columns]]), and the LocalRelation frames they and [[ResultCache]]
-  * return ([[internalFrame]]). */
+  * return ([[internalFrame]]): pre-planned, so a caller's `collect` of
+  * one runs no optimizer and no planner, and resolves no Row encoder
+  * after the first frame of its schema in a session. */
 object Resident {
 
   /** Spark's `Divide` on doubles, in `DivModLike.eval`'s order: a NULL
@@ -120,11 +123,17 @@ object Resident {
       s"resident index ids must be int or bigint, got ${other.catalogString}")
   }
 
+  /** An integral id value (as `int` or `bigint` columns hold them) as a
+    * Long: the inverse of [[idValue]]. */
+  def idAt(r: InternalRow, i: Int, t: DataType): Long =
+    r.get(i, t).asInstanceOf[Number].longValue
+
   /** Whether the session's division raises on zero (Spark 4 default). */
   def ansi(spark: SparkSession): Boolean = ColumnShim.sqlConf(spark).ansiEnabled
 
-  /** The rows behind `df` when it is driver rows: a [[localFrame]] or
-    * [[internalFrame]], a [[ResultCache]] row entry, a temp view over
+  /** The rows behind `df` when it is driver rows: a LocalRelation frame
+    * ([[internalFrame]], `createDataFrame` over a local `Seq`), a
+    * [[ResultCache]] row entry, a temp view over
     * one, or a projection, filter or limit of one. Read from the
     * ANALYZED plan, which every Dataset already holds: it is
     * [[normalize]]d, and Catalyst's own `ConvertToLocalRelation` then
@@ -246,16 +255,35 @@ object Resident {
   def string(r: InternalRow, i: Int): String =
     if (r.isNullAt(i)) null else r.getUTF8String(i).toString
 
-  /** A LocalRelation frame over external rows: collecting it, or a
-    * projection or filter over it, runs no Spark job. */
-  def localFrame(spark: SparkSession, schema: StructType,
-      rows: Seq[Row]): DataFrame =
-    spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
+  /** Row encoders resolved and bound per (session, schema,
+    * `spark.sql.datetime.java8API.enabled`), which is all an ordinary
+    * frame's Row encoder depends on: a warm request's frames have the
+    * same few schemas, so each resolves once per session instead of once
+    * per frame. A handful of schemas are live at a time; the bound only
+    * keeps a long-lived session's history from growing. */
+  private val encoders = new Memo[(String, StructType, Boolean), ExpressionEncoder[Row]](
+    "Resident.encoders", 64)
+
+  /** The encoder memo's counters: one build per (session, schema,
+    * datetime API) while it holds them. */
+  def encoderStats: Memo.Stats = encoders.stats
 
   /** A LocalRelation frame over Catalyst rows that already hold
-    * `output`'s internal values — no conversion from external rows, and
-    * building it only analyzes the bare relation. */
+    * `output`'s internal values — no conversion from external rows —
+    * and pre-planned ([[ColumnShim.prePlanned]]): building it runs no
+    * analyzer, and its `collect` runs no optimizer and no planner and
+    * deserializes with the session's memoized Row encoder for its
+    * schema ([[encoderStats]]), read on the frame's first collect.
+    * Every other action, and every frame derived from it, plans as
+    * Spark plans it; [[driverRows]] reads it and what is derived from it
+    * as it reads any LocalRelation frame. */
   def internalFrame(spark: SparkSession, output: Seq[Attribute],
-      rows: Seq[InternalRow]): DataFrame =
-    org.apache.spark.sql.graftshim.ColumnShim.ofRows(spark, LocalRelation(output, rows))
+      rows: Seq[InternalRow]): DataFrame = {
+    val relation = LocalRelation(output, rows)
+    ColumnShim.prePlanned(spark, relation, () => {
+      val key = (Sessions.uuid(spark), relation.schema,
+        ColumnShim.sqlConf(spark).datetimeJava8ApiEnabled)
+      encoders.getOrBuild(key)(ColumnShim.rowEncoder(spark, key._2))
+    })
+  }
 }

@@ -162,8 +162,8 @@ object ResultCache {
   private def rowEntry(df: DataFrame, rows: Seq[UnsafeRow], deadline: Long): Entry = {
     val frame = Resident.internalFrame(df.sparkSession,
       df.queryExecution.analyzed.output.map(_.newInstance()), rows)
-    // charged twice: the frame's first collect plans a LocalTableScan,
-    // which keeps its own copy of the rows
+    // charged twice: the frame's pre-planned LocalTableScan keeps its
+    // own copy of the rows, made on its first execution
     Entry(frame, deadline, Some(2 * rows.iterator.map(_.getSizeInBytes.toLong).sum))
   }
 

@@ -160,9 +160,13 @@ object RagPipeline {
     * context runs no Spark job, persists nothing and runs no optimizer
     * batch: the query frame is driver rows read from its analyzed plan,
     * the scoring is plain Scala, and each answer is handed on as a
-    * LocalRelation that is only analyzed. What a warm request still pays
-    * is the caller's own frame construction (`toDF`) and the planning of
-    * its final `collect`.
+    * pre-planned LocalRelation frame ([[graft.io.Resident.internalFrame]]).
+    * The caller's final `collect` of the context is not planned either:
+    * it runs no analyzer, optimizer or planner, and deserializes with the
+    * session's Row encoder for the context schema, resolved on the first
+    * request. What a warm request still pays is the caller's own frame
+    * construction (`toDF`, which analyzes) and that collect's SQL
+    * execution and row conversion.
     *
     * Memory: the resident copy holds the store's embeddings, texts
     * and postings on the driver — roughly the saved pair's

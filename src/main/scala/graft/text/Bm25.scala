@@ -311,34 +311,39 @@ object Bm25 {
       }
   }
 
-  /** Collect an index's four frames into [[Segments]]; postings whose
-    * term has no df or whose doc has no length are dropped, as the
-    * serve joins drop them. Over driver rows the collects run no job.
-    * `docField` is the `doc_id` field the served answers carry. */
+  /** Read an index's four frames into [[Segments]] with
+    * [[graft.io.Resident.columns]]: driver rows (the build's) are read
+    * from their folded plans, loaded parquet files by one job each.
+    * Postings whose term has no df or whose doc has no length are
+    * dropped, as the serve joins drop them. `docField` is the `doc_id`
+    * field the served answers carry. */
   private def loadSegments(idx: Bm25Index, docField: StructField): Segments = {
-    import idx.postings.sparkSession.implicits._
-    val doc = col("doc_id").cast("long")
-    val stats = idx.stats.select(col("n_docs"), col("avgdl")).collect()
-    val dfs = idx.dfreq.select(col("term"), col("df")).as[(String, Double)]
-      .collect().toMap
-    val dls = idx.docLen.select(doc, col("dl")).as[(Long, Double)]
-      .collect().toMap
+    import graft.io.Resident
+    val (_, stats) = Resident.columns(idx.stats, "n_docs", "avgdl")
+    val dfs = Resident.columns(idx.dfreq, "term", "df")._2.iterator
+      .map(r => Resident.string(r, 0) -> r.getDouble(1)).toMap
+    val (dlDoc +: _, dlRows) = Resident.columns(idx.docLen, "doc_id", "dl")
+    val dls = dlRows.iterator
+      .map(r => Resident.idAt(r, 0, dlDoc.dataType) -> r.getDouble(1)).toMap
     val terms =
       if (stats.isEmpty) Map.empty[String, TermRows]
-      else idx.postings.select(col("term"), doc, col("tf"))
-        .as[(String, Long, Double)].collect()
-        .groupBy(_._1).flatMap { case (t, rs) =>
-          dfs.get(t).map { df =>
-            val ps = rs.filter(p => dls.contains(p._2)).sortBy(_._2)
-            t -> new TermRows(df, ps.map(_._2), ps.map(_._3), ps.map(p => dls(p._2)))
+      else {
+        val (Seq(_, doc, _), postings) =
+          Resident.columns(idx.postings, "term", "doc_id", "tf")
+        postings.map(r => (Resident.string(r, 0), Resident.idAt(r, 1, doc.dataType),
+            r.getDouble(2)))
+          .groupBy(_._1).flatMap { case (t, rs) =>
+            dfs.get(t).map { df =>
+              val ps = rs.filter(p => dls.contains(p._2)).sortBy(_._2)
+              t -> new TermRows(df, ps.map(_._2).toArray, ps.map(_._3).toArray,
+                ps.map(p => dls(p._2)).toArray)
+            }
           }
-        }
+      }
     val (nDocs, avgdl) = stats.headOption.fold((0.0, Double.NaN))(r =>
       (r.getDouble(0), if (r.isNullAt(1)) Double.NaN else r.getDouble(1)))
     new Segments(docField, terms, nDocs, avgdl)
   }
-
-
 
   /** A memoized load: the frames [[loadIndex]] hands out, and their
     * resident [[Segments]], built once on the first serve. */

@@ -401,26 +401,26 @@ object Ivf {
   private def mul(a: java.lang.Double, b: java.lang.Double): java.lang.Double =
     if (a == null || b == null) null else a * b
 
-  /** Collect a loaded corpus into [[Segments]] — embeddings decode
-    * straight into primitive float arrays (NULL elements, which no
-    * embedder emits, read as 0). Over driver rows the collects run no
-    * job. `idField` is the `vec_id` field the served answers carry. */
+  /** Read a corpus into [[Segments]] with [[Resident.columns]]: driver
+    * rows (the build's) are read from their folded plan, a loaded parquet
+    * corpus by one job. Embeddings decode straight into primitive float
+    * arrays (NULL elements, which no embedder emits, read as 0).
+    * `idField` is the `vec_id` field the served answers carry. */
   private def loadSegments(corpus: DataFrame, centroids: Array[Array[Double]],
       idField: StructField): Segments = {
-    import corpus.sparkSession.implicits._
-    val id = col("vec_id").cast("long")
-    val cells = corpus.select(id, col("cell"), col("embedding"))
-      .as[(Long, Int, Array[Float])].collect()
-      .groupBy(_._2).map { case (c, rs) =>
-        val sorted = rs.sortBy(_._1)
-        c -> new CellRows(sorted.map(_._1), sorted.map(_._3), sorted.map(r => norm(r._3)))
-      }
+    val cited = Seq("source", "text").forall(corpus.columns.contains)
+    val (id +: _, rows) = Resident.columns(corpus,
+      Seq("vec_id", "cell", "embedding") ++ (if (cited) Seq("source", "text") else Nil): _*)
+    def vecId(r: InternalRow) = Resident.idAt(r, 0, id.dataType)
+    val cells = rows.groupBy(_.getInt(1)).map { case (c, rs) =>
+      val sorted = rs.map(r => (vecId(r), Resident.floats(r, 2))).sortBy(_._1)
+      c -> new CellRows(sorted.map(_._1).toArray, sorted.map(_._2).toArray,
+        sorted.map(r => norm(r._2)).toArray)
+    }
     val citations =
-      if (!Seq("source", "text").forall(corpus.columns.contains))
-        Map.empty[Long, (String, String)]
-      else corpus.select(id, col("source"), col("text"))
-        .as[(Long, String, String)].collect()
-        .iterator.map { case (v, src, text) => v -> ((src, text)) }.toMap
+      if (!cited) Map.empty[Long, (String, String)]
+      else rows.iterator.map(r =>
+        vecId(r) -> ((Resident.string(r, 3), Resident.string(r, 4)))).toMap
     val cents = centroids.map(_.map(_.toFloat))
     new Segments(idField, cells, cents, cents.map(norm), citations)
   }

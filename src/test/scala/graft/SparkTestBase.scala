@@ -22,6 +22,27 @@ trait SparkTestBase {
   lazy val spark: SparkSession = SparkTestBase.spark
   def sf: String = SparkTestBase.sf
 
+  /** A LocalRelation frame over external rows (`createDataFrame` over a
+    * local list): collecting it, or a projection or filter over it, runs
+    * no Spark job. */
+  protected def localFrame(schema: org.apache.spark.sql.types.StructType,
+      rows: Seq[org.apache.spark.sql.Row]): org.apache.spark.sql.DataFrame =
+    spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
+
+  /** Runs `body` with Catalyst's rule metrics reset; returns its value
+    * and the rules it ran by those metrics (`RuleExecutor`): analyzer
+    * and optimizer rules, but not the expression canonicalization that
+    * code generation runs for a projection. */
+  protected def rulesDuring[T](body: => T): (T, Seq[String]) = {
+    import org.apache.spark.sql.catalyst.rules.RuleExecutor
+    RuleExecutor.resetMetrics()
+    val v = body
+    (v, RuleExecutor.dumpTimeSpent().linesIterator.map(_.trim.takeWhile(_ != ' '))
+      .filter(n => n.startsWith("org.apache.spark.") &&
+        !n.startsWith("org.apache.spark.sql.catalyst.expressions.codegen."))
+      .toSeq.distinct)
+  }
+
   /** A fresh temp directory, deleted when the JVM exits. */
   protected def tempDir(prefix: String): String = graft.io.TempDirs.create(prefix)
 

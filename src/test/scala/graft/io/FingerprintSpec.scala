@@ -25,7 +25,7 @@ class FingerprintSpec extends AnyFunSuite with SparkTestBase {
 
   test("property: the fingerprint of driver rows runs no job and equals the parquet round trip's") {
     val prop = Prop.forAll(rows) { rs =>
-      val local = Resident.localFrame(spark, schema, rs)
+      val local = localFrame(schema, rs)
       val dir = tempDir("graft-fingerprint")
       local.write.mode("overwrite").parquet(dir)
       val read = spark.read.parquet(dir)
@@ -38,14 +38,14 @@ class FingerprintSpec extends AnyFunSuite with SparkTestBase {
   }
 
   test("an empty frame fingerprints as 0:0:0 both ways, and an edited row moves it") {
-    val empty = Resident.localFrame(spark, schema, Nil)
+    val empty = localFrame(schema, Nil)
     val dir = tempDir("graft-fingerprint")
     empty.write.mode("overwrite").parquet(dir)
     assert(Fingerprint.of(empty) == "0:0:0")
     assert(Fingerprint.of(spark.read.parquet(dir)) == "0:0:0")
     val one = Seq(Row(1L, "😀", 0.5, Array(1f, 2f, 3f)))
     val edited = Seq(Row(1L, "😀", 0.5, Array(1f, 2f, 4f)))
-    assert(Fingerprint.of(Resident.localFrame(spark, schema, one)) !=
-      Fingerprint.of(Resident.localFrame(spark, schema, edited)))
+    assert(Fingerprint.of(localFrame(schema, one)) !=
+      Fingerprint.of(localFrame(schema, edited)))
   }
 }

@@ -7,7 +7,6 @@ import org.apache.spark.sql.types._
 import org.scalacheck.{Gen, Prop, Test => SCTest}
 import org.scalatest.funsuite.AnyFunSuite
 import graft.SparkTestBase
-import graft.io.Resident
 import graft.text.Bm25
 import graft.vector.{HashingEmbedder, Ivf}
 
@@ -49,7 +48,7 @@ class IndexedBuildSpec extends AnyFunSuite with SparkTestBase {
     val schema = StructType(Seq(StructField("id", StringType), StructField("doc_id", LongType),
       StructField("chunk_index", IntegerType), StructField("source", StringType),
       StructField("text", StringType)))
-    val df = Resident.localFrame(spark, schema, rows.map(r => Row(r._1, r._2, r._3, r._4, r._5)))
+    val df = localFrame(schema, rows.map(r => Row(r._1, r._2, r._3, r._4, r._5)))
     emb.embedUdf(if (local) df else df.repartition(3), "text", "embedding")
   }
 
@@ -111,7 +110,7 @@ class IndexedBuildSpec extends AnyFunSuite with SparkTestBase {
       val (enumerated, assigned, cents, bm) = sparkBuild(store)
       val key = s"indexed-build-spec-${n.incrementAndGet()}"
       val pair @ (disk, dCents, dBm) = RagPipeline.ensureIndexedServe(spark, store, key, Some("v1"))
-      val queries = emb.embed(Resident.localFrame(spark,
+      val queries = emb.embed(localFrame(
         StructType(Seq(StructField("query_id", IntegerType), StructField("query_text", StringType))),
         queryRows.map { case (q, t) => Row(q, t) }), "query_text", "q_embedding")
       val served = withAnsiOff(RagPipeline.serveRows(pair, queries.collect().toSeq.map(r =>

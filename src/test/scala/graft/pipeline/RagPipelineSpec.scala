@@ -163,6 +163,32 @@ class RagPipelineSpec extends AnyFunSuite with SparkTestBase {
     assert(served.map(_.toSeq).toSeq == inline.map(_.toSeq).toSeq)
   }
 
+  test("warm serves resolve one Row encoder per (session, schema); a datetime API flip misses") {
+    import spark.implicits._
+    val emb = HashingEmbedder(64)
+    val epoch = Some("spec-encoders-v1")
+    val base = RagPipeline.indexedCacheKeyBase("ragpipeline-spec-encoders", "simple", emb)
+    val queries = emb.embed(Seq(("table scan filter", 0)).toDF("query_text", "query_id"),
+      textCol = "query_text", out = "q_embedding")
+    def request() = VectorOps.assembleContext(RagPipeline.hybridIndexedServe(spark,
+      RagPipeline.buildStore(docs.limit(20), "simple", emb), queries, base, epoch)).collect()
+    val first = request()
+    val before = graft.io.Resident.encoderStats
+    (1 to 4).foreach(_ => assert(request().toSeq == first.toSeq))
+    val warm = graft.io.Resident.encoderStats
+    assert(warm.builds == before.builds && warm.misses == before.misses &&
+      warm.hits == before.hits + 4, s"$before -> $warm")
+    val key = "spark.sql.datetime.java8API.enabled"
+    val setting = spark.conf.get(key)
+    try {
+      spark.conf.set(key, (!setting.toBoolean).toString)
+      assert(request().toSeq == first.toSeq)
+    } finally spark.conf.set(key, setting)
+    val flipped = graft.io.Resident.encoderStats
+    assert(flipped.misses == warm.misses + 1 && flipped.builds == warm.builds + 1,
+      s"$warm -> $flipped")
+  }
+
   test("ensureIndexedServe: a cold build of a ragbench-shaped store runs at most 8 Spark jobs, and the first serve none") {
     import spark.implicits._
     // the benchmark's store: kept parquet -> recursive chunks -> hashed
@@ -212,13 +238,19 @@ class RagPipelineSpec extends AnyFunSuite with SparkTestBase {
       s"a warm resident serve and its context must submit no Spark job: $jobs")
     // nor does it optimize a frame of its own before the caller's
     // collect: the query frame is read from its analyzed plan, and each
-    // answer is a LocalRelation that is only analyzed
-    org.apache.spark.sql.catalyst.rules.RuleExecutor.resetMetrics()
-    VectorOps.assembleContext(serve())
-    val ruleRuns = org.apache.spark.sql.catalyst.rules.RuleExecutor.dumpTimeSpent()
-    assert(Seq("ColumnPruning", "CollapseProject", "ConvertToLocalRelation",
-      "PushDownPredicates").forall(r => !ruleRuns.contains(r)),
-      s"a warm serve and its context must run no optimizer batch:\n$ruleRuns")
+    // answer is a pre-planned LocalRelation frame
+    val (ctx, ruleRuns) = rulesDuring(VectorOps.assembleContext(serve()))
+    assert(!ruleRuns.exists(_.contains(".optimizer.")),
+      s"a warm serve and its context must run no optimizer batch: $ruleRuns")
+    // and the caller's collect of the context optimizes, plans and
+    // resolves nothing: its plans are fixed, its Row encoder memoized
+    val encoders = graft.io.Resident.encoderStats
+    val (collected, collectRuns) = rulesDuring(ctx.collect())
+    assert(collectRuns.isEmpty, s"the context's collect ran rules: $collectRuns")
+    assert(ctx.queryExecution.tracker.phases.isEmpty,
+      s"the context's collect ran phases: ${ctx.queryExecution.tracker.phases.keySet}")
+    assert(graft.io.Resident.encoderStats.builds == encoders.builds)
+    assert(byQuery(collected) == byQuery(context))
     assert(sc.getRDDStorageInfo.map(_.id).toSet == cachedBefore,
       "a warm serve must persist nothing")
     assert(warm.map(_.toSeq).toSeq == cold.map(_.toSeq).toSeq)

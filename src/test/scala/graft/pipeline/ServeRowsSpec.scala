@@ -63,7 +63,7 @@ class ServeRowsSpec extends AnyFunSuite with SparkTestBase {
 
   private def frame(idType: DataType, rows: Seq[(Int, String)],
       idName: String = "query_id"): DataFrame =
-    Resident.localFrame(spark,
+    localFrame(
       StructType(Seq(StructField(idName, idType, nullable = false),
         StructField("query_text", StringType))),
       rows.map { case (id, t) => Row(if (idType == LongType) id.toLong else id, t) })

@@ -88,7 +88,7 @@ class RelSpec extends AnyFunSuite with SparkTestBase {
       filtered <- Gen.oneOf(false, true)
     } yield (t, vs, filtered)
     val prop = Prop.forAll(cases) { case (t, vs, filtered) =>
-      val base = Resident.localFrame(spark,
+      val base = localFrame(
         StructType(Seq(StructField("v", t), StructField("x", IntegerType))),
         vs.zipWithIndex.map { case (v, i) => Row(v, i) })
       // a filter and projection of driver rows still folds to them; the
@@ -105,7 +105,7 @@ class RelSpec extends AnyFunSuite with SparkTestBase {
     }
     val res = SCTest.check(SCTest.Parameters.default.withMinSuccessfulTests(50), prop)
     assert(res.passed, res.status.toString)
-    val empty = Resident.localFrame(spark, StructType(Seq(StructField("v", StringType))), Nil)
+    val empty = localFrame(StructType(Seq(StructField("v", StringType))), Nil)
     val got = Rel.valueCounts(empty, "v")
     assert(Resident.driverRows(got).isDefined && got.collect().isEmpty &&
       got.schema == Rel.valueCountsAggregate(empty, "v").schema)
@@ -114,7 +114,7 @@ class RelSpec extends AnyFunSuite with SparkTestBase {
   test("valueCounts over a date-filtered page of driver rows still counts on the driver") {
     // to_date is runtime-replaceable: the filter folds only once it is
     // replaced, as the optimizer's first batch replaces it
-    val page = Resident.localFrame(spark,
+    val page = localFrame(
       StructType(Seq(StructField("d", StringType), StructField("v", StringType))),
       Seq(Row("2024-01-05", "a"), Row("2024-02-01", "b"), Row("2023-12-31", "a"),
         Row("2024-03-01", "a")))
@@ -129,7 +129,7 @@ class RelSpec extends AnyFunSuite with SparkTestBase {
 
   test("valueCounts over SQL on a temp view of driver rows runs no Spark job") {
     // a temp view adds a View node, and BETWEEN analyzes to a With
-    Resident.localFrame(spark,
+    localFrame(
       StructType(Seq(StructField("x", IntegerType), StructField("s", StringType))),
       (1 to 8).map(i => Row(i, if (i % 2 == 0) "even" else "odd")))
       .createOrReplaceTempView("loc")
@@ -145,12 +145,35 @@ class RelSpec extends AnyFunSuite with SparkTestBase {
     } finally spark.catalog.dropTempView("loc")
   }
 
+  test("valueCounts over a ResultCache row entry: its collect optimizes, plans and resolves nothing") {
+    graft.io.ResultCache.evictAll()
+    spark.read.parquet(s"$sf/orders.parquet").createOrReplaceTempView("rel_orders")
+    try {
+      val entry = graft.io.ResultCache.sqlCached(spark,
+        "SELECT o_orderkey, o_orderpriority FROM rel_orders ORDER BY o_orderkey LIMIT 50",
+        3600 * 1000L)
+      assert(Resident.driverRows(entry).isDefined, "a bounded result is driver rows")
+      Rel.valueCounts(entry, "o_orderpriority").collect() // memoizes the schema's encoder
+      val counts = Rel.valueCounts(entry, "o_orderpriority")
+      val encoders = Resident.encoderStats
+      val (got, ran) = rulesDuring(counts.collect())
+      assert(ran.isEmpty, s"the value counts' collect ran rules: $ran")
+      assert(counts.queryExecution.tracker.phases.isEmpty,
+        counts.queryExecution.tracker.phases.keySet.toString)
+      assert(Resident.encoderStats.builds == encoders.builds)
+      assert(got.toSeq == Rel.valueCountsAggregate(entry, "o_orderpriority").collect().toSeq)
+    } finally {
+      graft.io.ResultCache.evictAll()
+      spark.catalog.dropTempView("rel_orders")
+    }
+  }
+
   test("valueCounts plans the Aggregate for double and collated columns and parquet-backed frames") {
     def aggregates(df: DataFrame) = Resident.driverRows(df).isEmpty &&
       df.queryExecution.optimizedPlan.collectFirst { case a: Aggregate => a }.isDefined
     // Spark groups -0.0 with 0.0 and every NaN together: InternalRow
     // equality does not, so doubles keep the Column tree
-    val d = Resident.localFrame(spark, StructType(Seq(StructField("v", DoubleType))),
+    val d = localFrame(StructType(Seq(StructField("v", DoubleType))),
       Seq(0.0, -0.0, Double.NaN, Double.NaN, 1.5, null).map(Row(_)))
     val dc = Rel.valueCounts(d, "v")
     assert(aggregates(dc))

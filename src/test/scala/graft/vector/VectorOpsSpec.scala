@@ -111,7 +111,7 @@ class VectorOpsSpec extends AnyFunSuite with SparkTestBase {
     contextMatchesAggregate(rows.toDF("query_id", "rank", "source", "text"))
     contextMatchesAggregate(rows.map { case (q, r, s, t) => (q.toLong, r, s, t) }
       .toDF("query_id", "rank", "source", "text"))
-    val empty = graft.io.Resident.localFrame(spark, StructType(Seq(
+    val empty = localFrame(StructType(Seq(
       StructField("query_id", LongType), StructField("rank", IntegerType),
       StructField("source", StringType), StructField("text", StringType))), Nil)
     assert(contextMatchesAggregate(empty).isEmpty)
